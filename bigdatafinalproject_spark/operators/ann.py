@@ -433,7 +433,7 @@ def _pin_candidates(
 
 
 def _nearest_centroids(
-    centroids: DataFrame,
+    centroids: DataFrame | None,
     df: DataFrame,
     id_col: str,
     vec_col: str,
@@ -462,8 +462,10 @@ def _nearest_centroids(
     (ids asc, matrix) centroid panel — the persisted-index append
     paths read the frozen quantizer driver-side from its parquet
     (arrow_kernels.panel_from_parquet), skipping the per-micro-batch
-    collect job; content is bit-identical either way."""
-    if not (df.isStreaming or centroids.isStreaming):
+    collect job; content is bit-identical either way. With ``panel``,
+    ``centroids`` may be None (no Spark read of the frozen table)."""
+    streaming_centroids = centroids is not None and centroids.isStreaming
+    if not (df.isStreaming or streaming_centroids):
         from bigdatafinalproject_spark.operators.arrow_kernels import (
             topn_centroids_arrow,
         )
@@ -1326,7 +1328,7 @@ def _pq_exprs(m: int, dim: int):
 
 def encode_against_codebook(
     frame: DataFrame,
-    cb: DataFrame,
+    cb: DataFrame | None,
     m: int,
     dim: int,
     keys: list[str],
@@ -1350,8 +1352,9 @@ def encode_against_codebook(
     pre-built per-subspace codebook dict
     (arrow_kernels.codebook_from_parquet) — the index append paths
     read the frozen codebook driver-side, skipping the per-micro-batch
-    collect job; content is bit-identical either way."""
-    if not (frame.isStreaming or cb.isStreaming):
+    collect job; content is bit-identical either way. With ``panel``,
+    ``cb`` may be None (no Spark read of the frozen codebook)."""
+    if not (frame.isStreaming or (cb is not None and cb.isStreaming)):
         from bigdatafinalproject_spark.operators.arrow_kernels import (
             encode_codebook_arrow,
         )

@@ -1761,7 +1761,6 @@ def ivf_index_append(
     stage = None
     try:
         multi = int(meta.get("params", {}).get("multi_assign", 1))
-        centroids = _read_table(spark, index_dir, meta, "centroids")
         # r15: the frozen centroid panel is read driver-side from its
         # parquet (panel_from_parquet — bit-identical to the collect
         # it replaces), so the per-micro-batch panel-collect job
@@ -1775,7 +1774,7 @@ def ivf_index_append(
             "centroid_id", "_cent",
         )
         postings = _nearest_centroids(
-            centroids, delta, id_col, vec_col, multi, "neighbor_id",
+            None, delta, id_col, vec_col, multi, "neighbor_id",
             panel=cpanel,
         )
         track_sizes = "cell_sizes" in meta.get("tables", [])
@@ -1920,7 +1919,6 @@ def pq_index_append(
         params = meta.get("params", {})
         m = int(params.get("m", 8))
         dim = int(params.get("dim", 64))
-        cb = _read_table(spark, index_dir, meta, "codebook")
         # encode the delta with THE SAME definition pq_build_frames
         # uses (shared helper — build and append cannot diverge).
         # r15: the frozen codebook panel is read driver-side
@@ -1934,7 +1932,7 @@ def pq_index_append(
             delta.select(
                 F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_v")
             ),
-            cb, m, dim, ["neighbor_id"],
+            None, m, dim, ["neighbor_id"],
             panel=codebook_from_parquet(
                 _unit_paths(index_dir, meta, "codebook"), m
             ),
@@ -2903,7 +2901,6 @@ def ivfpq_index_append(
         multi = int(params.get("multi_assign", 3))
         m = int(params.get("m", 16))
         dim = int(params.get("dim", 64))
-        cb = _read_table(spark, index_dir, meta, "codebook")
         # r15: frozen quantizer panels read driver-side from their
         # parquet (bit-identical to the collects they replace — no
         # per-micro-batch panel-collect jobs), and the residual is
@@ -2940,7 +2937,7 @@ def ivfpq_index_append(
             assigned.select(
                 "neighbor_id", "centroid_id", F.col("_rv").alias("_v")
             ),
-            cb, m, dim, ["neighbor_id", "centroid_id"],
+            None, m, dim, ["neighbor_id", "centroid_id"],
             panel=codebook_from_parquet(
                 _unit_paths(index_dir, meta, "codebook"), m
             ),

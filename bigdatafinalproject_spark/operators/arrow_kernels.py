@@ -45,7 +45,9 @@ operate inside foreachBatch on batch frames).
 
 from __future__ import annotations
 
+import atexit
 import os
+import tempfile
 import threading
 import zipfile
 from collections.abc import Iterator
@@ -66,6 +68,7 @@ from pyspark.sql import functions as F
 # One zip per process, one addPyFile per SparkContext.
 _SHIP_LOCK = threading.Lock()
 _SHIPPED: set[str] = set()
+_PKG_ZIP: Path | None = None
 
 
 def ensure_shipped(spark) -> None:
@@ -82,6 +85,28 @@ def ensure_shipped(spark) -> None:
     _ensure_worker_imports(_Holder)
 
 
+def _package_zip() -> Path:
+    """This process's zip of the package source, written once under
+    the temporary directory with a name no other process can hold —
+    a stale zip left by a dead process whose pid was reused is never
+    shipped — and removed at interpreter exit."""
+    global _PKG_ZIP
+    if _PKG_ZIP is None:
+        pkg_dir = Path(__file__).resolve().parent.parent
+        fd, name = tempfile.mkstemp(
+            prefix=f"bdfp_pkg_{os.getpid()}_", suffix=".zip"
+        )
+        with os.fdopen(fd, "wb") as fh, zipfile.ZipFile(fh, "w") as z:
+            for f in sorted(pkg_dir.rglob("*.py")):
+                z.write(
+                    f,
+                    arcname=str(Path(pkg_dir.name) / f.relative_to(pkg_dir)),
+                )
+        _PKG_ZIP = Path(name)
+        atexit.register(_PKG_ZIP.unlink, missing_ok=True)
+    return _PKG_ZIP
+
+
 def _ensure_worker_imports(df) -> None:
     sc = df.sparkSession.sparkContext
     key = sc.applicationId
@@ -90,20 +115,7 @@ def _ensure_worker_imports(df) -> None:
     with _SHIP_LOCK:
         if key in _SHIPPED:
             return
-        pkg_dir = Path(__file__).resolve().parent.parent
-        zpath = Path("/tmp") / f"bdfp_pkg_{os.getpid()}.zip"
-        if not zpath.exists():
-            tmp = zpath.with_suffix(".zip.tmp")
-            with zipfile.ZipFile(tmp, "w") as z:
-                for f in sorted(pkg_dir.rglob("*.py")):
-                    z.write(
-                        f,
-                        arcname=str(
-                            Path(pkg_dir.name) / f.relative_to(pkg_dir)
-                        ),
-                    )
-            os.replace(tmp, zpath)
-        sc.addPyFile(str(zpath))
+        sc.addPyFile(str(_package_zip()))
         _SHIPPED.add(key)
 
 # Bounded-collect guard: the largest legitimate small side is the
@@ -140,20 +152,28 @@ def seq_l2(X: np.ndarray, C: np.ndarray) -> np.ndarray:
     return acc
 
 
-def seq_norm(X: np.ndarray) -> np.ndarray:
+def seq_norm(X: np.ndarray, op: str = "seq_norm", ids=None) -> np.ndarray:
     """Per-row sqrt(sequential self-dot) — the ``with_norm`` fold.
 
     Zero-norm guard (ADVICE r14): a zero vector yields a NaN cosine,
     which Spark's DESC ordering ranks FIRST (NaN = largest double)
     while ``np.argsort(-cos)`` ranks LAST — a silent cross-form
     divergence. No legitimate corpus here carries zero embeddings
-    (oracle-verified), so fail loudly instead of drifting quietly."""
+    (oracle-verified), so fail loudly instead of drifting quietly:
+    the ``ValueError`` names the calling kernel ``op`` and the
+    offending rows by ``ids`` (row positions when ``ids`` is None)."""
     acc = np.zeros(X.shape[0])
     for i in range(X.shape[1]):
         acc += X[:, i] * X[:, i]
     if X.shape[1] and not acc.all():
+        bad = np.flatnonzero(acc == 0)
+        if isinstance(ids, (pa.Array, pa.ChunkedArray)):
+            ids = ids.to_numpy(zero_copy_only=False)
+        culprits = (bad if ids is None else np.asarray(ids)[bad]).tolist()
         raise ValueError(
-            "zero-norm vector in Arrow cosine kernel: cosine is NaN "
+            f"{op}: zero-norm vector at "
+            f"{'row' if ids is None else 'id'}(s) {culprits[:10]}"
+            f"{' ...' if len(culprits) > 10 else ''}: cosine is NaN "
             "and kernel/SQL orderings would diverge silently"
         )
     return np.sqrt(acc)
@@ -292,13 +312,15 @@ def topn_centroids_arrow(
     the ``zip_with`` residual bit-for-bit), which lets the IVFPQ build
     skip re-joining the corpus and the centroids downstream.
     ``centroids`` may also be an already-built (ids asc, matrix)
-    panel tuple (r15 — see panel_from_parquet)."""
+    panel tuple (r15 — see panel_from_parquet). A zero vector on
+    either side raises ``ValueError`` naming this kernel and its ids
+    (:func:`seq_norm`)."""
     _ensure_worker_imports(df)
     if isinstance(centroids, tuple):
         cids, C = centroids
     else:
         cids, C = collect_matrix(centroids, "centroid_id", "_cent")
-    cn = seq_norm(C)
+    cn = seq_norm(C, "topn_centroids_arrow centroids", cids)
     n_eff = int(min(n, len(cids)))
     src = df.select(F.col(id_col).alias(out), F.col(vec_col).alias("_v"))
     schema = (
@@ -320,7 +342,8 @@ def topn_centroids_arrow(
             if nb == 0 or n_eff == 0:
                 continue
             cos = seq_dot(X, C)
-            denom = seq_norm(X)[:, None] * cn[None, :]
+            xn = seq_norm(X, "topn_centroids_arrow", ids)
+            denom = xn[:, None] * cn[None, :]
             np.divide(cos, denom, out=cos)
             # stable argsort of -cos with columns pre-sorted by cid
             # ascending == row_number ORDER BY cos DESC, cid ASC
@@ -522,7 +545,8 @@ def norms_arrow(
     df: DataFrame, id_col: str, vec_col: str, out: str = "_cnorm"
 ) -> DataFrame:
     """(id, vec) -> (id, sqrt(sequential self-dot)) — the ``with_norm``
-    fold as one vectorized pass."""
+    fold as one vectorized pass. A zero vector raises ``ValueError``
+    naming its id (:func:`seq_norm`)."""
     _ensure_worker_imports(df)
     src = df.select(id_col, vec_col)
     schema = f"{_spark_field(src, id_col)}, {out} double"
@@ -533,7 +557,11 @@ def norms_arrow(
             if X.shape[0] == 0:
                 continue
             yield pa.RecordBatch.from_arrays(
-                [b.column(0), pa.array(seq_norm(X))], [id_col, out]
+                [
+                    b.column(0),
+                    pa.array(seq_norm(X, "norms_arrow", b.column(0))),
+                ],
+                [id_col, out],
             )
 
     return src.mapInArrow(kernel, schema)
@@ -883,7 +911,9 @@ def pair_cosine_arrow(
     the same order as ``_dot(a, b) / (_norm_a * _norm_b)`` over
     ``with_norm`` columns, so values are bit-identical. ``keep`` lists
     the pass-through columns; the vectors are dropped after scoring
-    (they never cross another exchange)."""
+    (they never cross another exchange). A zero vector raises
+    ``ValueError`` naming it by the first ``keep`` column
+    (:func:`seq_norm`)."""
     _ensure_worker_imports(df)
     src = df.select(*keep, a_col, b_col)
     schema = ", ".join(
@@ -903,7 +933,11 @@ def pair_cosine_arrow(
             for i in range(A.shape[1]):
                 np.multiply(A[:, i], B[:, i], out=tmp)
                 acc += tmp
-            cos = acc / (seq_norm(A) * seq_norm(B))
+            ids = b.column(0) if na else None
+            cos = acc / (
+                seq_norm(A, f"pair_cosine_arrow {a_col}", ids)
+                * seq_norm(B, f"pair_cosine_arrow {b_col}", ids)
+            )
             yield pa.RecordBatch.from_arrays(
                 [b.column(i) for i in range(na)] + [pa.array(cos)], names
             )
@@ -925,7 +959,9 @@ def cosine_topk_arrow(
     top-k row is in its partition's top-k under the same (cosine
     DESC, neighbor ASC) order), and a final window over the
     partitions * |Q| * k survivors assigns the global rank. The
-    corpus is never collected and never crossJoin-fanned."""
+    corpus is never collected and never crossJoin-fanned. A zero
+    vector on either side raises ``ValueError`` naming this kernel
+    and its ids (:func:`seq_norm`)."""
     from pyspark.sql import Window as W
 
     _ensure_worker_imports(corpus)
@@ -936,7 +972,7 @@ def cosine_topk_arrow(
         "query_id",
         "_qv",
     )
-    qn = seq_norm(Q)
+    qn = seq_norm(Q, "cosine_topk_arrow queries", qids)
     nq = len(qids)
     src = corpus.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_v")
@@ -952,7 +988,8 @@ def cosine_topk_arrow(
             if nb == 0 or nq == 0:
                 continue
             cos = seq_dot(X, Q)
-            denom = seq_norm(X)[:, None] * qn[None, :]
+            xn = seq_norm(X, "cosine_topk_arrow", nids)
+            denom = xn[:, None] * qn[None, :]
             np.divide(cos, denom, out=cos)
             kk = min(k, nb)
             out_q, out_n, out_c = [], [], []

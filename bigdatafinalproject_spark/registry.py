@@ -99,13 +99,11 @@ def query(name: str, oracle: str | None = None, oracle_of: str | None = None):
 
 
 def _load_all() -> None:
+    """Import every query module. A listed module that does not import
+    raises (``ModuleNotFoundError`` names it) rather than silently
+    dropping its queries from the registry."""
     for mod in _MODULES:
-        try:
-            importlib.import_module(f"bigdatafinalproject_spark.queries.{mod}")
-        except ModuleNotFoundError as e:
-            # allow partial builds while modules land; re-raise real errors
-            if f"queries.{mod}" not in str(e):
-                raise
+        importlib.import_module(f"bigdatafinalproject_spark.queries.{mod}")
 
 
 _load_all()

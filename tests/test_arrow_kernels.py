@@ -353,3 +353,58 @@ def test_quantized_scan_arrow_matches_crossjoin_fold(spark, rng):
         .select("query_id", "neighbor_id")
     )
     assert _sorted_rows(got) == _sorted_rows(ref)
+
+
+def test_zero_norm_error_names_kernel_and_ids(spark, rng):
+    emb = _corpus(spark, rng, n=40)
+    zero = spark.createDataFrame(
+        [(4242, [0.0] * 8)], "vec_id bigint, embedding array<float>"
+    )
+    cents = emb.filter(F.col("vec_id") < 4).select(
+        F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("_cent")
+    )
+    got = AK.topn_centroids_arrow(
+        emb.unionByName(zero), cents, "vec_id", "embedding", 2, "nid"
+    )
+    with pytest.raises(Exception) as err:
+        got.collect()
+    msg = str(err.value)
+    assert "topn_centroids_arrow" in msg and "4242" in msg
+
+
+def test_seq_norm_names_rows_without_ids():
+    X = np.array([[1.0, 2.0], [0.0, 0.0], [3.0, 4.0]])
+    with pytest.raises(ValueError, match=r"my_kernel: .*row\(s\) \[1\]"):
+        AK.seq_norm(X, "my_kernel")
+    with pytest.raises(ValueError, match=r"id\(s\) \[77\]"):
+        AK.seq_norm(X, "my_kernel", np.array([5, 77, 9]))
+
+
+def test_package_zip_is_private_to_the_process_and_removed_at_exit():
+    import subprocess
+    import sys
+    import tempfile
+    from pathlib import Path
+
+    from tests.conftest import REPO
+
+    script = (
+        f"import sys; sys.path.insert(0, {str(REPO)!r})\n"
+        "from bigdatafinalproject_spark.operators import arrow_kernels as AK\n"
+        "import os, zipfile\n"
+        "p = AK._package_zip()\n"
+        "assert 'bigdatafinalproject_spark/operators/arrow_kernels.py' "
+        "in zipfile.ZipFile(p).namelist()\n"
+        "print(os.getpid(), p)\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", script],
+        capture_output=True, text=True, timeout=120,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    pid, path = out.stdout.split()
+    zpath = Path(path)
+    assert zpath.parent == Path(tempfile.gettempdir())
+    # never the bare pid name a dead process with a reused pid left
+    assert zpath.name != f"bdfp_pkg_{pid}.zip"
+    assert not zpath.exists()

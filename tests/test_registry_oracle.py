@@ -24,3 +24,14 @@ def test_query_matches_oracle(spark, duck, name):
     else:
         # weaker rows-only check, mirroring the driver
         assert df.count() >= 0
+
+
+def test_registry_holds_every_query():
+    # a query module dropped from the import would shrink this silently
+    assert len(registry.QUERIES) == 253
+
+
+def test_missing_query_module_fails_loudly(monkeypatch):
+    monkeypatch.setattr(registry, "_MODULES", ("no_such_queries_module",))
+    with pytest.raises(ModuleNotFoundError, match="no_such_queries_module"):
+        registry._load_all()
