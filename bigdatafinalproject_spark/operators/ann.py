@@ -4,17 +4,18 @@ dense-matrix sklearn cosine, similarity_matrix.py:41-47).
 
 Two tiers:
 
-- ``cosine_topk``  — exact brute force: Q×N cosine via JVM-side
-  ``zip_with``/``aggregate`` (no Python in the loop), windowed top-k.
-  The correctness baseline; cost O(Q·N·d).
+- ``cosine_topk``  — exact brute force: Q×N cosine in an Arrow kernel
+  per corpus partition, windowed top-k. The correctness baseline;
+  cost O(Q·N·d).
 - ``lsh_topk``     — random-hyperplane LSH: P deterministic pseudo-random
   hyperplanes → sign bits → banded bucket equi-join → exact cosine only
   on candidates. The 100 TB path: never materializes Q×N.
 
 Determinism/portability: dot products are LEFT-TO-RIGHT sequential
-double folds over the array (Spark ``aggregate`` == DuckDB
-``list_reduce``), so results are bit-identical across engines without
-decimal rounding; hyperplane components are md5-derived integers.
+double folds over the array (DuckDB ``list_reduce``; the Arrow kernels
+accumulate dimension by dimension in the same order), so results are
+bit-identical across engines without decimal rounding; hyperplane
+components are md5-derived integers.
 """
 
 from __future__ import annotations
@@ -22,7 +23,19 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
-from bigdatafinalproject_spark.operators.layout import spread
+from bigdatafinalproject_spark.operators.arrow_kernels import (
+    adc_lookup_arrow,
+    coarse_terms_arrow,
+    cosine_topk_arrow,
+    encode_codebook_arrow,
+    lsh_arrow,
+    norms_arrow,
+    pair_cosine_arrow,
+    panel_from_frame,
+    quantized_scan_arrow,
+    topn_centroids_arrow,
+)
+from bigdatafinalproject_spark.operators.layout import spread, spread_scaled
 
 
 # IVFPQ adaptive probe policy (r10 introduced the mass budget; r11
@@ -98,20 +111,6 @@ IVF_SCALE_REF = 2000  # sf0.1's corpus size: s=1 there by construction
 IVF_CENTROID_CAP = 512
 
 
-def _dot(a: str, b: str) -> Column:
-    """Sequential double dot product of two float arrays (exact
-    float->double element casts, left-to-right accumulation)."""
-    return F.expr(
-        f"aggregate(zip_with({a}, {b}, (x, y) -> "
-        f"CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
-        f"CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
-    )
-
-
-def with_norm(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    return df.withColumn("_norm", F.sqrt(_dot(vec_col, vec_col)))
-
-
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -123,50 +122,19 @@ def cosine_topk(
 
     Returns (query_id, neighbor_id, cosine, rank), excluding self-pairs.
     Ties broken by neighbor id. The corpus side is the big side; the
-    query side is broadcast (typical ANN batch: few queries, huge
-    corpus), so the cross join is a broadcast-nested-loop with no
-    shuffle of the corpus.
+    query side is small (typical ANN batch: few queries, huge corpus).
 
-    Batch frames dispatch to the Arrow kernel
-    (operators/arrow_kernels.cosine_topk_arrow): the panel — the side
-    this plan broadcast — is collected once, each corpus partition
-    computes its local top-k per query in numpy, and a final window
-    over the bounded survivors assigns the global rank; the Q-fan-out
-    interpreted fold disappears and the corpus is still never
+    Runs the Arrow kernel (operators/arrow_kernels.cosine_topk_arrow):
+    the query panel is collected once, each corpus partition computes
+    its local top-k per query in numpy, and a final window over the
+    bounded survivors assigns the global rank; the corpus is never
     collected.
     """
-    if not (corpus.isStreaming or queries.isStreaming):
-        from bigdatafinalproject_spark.operators.arrow_kernels import (
-            cosine_topk_arrow,
-        )
-
-        from bigdatafinalproject_spark.operators.layout import spread_scaled
-
-        return cosine_topk_arrow(
-            spread_scaled(corpus, id_col), queries, id_col, vec_col, k
-        )
-    q = with_norm(
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv")),
-        "_qv",
-    ).withColumnRenamed("_norm", "_qnorm")
-    c = with_norm(
-        spread(
-            corpus.select(
-                F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv")
-            ),
-            "neighbor_id",
-        ),
-        "_cv",
-    ).withColumnRenamed("_norm", "_cnorm")
-
-    cos = _dot("_qv", "_cv") / (F.col("_qnorm") * F.col("_cnorm"))
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", cos.alias("cosine"))
+    return cosine_topk_arrow(
+        spread_scaled(corpus, id_col),
+        panel_from_frame(queries, id_col, vec_col, "ann.cosine_topk queries"),
+        id_col, vec_col, k,
     )
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
 def lsh_signatures(
@@ -183,110 +151,27 @@ def lsh_signatures(
     Hyperplane component (p, i) is an md5-derived integer in
     [-1000, 1000]. The components are ROW-INDEPENDENT, so they are
     computed once on the driver (same md5 construction, bit-identical
-    to the oracle's SQL md5) and inlined as literal weight arrays —
-    the previous formulation re-hashed all num_planes*dim components
-    per row inside the fold (~768 md5 calls/row). Each plane's dot is
-    a sequential double fold; banding is a map-side array build +
-    explode — no shuffle at all.
+    to the oracle's SQL md5) and ride into the Arrow kernel
+    (operators/arrow_kernels.lsh_arrow) as one (P, dim) matrix. Each
+    plane's dot reproduces the sequential double fold; no shuffle at
+    all. Batch and streaming frames run the same kernel.
     """
     import hashlib
+
+    import numpy as np
 
     def comp(p: int, i: int) -> int:
         h = int(hashlib.md5(f"plane|{p}|{i}".encode()).hexdigest()[:15], 16)
         return h % 2001 - 1000
 
-    rows = num_planes // bands
-    sel = df.select(F.col(id_col), F.col(vec_col).alias("_v"))
-    if not df.isStreaming:
-        # batch frames: the P plane dots, the sign bits and the band
-        # strings all come out of one Arrow kernel pass (r14) — the
-        # hyperplane matrix is tiny and rides in the closure; the
-        # dim-sequential accumulation reproduces each fold bit-for-bit
-        import numpy as np
-        import pyarrow as pa_mod
-
-        from bigdatafinalproject_spark.operators.arrow_kernels import (
-            _list_to_mat,
-            seq_dot,
-        )
-
-        W_mat = np.array(
-            [[comp(p, i) for i in range(1, dim + 1)] for p in range(num_planes)],
-            dtype=np.float64,
-        )
-        # no respread (r14): the kernel is ~100x cheaper per element
-        # than the interpreted fold it replaced, so the scan's own
-        # partitioning (which grows with file bytes) is parallel
-        # enough at every SF, and a 32-way respread of a 2,000-row
-        # frame costs more than the whole signature pass
-        src = sel
-        schema = (
-            f"{id_col} {src.schema[id_col].dataType.simpleString()}, "
-            "band int, band_sig string"
-        )
-
-        def kernel(it):
-            for b in it:
-                X = _list_to_mat(b.column(1))
-                nb = X.shape[0]
-                if nb == 0:
-                    continue
-                bits = seq_dot(X, W_mat) > 0
-                chars = np.where(bits, "1", "0")
-                sigs = []
-                for bb in range(bands):
-                    s = chars[:, bb * rows]
-                    for j in range(1, rows):
-                        s = np.char.add(s, chars[:, bb * rows + j])
-                    sigs.append(s)
-                take = pa_mod.array(np.repeat(np.arange(nb), bands))
-                yield pa_mod.RecordBatch.from_arrays(
-                    [
-                        b.column(0).take(take),
-                        pa_mod.array(
-                            np.tile(np.arange(bands, dtype=np.int32), nb)
-                        ),
-                        pa_mod.array(
-                            np.stack(sigs, axis=1).ravel().tolist(),
-                            pa_mod.string(),
-                        ),
-                    ],
-                    [id_col, "band", "band_sig"],
-                )
-
-        return src.mapInArrow(kernel, schema)
-    # streaming micro-batches arrive already parallelized by the
-    # source, so the row-local signature math needs no respread; the
-    # expression form below stays for them
-    d = sel
-    dots = [
-        F.expr(
-            "aggregate(zip_with(_v, array({}), (x, w) -> "
-            "CAST(x AS DOUBLE) * CAST(w AS DOUBLE)), "
-            "CAST(0 AS DOUBLE), (acc, v) -> acc + v)".format(
-                ", ".join(
-                    f"CAST({comp(p, i)} AS BIGINT)" for i in range(1, dim + 1)
-                )
-            )
-        )
-        for p in range(num_planes)
-    ]
-    bits = [
-        F.when(dots[p] > 0, F.lit("1")).otherwise(F.lit("0"))
-        for p in range(num_planes)
-    ]
-    bands_arr = F.array(
-        *[
-            F.struct(
-                F.lit(b).cast("int").alias("band"),
-                F.concat(*bits[b * rows : (b + 1) * rows]).alias("band_sig"),
-            )
-            for b in range(bands)
-        ]
+    planes = np.array(
+        [[comp(p, i) for i in range(1, dim + 1)] for p in range(num_planes)],
+        dtype=np.float64,
     )
-    return d.select(F.col(id_col), F.explode(bands_arr).alias("_bs")).select(
-        id_col, F.col("_bs.band").alias("band"), F.col("_bs.band_sig").alias("band_sig")
-    )
+    # no respread (r14): the kernel is ~100x cheaper per element than
+    # the interpreted fold it replaced, so the scan's own partitioning
+    # (which grows with file bytes) is parallel enough at every SF
+    return lsh_arrow(df, id_col, vec_col, planes, bands)
 
 
 def ivf_topk(
@@ -390,50 +275,15 @@ def ivf_topk(
         # postings once
         postings = materialize_barrier(postings)
     return ivf_search_frames(
-        centroids, postings, corpus, queries,
+        centroid_panel(centroids, "ivf_topk"), postings, corpus, queries,
         id_col=id_col, vec_col=vec_col, k=k, nprobe=nprobe,
         probe_mass=probe_mass, mass_multi=multi_assign,
         sched_ref=scale_ref,
     )
 
 
-# candidate-tail pin modes (r15, VERDICT r14 #3): the per-shape
-# winners of the interleaved A/B (scripts/ab_cand_pin.py, 4 reps,
-# arms alternating per rep; medians at sf0.1):
-#   doc_embedding_neardup  none 2.47 / repartition 2.81 / scaled 2.14
-#   ann_ivf_recall         none 7.81 / repartition 7.15 / scaled 6.57
-#   ann_ivf_topk           none 4.32 / repartition 4.49 / scaled 4.44
-# "scaled" (plan-stats-derived partition count) wins or ties both
-# shapes — it pins the fan-out like r14's repartition but sizes it to
-# the data, probe-free. One hook so the experiment and production run
-# the same code path.
-_IVF_CAND_PIN = "scaled"
-_NEARDUP_CAND_PIN = "scaled"
-
-
-def _pin_candidates(
-    cand: DataFrame, key: str, mode: str = "none"
-) -> DataFrame:
-    """Parallelism pin for a shuffle-rooted candidate frame about to
-    feed vector-attach joins + an Arrow pair kernel. ``mode``:
-    ``"none"`` trusts AQE's byte-based coalescing, ``"repartition"``
-    pins the fan-out to defaultParallelism (probe-free — byte-light
-    but compute-heavy pair sets get coalesced to a handful of tasks
-    otherwise), ``"scaled"`` repartitions to the plan-stats-derived
-    count (layout.spread_scaled)."""
-    if mode == "repartition":
-        return cand.repartition(
-            cand.sparkSession.sparkContext.defaultParallelism, F.col(key)
-        )
-    if mode == "scaled":
-        from bigdatafinalproject_spark.operators.layout import spread_scaled
-
-        return spread_scaled(cand, key)
-    return cand
-
-
 def _nearest_centroids(
-    centroids: DataFrame | None,
+    panel: tuple,
     df: DataFrame,
     id_col: str,
     vec_col: str,
@@ -441,63 +291,40 @@ def _nearest_centroids(
     out: str,
     keep_rank: bool = False,
     spread_input: bool = True,
-    panel: tuple | None = None,
 ) -> DataFrame:
-    """Top-``n`` centroids per vector by cosine (broadcast centroids,
-    bounded window) — the assign (n=multi) and probe (n=nprobe) legs
-    of the IVF plans. ``spread_input=False`` (r14) skips the respread
-    for bounded probe panels, where 32-way repartitioning ~40 rows
-    costs more than the kernel pass itself. ``keep_rank`` also emits the assignment rank
-    (``_rn``) so a caller needing BOTH the multi-assignment and the
-    primary (rank-1) assignment runs the N×C pass once, not twice
-    (r9 review #6: the ivfpq build was paying the corpus-wide
-    crossJoin + window shuffle twice).
+    """Top-``n`` centroids per vector by cosine — the assign (n=multi)
+    and probe (n=nprobe) legs of the IVF plans — against the (ids asc,
+    matrix) centroid ``panel``, built once by the caller
+    (arrow_kernels.panel_from_frame, or panel_from_parquet for a
+    persisted index). ``spread_input=False`` (r14) skips the respread
+    for bounded probe panels, where repartitioning ~40 rows costs more
+    than the kernel pass itself. ``keep_rank`` also emits the
+    assignment rank (``_rn``) so a caller needing BOTH the
+    multi-assignment and the primary (rank-1) assignment runs the N×C
+    pass once, not twice.
 
-    Batch frames dispatch to the Arrow kernel
-    (operators/arrow_kernels.topn_centroids_arrow): identical
+    Runs the Arrow kernel (operators/arrow_kernels.topn_centroids_arrow):
     dim-sequential cosine and (cos DESC, cid ASC) tie order,
-    vectorized in numpy, centroids collected once (bounded — the rows
-    this plan broadcast); the crossJoin fan-out and the row_number
-    shuffle disappear. ``panel`` (r15) is an optional pre-built
-    (ids asc, matrix) centroid panel — the persisted-index append
-    paths read the frozen quantizer driver-side from its parquet
-    (arrow_kernels.panel_from_parquet), skipping the per-micro-batch
-    collect job; content is bit-identical either way. With ``panel``,
-    ``centroids`` may be None (no Spark read of the frozen table)."""
-    streaming_centroids = centroids is not None and centroids.isStreaming
-    if not (df.isStreaming or streaming_centroids):
-        from bigdatafinalproject_spark.operators.arrow_kernels import (
-            topn_centroids_arrow,
-        )
-
-        from bigdatafinalproject_spark.operators.layout import spread_scaled
-
-        src = df.select(F.col(id_col).alias(out), F.col(vec_col).alias("_v"))
-        return topn_centroids_arrow(
-            spread_scaled(src, out) if spread_input else src,
-            panel if panel is not None else centroids,
-            out, "_v", n, out,
-            keep_rank=keep_rank,
-        )
-    v = with_norm(
-        spread(
-            df.select(F.col(id_col).alias(out), F.col(vec_col).alias("_v")),
-            out,
-        ),
-        "_v",
-    ).withColumnRenamed("_norm", "_vn")
-    cn = with_norm(centroids, "_cent").withColumnRenamed("_norm", "_cn")
-    cos = _dot("_v", "_cent") / (F.col("_vn") * F.col("_cn"))
-    w = W.partitionBy(out).orderBy(
-        F.col("_cos").desc(), F.col("centroid_id").asc()
+    vectorized in numpy."""
+    src = df.select(F.col(id_col).alias(out), F.col(vec_col).alias("_v"))
+    return topn_centroids_arrow(
+        spread_scaled(src, out) if spread_input else src,
+        panel, out, "_v", n, out,
+        keep_rank=keep_rank,
     )
-    return (
-        v.crossJoin(F.broadcast(cn))
-        .withColumn("_cos", cos)
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= n)
-        .select(out, "centroid_id", *(["_rn"] if keep_rank else []))
-    )
+
+
+def centroid_panel(centroids: DataFrame, op: str) -> tuple:
+    """The bounded (ids asc, matrix) panel of a (centroid_id, _cent)
+    centroid frame; ``op`` names the caller in the cap error."""
+    return panel_from_frame(centroids, "centroid_id", "_cent", f"{op} centroids")
+
+
+def codebook_panel(cb: DataFrame, op: str) -> dict:
+    """The bounded {s: (code ids asc, codeword matrix)} panel of a
+    (code, s, _cw) PQ codebook frame; ``op`` names the caller in the
+    cap error."""
+    return panel_from_frame(cb, "code", "_cw", f"{op} codebook", group_col="s")
 
 
 def _mass_schedule_cols(s: Column) -> tuple[Column, Column]:
@@ -591,7 +418,7 @@ def ivf_mass_schedule_sql(s_expr: str) -> tuple[str, str]:
 
 
 def _mass_probes(
-    centroids: DataFrame,
+    centroids: tuple,
     queries: DataFrame,
     sizes: DataFrame,
     probe_mass: tuple[int, int] | str,
@@ -599,10 +426,10 @@ def _mass_probes(
     vec_col: str,
     mass_multi: int | None = None,
     sched_ref: int | None = None,
-    panel: tuple | None = None,
 ) -> DataFrame:
     """Mass-budgeted probe set (r10, shared by the IVF and IVFPQ serve
-    plans): each query probes its cosine-ranked cells until their
+    plans) over the (ids asc, matrix) ``centroids`` panel: each query
+    probes its cosine-ranked cells until their
     cumulative posting mass reaches ceil(num/den · total postings),
     inclusive of the crossing cell. ``sizes`` is the C-row
     (centroid_id, _csz) posting-count table — the PERSISTED one for
@@ -650,7 +477,7 @@ def _mass_probes(
         den = F.lit(int(probe_mass[1]))
     ranked = _nearest_centroids(
         centroids, queries, id_col, vec_col, 1 << 30, "query_id",
-        keep_rank=True, spread_input=False, panel=panel,
+        keep_rank=True, spread_input=False,
     )
     wq = W.partitionBy("query_id").orderBy("_rn")
     # budget = ceil(num*T/den) exactly: (num*T + den - 1) / den in
@@ -780,13 +607,14 @@ def ivf_build_frames(
         centroid_cap=centroid_cap,
     )
     postings = _nearest_centroids(
-        centroids, corpus, id_col, vec_col, multi_assign, "neighbor_id"
+        centroid_panel(centroids, "ivf_build_frames"),
+        corpus, id_col, vec_col, multi_assign, "neighbor_id",
     )
     return centroids, postings
 
 
 def ivf_search_frames(
-    centroids: DataFrame,
+    centroids: tuple,
     postings: DataFrame,
     corpus: DataFrame,
     queries: DataFrame,
@@ -798,11 +626,12 @@ def ivf_search_frames(
     cell_sizes: DataFrame | None = None,
     mass_multi: int | None = None,
     sched_ref: int | None = None,
-    centroid_panel: tuple | None = None,
 ) -> DataFrame:
     """The serve half of ivf_topk: probe cells per query, equi-join
     the postings, exact-cosine-rerank the candidates against the
-    corpus vectors. Works identically on frames fresh from
+    corpus vectors. ``centroids`` is the (ids asc, matrix) centroid
+    panel (:func:`centroid_panel`, or panel_from_parquet for a
+    persisted index). Works identically on frames fresh from
     ivf_build_frames or reloaded from a persisted index.
 
     Probe policy (r10): with ``probe_mass=(num, den)`` a query probes
@@ -823,7 +652,7 @@ def ivf_search_frames(
     if probe_mass is None:
         probes = _nearest_centroids(
             centroids, queries, id_col, vec_col, nprobe, "query_id",
-            spread_input=False, panel=centroid_panel,
+            spread_input=False,
         )
     else:
         sizes = (
@@ -836,40 +665,21 @@ def ivf_search_frames(
         probes = _mass_probes(
             centroids, queries, sizes, probe_mass, id_col, vec_col,
             mass_multi=mass_multi, sched_ref=sched_ref,
-            panel=centroid_panel,
         )
-    # no spread pin here (r14): spread's partition probe materializes
-    # this shuffle-rooted subtree as a throwaway job under AQE, and the
-    # downstream consumer is now a cheap Arrow kernel — AQE's byte-based
-    # coalescing sizes the distinct output correctly at every scale
-    # (r15: re-measured with the interleaved A/B — see _pin_candidates)
-    cand = _pin_candidates(
+    # the candidate tail is pinned to the plan-stats-derived partition
+    # count (spread_scaled: probe-free, unlike spread's partition
+    # probe, which materializes this shuffle-rooted subtree as a
+    # throwaway job under AQE). r15's interleaved A/B chose it over
+    # AQE coalescing and a defaultParallelism repartition
+    # (OPTIMIZATION_r15.md).
+    cand = spread_scaled(
         probes.join(postings, on="centroid_id")
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .select("query_id", "neighbor_id")
         .distinct(),
         "query_id",
-        mode=_IVF_CAND_PIN,
     )
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv")
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv")
-    )
-    # per-candidate exact cosine via the Arrow pair kernel (r14): same
-    # joins, but the interpreted per-row fold + the two with_norm
-    # passes collapse into one vectorized stage
-    from bigdatafinalproject_spark.operators.arrow_kernels import (
-        pair_cosine_arrow,
-    )
-
-    scored = pair_cosine_arrow(
-        cand.join(F.broadcast(q), "query_id").join(c, "neighbor_id"),
-        ["query_id", "neighbor_id"], "_qv", "_cv", "cosine",
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _exact_cosine_rerank(cand, corpus, queries, id_col, vec_col, k)
 
 
 def embedding_neardup_pairs(
@@ -897,21 +707,16 @@ def embedding_neardup_pairs(
         .select("id_a", "id_b")
         .distinct()
     )
-    # probe-free parallelism pin (r14): the per-pair dot is now an
-    # Arrow kernel (cheap), but attaching two 64-dim vectors to every
+    # probe-free parallelism pin (r14): the per-pair dot is an Arrow
+    # kernel (cheap), but attaching two 64-dim vectors to every
     # candidate pair is byte-heavy relative to the pair set AQE sizes
     # by — coalesced to one task, the join + Arrow conversion
-    # serializes. An unconditional repartition pins the fan-out
-    # without spread's partition probe (which materializes this
-    # shuffle-rooted subtree as a throwaway job under AQE).
-    # (r15: re-measured with the interleaved A/B — see _pin_candidates)
-    cand = _pin_candidates(cand, "id_a", mode=_NEARDUP_CAND_PIN)
+    # serializes. spread_scaled pins the fan-out to the plan-stats
+    # count without spread's partition probe (the winner of r15's
+    # interleaved A/B, OPTIMIZATION_r15.md).
+    cand = spread_scaled(cand, "id_a")
     va = corpus.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("_va"))
     vb = corpus.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("_vb"))
-    from bigdatafinalproject_spark.operators.arrow_kernels import (
-        pair_cosine_arrow,
-    )
-
     return pair_cosine_arrow(
         cand.join(va, "id_a").join(vb, "id_b"),
         ["id_a", "id_b"], "_va", "_vb", "cosine",
@@ -989,26 +794,17 @@ def quantized_topk(
     # interpreted fold in the ANN family): the old plan crossJoined a
     # broadcast query panel against every corpus row and evaluated an
     # aggregate(zip_with(...)) int fold per pair, off the codegen
-    # path. The kernel collects the same bounded panel once and
-    # computes the identical int64 dots + IEEE cosine per corpus
+    # path. The kernel takes the same bounded panel, collected once,
+    # and computes the identical int64 dots + IEEE cosine per corpus
     # partition (bit-exact — see quantized_scan_arrow), keeping the
     # per-query (DESC, id ASC) order through a partition-local top-n
     # and a bounded global window.
-    from bigdatafinalproject_spark.operators.arrow_kernels import (
-        pair_cosine_arrow,
-        quantized_scan_arrow,
+    cand = quantized_scan_arrow(
+        c,
+        panel_from_frame(q, "query_id", "_qq", "ann.quantized_topk queries"),
+        k * rerank,
     )
-
-    cand = quantized_scan_arrow(c, q, k * rerank)
-
-    qv = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv"))
-    cv = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv"))
-    out = pair_cosine_arrow(
-        cand.join(F.broadcast(qv), "query_id").join(cv, "neighbor_id"),
-        ["query_id", "neighbor_id"], "_qv", "_cv", "cosine",
-    )
-    w2 = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return out.withColumn("rank", F.row_number().over(w2)).filter(F.col("rank") <= k)
+    return _exact_cosine_rerank(cand, corpus, queries, id_col, vec_col, k)
 
 
 def lsh_candidates(
@@ -1074,18 +870,7 @@ def lsh_topk(
     cand = lsh_candidates(
         corpus, queries, id_col, vec_col, num_planes, bands, dim, multiprobe
     )
-    from bigdatafinalproject_spark.operators.arrow_kernels import (
-        pair_cosine_arrow,
-    )
-
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv"))
-    c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv"))
-    scored = pair_cosine_arrow(
-        cand.join(F.broadcast(q), "query_id").join(c, "neighbor_id"),
-        ["query_id", "neighbor_id"], "_qv", "_cv", "cosine",
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _exact_cosine_rerank(cand, corpus, queries, id_col, vec_col, k)
 
 
 def mmr_diversify(
@@ -1161,10 +946,6 @@ def mmr_from_candidates(
     from bigdatafinalproject_spark.operators.barrier import materialize_barrier
 
     cand = materialize_barrier(cand)
-    from bigdatafinalproject_spark.operators.arrow_kernels import (
-        pair_cosine_arrow,
-    )
-
     en = corpus.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
     pa = cand.select("query_id", F.col("cid").alias("a"))
     pb = cand.select("query_id", F.col("cid").alias("b"))
@@ -1309,7 +1090,7 @@ def pq_topk(
         train_rounds=train_rounds,
     )
     return pq_search_frames(
-        cb, codes, norms, corpus, queries,
+        codebook_panel(cb, "pq_topk"), codes, norms, corpus, queries,
         id_col=id_col, vec_col=vec_col, k=k, m=m, dim=dim,
         rerank=rerank, scale=scale, pool_cap=pool_cap,
         scale_ref=scale_ref,
@@ -1326,60 +1107,6 @@ def _pq_exprs(m: int, dim: int):
     return spaces, subv
 
 
-def encode_against_codebook(
-    frame: DataFrame,
-    cb: DataFrame | None,
-    m: int,
-    dim: int,
-    keys: list[str],
-    panel: dict | None = None,
-) -> DataFrame:
-    """THE PQ encode: nearest codeword per (row, subspace) by
-    sequential-fold L2, ties to the smallest codeword id, via one
-    broadcast codebook join + one map-side-combinable ``min(struct)``
-    argmin (never a sort shuffle of the largest relation). ``frame``
-    carries ``keys`` + a ``_v`` vector column (raw vectors for plain
-    PQ, residuals for IVFPQ). The ONE definition shared by every
-    build and append path (r9 review #7: four verbatim copies meant a
-    tie-break or cast fix could silently diverge the build/append
-    halves — exactly the invariant the maintenance oracles rely on).
-
-    Batch frames dispatch to the Arrow kernel
-    (operators/arrow_kernels.encode_codebook_arrow): the subspace
-    slice, dim-sequential L2 and ties-to-lowest-code argmin run
-    vectorized per partition and the explode + broadcast join +
-    min(struct) shuffle disappears. ``panel`` (r15) is an optional
-    pre-built per-subspace codebook dict
-    (arrow_kernels.codebook_from_parquet) — the index append paths
-    read the frozen codebook driver-side, skipping the per-micro-batch
-    collect job; content is bit-identical either way. With ``panel``,
-    ``cb`` may be None (no Spark read of the frozen codebook)."""
-    if not (frame.isStreaming or (cb is not None and cb.isStreaming)):
-        from bigdatafinalproject_spark.operators.arrow_kernels import (
-            encode_codebook_arrow,
-        )
-
-        return encode_codebook_arrow(
-            frame, panel if panel is not None else cb, m, dim, keys
-        )
-    spaces, subv = _pq_exprs(m, dim)
-    l2 = F.expr(
-        "aggregate(zip_with(_sv, _cw, (x, c) -> "
-        "(CAST(x AS DOUBLE) - CAST(c AS DOUBLE)) * "
-        "(CAST(x AS DOUBLE) - CAST(c AS DOUBLE))), "
-        "CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
-    )
-    return (
-        frame.select(*keys, spaces, "_v")
-        .select(*keys, "s", subv)
-        .join(F.broadcast(cb), "s")
-        .withColumn("_d", l2)
-        .groupBy(*keys, "s")
-        .agg(F.min(F.struct("_d", "code")).alias("_b"))
-        .select(*keys, "s", F.col("_b.code").alias("code"))
-    )
-
-
 def _exact_cosine_rerank(
     cand: DataFrame,
     corpus: DataFrame,
@@ -1389,14 +1116,10 @@ def _exact_cosine_rerank(
     k: int,
 ) -> DataFrame:
     """Exact-cosine rerank of a bounded (query_id, neighbor_id)
-    candidate pool — the shared tail of the quantized tiers. r14: the
-    per-pair cosine runs in the Arrow pair kernel (same joins, the
-    interpreted fold and the with_norm passes collapse into one
-    vectorized stage)."""
-    from bigdatafinalproject_spark.operators.arrow_kernels import (
-        pair_cosine_arrow,
-    )
-
+    candidate pool — the shared tail of the IVF, LSH and quantized
+    tiers. r14: the per-pair cosine runs in the Arrow pair kernel
+    (same joins, the interpreted fold and the two norm passes
+    collapse into one vectorized stage)."""
     qv = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv")
     )
@@ -1498,10 +1221,9 @@ def pq_build_frames(
         corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_v")),
         "neighbor_id",
     )
-    codes = encode_against_codebook(cvec, cb, m, dim, ["neighbor_id"])
-
-    from bigdatafinalproject_spark.operators.arrow_kernels import norms_arrow
-
+    codes = encode_codebook_arrow(
+        cvec, codebook_panel(cb, "pq_build_frames"), m, dim, ["neighbor_id"]
+    )
     norms = norms_arrow(
         corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col)),
         "neighbor_id", vec_col, "_cnorm",
@@ -1510,7 +1232,7 @@ def pq_build_frames(
 
 
 def pq_search_frames(
-    cb: DataFrame,
+    cb: dict,
     codes: DataFrame,
     norms: DataFrame,
     corpus: DataFrame,
@@ -1525,11 +1247,12 @@ def pq_search_frames(
     pool_cap: int = 640,
     scale_ref: int = 1000,
     pool: int | None = None,
-    cb_panel: dict | None = None,
 ) -> DataFrame:
     """The serve half of pq_topk: per-query ADC lookup tables against
-    the codebook, integer ADC scan over the codes, exact-cosine rerank
-    of the sqrt-scaled pool against the corpus vectors. Works
+    the codebook panel ``cb`` (:func:`codebook_panel`, or
+    panel_from_parquet for a persisted index), integer ADC scan over
+    the codes, exact-cosine rerank of the sqrt-scaled pool against the
+    corpus vectors. Works
     identically on frames fresh from pq_build_frames or reloaded from
     a persisted index. ``pool`` (r12) overrides the in-plan
     min(pool_cap, k·rerank·s) pool size with an explicit count — the
@@ -1542,14 +1265,7 @@ def pq_search_frames(
     # ADC lookup tables: floor-quantized subspace dots per (query,
     # subspace, codeword) — |Q| * m * C rows, broadcastable; built in
     # one Arrow kernel pass over the bounded panel (r14)
-    from bigdatafinalproject_spark.operators.arrow_kernels import (
-        adc_lookup_arrow,
-    )
-
-    qtab = adc_lookup_arrow(
-        queries, cb_panel if cb_panel is not None else cb,
-        m, dim, scale, id_col, vec_col,
-    )
+    qtab = adc_lookup_arrow(queries, cb, m, dim, scale, id_col, vec_col)
 
     adc = (
         codes.join(F.broadcast(qtab), ["s", "code"])
@@ -1658,13 +1374,7 @@ def ivfpq_build_frames(
     # downstream disappear. The frame is barriered so its consumers
     # (codebook init, codebook trainer, encode) don't re-execute the
     # pass per branch.
-    from bigdatafinalproject_spark.operators.arrow_kernels import (
-        topn_centroids_arrow,
-    )
-    from bigdatafinalproject_spark.operators.layout import (
-        scaled_parallelism,
-        spread_scaled,
-    )
+    from bigdatafinalproject_spark.operators.layout import scaled_parallelism
 
     _pt = scaled_parallelism(corpus)
     assigned = materialize_barrier(
@@ -1677,7 +1387,8 @@ def ivfpq_build_frames(
                 "neighbor_id",
                 parallelism=_pt,
             ),
-            centroids, "neighbor_id", "_v", multi_assign, "neighbor_id",
+            centroid_panel(centroids, "ivfpq_build_frames"),
+            "neighbor_id", "_v", multi_assign, "neighbor_id",
             keep_rank=True, emit_residual=True,
         )
     )
@@ -1721,14 +1432,13 @@ def ivfpq_build_frames(
         trained.select(F.col("cid").alias("code"), "s", F.col("centroid").alias("_cw"))
     )
     # encode every assignment's residual against the frozen codebook
-    codes = encode_against_codebook(
+    codes = encode_codebook_arrow(
         res_all.select(
             "neighbor_id", "centroid_id", F.col("_rv").alias("_v")
         ),
-        cb, m, dim, ["neighbor_id", "centroid_id"],
+        codebook_panel(cb, "ivfpq_build_frames"),
+        m, dim, ["neighbor_id", "centroid_id"],
     )
-    from bigdatafinalproject_spark.operators.arrow_kernels import norms_arrow
-
     norms = norms_arrow(
         corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col)),
         "neighbor_id", vec_col, "_cnorm",
@@ -1737,8 +1447,8 @@ def ivfpq_build_frames(
 
 
 def ivfpq_search_frames(
-    centroids: DataFrame,
-    cb: DataFrame,
+    centroids: tuple,
+    cb: dict,
     codes: DataFrame,
     norms: DataFrame,
     corpus: DataFrame,
@@ -1758,10 +1468,11 @@ def ivfpq_search_frames(
     mass_multi: int | None = None,
     sched_ref: int | None = None,
     pool: int | None = None,
-    centroid_panel: tuple | None = None,
-    cb_panel: dict | None = None,
 ) -> DataFrame:
-    """The serve half of ivfpq_topk: probe cells per query, ADC-rank
+    """The serve half of ivfpq_topk over the (ids asc, matrix)
+    ``centroids`` panel and the per-subspace codebook panel ``cb``
+    (:func:`centroid_panel` / :func:`codebook_panel`, or
+    panel_from_parquet for a persisted index): probe cells per query, ADC-rank
     the probed cells' codes by the exact decomposition
     floor(dot(q, c)·scale) + Σ_s floor(dot(q_s, cw)·scale) — all int64
     arithmetic after the floors, so candidate ranking is engine-exact
@@ -1795,7 +1506,7 @@ def ivfpq_search_frames(
     if probe_mass is None:
         probes = _nearest_centroids(
             centroids, queries, id_col, vec_col, nprobe, "query_id",
-            spread_input=False, panel=centroid_panel,
+            spread_input=False,
         )
     else:
         # posting rows per cell: the persisted C-row table when given,
@@ -1811,25 +1522,18 @@ def ivfpq_search_frames(
         probes = _mass_probes(
             centroids, queries, sizes, probe_mass, id_col, vec_col,
             mass_multi=mass_multi, sched_ref=sched_ref,
-            panel=centroid_panel,
         )
     # per-(query, probed cell) coarse term floor(dot(q, centroid)*scale)
     # and the cell-independent per-(query, subspace, codeword) residual
     # lookup table — both via Arrow kernels over bounded sides (r14)
-    from bigdatafinalproject_spark.operators.arrow_kernels import (
-        adc_lookup_arrow,
-        coarse_terms_arrow,
-    )
-
     qc = coarse_terms_arrow(
-        probes, queries,
-        centroid_panel if centroid_panel is not None else centroids,
-        scale, id_col, vec_col,
+        probes,
+        panel_from_frame(
+            queries, id_col, vec_col, "ivfpq_search_frames queries"
+        ),
+        centroids, scale,
     )
-    qtab = adc_lookup_arrow(
-        queries, cb_panel if cb_panel is not None else cb,
-        m, dim, scale, id_col, vec_col,
-    )
+    qtab = adc_lookup_arrow(queries, cb, m, dim, scale, id_col, vec_col)
     # restrict the big codes relation to probed cells FIRST, then the
     # broadcast table lookups; per-cell score = coarse + residual ADC
     adc_cell = (
@@ -1928,7 +1632,9 @@ def ivfpq_topk(
         # maintained cell_sizes table and scans codes once
         codes = materialize_barrier(codes)
     return ivfpq_search_frames(
-        centroids, cb, codes, norms, corpus, queries,
+        centroid_panel(centroids, "ivfpq_topk"),
+        codebook_panel(cb, "ivfpq_topk"),
+        codes, norms, corpus, queries,
         id_col=id_col, vec_col=vec_col, k=k, nprobe=nprobe, m=m, dim=dim,
         rerank=rerank, scale=scale, pool_cap=pool_cap, scale_ref=scale_ref,
         probe_mass=probe_mass,

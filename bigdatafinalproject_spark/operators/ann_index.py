@@ -311,6 +311,27 @@ def _read_table(
     return spark.read.parquet(*_unit_paths(index_dir, meta, table))
 
 
+# (id, vector, group) columns of the frozen quantizer tables
+_PANEL_COLS = {
+    "centroids": ("centroid_id", "_cent", None),
+    "codebook": ("code", "_cw", "s"),
+}
+
+
+def _frozen_panel(index_dir: str, meta: dict, table: str):
+    """The kernel panel of a frozen quantizer table (``centroids`` or
+    ``codebook``), read driver-side from its manifest-scoped parquet
+    (arrow_kernels.panel_from_parquet — bit-identical to a Spark
+    collect of the same rows, without the per-call collect job)."""
+    from bigdatafinalproject_spark.operators.arrow_kernels import (
+        panel_from_parquet,
+    )
+
+    return panel_from_parquet(
+        _unit_paths(index_dir, meta, table), *_PANEL_COLS[table]
+    )
+
+
 def _snap_pairs(cell_sizes) -> list[list[int]] | None:
     """Normalize a cell-size snapshot (dict or stored list of pairs)
     to the manifest form: [[centroid_id, count], ...] sorted by cell —
@@ -1761,21 +1782,11 @@ def ivf_index_append(
     stage = None
     try:
         multi = int(meta.get("params", {}).get("multi_assign", 1))
-        # r15: the frozen centroid panel is read driver-side from its
-        # parquet (panel_from_parquet — bit-identical to the collect
-        # it replaces), so the per-micro-batch panel-collect job
-        # disappears
-        from bigdatafinalproject_spark.operators.arrow_kernels import (
-            panel_from_parquet,
-        )
-
-        cpanel = panel_from_parquet(
-            _unit_paths(index_dir, meta, "centroids"),
-            "centroid_id", "_cent",
-        )
+        # r15: the frozen centroid panel is read driver-side, so the
+        # per-micro-batch panel-collect job disappears
         postings = _nearest_centroids(
-            None, delta, id_col, vec_col, multi, "neighbor_id",
-            panel=cpanel,
+            _frozen_panel(index_dir, meta, "centroids"),
+            delta, id_col, vec_col, multi, "neighbor_id",
         )
         track_sizes = "cell_sizes" in meta.get("tables", [])
         # stage EVERY Spark job of this append pre-invalidate (v5.1):
@@ -1904,10 +1915,6 @@ def pq_index_append(
     trade as in :func:`ivf_index_append`."""
     from pyspark.sql import functions as F
 
-    from bigdatafinalproject_spark.operators.ann import (
-        encode_against_codebook,
-    )
-
     txn = _writer_txn(index_dir, batch_id, "append")
     if txn is None:
         return index_dir  # redelivered batch: idempotent skip
@@ -1921,21 +1928,18 @@ def pq_index_append(
         dim = int(params.get("dim", 64))
         # encode the delta with THE SAME definition pq_build_frames
         # uses (shared helper — build and append cannot diverge).
-        # r15: the frozen codebook panel is read driver-side
-        # (codebook_from_parquet — bit-identical to the collect it
-        # replaces), dropping the per-micro-batch collect job
+        # r15: the frozen codebook panel is read driver-side,
+        # dropping the per-micro-batch collect job
         from bigdatafinalproject_spark.operators.arrow_kernels import (
-            codebook_from_parquet,
+            encode_codebook_arrow,
         )
 
-        dcodes = encode_against_codebook(
+        dcodes = encode_codebook_arrow(
             delta.select(
                 F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_v")
             ),
-            None, m, dim, ["neighbor_id"],
-            panel=codebook_from_parquet(
-                _unit_paths(index_dir, meta, "codebook"), m
-            ),
+            _frozen_panel(index_dir, meta, "codebook"),
+            m, dim, ["neighbor_id"],
         )
         from bigdatafinalproject_spark.operators.arrow_kernels import (
             norms_arrow,
@@ -2600,7 +2604,6 @@ def ivf_index_search(
     from bigdatafinalproject_spark.operators.ann import mass_schedule_for_n
 
     meta = _serving_manifest(index_dir, "ivf")
-    centroids = _read_table(spark, index_dir, meta, "centroids")
     postings = _read_table(spark, index_dir, meta, "postings")
     # the maintained cell sizes (v4+): the manifest's folded snapshot
     # when present (r12 — zero extra reads per search), else the
@@ -2612,23 +2615,15 @@ def ivf_index_search(
     base = meta.get("base_rows")
     if probe_mass == "auto" and sref is not None and base:
         probe_mass = mass_schedule_for_n(int(base), int(sref))
-    # r15: the frozen centroid panel reads driver-side from its
-    # parquet — the per-search Spark collect job disappears (content
-    # bit-identical; see panel_from_parquet)
-    from bigdatafinalproject_spark.operators.arrow_kernels import (
-        panel_from_parquet,
-    )
-
+    # r15: the frozen centroid panel reads driver-side — the
+    # per-search Spark collect job disappears
     return ivf_search_frames(
-        centroids, postings, corpus, queries,
+        _frozen_panel(index_dir, meta, "centroids"),
+        postings, corpus, queries,
         id_col=id_col, vec_col=vec_col, k=k, nprobe=nprobe,
         probe_mass=probe_mass, cell_sizes=cell_sizes,
         mass_multi=int(p.get("multi_assign", 1)),
         sched_ref=int(sref) if sref is not None else None,
-        centroid_panel=panel_from_parquet(
-            _unit_paths(index_dir, meta, "centroids"),
-            "centroid_id", "_cent",
-        ),
     )
 
 
@@ -2677,7 +2672,6 @@ def pq_index_search(
             f"pq_index_search: caller dim={dim} but the index at "
             f"{index_dir!r} was built with dim={dim_idx} (manifest wins)"
         )
-    cb = _read_table(spark, index_dir, meta, "codebook")
     codes = _read_table(spark, index_dir, meta, "codes")
     norms = _read_table(spark, index_dir, meta, "norms")
     base = meta.get("base_rows")
@@ -2689,18 +2683,12 @@ def pq_index_search(
         )
     # r15: frozen codebook panel read driver-side (bit-identical) —
     # the per-search collect job disappears
-    from bigdatafinalproject_spark.operators.arrow_kernels import (
-        codebook_from_parquet,
-    )
-
     return pq_search_frames(
-        cb, codes, norms, corpus, queries,
+        _frozen_panel(index_dir, meta, "codebook"),
+        codes, norms, corpus, queries,
         id_col=id_col, vec_col=vec_col, k=k, m=m_idx, dim=dim_idx,
         rerank=rerank, scale=scale, pool_cap=pool_cap,
         scale_ref=scale_ref, pool=pool,
-        cb_panel=codebook_from_parquet(
-            _unit_paths(index_dir, meta, "codebook"), m_idx
-        ),
     )
 
 
@@ -2821,8 +2809,6 @@ def ivfpq_index_search(
     params = meta.get("params", {})
     m_idx = int(params.get("m", 16))
     dim_idx = int(params.get("dim", 64))
-    centroids = _read_table(spark, index_dir, meta, "centroids")
-    cb = _read_table(spark, index_dir, meta, "codebook")
     codes = _read_table(spark, index_dir, meta, "codes")
     norms = _read_table(spark, index_dir, meta, "norms")
     # the maintained cell sizes: manifest snapshot (r12) or the summed
@@ -2840,13 +2826,10 @@ def ivfpq_index_search(
         )
     # r15: frozen quantizer panels read driver-side (bit-identical) —
     # the per-search collect jobs disappear
-    from bigdatafinalproject_spark.operators.arrow_kernels import (
-        codebook_from_parquet,
-        panel_from_parquet,
-    )
-
     return ivfpq_search_frames(
-        centroids, cb, codes, norms, corpus, queries,
+        _frozen_panel(index_dir, meta, "centroids"),
+        _frozen_panel(index_dir, meta, "codebook"),
+        codes, norms, corpus, queries,
         id_col=id_col, vec_col=vec_col, k=k, nprobe=nprobe,
         m=m_idx, dim=dim_idx, rerank=rerank, scale=scale,
         pool_cap=pool_cap, scale_ref=scale_ref, probe_mass=probe_mass,
@@ -2854,13 +2837,6 @@ def ivfpq_index_search(
         mass_multi=int(params.get("multi_assign", 3)),
         sched_ref=int(csref) if csref is not None else None,
         pool=pool,
-        centroid_panel=panel_from_parquet(
-            _unit_paths(index_dir, meta, "centroids"),
-            "centroid_id", "_cent",
-        ),
-        cb_panel=codebook_from_parquet(
-            _unit_paths(index_dir, meta, "codebook"), m_idx
-        ),
     )
 
 
@@ -2882,10 +2858,6 @@ def ivfpq_index_append(
     prune. Drift trade: BOTH quantizers reflect the base distribution
     — :func:`needs_retrain` watches the appended fraction."""
     from pyspark.sql import functions as F
-
-    from bigdatafinalproject_spark.operators.ann import (
-        encode_against_codebook,
-    )
 
     txn = _writer_txn(index_dir, batch_id, "append")
     if txn is None:
@@ -2910,18 +2882,13 @@ def ivfpq_index_append(
         # deleting the delta re-join + the per-batch BroadcastExchange
         # of the centroid table + the interpreted zip_with.
         from bigdatafinalproject_spark.operators.arrow_kernels import (
-            codebook_from_parquet,
-            panel_from_parquet,
+            encode_codebook_arrow,
             topn_centroids_arrow,
         )
         from bigdatafinalproject_spark.operators.layout import (
             spread_scaled,
         )
 
-        cpanel = panel_from_parquet(
-            _unit_paths(index_dir, meta, "centroids"),
-            "centroid_id", "_cent",
-        )
         assigned = topn_centroids_arrow(
             spread_scaled(
                 delta.select(
@@ -2930,17 +2897,16 @@ def ivfpq_index_append(
                 ),
                 "neighbor_id",
             ),
-            cpanel, "neighbor_id", "_v", multi, "neighbor_id",
+            _frozen_panel(index_dir, meta, "centroids"),
+            "neighbor_id", "_v", multi, "neighbor_id",
             emit_residual=True,
         )
-        dcodes = encode_against_codebook(
+        dcodes = encode_codebook_arrow(
             assigned.select(
                 "neighbor_id", "centroid_id", F.col("_rv").alias("_v")
             ),
-            None, m, dim, ["neighbor_id", "centroid_id"],
-            panel=codebook_from_parquet(
-                _unit_paths(index_dir, meta, "codebook"), m
-            ),
+            _frozen_panel(index_dir, meta, "codebook"),
+            m, dim, ["neighbor_id", "centroid_id"],
         )
         from bigdatafinalproject_spark.operators.arrow_kernels import (
             norms_arrow,

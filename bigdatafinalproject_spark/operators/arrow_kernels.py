@@ -28,19 +28,21 @@ centroid rows are sorted by id ascending and numpy's stable
 sort / first-occurrence argmin reproduce ``row_number() OVER
 (ORDER BY score, id)`` / ``min(struct(dist, id))`` exactly.
 
-Driver-boundedness: each kernel collects only the side the old plan
-already BROADCAST (a trained centroid/codebook frame of <= ~1k rows,
-or the query panel of an exact-tier scan) — same memory class, same
-rows, now materialized once instead of re-executed per plan reference.
-``_COLLECT_CAP`` turns an accidental unbounded call into a loud error
-instead of a silent driver OOM. The big side streams through
-``mapInArrow`` partition by partition and is never collected.
+Each kernel is the one execution form of its operator: ``mapInArrow``
+is a per-partition map, so the big side may be a batch or a streaming
+frame (``lsh_arrow`` runs on the unbatched embedding stream) and is
+never collected. The small side is always a pre-built panel —
+``(ids asc, matrix)`` or ``{group: (ids asc, matrix)}`` — that the
+caller builds once with :func:`panel_from_frame` (a bounded collect)
+or :func:`panel_from_parquet` (a driver-side read whose row count is
+checked against the footers first); no kernel collects anything.
 
-Streaming frames cannot ``collect()`` mid-plan; every public entry
-point takes ``df.isStreaming`` into account at the CALLER (the callers
-fall back to the expression form there — today only lsh_signatures
-runs on an unbatched streaming frame; the index-maintenance paths all
-operate inside foreachBatch on batch frames).
+Driver-boundedness: a panel holds only the side the old plan already
+BROADCAST (a trained centroid/codebook frame of <= ~1k rows, or the
+query panel of an exact-tier scan) — same memory class, same rows, now
+materialized once instead of re-executed per plan reference.
+``_COLLECT_CAP`` turns an accidental unbounded panel into a loud error
+naming its source instead of a silent driver OOM.
 """
 
 from __future__ import annotations
@@ -194,25 +196,51 @@ def _list_to_mat(arr) -> np.ndarray:
     return flat.astype(np.float64, copy=False).reshape(n, d)
 
 
-def collect_matrix(
-    df: DataFrame, id_col: str, vec_col: str
-) -> tuple[np.ndarray, np.ndarray]:
-    """Bounded collect of a small (id, vector) frame -> (ids asc,
-    matrix) — the rows the old plans broadcast, materialized once."""
-    rows = df.select(id_col, vec_col).collect()
-    if len(rows) > _COLLECT_CAP:
+def _check_cap(n_rows: int, source: str) -> None:
+    if n_rows > _COLLECT_CAP:
         raise ValueError(
-            f"arrow kernel small side has {len(rows)} rows "
-            f"(cap {_COLLECT_CAP}): refusing to collect a corpus"
+            f"{source}: panel has {n_rows} rows (cap {_COLLECT_CAP}): "
+            "refusing to collect a corpus"
         )
-    rows.sort(key=lambda r: r[0])
-    ids = np.array([r[0] for r in rows], dtype=np.int64)
+
+
+def _sorted_panel(ids, mat: np.ndarray, groups=None):
+    """The one sort step of both panel builders: (ids asc, matrix),
+    or {group: (ids asc, matrix)} when ``groups`` labels the rows.
+    The sort is stable, so rows with equal ids keep their read order."""
+    ids = np.asarray(ids, dtype=np.int64)
+    if groups is None:
+        order = np.argsort(ids, kind="stable")
+        return ids[order], mat[order]
+    groups = np.asarray(groups, dtype=np.int64)
+    return {
+        int(g): _sorted_panel(ids[groups == g], mat[groups == g])
+        for g in np.unique(groups)
+    }
+
+
+def panel_from_frame(
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    source: str,
+    group_col: str | None = None,
+):
+    """Bounded collect of a small (id, vector[, group]) frame into a
+    kernel panel — the rows the old plans broadcast, materialized once.
+    ``source`` names the caller in the cap error. Returns (ids asc,
+    matrix), or {group: (ids asc, matrix)} with ``group_col``."""
+    cols = [id_col, vec_col] + ([group_col] if group_col else [])
+    rows = df.select(*cols).collect()
+    _check_cap(len(rows), source)
     mat = (
         np.array([r[1] for r in rows], dtype=np.float64)
         if rows
         else np.zeros((0, 0))
     )
-    return ids, mat
+    return _sorted_panel(
+        [r[0] for r in rows], mat, [r[2] for r in rows] if group_col else None
+    )
 
 
 def _spark_field(df: DataFrame, col: str) -> str:
@@ -237,64 +265,40 @@ def _expand_parquet(paths: list[str]) -> list[str]:
 
 
 def panel_from_parquet(
-    paths: list[str], id_col: str, vec_col: str
-) -> tuple[np.ndarray, np.ndarray]:
-    """Driver-side twin of :func:`collect_matrix` for a panel that
-    lives in plain parquet (r15): read (id, vector) straight from the
-    files with pyarrow instead of running a Spark collect job. The
-    parquet bytes are the ground truth both paths decode — int64 ids
-    and list<double> vectors come back bit-identical — so the (ids
-    asc, float64 matrix) result equals collect_matrix's exactly. Used
-    by the persisted-index append paths, where the per-micro-batch
-    collect of a frozen ≤1k-row quantizer table was pure per-job
-    scheduling overhead (profiled: ~8 small jobs per append)."""
+    paths: list[str],
+    id_col: str,
+    vec_col: str,
+    group_col: str | None = None,
+):
+    """Driver-side twin of :func:`panel_from_frame` for a panel that
+    lives in plain parquet (r15): read (id, vector[, group]) straight
+    from the files with pyarrow instead of running a Spark collect
+    job. The parquet bytes are the ground truth both paths decode —
+    int64 ids and list<double> vectors come back bit-identical — so
+    the panel equals panel_from_frame's exactly. Used by the
+    persisted-index append and serve paths, where the per-call
+    collect of a frozen quantizer table was pure per-job scheduling
+    overhead. The footers' row counts are checked against the cap
+    before any data is read."""
     import pyarrow.parquet as papq
 
-    t = papq.ParquetDataset(_expand_parquet(paths)).read(
-        columns=[id_col, vec_col]
+    files = _expand_parquet(paths)
+    _check_cap(
+        sum(papq.read_metadata(f).num_rows for f in files),
+        f"panel_from_parquet {paths}",
     )
-    if t.num_rows > _COLLECT_CAP:
-        raise ValueError(
-            f"arrow kernel small side has {t.num_rows} rows "
-            f"(cap {_COLLECT_CAP}): refusing to collect a corpus"
-        )
-    ids = t[id_col].to_numpy(zero_copy_only=False).astype(np.int64)
-    mat = _list_to_mat(t[vec_col])
-    if len(ids) == 0:
-        return ids, np.zeros((0, 0))
-    order = np.argsort(ids, kind="stable")
-    return ids[order], mat[order]
-
-
-def codebook_from_parquet(
-    paths: list[str], m: int
-) -> dict[int, tuple[np.ndarray, np.ndarray]]:
-    """Driver-side twin of ``encode_codebook_arrow``'s bounded
-    codebook collect (r15): the per-subspace (code ids asc, codeword
-    matrix) dict read straight from the persisted codebook parquet."""
-    import pyarrow.parquet as papq
-
-    t = papq.ParquetDataset(_expand_parquet(paths)).read(
-        columns=["s", "code", "_cw"]
+    cols = [id_col, vec_col] + ([group_col] if group_col else [])
+    t = papq.ParquetDataset(files).read(columns=cols)
+    return _sorted_panel(
+        t[id_col].to_numpy(zero_copy_only=False),
+        _list_to_mat(t[vec_col]),
+        t[group_col].to_numpy(zero_copy_only=False) if group_col else None,
     )
-    if t.num_rows > _COLLECT_CAP:
-        raise ValueError("arrow kernel codebook over cap")
-    ss = t["s"].to_numpy(zero_copy_only=False).astype(np.int64)
-    codes = t["code"].to_numpy(zero_copy_only=False).astype(np.int64)
-    mat = _list_to_mat(t["_cw"])
-    by_s: dict[int, tuple[np.ndarray, np.ndarray]] = {}
-    for s in range(m):
-        mask = ss == s
-        sc = codes[mask]
-        sm = mat[mask]
-        order = np.argsort(sc, kind="stable")
-        by_s[s] = (sc[order], sm[order])
-    return by_s
 
 
 def topn_centroids_arrow(
     df: DataFrame,
-    centroids: DataFrame,
+    centroids: tuple[np.ndarray, np.ndarray],
     id_col: str,
     vec_col: str,
     n: int,
@@ -311,15 +315,11 @@ def topn_centroids_arrow(
     pair (elementwise double subtraction of exactly-widened values —
     the ``zip_with`` residual bit-for-bit), which lets the IVFPQ build
     skip re-joining the corpus and the centroids downstream.
-    ``centroids`` may also be an already-built (ids asc, matrix)
-    panel tuple (r15 — see panel_from_parquet). A zero vector on
-    either side raises ``ValueError`` naming this kernel and its ids
-    (:func:`seq_norm`)."""
+    ``centroids`` is the (ids asc, matrix) centroid panel. A zero
+    vector on either side raises ``ValueError`` naming this kernel and
+    its ids (:func:`seq_norm`)."""
     _ensure_worker_imports(df)
-    if isinstance(centroids, tuple):
-        cids, C = centroids
-    else:
-        cids, C = collect_matrix(centroids, "centroid_id", "_cent")
+    cids, C = centroids
     cn = seq_norm(C, "topn_centroids_arrow centroids", cids)
     n_eff = int(min(n, len(cids)))
     src = df.select(F.col(id_col).alias(out), F.col(vec_col).alias("_v"))
@@ -375,37 +375,9 @@ def topn_centroids_arrow(
     return src.mapInArrow(kernel, schema)
 
 
-def collect_grouped_centroids(
-    cents: DataFrame, group_col: str | None = "s"
-) -> dict[int, tuple[np.ndarray, np.ndarray]]:
-    """Bounded collect of a (group?, cid, centroid) frame into
-    {group: (cids asc, matrix)} — the driver-side form the argmin /
-    encode kernels consume. Group 0 holds everything when
-    ``group_col`` is None."""
-    cols = ([group_col] if group_col else []) + ["cid", "centroid"]
-    rows = cents.select(*cols).collect()
-    if len(rows) > _COLLECT_CAP:
-        raise ValueError("arrow kernel centroid frame over cap")
-    groups: dict[int, tuple[np.ndarray, np.ndarray]] = {}
-    if group_col is None:
-        rows.sort(key=lambda r: r[0])
-        groups[0] = (
-            np.array([r[0] for r in rows], dtype=np.int64),
-            np.array([r[1] for r in rows], dtype=np.float64),
-        )
-        return groups
-    for g in sorted({r[0] for r in rows}):
-        grows = sorted((r for r in rows if r[0] == g), key=lambda r: r[1])
-        groups[int(g)] = (
-            np.array([r[1] for r in grows], dtype=np.int64),
-            np.array([r[2] for r in grows], dtype=np.float64),
-        )
-    return groups
-
-
 def argmin_centroids_arrow(
     emb: DataFrame,
-    cents: DataFrame | dict[int, tuple[np.ndarray, np.ndarray]],
+    groups: dict[int, tuple[np.ndarray, np.ndarray]],
     id_col: str,
     vec_col: str,
     group_cols: tuple[str, ...] = (),
@@ -416,18 +388,11 @@ def argmin_centroids_arrow(
     (numpy first-occurrence argmin over cid-ascending columns ==
     ``min(struct(dist, cid))``). With ``group_cols`` (the PQ subspace
     index) the centroid set and the argmin are scoped per group.
-    ``cents`` may be the already-collected driver-side dict (the
-    trainer's per-round form — no extra job); ``carry_vec`` passes the
-    input vector through, which lets the Lloyd means consume the
-    assignment without re-joining the corpus."""
+    ``groups`` is the {group: (cids asc, matrix)} centroid panel, all
+    centroids under group 0 when ``group_cols`` is empty; ``carry_vec``
+    passes the input vector through, which lets the Lloyd means
+    consume the assignment without re-joining the corpus."""
     _ensure_worker_imports(emb)
-    if isinstance(cents, dict):
-        groups = cents
-    elif group_cols:
-        groups = collect_grouped_centroids(cents, group_cols[0])
-    else:
-        groups = collect_grouped_centroids(cents, None)
-
     cols = [id_col, *group_cols, vec_col]
     src = emb.select(*cols)
     schema = ", ".join(
@@ -486,34 +451,25 @@ def argmin_centroids_arrow(
 
 
 def encode_codebook_arrow(
-    frame: DataFrame, cb: DataFrame, m: int, dim: int, keys: list[str]
+    frame: DataFrame,
+    by_s: dict[int, tuple[np.ndarray, np.ndarray]],
+    m: int,
+    dim: int,
+    keys: list[str],
 ) -> DataFrame:
-    """Drop-in for ``operators.ann.encode_against_codebook``: the PQ
-    argmin encode as one kernel pass — subspace slicing, the
-    dim-sequential L2 against each subspace's codewords, and the
-    ties-to-lowest-code argmin all happen in numpy, emitting the
-    (keys..., s, code) rows directly. Replaces an explode + broadcast
-    join + min(struct) aggregation (one shuffle of the largest
-    relation's m-fan-out removed outright). ``cb`` may also be an
-    already-built per-subspace panel dict (r15 — see
-    codebook_from_parquet)."""
+    """THE PQ encode, shared by every build and append path (so the
+    build and append halves cannot diverge on a tie-break or cast):
+    nearest codeword per (row, subspace) by dim-sequential L2, ties to
+    the smallest code id, as one kernel pass emitting the (keys..., s,
+    code) rows directly. ``frame`` carries ``keys`` + a ``_v`` vector
+    column (raw vectors for plain PQ, residuals for IVFPQ); ``by_s`` is
+    the per-subspace {s: (code ids asc, codeword matrix)} codebook
+    panel. Replaces an explode + broadcast join + min(struct)
+    aggregation (one shuffle of the largest relation's m-fan-out
+    removed outright)."""
     _ensure_worker_imports(frame)
     sub = dim // m
     assert sub * m == dim
-    if isinstance(cb, dict):
-        by_s = cb
-    else:
-        rows = cb.select("s", "code", "_cw").collect()
-        if len(rows) > _COLLECT_CAP:
-            raise ValueError("arrow kernel codebook over cap")
-        by_s = {}
-        for s in range(m):
-            srows = sorted((r for r in rows if r[0] == s), key=lambda r: r[1])
-            by_s[s] = (
-                np.array([r[1] for r in srows], dtype=np.int64),
-                np.array([r[2] for r in srows], dtype=np.float64),
-            )
-
     src = frame.select(*keys, "_v")
     schema = ", ".join(
         [_spark_field(src, k) for k in keys] + ["s int", "code bigint"]
@@ -569,7 +525,7 @@ def norms_arrow(
 
 def adc_lookup_arrow(
     queries: DataFrame,
-    cb: DataFrame,
+    by_s: dict[int, tuple[np.ndarray, np.ndarray]],
     m: int,
     dim: int,
     scale: int,
@@ -580,19 +536,9 @@ def adc_lookup_arrow(
     _pq = floor(seqdot(q_subspace, codeword) * scale) as int64 — one
     kernel pass over the bounded query panel with the codebook in the
     closure, replacing the subspace explode + broadcast join +
-    interpreted fold. ``cb`` may also be an already-built per-subspace
-    panel dict (r15 — codebook_from_parquet)."""
+    interpreted fold. ``by_s`` is the per-subspace codebook panel."""
     _ensure_worker_imports(queries)
     sub = dim // m
-    if isinstance(cb, dict):
-        by_s = cb
-    else:
-        by_s = collect_grouped_centroids(
-            cb.select(
-                "s", F.col("code").alias("cid"), F.col("_cw").alias("centroid")
-            ),
-            "s",
-        )
     src = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col))
     schema = "query_id bigint, s int, code bigint, _pq bigint"
     fscale = float(scale)
@@ -631,28 +577,19 @@ def adc_lookup_arrow(
 
 def coarse_terms_arrow(
     probes: DataFrame,
-    queries: DataFrame,
-    centroids: DataFrame,
+    queries: tuple[np.ndarray, np.ndarray],
+    centroids: tuple[np.ndarray, np.ndarray],
     scale: int,
-    id_col: str,
-    vec_col: str,
 ) -> DataFrame:
     """The per-(query, probed cell) coarse ADC term (query_id,
     centroid_id, _qc = floor(seqdot(q, centroid) * scale) as int64):
-    both the query panel and the centroid frame are bounded (they were
+    both the query panel and the centroid panel are bounded (they were
     broadcast in the join form), so the two lookups and the dot run in
-    one kernel pass over the probe pairs. ``centroids`` may also be an
-    already-built (ids asc, matrix) panel tuple (r15)."""
+    one kernel pass over the probe pairs. ``queries`` and
+    ``centroids`` are (ids asc, matrix) panels."""
     _ensure_worker_imports(probes)
-    qids, Q = collect_matrix(
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col)),
-        "query_id",
-        vec_col,
-    )
-    if isinstance(centroids, tuple):
-        cids, C = centroids
-    else:
-        cids, C = collect_matrix(centroids, "centroid_id", "_cent")
+    qids, Q = queries
+    cids, C = centroids
     src = probes.select("query_id", "centroid_id")
     schema = "query_id bigint, centroid_id bigint, _qc bigint"
     fscale = float(scale)
@@ -945,57 +882,39 @@ def pair_cosine_arrow(
     return src.mapInArrow(kernel, schema)
 
 
-def cosine_topk_arrow(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str,
-    vec_col: str,
-    k: int,
+def _local_topn(
+    src: DataFrame,
+    qids: np.ndarray,
+    scorer,
+    n: int,
+    score_col: str,
+    rank_col: str,
 ) -> DataFrame:
-    """Drop-in for the exact brute-force tier
-    (``operators.ann.cosine_topk``): the query panel — the side the
-    old plan broadcast — is collected once; each corpus partition
-    computes its LOCAL top-k per query in the kernel (any global
-    top-k row is in its partition's top-k under the same (cosine
-    DESC, neighbor ASC) order), and a final window over the
-    partitions * |Q| * k survivors assigns the global rank. The
-    corpus is never collected and never crossJoin-fanned. A zero
-    vector on either side raises ``ValueError`` naming this kernel
-    and its ids (:func:`seq_norm`)."""
+    """The shared top-``n`` scan of a (neighbor_id, ...) frame against
+    a bounded query panel with ids ``qids``. ``scorer(batch, nids)``
+    returns the (rows, queries) score matrix of one Arrow batch. Each
+    partition keeps its LOCAL top-n per query under (score DESC,
+    neighbor_id ASC), self-pairs excluded — any global top-n row is in
+    its partition's top-n under the same order — and a window over the
+    partitions * |Q| * n survivors assigns the global rank
+    ``rank_col``. Scores must hold no NaN, so numpy's lexsort order
+    equals Spark's DESC NULLS LAST ordering."""
     from pyspark.sql import Window as W
 
-    _ensure_worker_imports(corpus)
-    qids, Q = collect_matrix(
-        queries.select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv")
-        ),
-        "query_id",
-        "_qv",
-    )
-    qn = seq_norm(Q, "cosine_topk_arrow queries", qids)
     nq = len(qids)
-    src = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_v")
-    )
-    schema = "query_id bigint, neighbor_id bigint, cosine double"
+    schema = f"query_id bigint, neighbor_id bigint, {score_col} double"
 
     def kernel(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for b in it:
-            nids_a = b.column(0)
-            nids = nids_a.to_numpy(zero_copy_only=False)
-            X = _list_to_mat(b.column(1))
-            nb = X.shape[0]
+            nids = b.column(0).to_numpy(zero_copy_only=False)
+            nb = len(nids)
             if nb == 0 or nq == 0:
                 continue
-            cos = seq_dot(X, Q)
-            xn = seq_norm(X, "cosine_topk_arrow", nids)
-            denom = xn[:, None] * qn[None, :]
-            np.divide(cos, denom, out=cos)
-            kk = min(k, nb)
+            scores = scorer(b, nids)
+            kk = min(n, nb)
             out_q, out_n, out_c = [], [], []
             for j in range(nq):
-                col = cos[:, j]
-                # exclude the self-pair, preserve (cos DESC, id ASC)
+                col = scores[:, j]
                 sel = np.lexsort((nids, -col))
                 sel = sel[nids[sel] != qids[j]][:kk]
                 out_q.append(np.full(len(sel), qids[j], dtype=np.int64))
@@ -1007,16 +926,48 @@ def cosine_topk_arrow(
                     pa.array(np.concatenate(out_n), pa.int64()),
                     pa.array(np.concatenate(out_c), pa.float64()),
                 ],
-                ["query_id", "neighbor_id", "cosine"],
+                ["query_id", "neighbor_id", score_col],
             )
 
-    local = src.mapInArrow(kernel, schema)
     w = W.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
+        F.col(score_col).desc(), F.col("neighbor_id").asc()
     )
-    return local.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
+    return (
+        src.mapInArrow(kernel, schema)
+        .withColumn(rank_col, F.row_number().over(w))
+        .filter(F.col(rank_col) <= n)
     )
+
+
+def cosine_topk_arrow(
+    corpus: DataFrame,
+    queries: tuple[np.ndarray, np.ndarray],
+    id_col: str,
+    vec_col: str,
+    k: int,
+) -> DataFrame:
+    """Exact brute-force top-``k`` by cosine
+    (``operators.ann.cosine_topk``): ``queries`` is the (ids asc,
+    matrix) query panel — the side the old plan broadcast — and the
+    corpus streams through :func:`_local_topn`, never collected and
+    never crossJoin-fanned. Returns (query_id, neighbor_id, cosine,
+    rank). A zero vector on either side raises ``ValueError`` naming
+    this kernel and its ids (:func:`seq_norm`)."""
+    _ensure_worker_imports(corpus)
+    qids, Q = queries
+    qn = seq_norm(Q, "cosine_topk_arrow queries", qids)
+    src = corpus.select(
+        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_v")
+    )
+
+    def cosine(b: pa.RecordBatch, nids: np.ndarray) -> np.ndarray:
+        X = _list_to_mat(b.column(1))
+        cos = seq_dot(X, Q)
+        xn = seq_norm(X, "cosine_topk_arrow", nids)
+        np.divide(cos, xn[:, None] * qn[None, :], out=cos)
+        return cos
+
+    return _local_topn(src, qids, cosine, k, "cosine", "rank")
 
 
 def _list_to_imat(arr) -> np.ndarray:
@@ -1035,87 +986,85 @@ def _list_to_imat(arr) -> np.ndarray:
 
 def quantized_scan_arrow(
     c: DataFrame,
-    q: DataFrame,
+    q: tuple[np.ndarray, np.ndarray],
     n: int,
 ) -> DataFrame:
     """Stage-1 int8 scan of ``operators.ann.quantized_topk`` (r15 —
-    the last interpreted per-PAIR fold in the ANN family): the
-    quantized query panel (query_id, _qq array<int>, _qn2 bigint) is
-    bounded — collected once, the side the old plan broadcast into the
-    crossJoin — and each corpus partition computes its LOCAL top-n per
-    query in the kernel; a final window over the partitions * |Q| * n
-    survivors assigns the global rank (any global top-n row is in its
-    partition's top-n under the same (_qcos DESC, neighbor ASC)
-    order — the cosine_topk_arrow recipe).
+    the last interpreted per-PAIR fold in the ANN family): ``q`` is
+    the (query ids asc, int8 matrix) panel of the quantized queries —
+    the side the old plan broadcast into the crossJoin — and the
+    quantized corpus (neighbor_id, _cq, _cn2) streams through
+    :func:`_local_topn`.
 
     Bit-exactness vs the expression form: the int8 dot is int64
     integer arithmetic (exact, order-free; |dot| <= d*127² << 2^53 so
     CAST AS DOUBLE is exact), and the cosine is one IEEE divide by the
     product sqrt(_qn2)·sqrt(_cn2) computed with one sqrt per operand —
     the same three double ops as
-    ``CAST(dot AS DOUBLE) / (sqrt(_qn2) * sqrt(_cn2))``. n2 > 0 on
-    both sides (the _with_int8 contract), so no NaN/±inf rows exist
-    and numpy's lexsort order equals Spark's DESC NULLS LAST ordering.
+    ``CAST(dot AS DOUBLE) / (sqrt(_qn2) * sqrt(_cn2))``; _qn2 is the
+    query's exact int64 self-dot, recomputed from the panel. n2 > 0 on
+    both sides (the _with_int8 contract), so no NaN/±inf rows exist.
     Returns (query_id, neighbor_id) of the global top-n per query,
     self-pairs excluded."""
-    from pyspark.sql import Window as W
-
     _ensure_worker_imports(c)
-    rows = q.select("query_id", "_qq", "_qn2").collect()
-    if len(rows) > _COLLECT_CAP:
-        raise ValueError(
-            f"arrow kernel small side has {len(rows)} rows "
-            f"(cap {_COLLECT_CAP}): refusing to collect a corpus"
-        )
-    rows.sort(key=lambda r: r[0])
-    qids = np.array([r[0] for r in rows], dtype=np.int64)
-    QQ = (
-        np.array([r[1] for r in rows], dtype=np.int64)
-        if rows
-        else np.zeros((0, 0), dtype=np.int64)
-    )
-    qden = np.sqrt(
-        np.array([r[2] for r in rows], dtype=np.int64).astype(np.float64)
-    )
-    nq = len(qids)
+    qids, QQ = q
+    QQ = QQ.astype(np.int64)
+    qden = np.sqrt((QQ * QQ).sum(axis=1).astype(np.float64))
     src = c.select("neighbor_id", "_cq", "_cn2")
-    schema = "query_id bigint, neighbor_id bigint, _qcos double"
+
+    def qcos(b: pa.RecordBatch, nids: np.ndarray) -> np.ndarray:
+        CQ = _list_to_imat(b.column(1))
+        cn2 = b.column(2).to_numpy(zero_copy_only=False)
+        dot = CQ @ QQ.T  # int64, exact
+        cden = np.sqrt(cn2.astype(np.float64))
+        return dot.astype(np.float64) / (qden[None, :] * cden[:, None])
+
+    return _local_topn(src, qids, qcos, n, "_qcos", "_qrank").select(
+        "query_id", "neighbor_id"
+    )
+
+
+def lsh_arrow(
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    planes: np.ndarray,
+    bands: int,
+) -> DataFrame:
+    """Random-hyperplane LSH band signatures (``operators.ann.
+    lsh_signatures``): the P plane dots against the (P, d) ``planes``
+    matrix (dim-sequential, so each dot reproduces the SQL fold
+    bit-for-bit), the sign bits and the per-band bit strings in one
+    pass, emitting (id, band, band_sig) — ``bands`` rows per vector.
+    Runs on batch and streaming frames alike (no collect)."""
+    _ensure_worker_imports(df)
+    rows = planes.shape[0] // bands
+    src = df.select(F.col(id_col), F.col(vec_col).alias("_v"))
+    schema = f"{_spark_field(src, id_col)}, band int, band_sig string"
 
     def kernel(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for b in it:
-            nids = b.column(0).to_numpy(zero_copy_only=False)
-            CQ = _list_to_imat(b.column(1))
-            cn2 = b.column(2).to_numpy(zero_copy_only=False)
-            nb = len(nids)
-            if nb == 0 or nq == 0:
+            X = _list_to_mat(b.column(1))
+            nb = X.shape[0]
+            if nb == 0:
                 continue
-            dot = CQ @ QQ.T  # int64, exact
-            cden = np.sqrt(cn2.astype(np.float64))
-            cos = dot.astype(np.float64) / (qden[None, :] * cden[:, None])
-            kk = min(n, nb)
-            out_q, out_n, out_c = [], [], []
-            for j in range(nq):
-                col = cos[:, j]
-                sel = np.lexsort((nids, -col))
-                sel = sel[nids[sel] != qids[j]][:kk]
-                out_q.append(np.full(len(sel), qids[j], dtype=np.int64))
-                out_n.append(nids[sel])
-                out_c.append(col[sel])
+            chars = np.where(seq_dot(X, planes) > 0, "1", "0")
+            sigs = []
+            for bb in range(bands):
+                sig = chars[:, bb * rows]
+                for j in range(1, rows):
+                    sig = np.char.add(sig, chars[:, bb * rows + j])
+                sigs.append(sig)
+            take = pa.array(np.repeat(np.arange(nb), bands))
             yield pa.RecordBatch.from_arrays(
                 [
-                    pa.array(np.concatenate(out_q), pa.int64()),
-                    pa.array(np.concatenate(out_n), pa.int64()),
-                    pa.array(np.concatenate(out_c), pa.float64()),
+                    b.column(0).take(take),
+                    pa.array(np.tile(np.arange(bands, dtype=np.int32), nb)),
+                    pa.array(
+                        np.stack(sigs, axis=1).ravel().tolist(), pa.string()
+                    ),
                 ],
-                ["query_id", "neighbor_id", "_qcos"],
+                [id_col, "band", "band_sig"],
             )
 
-    local = src.mapInArrow(kernel, schema)
-    w = W.partitionBy("query_id").orderBy(
-        F.col("_qcos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        local.withColumn("_qrank", F.row_number().over(w))
-        .filter(F.col("_qrank") <= n)
-        .select("query_id", "neighbor_id")
-    )
+    return src.mapInArrow(kernel, schema)

@@ -8,10 +8,12 @@ Determinism design (the whole point of this implementation):
 - Init is data-deterministic: the k lowest-id vectors are the seed
   centroids (no rand()).
 - Distances are sequential left-to-right double folds — the same fold
-  ``list_reduce`` performs in DuckDB, so scores are bit-identical
-  across engines (the ann_* precedent).
-- Ties in the argmin break on centroid id via a struct-min aggregate —
-  a map-side-combinable groupBy, not a window.
+  ``list_reduce`` performs in DuckDB, reproduced dimension by dimension
+  in the Arrow argmin kernel — so scores are bit-identical across
+  engines (the ann_* precedent).
+- Ties in the argmin break on the lowest centroid id (the kernel's
+  first-occurrence argmin over cid-ascending centroids ==
+  ``min(struct(dist, cid))``).
 - Centroid updates are decimal-accumulated means (order-independent
   sums, one final double division) — engine- and partition-portable
   where a float mean would drift with row order.
@@ -23,26 +25,34 @@ iterations; this operator is the oracle-checkable fixed-iteration twin
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from bigdatafinalproject_spark.functions import davg
+from bigdatafinalproject_spark.operators.arrow_kernels import (
+    argmin_centroids_arrow,
+    panel_from_frame,
+)
 
 
-def _sq_dist(vec: Column, cent: Column) -> Column:
-    """Sequential-fold squared L2 distance (bit-portable, see module).
-    Element casts to double BEFORE the subtract so float inputs and
-    double (trained-mean) inputs fold identically in both engines."""
-    return F.aggregate(
-        F.zip_with(
-            vec,
-            cent,
-            lambda x, c: (x.cast("double") - c.cast("double"))
-            * (x.cast("double") - c.cast("double")),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+def _centroid_groups(
+    cents: DataFrame, group_cols: tuple[str, ...], op: str
+) -> dict:
+    """The {group: (cids asc, matrix)} panel of a (group_cols..., cid,
+    centroid) frame — every centroid under group 0 when ``group_cols``
+    is empty. The argmin kernel scopes centroids by at most ONE group
+    column (the PQ subspace index), so composite keys raise."""
+    if len(group_cols) > 1:
+        raise ValueError(
+            f"{op}: composite group keys {tuple(group_cols)} are not "
+            "supported — the argmin kernel scopes centroids by one "
+            "group column"
+        )
+    if group_cols:
+        return panel_from_frame(
+            cents, "cid", "centroid", f"{op} centroids", group_col=group_cols[0]
+        )
+    return {0: panel_from_frame(cents, "cid", "centroid", f"{op} centroids")}
 
 
 def _assign(
@@ -52,45 +62,17 @@ def _assign(
     vec_col: str,
     group_cols: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Nearest centroid per vector: broadcast the k centroids, struct-min
-    (dist, cid) per vector. k is small by construction, so the cross
-    join is k-fan-out map-side work, never a shuffle of the big side.
-    With ``group_cols`` (e.g. a PQ subspace index) the centroid join and
-    the argmin are scoped per group — one plan trains every group.
-
-    Batch frames dispatch to the Arrow kernel
-    (operators/arrow_kernels.argmin_centroids_arrow): same
-    dim-sequential arithmetic and tie rule, vectorized in numpy
-    instead of Spark's interpreted HOF path, with the k centroids
-    collected once (bounded — the same rows this plan broadcast).
-    The kernel supports at most ONE group column
-    (collect_grouped_centroids keys on group_cols[0]); composite group
-    keys keep the expression form (ADVICE r14)."""
-    if len(group_cols) <= 1 and not (emb.isStreaming or cents.isStreaming):
-        from bigdatafinalproject_spark.operators.arrow_kernels import (
-            argmin_centroids_arrow,
-        )
-
-        return argmin_centroids_arrow(emb, cents, id_col, vec_col, group_cols)
-    joined = (
-        emb.join(F.broadcast(cents), on=list(group_cols))
-        if group_cols
-        else emb.crossJoin(F.broadcast(cents))
-    )
-    d = joined.select(
-        F.col(id_col),
-        *[F.col(g) for g in group_cols],
-        F.col("cid"),
-        _sq_dist(F.col(vec_col), F.col("centroid")).alias("dist"),
-    )
-    best = d.groupBy(id_col, *group_cols).agg(
-        F.min(F.struct("dist", "cid")).alias("b")
-    )
-    return best.select(
-        F.col(id_col),
-        *[F.col(g) for g in group_cols],
-        F.col("b.cid").alias("cid"),
-        F.col("b.dist").alias("dist"),
+    """Nearest centroid per vector (id, group_cols..., cid, dist) via
+    the Arrow kernel (operators/arrow_kernels.argmin_centroids_arrow):
+    dim-sequential squared L2, ties to the lowest cid, with the k
+    centroids collected once (bounded — k is small by construction).
+    With one group column (e.g. a PQ subspace index) the centroid set
+    and the argmin are scoped per group; composite group keys raise
+    ``ValueError``."""
+    return argmin_centroids_arrow(
+        emb,
+        _centroid_groups(cents, group_cols, "clustering._assign"),
+        id_col, vec_col, group_cols,
     )
 
 
@@ -155,11 +137,6 @@ def kmeans_centroids(
             "train on the batch corpus and freeze the centroids"
         )
 
-    from bigdatafinalproject_spark.operators.arrow_kernels import (
-        argmin_centroids_arrow,
-        collect_grouped_centroids,
-    )
-
     from bigdatafinalproject_spark.operators.layout import (
         scaled_parallelism,
     )
@@ -174,8 +151,7 @@ def kmeans_centroids(
     emb = emb.repartition(
         parallelism or scaled_parallelism(emb), F.col(id_col)
     )
-    gcol = group_cols[0] if group_cols else None
-    groups = collect_grouped_centroids(init, gcol)
+    groups = _centroid_groups(init, group_cols, "clustering.kmeans_centroids")
     for _ in range(rounds):
         assigned = argmin_centroids_arrow(
             emb, groups, id_col, vec_col, group_cols, carry_vec=True
@@ -208,7 +184,7 @@ def kmeans_centroids(
         for cid, cvec in zip(cids, mat)
     ]
     schema = (
-        f"{gcol} int, " if group_cols else ""
+        f"{group_cols[0]} int, " if group_cols else ""
     ) + "cid bigint, centroid array<double>"
     return spark.createDataFrame(rows, schema)
 

@@ -30,8 +30,13 @@ from collections.abc import Callable
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from bigdatafinalproject_spark.operators.arrow_kernels import (
+    minhash_arrow,
+    shingles_arrow,
+    simhash_arrow,
+)
 from bigdatafinalproject_spark.operators.barrier import materialize_barrier
-from bigdatafinalproject_spark.operators.layout import spread
+from bigdatafinalproject_spark.operators.layout import spread, spread_scaled
 from bigdatafinalproject_spark.operators.text import norm_text, tokens
 
 _H15 = 15  # hex digits -> 60-bit hash
@@ -46,41 +51,28 @@ def _hash64(col: Column, seed: int | Column = 0) -> Column:
     ).cast("long")
 
 
+def _normalized(df: DataFrame, text_col: str, id_col: str, n: int) -> DataFrame:
+    """(id, _t) normalized text of the docs with at least ``n`` chars,
+    spread over the plan-stats partition count — the shingle and
+    MinHash kernels' input."""
+    return spread_scaled(
+        df.select(F.col(id_col), norm_text(F.col(text_col)).alias("_t")).filter(
+            F.length("_t") >= n
+        ),
+        id_col,
+    )
+
+
 def shingles(df: DataFrame, text_col: str, id_col: str, n: int = 8) -> DataFrame:
     """Distinct char n-gram shingles of normalized text, one row per
     (id, shingle). Docs shorter than n chars produce no shingles.
 
-    Batch frames dispatch to the Arrow kernel
-    (operators/arrow_kernels.shingles_arrow): Python slicing is
-    code-point indexed like ``substring``, so the emitted (id,
-    shingle) set is identical while the interpreted per-doc
-    transform + array_distinct HOF disappears."""
-    norm = norm_text(F.col(text_col))
-    if not df.isStreaming:
-        from bigdatafinalproject_spark.operators.arrow_kernels import (
-            shingles_arrow,
-        )
-        from bigdatafinalproject_spark.operators.layout import spread_scaled
-
-        d = spread_scaled(
-            df.select(F.col(id_col), norm.alias("_t")).filter(
-                F.length("_t") >= n
-            ),
-            id_col,
-        )
-        return shingles_arrow(d, id_col, n)
-    d = spread(
-        df.select(F.col(id_col), norm.alias("_t")).filter(F.length("_t") >= n),
-        id_col,
-    )
-    # dedup WITHIN each doc's array before exploding: map-side, so no
-    # global distinct exchange (ids are unique per row, so the output —
-    # distinct (id, shingle) pairs — is identical)
-    arr = F.expr(
-        f"array_distinct(transform(sequence(1, length(_t) - {n - 1}),"
-        f" i -> substring(_t, i, {n})))"
-    )
-    return d.select(id_col, F.explode(arr).alias("shingle"))
+    Runs the Arrow kernel (operators/arrow_kernels.shingles_arrow):
+    Python slicing is code-point indexed like ``substring``, so the
+    emitted (id, shingle) set equals the ``array_distinct(transform(
+    sequence(...), i -> substring(...)))`` fold the DuckDB oracles
+    replay, and the per-doc dedup stays map-side."""
+    return shingles_arrow(_normalized(df, text_col, id_col, n), id_col, n)
 
 
 def exact_duplicates(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -282,44 +274,14 @@ def minhash_signatures(
 
     One md5 per (doc, shingle); the ``num_hashes`` functions are affine
     transforms of that base hash mod 2^31-1 (the classic a*h+b family),
-    every term fitting int64 (a <= 2k+1, h31 < 2^31). The k mins are
-    computed as k parallel min-aggregates over the UN-exploded shingle
-    rows (map-side combinable, one shuffle of #docs rows) and unpivoted
-    with ``stack`` afterwards — never k× the shingle volume.
+    every term fitting int64 (a <= 2k+1, h31 < 2^31).
 
-    Batch frames dispatch to the Arrow kernel
-    (operators/arrow_kernels.minhash_arrow): shingle slicing, distinct,
-    the portable md5 hash and the k affine mins run vectorized per doc
-    with identical arithmetic — the interpreted per-doc transform HOF
-    and the k-min shuffle disappear."""
-    if not df.isStreaming:
-        from bigdatafinalproject_spark.operators.arrow_kernels import (
-            minhash_arrow,
-        )
-
-        from bigdatafinalproject_spark.operators.layout import spread_scaled
-
-        d = spread_scaled(
-            df.select(
-                F.col(id_col), norm_text(F.col(text_col)).alias("_t")
-            ).filter(F.length("_t") >= n),
-            id_col,
-        )
-        return minhash_arrow(d, id_col, n, num_hashes, _MERSENNE31)
-    sh = shingles(df, text_col, id_col, n)
-    base = sh.withColumn("_h31", _hash64(F.col("shingle")) % _MERSENNE31)
-    aggs = [
-        F.min(
-            ((2 * i + 1) * F.col("_h31") + i * 12345 + 678) % _MERSENNE31
-        ).alias(f"_mh_{i}")
-        for i in range(num_hashes)
-    ]
-    wide = base.groupBy(id_col).agg(*aggs)
-    stack_args = ", ".join(f"{i}, _mh_{i}" for i in range(num_hashes))
-    return wide.select(
-        F.col(id_col),
-        F.expr(f"stack({num_hashes}, {stack_args}) AS (seed, minhash)"),
-    ).select(id_col, F.col("seed").cast("int"), "minhash")
+    Runs the Arrow kernel (operators/arrow_kernels.minhash_arrow):
+    shingle slicing, distinct, the portable md5 hash and the k affine
+    mins run vectorized per doc with identical arithmetic."""
+    return minhash_arrow(
+        _normalized(df, text_col, id_col, n), id_col, n, num_hashes, _MERSENNE31
+    )
 
 
 def minhash_band_digests(
@@ -333,42 +295,12 @@ def minhash_band_digests(
     """Banded MinHash signatures: (id, band, band_digest) — md5 over the
     band's minhashes in seed order. The joinable LSH index shape.
 
-    Batch frames dispatch to the Arrow kernel
-    (operators/arrow_kernels.minhash_arrow with ``bands``): the band
-    digests come straight out of the signature pass, removing the
-    collect_list aggregation shuffle as well."""
-    rows = num_hashes // bands
-    if not df.isStreaming:
-        from bigdatafinalproject_spark.operators.arrow_kernels import (
-            minhash_arrow,
-        )
-
-        from bigdatafinalproject_spark.operators.layout import spread_scaled
-
-        d = spread_scaled(
-            df.select(
-                F.col(id_col), norm_text(F.col(text_col)).alias("_t")
-            ).filter(F.length("_t") >= n),
-            id_col,
-        )
-        return minhash_arrow(
-            d, id_col, n, num_hashes, _MERSENNE31, bands=bands
-        )
-    sig = minhash_signatures(df, text_col, id_col, n, num_hashes)
-    return (
-        sig.withColumn("band", (F.col("seed") / rows).cast("int"))
-        .groupBy(id_col, "band")
-        .agg(
-            F.md5(
-                F.concat_ws(
-                    ",",
-                    F.transform(
-                        F.array_sort(F.collect_list(F.struct("seed", "minhash"))),
-                        lambda s: s["minhash"].cast("string"),
-                    ),
-                )
-            ).alias("band_digest")
-        )
+    Runs the Arrow kernel (operators/arrow_kernels.minhash_arrow with
+    ``bands``): the band digests come straight out of the signature
+    pass, with no collect_list aggregation shuffle."""
+    return minhash_arrow(
+        _normalized(df, text_col, id_col, n),
+        id_col, n, num_hashes, _MERSENNE31, bands=bands,
     )
 
 
@@ -404,55 +336,15 @@ def simhash_signatures(
     """SimHash over word tokens: bit j of the signature is the sign of
     sum(token_count * (±1 per token-hash bit j)). Returns (id, simhash
     bigint). 60 bits so the portable hash covers every position."""
-    # NOTE on the rejected "zero-shuffle" alternative: the whole
-    # signature CAN be one nested higher-order expression per row, but
-    # Spark evaluates HOF lambdas interpreted (outside whole-stage
-    # codegen) with per-element boxing — measured ~3× slower than this
-    # exploded, fully-codegen'd pipeline. Explode + two map-side-
-    # combinable aggregations is the faster shape at every scale.
-    # r14: batch frames dispatch to the Arrow kernel, which computes
-    # the identical integer math per doc without generating the
+    # Runs the Arrow kernel (operators/arrow_kernels.simhash_arrow),
+    # which computes the integer math of the exploded (token, bit)
+    # aggregation pipeline per doc without generating the
     # (#token-pairs x bits) exploded rows at all.
-    if not df.isStreaming:
-        from bigdatafinalproject_spark.operators.arrow_kernels import (
-            simhash_arrow,
-        )
-
-        from bigdatafinalproject_spark.operators.layout import spread_scaled
-
-        d = spread_scaled(
-            df.select(F.col(id_col), norm_text(F.col(text_col)).alias("_t")),
-            id_col,
-        )
-        return simhash_arrow(d, id_col, bits)
-    toks = tokens(F.col(text_col))
-    d = spread(df.select(F.col(id_col), toks.alias("_tk")), id_col)
-    counts = (
-        d.select(F.col(id_col), F.explode("_tk").alias("token"))
-        .groupBy(id_col, "token")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .withColumn("th", _hash64(F.col("token")))
+    d = spread_scaled(
+        df.select(F.col(id_col), norm_text(F.col(text_col)).alias("_t")),
+        id_col,
     )
-    per_bit = (
-        counts.select(
-            id_col,
-            "cnt",
-            "th",
-            F.explode(F.sequence(F.lit(0), F.lit(bits - 1))).alias("bit"),
-        )
-        .withColumn(
-            "contrib",
-            F.col("cnt") * F.expr("(int(shiftrightunsigned(th, bit) & 1) * 2 - 1)"),
-        )
-        .groupBy(id_col, "bit")
-        .agg(F.sum("contrib").alias("bitsum"))
-    )
-    return per_bit.groupBy(id_col).agg(
-        F.sum(
-            F.when(F.col("bitsum") > 0, F.expr("shiftleft(CAST(1 AS BIGINT), bit)"))
-            .otherwise(F.lit(0).cast("long"))
-        ).alias("simhash")
-    )
+    return simhash_arrow(d, id_col, bits)
 
 
 def simhash_near_pairs(
@@ -550,7 +442,7 @@ def dedup_status_against_index(
     band_digest)) — so the in-query twin (which derives the frames
     from the corpus) and the persisted-index serve path
     (operators/ann_index.dedup_index_check) share one definition and
-    cannot diverge (the encode_against_codebook pattern). Duplicate
+    cannot diverge (the shared PQ encode pattern). Duplicate
     rows in either index frame are harmless: both joins are
     left_semi. Returns (id, status)."""
     bd = batch.select(

@@ -239,6 +239,7 @@ def ivf_cand_frac(spark, sf_dir: str) -> float:
         IVF_PROBE_MASS as _MASS,
         IVF_SCALE_REF as _SREF,
         _mass_probes,
+        centroid_panel,
     )
     from bigdatafinalproject_spark.operators.ann_index import (
         corpus_fingerprint,
@@ -274,7 +275,8 @@ def ivf_cand_frac(spark, sf_dir: str) -> float:
     # through the summing view (a fresh build is exactly C rows)
     sizes = _read_sizes(spark, _unit_paths(idx, meta, "cell_sizes"))
     probes = _mass_probes(
-        centroids, queries, sizes, _MASS, "vec_id", "embedding",
+        centroid_panel(centroids, "ann_recall_scale"),
+        queries, sizes, _MASS, "vec_id", "embedding",
         mass_multi=3, sched_ref=_SREF,
     )
     per_q = (
@@ -305,6 +307,7 @@ def ivfpq_serve_frac(spark, sf_dir: str) -> dict[str, float]:
         IVF_SCALE_REF as _SREF,
         IVFPQ_PROBE_MASS as _MASS,
         _mass_probes,
+        centroid_panel,
     )
     from bigdatafinalproject_spark.operators.ann_index import (
         _manifest,
@@ -335,7 +338,8 @@ def ivfpq_serve_frac(spark, sf_dir: str) -> dict[str, float]:
     codes = _read_table(spark, idx, meta, "codes")
     sizes = _read_sizes(spark, _unit_paths(idx, meta, "cell_sizes"))
     probes = _mass_probes(
-        centroids, queries, sizes, _MASS, "vec_id", "embedding",
+        centroid_panel(centroids, "ann_recall_scale"),
+        queries, sizes, _MASS, "vec_id", "embedding",
         mass_multi=3, sched_ref=_SREF,
     )
     tot = sizes.agg(F.sum("_csz")).collect()[0][0]

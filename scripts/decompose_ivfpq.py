@@ -27,6 +27,8 @@ def main() -> None:
 
     from bigdatafinalproject_spark.operators.ann import (
         IVF_SCALE_REF,
+        centroid_panel,
+        codebook_panel,
         cosine_topk,
         ivfpq_build_frames,
         ivfpq_search_frames,
@@ -67,7 +69,9 @@ def main() -> None:
     t0 = time.perf_counter()
     queries = emb.filter((F.col("vec_id") % 50 == 0) & (F.col("vec_id") < 3200))
     out = ivfpq_search_frames(
-        centroids, cb, codes, norms, emb, queries,
+        centroid_panel(centroids, "decompose_ivfpq"),
+        codebook_panel(cb, "decompose_ivfpq"),
+        codes, norms, emb, queries,
         k=10, m=_PQ_M, dim=64, rerank=4, scale=_PQ_SCALE,
         probe_mass="auto", mass_multi=_IVF_MULTI, sched_ref=IVF_SCALE_REF,
     )

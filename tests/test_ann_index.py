@@ -943,6 +943,7 @@ def test_ivf_cell_sizes_maintained_not_rescanned(spark, tmp_path):
 
     from bigdatafinalproject_spark.operators.ann import (
         IVF_PROBE_MASS,
+        centroid_panel,
         ivf_search_frames,
     )
     from bigdatafinalproject_spark.operators.ann_index import (
@@ -999,7 +1000,7 @@ def test_ivf_cell_sizes_maintained_not_rescanned(spark, tmp_path):
     legacy = {
         tuple(r)
         for r in ivf_search_frames(
-            centroids, postings, emb, queries, k=10,
+            centroid_panel(centroids, "test"), postings, emb, queries, k=10,
             probe_mass=IVF_PROBE_MASS,
             mass_multi=_PARAMS["multi_assign"],
         ).collect()
@@ -1382,6 +1383,7 @@ def test_manifest_cell_sizes_snapshot_tracks_log(spark, tmp_path):
 
     from bigdatafinalproject_spark.operators.ann import (
         IVF_PROBE_MASS,
+        centroid_panel,
         ivf_search_frames,
         mass_schedule_for_n,
     )
@@ -1439,7 +1441,7 @@ def test_manifest_cell_sizes_snapshot_tracks_log(spark, tmp_path):
     legacy = {
         tuple(r)
         for r in ivf_search_frames(
-            centroids, postings, emb, queries, k=10,
+            centroid_panel(centroids, "test"), postings, emb, queries, k=10,
             probe_mass=IVF_PROBE_MASS,
             cell_sizes=_read_sizes(
                 spark, _unit_paths(idx, _manifest(idx), "cell_sizes")

@@ -100,15 +100,14 @@ def test_portable_sample_filters_before_agg(spark):
 
 def test_contamination_broadcasts_benchmark_no_distinct_exchange(spark):
     """The benchmark shingle set must broadcast (train side unshuffled
-    by the join), and shingle generation must dedup map-side — batch
-    frames inside the shingles_arrow kernel (a MapInArrow node), so no
+    by the join), and shingle generation must dedup map-side — inside
+    the shingles_arrow kernel (a MapInArrow node), so no
     global-distinct exchange appears on the exploded (id, shingle) rows."""
     plan = formatted_plan(registry.QUERIES["doc_contamination"](spark, SF_DIR))
     assert "BroadcastHashJoin" in plan
-    # per-doc dedup happens map-side: either inside the Arrow shingle
-    # kernel (batch path) or via array_distinct (streaming expression
-    # path) — never as a global distinct on the exploded rows
-    assert "MapInArrow" in plan or "array_distinct" in plan
+    # per-doc dedup happens map-side inside the Arrow shingle kernel —
+    # never as a global distinct on the exploded rows
+    assert "MapInArrow" in plan
     # no HashAggregate keyed on (id, shingle) feeding an Exchange —
     # the only aggregates are the broadcast-side distinct (bounded
     # benchmark) and the final per-id rollup

@@ -580,7 +580,10 @@ def test_mass_probes_rule_hand_computed(spark):
     ceil(num/den · T), INCLUSIVE of the crossing cell, per query.
     Covers: per-query adaptivity (same budget, different cell counts),
     the inclusive-crossing boundary, and the budget-covers-all case."""
-    from bigdatafinalproject_spark.operators.ann import _mass_probes
+    from bigdatafinalproject_spark.operators.ann import (
+        _mass_probes,
+        centroid_panel,
+    )
 
     centroids = spark.createDataFrame(
         [(0, [1.0, 0.0, 0.0, 0.0]),
@@ -600,7 +603,8 @@ def test_mass_probes_rule_hand_computed(spark):
 
     def probes(num, den):
         rows = _mass_probes(
-            centroids, queries, sizes, (num, den), "vec_id", "embedding"
+            centroid_panel(centroids, "test"), queries, sizes, (num, den),
+            "vec_id", "embedding",
         ).collect()
         out = {}
         for r in rows:
