@@ -251,7 +251,7 @@ def ivf_topk(
       measured flat). Cost is r× index storage and ~r× probed rows —
       both bounded multiplicative constants, never functions of N.
     """
-    centroids, postings = ivf_build_frames(
+    _, postings, panels = ivf_build_frames(
         corpus,
         id_col=id_col,
         vec_col=vec_col,
@@ -275,7 +275,7 @@ def ivf_topk(
         # postings once
         postings = materialize_barrier(postings)
     return ivf_search_frames(
-        centroid_panel(centroids, "ivf_topk"), postings, corpus, queries,
+        panels["centroids"], postings, corpus, queries,
         id_col=id_col, vec_col=vec_col, k=k, nprobe=nprobe,
         probe_mass=probe_mass, mass_multi=multi_assign,
         sched_ref=scale_ref,
@@ -594,23 +594,26 @@ def ivf_build_frames(
     multi_assign: int = 1,
     scale_ref: int | None = None,
     centroid_cap: int = IVF_CENTROID_CAP,
-) -> tuple[DataFrame, DataFrame]:
+) -> tuple[DataFrame, DataFrame, dict]:
     """The IVF INDEX as two frames — (centroids (centroid_id, _cent),
     postings (neighbor_id, centroid_id)) — the build half of ivf_topk,
     separated so operators/ann_index.py can persist it (train once,
     serve many: the production shape; every quantity here is
-    deterministic, so a persisted index reloads bit-identical)."""
+    deterministic, so a persisted index reloads bit-identical). Also
+    returns ``{"centroids": panel}``, the panel the assign pass
+    collected, so the search half reuses it instead of collecting the
+    centroids a second time."""
     centroids = ivf_centroids(
         corpus, id_col=id_col, vec_col=vec_col,
         centroid_mod=centroid_mod, max_centroids=max_centroids,
         train_rounds=train_rounds, scale_ref=scale_ref,
         centroid_cap=centroid_cap,
     )
+    panel = centroid_panel(centroids, "ivf_build_frames")
     postings = _nearest_centroids(
-        centroid_panel(centroids, "ivf_build_frames"),
-        corpus, id_col, vec_col, multi_assign, "neighbor_id",
+        panel, corpus, id_col, vec_col, multi_assign, "neighbor_id",
     )
-    return centroids, postings
+    return centroids, postings, {"centroids": panel}
 
 
 def ivf_search_frames(
@@ -1077,7 +1080,7 @@ def pq_topk(
     pool per query. Returns (query_id, neighbor_id, cosine, rank)
     exact-cosine reranked.
     """
-    cb, codes, norms = pq_build_frames(
+    _, codes, norms, panels = pq_build_frames(
         corpus,
         id_col=id_col,
         vec_col=vec_col,
@@ -1090,7 +1093,7 @@ def pq_topk(
         train_rounds=train_rounds,
     )
     return pq_search_frames(
-        codebook_panel(cb, "pq_topk"), codes, norms, corpus, queries,
+        panels["codebook"], codes, norms, corpus, queries,
         id_col=id_col, vec_col=vec_col, k=k, m=m, dim=dim,
         rerank=rerank, scale=scale, pool_cap=pool_cap,
         scale_ref=scale_ref,
@@ -1149,13 +1152,15 @@ def pq_build_frames(
     codebook_cap: int = 64,
     scale_ref: int = 1000,
     train_rounds: int = 0,
-) -> tuple[DataFrame, DataFrame, DataFrame]:
+) -> tuple[DataFrame, DataFrame, DataFrame, dict]:
     """The PQ INDEX as three frames — (codebook (code, s, _cw), codes
     (neighbor_id, s, code), norms (neighbor_id, _cnorm)) — the build
     half of pq_topk, separated so operators/ann_index.py can persist
     it (train/encode once, serve many; exact corpus norms stored
     beside the codes is standard PQ index practice). Deterministic
-    end-to-end, so a persisted index reloads bit-identical."""
+    end-to-end, so a persisted index reloads bit-identical. Also
+    returns ``{"codebook": panel}``, the panel the encode pass
+    collected, for the search half."""
     spaces, subv = _pq_exprs(m, dim)
     # same offset-robust sampling discipline as ivf_topk (relative to
     # min(id)), with the codebook size scaled by s = ceil(sqrt(N /
@@ -1221,14 +1226,13 @@ def pq_build_frames(
         corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_v")),
         "neighbor_id",
     )
-    codes = encode_codebook_arrow(
-        cvec, codebook_panel(cb, "pq_build_frames"), m, dim, ["neighbor_id"]
-    )
+    panel = codebook_panel(cb, "pq_build_frames")
+    codes = encode_codebook_arrow(cvec, panel, m, dim, ["neighbor_id"])
     norms = norms_arrow(
         corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col)),
         "neighbor_id", vec_col, "_cnorm",
     )
-    return cb, codes, norms
+    return cb, codes, norms, {"codebook": panel}
 
 
 def pq_search_frames(
@@ -1318,9 +1322,11 @@ def ivfpq_build_frames(
     max_codewords: int = 64,
     coarse_scale_ref: int | None = None,
     centroid_cap: int = IVF_CENTROID_CAP,
-) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
+) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame, dict]:
     """The IVFPQ INDEX as four frames — (centroids, codebook, codes,
-    norms) — the composed billion-scale layout (FAISS's IVFADC): coarse
+    norms), plus the ``{"centroids", "codebook"}`` panels the assign
+    and encode passes collected (for the search half) — the composed
+    billion-scale layout (FAISS's IVFADC): coarse
     k-means cells partition the corpus, and each vector's RESIDUAL
     (vector minus its cell centroid) is product-quantized, so the
     candidate scan ranks by integer ADC over ~m-byte codes and the
@@ -1377,6 +1383,7 @@ def ivfpq_build_frames(
     from bigdatafinalproject_spark.operators.layout import scaled_parallelism
 
     _pt = scaled_parallelism(corpus)
+    cpanel = centroid_panel(centroids, "ivfpq_build_frames")
     assigned = materialize_barrier(
         topn_centroids_arrow(
             spread_scaled(
@@ -1387,8 +1394,7 @@ def ivfpq_build_frames(
                 "neighbor_id",
                 parallelism=_pt,
             ),
-            centroid_panel(centroids, "ivfpq_build_frames"),
-            "neighbor_id", "_v", multi_assign, "neighbor_id",
+            cpanel, "neighbor_id", "_v", multi_assign, "neighbor_id",
             keep_rank=True, emit_residual=True,
         )
     )
@@ -1432,18 +1438,20 @@ def ivfpq_build_frames(
         trained.select(F.col("cid").alias("code"), "s", F.col("centroid").alias("_cw"))
     )
     # encode every assignment's residual against the frozen codebook
+    cbpanel = codebook_panel(cb, "ivfpq_build_frames")
     codes = encode_codebook_arrow(
         res_all.select(
             "neighbor_id", "centroid_id", F.col("_rv").alias("_v")
         ),
-        codebook_panel(cb, "ivfpq_build_frames"),
-        m, dim, ["neighbor_id", "centroid_id"],
+        cbpanel, m, dim, ["neighbor_id", "centroid_id"],
     )
     norms = norms_arrow(
         corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col)),
         "neighbor_id", vec_col, "_cnorm",
     )
-    return centroids, cb, codes, norms
+    return centroids, cb, codes, norms, {
+        "centroids": cpanel, "codebook": cbpanel
+    }
 
 
 def ivfpq_search_frames(
@@ -1612,7 +1620,7 @@ def ivfpq_topk(
     mass-budgeted probe at 3/10 of the posting mass reads 0.93-0.95
     flat across a 30× span — the candidate scan still reads ~m-byte
     codes instead of 256-byte float vectors."""
-    centroids, cb, codes, norms = ivfpq_build_frames(
+    _, _, codes, norms, panels = ivfpq_build_frames(
         corpus, id_col=id_col, vec_col=vec_col,
         centroid_mod=centroid_mod, max_centroids=max_centroids,
         train_rounds=train_rounds, multi_assign=multi_assign,
@@ -1632,8 +1640,7 @@ def ivfpq_topk(
         # maintained cell_sizes table and scans codes once
         codes = materialize_barrier(codes)
     return ivfpq_search_frames(
-        centroid_panel(centroids, "ivfpq_topk"),
-        codebook_panel(cb, "ivfpq_topk"),
+        panels["centroids"], panels["codebook"],
         codes, norms, corpus, queries,
         id_col=id_col, vec_col=vec_col, k=k, nprobe=nprobe, m=m, dim=dim,
         rerank=rerank, scale=scale, pool_cap=pool_cap, scale_ref=scale_ref,

@@ -1,61 +1,59 @@
-"""Persisted ANN indexes: train/encode ONCE, serve many queries — the
-production deployment shape for the trained IVF/PQ tiers (r8, hardened
-r9 with CAS-serialized maintenance writers, compaction, and a retrain
-trigger).
+"""Persisted indexes: train/encode ONCE, serve many queries. Four kinds
+(ivf, pq, ivfpq, dedup) share one storage layout and one writer
+transaction path; each kind is described as data (``_KINDS``).
 
-``ivf_topk`` / ``pq_topk`` are end-to-end plans: every invocation
-re-trains the quantizer and re-encodes the corpus (6-9 s at sf0.1
-after the r8 training upgrade). A real retrieval deployment runs the
-build as a batch job and serves queries against the PERSISTED index;
-this module provides exactly that split on top of the
-``*_build_frames`` / ``*_search_frames`` halves in operators/ann.py:
+Layout. An index dir holds a ``_meta.json`` manifest (kind,
+fingerprint, tables, source path, BUILD PARAMS, row counters) and one
+dir per table. Table data lives in manifest-referenced UNIT dirs
+(``<table>/b<mver>.<pid>-<tid>``): readers build their file lists from
+the manifest's ``units`` map, never from a directory listing, so a
+unit no manifest names is invisible.
 
-- build: materialize the index frames (IVF: centroids + postings; PQ:
-  codebook + codes + exact norms) into a writer-unique tmp directory
-  with a ``_meta.json`` manifest (kind, fingerprint, tables, source
-  path, BUILD PARAMS, base row count) written LAST, then install with
-  one atomic rename — readers never observe a half-built index, and a
-  crashed build leaves no manifest so it never serves.
-- ensure: rebuild only when the manifest is missing or its
-  ``fingerprint`` (source identity + params + ALGORITHM VERSION)
-  differs; an unchanged one is served straight from parquet, across
-  process boundaries (fingerprint-named shared cache under a per-user
-  root). After a successful install, superseded fingerprints of the
-  same (kind, source) are garbage-collected.
-- append: incremental maintenance against the FROZEN quantizer,
-  SERIALIZED through an exclusive-create commit log (r9, VERDICT r8
-  #1): every maintenance writer (append or compact) must CAS-claim
-  manifest-version ``mver+1`` in ``_applog`` before touching anything
-  — two concurrent appenders race for the same slot, exactly one
-  proceeds, the loser waits for the winner's recommit and re-reads
-  (so a batch the winner applied is an idempotent skip, never a
-  double-append). Every Spark job of an append runs into a staging
-  dir BEFORE the manifest invalidate (v5.1): the invalidated window
-  is pure same-FS renames, re-committed after — a crash mid-adopt
-  leaves no manifest, so a partially-adopted index (codes without
-  norms) can never serve silently, and a transient Spark failure
-  never strands the index non-current. Append hyperparameters come
-  from the manifest, never the caller.
-- compact: appended postings/codes/norms accrete one file set per
-  batch (the streaming maintenance path: one per micro-batch);
-  ``compact_index`` rewrites them to size-targeted files under the
-  same claim + invalidate-then-recommit protocol, preserving
-  ``applied_batches`` — content-neutral by construction (the
-  registered compaction query shares the append oracle to prove it).
-- retrain trigger: the manifest carries ``base_rows`` (recorded at
-  build) and ``appended_rows`` (accumulated by appends);
-  ``needs_retrain`` operationalizes the measured append-drift trade
-  (RECALL_SCALE.json: PQ ~0.91 appended vs ~0.96 full-retrain) — a
-  scheduler polls it and rebuilds when the appended fraction passes
-  its budget, which resets the counters.
-- search: the same serve plans as the end-to-end operators, reading
-  the persisted frames, with structural hyperparameters (PQ subspace
-  layout) read FROM THE MANIFEST — a caller-supplied mismatched ``m``
-  raises instead of silently searching wrong subspace joins (r9,
-  VERDICT r8 "what's wrong" #2). Every build quantity is
-  deterministic, so a reloaded index is bit-identical to a fresh
-  build and the registered index-search queries share the end-to-end
-  queries' oracles.
+Build (``ensure_*`` -> :func:`_ensure`): rebuild only when the manifest
+is missing or its ``fingerprint`` (source identity + params + ALGORITHM
+VERSION) differs. The kind's build frames are written into a
+writer-unique tmp dir, the manifest is written LAST, and one atomic
+rename installs the index — readers never observe a half-built index,
+and a crashed build leaves no manifest. Superseded fingerprints of the
+same (kind, source, subset) are garbage-collected after the install.
+
+Maintenance: four writer verbs — append (``*_index_append`` ->
+:func:`_append`), :func:`compact_index`, :func:`minor_compact_index`
+and :func:`retract_batch` — run ONE transaction:
+
+1. claim: CAS-claim manifest version ``mver+1`` in ``_applog``
+   (:func:`_writer_txn`; a live contender makes the loser wait and
+   re-read, so a batch the winner applied becomes an idempotent skip)
+   and advance the writer fence (``_fence/e<mver>``);
+2. stage: every Spark job of the transaction writes under
+   ``_stage.tmp.<pid>.<mver>/<table>`` while the serving manifest is
+   untouched (appends write the kind's append frames, compactions
+   rewrite the picked units with ``layout.compact``, a retraction
+   stages nothing). Claims serialize writers, so the stage sweep at
+   this step removes any dead writer's stage;
+3. publish (:func:`_publish`): re-check the fence and the manifest
+   snapshot, adopt each staged table as unit ``_unit_name(mver)`` by
+   one directory rename (non-destructive — uncommitted units are
+   invisible), then commit the new manifest with one ``os.replace``,
+   the single atomic visibility flip. After the commit the writer log
+   and fence prune and dead units are GC'd. Every pre-commit failure
+   releases the claim and removes the stage and any adopted unit, so
+   a crash ANYWHERE leaves the index current and serving.
+
+Append hyperparameters come from the manifest, never the caller.
+Appends record per-batch provenance (units + rows) so a retraction is
+an O(manifest) metadata operation; compaction folds batches into the
+base. The manifest carries ``base_rows`` and ``appended_rows``;
+:func:`needs_retrain` turns the measured append-drift trade
+(RECALL_SCALE.json) into a rebuild trigger.
+
+Search: the same serve plans as the end-to-end operators in
+operators/ann.py, reading the persisted tables; structural
+hyperparameters (PQ subspace layout) come FROM THE MANIFEST, and a
+caller-supplied mismatch raises. Every build quantity is
+deterministic, so a reloaded index is bit-identical to a fresh build
+and the registered index-search queries share the end-to-end queries'
+oracles.
 
 100 TB shape: the index tables are the small side (centroids/codebook
 are kBs and broadcast; postings/codes are key-only rows, ~1/16th the
@@ -71,18 +69,39 @@ import shutil
 import threading
 import time
 import types
+import warnings
+from typing import Callable, NamedTuple
 
+import pyarrow.parquet as papq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from bigdatafinalproject_spark.operators.ann import (
+    _nearest_centroids,
     ivf_build_frames,
     ivf_search_frames,
+    ivfpq_build_frames,
+    ivfpq_search_frames,
+    mass_schedule_for_n,
     pq_build_frames,
     pq_search_frames,
     rerank_pool_for_index,
 )
+from bigdatafinalproject_spark.operators.arrow_kernels import (
+    encode_codebook_arrow,
+    norms_arrow,
+    panel_from_parquet,
+    topn_centroids_arrow,
+)
+from bigdatafinalproject_spark.operators.dedup import (
+    _broadcast_overlap_stats,
+    dedup_status_against_index,
+    minhash_band_digests,
+    norm_text,
+    winnow_fingerprints,
+)
+from bigdatafinalproject_spark.operators.layout import compact, spread_scaled
 from bigdatafinalproject_spark.operators.txlog import (
-    CLAIM_MODE_ENV as _CLAIM_MODE_ENV,
     ConcurrentWriteError,
     LeaseRenewer as _LeaseRenewer,
     claim_alive as _claim_alive,
@@ -278,8 +297,6 @@ def _unit_name(mver: int) -> str:
     distinct namespaces, and the loser's unit is simply never
     referenced by any manifest (r13 review #2 — pid alone let a
     sibling thread's failure cleanup delete the winner's fresh unit)."""
-    import threading
-
     return f"b{mver:012d}.{os.getpid()}-{threading.get_ident()}"
 
 
@@ -323,10 +340,6 @@ def _frozen_panel(index_dir: str, meta: dict, table: str):
     ``codebook``), read driver-side from its manifest-scoped parquet
     (arrow_kernels.panel_from_parquet — bit-identical to a Spark
     collect of the same rows, without the per-call collect job)."""
-    from bigdatafinalproject_spark.operators.arrow_kernels import (
-        panel_from_parquet,
-    )
-
     return panel_from_parquet(
         _unit_paths(index_dir, meta, table), *_PANEL_COLS[table]
     )
@@ -364,8 +377,6 @@ def _batch_sizes(index_dir: str, entry: dict) -> list[list[int]] | None:
     if unit is None:
         return None
     try:
-        import pyarrow.parquet as papq
-
         t = papq.read_table(
             os.path.join(index_dir, "cell_sizes", unit),
             columns=["centroid_id", "_csz"],
@@ -378,22 +389,14 @@ def _batch_sizes(index_dir: str, entry: dict) -> list[list[int]] | None:
     )
 
 
-def _commit(
-    index_dir: str,
-    kind: str,
-    fingerprint: str,
-    tables: list[str],
-    src: str | None = None,
-    params: dict | None = None,
-    applied_batches: list | None = None,
-    mver: int = 0,
-    base_rows: int | None = None,
-    appended_rows: int = 0,
-    cell_sizes=None,
-    units: dict[str, list[str]] | None = None,
-    batches: dict | None = None,
-    retracted: list | None = None,
-) -> None:
+def _commit(index_dir: str, meta: dict) -> None:
+    """Write ``meta`` as the index's manifest — the commit record of
+    every build and maintenance transaction. The payload is normalised
+    so recommits of identical content are byte-identical: a fixed key
+    order, ``applied_batches`` sorted type-stably, ``units`` /
+    ``batches`` / ``retracted`` sorted, and ``cell_sizes`` folded to
+    sorted pairs (omitted when absent). Keys outside the manifest
+    schema are dropped."""
     # tmp + os.replace: the manifest IS the commit record, so its own
     # write must be atomic — a crash mid-write must read as "no
     # manifest" (rebuild), never as a torn half-manifest
@@ -411,6 +414,7 @@ def _commit(
     # window still interleaves — that residual needs fenced storage,
     # which a plain POSIX dir cannot express. pid mode is immune on a
     # single host and stays one env flag away.)
+    mver = int(meta.get("mver", 0))
     if mver:
         cur = _manifest(index_dir)
         if cur is not None and int(cur.get("mver", 0)) >= mver:
@@ -421,42 +425,41 @@ def _commit(
             )
     tmp = f"{path}.tmp.{os.getpid()}"
     payload = {
-        "kind": kind,
-        "fingerprint": fingerprint,
-        "tables": tables,
-        "src": src,
-        "params": params or {},
+        "kind": meta["kind"],
+        "fingerprint": meta["fingerprint"],
+        "tables": meta["tables"],
+        "src": meta.get("src"),
+        "params": meta.get("params") or {},
         # type-stable sort key (r14, ADVICE r13 #3): new appends write
         # int ids only (_norm_batch_id), but a legacy manifest can
         # still carry str ids — a plain sorted() over the mix raises
         # TypeError HERE, at commit time, after adoption
         "applied_batches": sorted(
-            applied_batches or [], key=lambda b: (isinstance(b, str), b)
+            meta.get("applied_batches") or [],
+            key=lambda b: (isinstance(b, str), b),
         ),
         "mver": mver,
-        "base_rows": base_rows,
-        "appended_rows": appended_rows,
+        "base_rows": meta.get("base_rows"),
+        "appended_rows": int(meta.get("appended_rows", 0)),
     }
-    snap = _snap_pairs(cell_sizes)
+    snap = _snap_pairs(meta.get("cell_sizes"))
     if snap is not None:
         # the folded serve-time snapshot of the cell_sizes log (r12);
         # OMITTED (not null) when absent so legacy readers see the
         # exact pre-r12 schema
         payload["cell_sizes"] = snap
-    if units is not None:
+    if meta.get("units") is not None:
         # v6: the manifest-referenced storage map — per table, the
-        # unit dirs whose files ARE the table. Sorted per table so
-        # recommits of identical content are byte-identical.
-        payload["units"] = {t: sorted(us) for t, us in units.items()}
+        # unit dirs whose files ARE the table
+        payload["units"] = {t: sorted(us) for t, us in meta["units"].items()}
+    batches = meta.get("batches")
     if batches is not None:
-        # r13: per-batch provenance — which units (and row/cell-size
-        # deltas) each applied batch contributed. What makes
-        # retract_batch an O(1) metadata operation; compaction folds
-        # batches into the base and CLEARS this map (retract-before-
-        # compact, or rebuild).
+        # r13: per-batch provenance — which units and rows each applied
+        # batch contributed. What makes retract_batch an O(1) metadata
+        # operation; compaction folds batches into the base.
         payload["batches"] = {k: batches[k] for k in sorted(batches)}
-    if retracted is not None:
-        payload["retracted"] = sorted(retracted)
+    if meta.get("retracted") is not None:
+        payload["retracted"] = sorted(meta["retracted"])
     with open(tmp, "w") as f:
         json.dump(payload, f)
     # fence-epoch recheck (r14, ADVICE r13 medium): the recommit fence
@@ -627,8 +630,6 @@ def _build_into_tmp(index_dir: str):
     # pid + thread id: two THREADED builders of the same fingerprint
     # must not interleave parquet writes into one tmp dir (caught by
     # tests/test_ann_index.py's threaded double-build race)
-    import threading
-
     tmp = f"{index_dir}.build.{os.getpid()}.{threading.get_ident()}"
     shutil.rmtree(tmp, ignore_errors=True)
     os.makedirs(tmp, exist_ok=True)
@@ -1042,8 +1043,6 @@ def _sweep_stage(index_dir: str, name: str) -> None:
     ENOENT → clean pre-commit retry), and an owner that wins leaves
     the sweeper's rename failing ENOENT — an rmtree can never start
     against a dir that might still be adopted."""
-    import threading
-
     aside = os.path.join(
         index_dir,
         f"_sweep.tmp.{os.getpid()}.{threading.get_ident()}.{name}",
@@ -1096,18 +1095,16 @@ def _sweep_dead_stages(index_dir: str) -> None:
 
 
 def _append_stage(index_dir: str, mver: int) -> str:
-    """Create the staging dir for one append txn (v5.1, r11 review
-    #3): every Spark job of an append — the delta data write AND the
-    partial cell-count derivation — runs into this dir BEFORE the
-    manifest invalidate, while the claim is still released-on-failure
-    and the serving index is untouched. The invalidated window then
-    contains only same-FS file renames (:func:`_adopt_staged`), so a
-    transient Spark/executor failure can never strand the index
-    non-current (v5 ran the sizes job post-invalidate; v4 ran the
-    data append itself there). Stale stages from writers that died
-    pre-invalidate are swept here — safe because claims serialize
-    writers, so any existing stage belongs to a dead txn. The .tmp.
-    infix keeps stages inside clone_index's ignore patterns."""
+    """Create the staging dir of one maintenance txn (v5.1, r11 review
+    #3) — append, compaction and retraction alike: every Spark job of
+    the txn runs into ``_stage.tmp.<pid>.<mver>/<table>`` while the
+    claim is still released-on-failure and the serving index is
+    untouched, so the publish step (:func:`_publish`) is pure same-FS
+    renames plus the manifest replace, and a transient Spark/executor
+    failure never touches the served index. Stale stages from dead
+    writers are swept here — safe because claims serialize writers,
+    so any existing stage belongs to a dead txn. The .tmp. infix keeps
+    stages inside clone_index's ignore patterns."""
     for n in os.listdir(index_dir):
         if n.startswith("_sweep.tmp."):
             # already aside (a crashed sweeper's leftovers): plain
@@ -1119,23 +1116,24 @@ def _append_stage(index_dir: str, mver: int) -> str:
             # adopted unit through its directory fds
             _sweep_stage(index_dir, n)
     stage = os.path.join(index_dir, f"_stage.tmp.{os.getpid()}.{mver}")
+    os.makedirs(stage, exist_ok=True)
     return stage
 
 
 def _adopt_staged(
     stage: str, index_dir: str, tables: list[str], mver: int
 ) -> dict[str, str]:
-    """Adopt a staged append as manifest-referenced batch units (v6):
+    """Adopt a staged txn's tables as manifest-referenced units (v6):
     ONE same-FS directory rename per table, from ``stage/<t>`` to
-    ``<t>/b<mver>.<pid>``. The renamed units are INVISIBLE until the
-    recommit publishes them in the manifest's ``units`` map — so this
-    is non-destructive, runs with the serving manifest intact, and a
-    zombie writer racing here lands its renames in a unit no manifest
-    will ever reference (dead namespace — the fenced-storage closure
-    of the r12 check→first-rename residual). An existing target can
-    only be this writer's own dead leftover (unit names carry pid +
-    slot; slots are CAS-exclusive per liveness) and is cleared first.
-    Returns {table: unit_name} for the tables actually staged."""
+    ``<t>/<_unit_name(mver)>``. The renamed units are INVISIBLE until
+    the commit publishes them in the manifest's ``units`` map — so
+    this is non-destructive, runs with the serving manifest intact,
+    and a zombie writer racing here lands its renames in a unit no
+    manifest will ever reference (dead namespace — the fenced-storage
+    closure of the r12 check→first-rename residual). An existing
+    target can only be this writer's own dead leftover (unit names
+    carry pid+tid+slot; slots are CAS-exclusive per liveness) and is
+    cleared first. Returns {table: unit_name} for the tables staged."""
     unit = _unit_name(mver)
     adopted: dict[str, str] = {}
     for t in tables:
@@ -1144,27 +1142,15 @@ def _adopt_staged(
         # race, and the os.rename's FileNotFoundError is the loud
         # pre-commit abort (silently skipping would commit the batch
         # as applied with ZERO files, the r11 lost-redelivery shape)
-        _adopt_dir_as_unit(index_dir, os.path.join(stage, t), t, unit)
+        dst_parent = os.path.join(index_dir, t)
+        os.makedirs(dst_parent, exist_ok=True)
+        dst = os.path.join(dst_parent, unit)
+        if os.path.isdir(dst):
+            shutil.rmtree(dst, ignore_errors=True)
+        os.rename(os.path.join(stage, t), dst)
         adopted[t] = unit
     shutil.rmtree(stage, ignore_errors=True)
     return adopted
-
-
-def _adopt_dir_as_unit(
-    index_dir: str, src: str, table: str, unit: str
-) -> None:
-    """THE one adopt primitive (r13 review #6 — the append and
-    compaction paths each inlined it, so a protocol fix could land on
-    one and silently miss the other): rename a finished directory into
-    ``<table>/<unit>``. An existing target can only be this writer's
-    own dead leftover (unit names carry pid+tid+slot; slots are
-    CAS-exclusive per liveness) and is cleared first."""
-    dst_parent = os.path.join(index_dir, table)
-    os.makedirs(dst_parent, exist_ok=True)
-    dst = os.path.join(dst_parent, unit)
-    if os.path.isdir(dst):
-        shutil.rmtree(dst, ignore_errors=True)
-    os.rename(src, dst)
 
 
 def _gc_dead_units(index_dir: str, meta: dict) -> None:
@@ -1278,90 +1264,63 @@ def _release_adopted(
     _remove_own_claim(index_dir, mver)
 
 
-def _finish_append(
+def _publish(
     index_dir: str,
-    stage: str,
-    tables: list[str],
     meta: dict,
     mver: int,
-    batch_id: int | None,
-    n_delta: int,
-    sizes_delta: dict | None = None,
-) -> str:
-    """The adopt → recommit → prune → GC tail every ``*_index_append``
-    shares (r11 review #4: the protocol skeleton was copy-pasted four
-    times; a protocol fix must land once). v6 (r13): adoption is ONE
-    rename per table into a manifest-referenced unit dir and the
-    serving manifest is NEVER invalidated — the recommit's
-    ``os.replace`` is the single atomic visibility flip, so the index
-    serves throughout the append and EVERY failure below is a
-    pre-commit abort that releases the claim and leaves the index
-    current (pre-v6, a mid-adopt failure left a non-current index
-    whose only remedy was a rebuild).
+    stage: str,
+    tables: list[str],
+    new: dict,
+) -> None:
+    """THE commit step of every maintenance writer (append,
+    compact_index, minor_compact_index, retract_batch): ``meta`` is the
+    manifest snapshot the claim of slot ``mver`` was taken against,
+    ``stage`` holds one dir per entry of ``tables`` (none for a
+    retraction) and ``new`` is the manifest to publish. One protocol
+    fix lands here once.
 
-    Zombie-writer guard (r11 review #1): a writer whose LEASE lapsed
-    while it was paused between staging and this call has had its
-    stage swept by the contender that judged it dead — adopting
-    nothing and recommitting would record the batch as applied with
-    ZERO data files (silently unrecoverable: redelivery is skipped
-    forever). The fence check (r12) aborts a zombie whose stage was
-    NOT yet swept before it renames anything; and a zombie that slips
-    BOTH checks (the r12 check→first-rename residual) now merely
-    renames into a unit dir no manifest will ever reference — its
-    recommit is fenced by the ``>=`` mver compare and the dead unit
-    is GC'd by the next committer. A sweep racing mid-adopt surfaces
-    as FileNotFoundError from a vanished stage table and aborts
-    pre-commit (the v5.1 staged-vs-adopted count compare existed to
-    catch this POST-invalidate; with no invalidate it degrades to a
-    clean retry).
+    1. Pre-commit guard. A missing stage means a contender judged this
+       writer dead (lapsed lease) and swept it (r11 review #1:
+       committing anyway would record a batch as applied with ZERO
+       data files). The fence check (r12) aborts a writer whose slot a
+       contender took over, and the manifest-snapshot re-check (r12
+       review pass 2 #2) aborts one an interleaved lapsed-lease writer
+       committed past — recommitting from the older snapshot would
+       drop that writer's applied_batches entry (the r8 lost-update
+       shape, which the ``>=`` recommit fence cannot see because this
+       slot number is higher). A transient fence-read failure
+       (EMFILE/EIO) aborts too: proceeding unfenced is the fail-open
+       hole (r12 review pass 2 #5).
+    2. Adopt each staged table as unit ``_unit_name(mver)``
+       (:func:`_adopt_staged`). A sweep racing here surfaces as
+       FileNotFoundError from a vanished stage table.
+    3. Commit: the manifest ``os.replace`` is the single atomic
+       visibility flip (v6 — no invalidate window, so the index serves
+       throughout).
 
-    ``sizes_delta`` (r12): the batch's per-cell partial counts; folded
-    into the manifest's ``cell_sizes`` snapshot at recommit (only when
-    the manifest already carries one — legacy indexes keep the log
-    fold) so serves read ≤C manifest rows instead of folding the
-    parquet log per search (VERDICT r11 #1)."""
+    Every failure before the commit lands releases the claim and
+    removes the stage and any adopted unit: the index keeps serving
+    its committed snapshot and the txn retries. After the commit the
+    writer log and fence prune, and dead units are GC'd."""
     if not os.path.isdir(stage):
         _end_claim(index_dir, mver, release=True)  # stop the renewer
         raise ConcurrentWriteError(
-            f"append stage for mver {mver} at {index_dir!r} was swept: "
-            f"this writer's lease lapsed while paused and a contender "
-            f"took over — retry the batch"
+            f"stage for mver {mver} at {index_dir!r} was swept: this "
+            f"writer's lease lapsed while paused and a contender took "
+            f"over — retry"
         )
     try:
-        # a transient fence-read failure (EMFILE/EIO) aborts too —
-        # proceeding unfenced is the fail-open hole (r12 review pass 2
-        # #5); the abort is pre-invalidate, so retry is safe
         _check_fence(index_dir, mver)
-        # manifest-snapshot re-check (r12 review pass 2 #2): between
-        # this writer's claim and this point, an interleaved lapsed-
-        # lease writer can have COMMITTED (both-alive lease reality) —
-        # recommitting from OUR older snapshot would drop its
-        # applied_batches entry (the r8 lost-update shape, surviving
-        # the >= recommit fence because our slot number is higher).
-        # Abort pre-invalidate; the retry re-reads and the redelivered
-        # batch idempotence does the rest.
         cur = _manifest(index_dir)
         if cur is None or int(cur.get("mver", 0)) != int(meta.get("mver", 0)):
             raise ConcurrentWriteError(
                 f"manifest at {index_dir!r} advanced from snapshot mver "
                 f"{meta.get('mver', 0)} to "
                 f"{cur.get('mver') if cur else None} since this writer's "
-                f"claim (an interleaved writer committed) — retry the "
-                f"batch"
+                f"claim (an interleaved writer committed) — retry"
             )
-    except (ConcurrentWriteError, OSError):
-        # pre-commit abort: the slot was never consumed, so release
-        # it (and our stage — the contender sweeps it anyway)
-        _end_claim(index_dir, mver, release=True)
-        shutil.rmtree(stage, ignore_errors=True)
-        raise
-    # adopt as uncommitted units — the serving manifest stays intact
-    # (v6: no invalidate). Every failure here aborts pre-commit: the
-    # slot is released, any adopted unit is unreferenced garbage, and
-    # the index keeps serving its committed snapshot.
-    try:
         adopted = _adopt_staged(stage, index_dir, tables, mver)
-    except OSError as e:
+    except BaseException as e:
         _end_claim(index_dir, mver, release=True)
         for t in tables:
             shutil.rmtree(
@@ -1373,13 +1332,55 @@ def _finish_append(
             # the sweep signature: a staged table vanished under the
             # rename (a contender judged this writer dead mid-adopt)
             raise ConcurrentWriteError(
-                f"append at {index_dir!r} lost its stage mid-adopt "
-                f"(swept by a contender) — index untouched; retry the "
-                f"batch"
+                f"writer at {index_dir!r} lost its stage mid-adopt "
+                f"(swept by a contender) — index untouched; retry"
             ) from None
-        # a REAL I/O failure (ENOSPC/EACCES/EIO): propagate the errno
-        # undisguised — the index still serves its committed snapshot
+        # a REAL I/O failure (ENOSPC/EACCES/EIO) propagates undisguised
         raise
+    _end_claim(index_dir, mver)  # stop lease renewal before the prune
+    try:
+        _commit(index_dir, dict(new, mver=mver))
+    except BaseException:
+        # recommit fenced (an interleaved lapsed-lease contender
+        # committed past our snapshot) or a real I/O failure writing
+        # the manifest: nothing was published (_commit's os.replace is
+        # its last act), so the adopted units were never referenced
+        _release_adopted(index_dir, adopted, mver)
+        raise
+    # bound the writer log: entries below the committed mver are spent
+    # (slot numbers come from the manifest, so pruning cannot affect
+    # any future CAS) — without this a streaming-maintained index
+    # accretes one claim file per micro-batch forever (r9 review #8).
+    # Fence markers below the committed epoch prune with it (our own
+    # marker remains, so a paused lower-slot writer stays fenced)
+    prune(os.path.join(index_dir, _APPLOG), keep_from=mver)
+    _prune_fence(index_dir, mver)
+    committed = _manifest(index_dir)
+    if committed is not None:
+        # the units a compaction or retraction unreferenced die here —
+        # the one reader-visible boundary (see _gc_dead_units)
+        _gc_dead_units(index_dir, committed)
+
+
+def _finish_append(
+    index_dir: str,
+    stage: str,
+    tables: list[str],
+    meta: dict,
+    mver: int,
+    batch_id: int | None,
+    n_delta: int,
+    sizes_delta: dict | None = None,
+) -> str:
+    """An append's manifest edit, published by :func:`_publish`: the
+    staged ``tables`` join the ``units`` map as unit
+    ``_unit_name(mver)``, the batch id joins ``applied_batches`` with
+    its provenance (units + ``n_delta`` rows), and ``sizes_delta`` —
+    the batch's per-cell partial counts — folds into the manifest's
+    ``cell_sizes`` snapshot (only when the manifest carries one; legacy
+    indexes keep the log fold), so serves read ≤C manifest rows
+    instead of folding the parquet log per search (r12)."""
+    unit = _unit_name(mver)
     applied = list(meta.get("applied_batches", []))
     snap = meta.get("cell_sizes")
     if snap is not None and sizes_delta is not None:
@@ -1388,11 +1389,8 @@ def _finish_append(
             folded[int(c)] = folded.get(int(c), 0) + int(n)
         snap = folded
     units = {t: list(us) for t, us in (meta.get("units") or {}).items()}
-    for t, u in adopted.items():
-        units.setdefault(t, []).append(u)
-    # per-batch provenance (r13): the units, row delta and cell-size
-    # delta this batch contributed — retract_batch reverses exactly
-    # these at O(manifest) cost
+    for t in tables:
+        units.setdefault(t, []).append(unit)
     batch_id = _norm_batch_id(batch_id)  # int-keyed provenance (r14)
     if batch_id is not None:
         applied_id = batch_id
@@ -1406,50 +1404,25 @@ def _finish_append(
         taken = set(applied)
         applied_id = next(i for i in range(len(applied) + 1)
                           if i not in taken)
+    # per-batch provenance (r13): the units and row delta this batch
+    # contributed — retract_batch reverses exactly these. O(1) manifest
+    # per batch (r14, VERDICT r13 #3): the per-cell delta is NOT copied
+    # here — the batch's own cell_sizes unit already holds those pairs
+    # and retract_batch reads them back via _batch_sizes (the copy grew
+    # every rewrite and serve parse ~1.2 kB/batch at C=512,
+    # MANIFEST_GROWTH.json)
     batches = dict(meta.get("batches") or {})
-    # O(1) manifest per batch (r14, VERDICT r13 #3): the per-cell
-    # delta is NOT copied into the provenance entry — the batch's own
-    # cell_sizes unit (staged above, adopted here) already holds
-    # exactly those pairs, and retract_batch reads them back via
-    # _batch_sizes. Measured: the manifest copy grew the per-txn
-    # rewrite and per-serve parse ~1.2 kB/batch at C=512
-    # (MANIFEST_GROWTH.json), the whole tax of the streaming
-    # micro-batch regime.
-    bentry: dict = {"units": adopted, "rows": n_delta}
-    batches[str(applied_id)] = bentry
-    _end_claim(index_dir, mver)  # stop lease renewal before the prune
-    try:
-        _commit(
-            index_dir, meta["kind"], meta["fingerprint"], meta["tables"],
-            src=meta.get("src"), params=meta.get("params", {}),
-            applied_batches=applied + [applied_id],
-            mver=mver, base_rows=meta.get("base_rows"),
-            appended_rows=int(meta.get("appended_rows", 0)) + n_delta,
-            cell_sizes=snap,
-            units=units,
-            batches=batches,
-            retracted=meta.get("retracted"),
-        )
-    except BaseException:
-        # recommit fenced (an interleaved lapsed-lease contender
-        # committed past our snapshot) or a real I/O failure writing
-        # the manifest: nothing was published (_commit's os.replace is
-        # its last act), so our adopted units were never referenced —
-        # remove them, free the slot, and surface the error; the
-        # serving index is untouched and the batch retries
-        _release_adopted(index_dir, adopted, mver)
-        raise
-    # bound the writer log: entries below the committed mver are spent
-    # (slot numbers come from the manifest, so pruning cannot affect
-    # any future CAS) — without this a streaming-maintained index
-    # accretes one claim file per micro-batch forever (r9 review #8).
-    # Fence markers below the committed epoch prune with it (our own
-    # marker remains, so a paused lower-slot writer stays fenced)
-    prune(os.path.join(index_dir, _APPLOG), keep_from=mver)
-    _prune_fence(index_dir, mver)
-    committed = _manifest(index_dir)
-    if committed is not None:
-        _gc_dead_units(index_dir, committed)
+    batches[str(applied_id)] = {
+        "units": {t: unit for t in tables}, "rows": n_delta
+    }
+    _publish(index_dir, meta, mver, stage, tables, dict(
+        meta,
+        applied_batches=applied + [applied_id],
+        appended_rows=int(meta.get("appended_rows", 0)) + n_delta,
+        cell_sizes=snap,
+        units=units,
+        batches=batches,
+    ))
     # compaction-cadence bound (r14, VERDICT r13 #3): with the O(1)
     # manifest the remaining lazy-compaction tax is FILE-COUNT growth
     # — every serve plans one unit dir per uncompacted batch
@@ -1461,8 +1434,6 @@ def _finish_append(
         os.environ.get("BDFP_INDEX_COMPACT_WARN_BATCHES", "512") or 0
     )
     if warn_n and len(batches) >= warn_n:
-        import warnings
-
         warnings.warn(
             f"index at {index_dir!r} has {len(batches)} uncompacted "
             f"batches (>= {warn_n}): serve-side file counts grow per "
@@ -1472,6 +1443,11 @@ def _finish_append(
             stacklevel=2,
         )
     return index_dir
+
+
+# the largest staged batch whose cell sizes _append_sizes counts
+# driver-side with pyarrow; larger batches run one Spark aggregate
+_SIZES_ARROW_ROWCAP = 4_000_000
 
 
 def _append_sizes(
@@ -1499,8 +1475,8 @@ def _append_sizes(
     bench row.
 
     r15: ZERO Spark jobs for a bounded batch — when the staged files'
-    footers count at most ``BDFP_SIZES_ARROW_ROWCAP`` rows (default
-    4M, env-tunable for scale runs), the cell-id column is read and
+    footers count at most ``_SIZES_ARROW_ROWCAP`` rows, the cell-id
+    column is read and
     value-counted driver-side with pyarrow (one int64 column of a
     batch the driver just wrote; exact integer counts, engine-
     independent). Larger batches keep the Spark aggregate — the cap
@@ -1510,17 +1486,13 @@ def _append_sizes(
     ``s == 0``)."""
     import pyarrow as pa
     import pyarrow.compute as pc
-    import pyarrow.parquet as papq
 
-    from pyspark.sql import functions as F
-
-    rowcap = int(os.environ.get("BDFP_SIZES_ARROW_ROWCAP", "4000000"))
     out: dict[int, int] = {}
     if delta_files:
         staged_rows = sum(
             papq.ParquetFile(f).metadata.num_rows for f in delta_files
         )
-        if staged_rows <= rowcap:
+        if staged_rows <= _SIZES_ARROW_ROWCAP:
             cols = [cell_col] + ([pred[0]] if pred is not None else [])
             t = papq.ParquetDataset(delta_files).read(columns=cols)
             col = t[cell_col]
@@ -1568,8 +1540,6 @@ def _read_sizes(spark: SparkSession, cpaths: list[str]):
     counts, so readers sum. On a fresh build this is a no-op aggregate
     over exactly C rows; after n appends it folds ≤ C·(n+1) rows —
     kB-scale either way, and never a scan of the data relation."""
-    from pyspark.sql import functions as F
-
     return (
         spark.read.parquet(*cpaths)
         .groupBy("centroid_id")
@@ -1643,32 +1613,330 @@ def _run_concurrent(thunks):
     return results
 
 
-def _footer_rows(
-    spark: SparkSession, path: str | list[str]
-) -> int:
+def _footer_rows(path: str | list[str]) -> int:
     """Row count from parquet FOOTERS — how the maintenance paths
     measure appended rows without an extra pass over the delta (r9
     review follow-up: delta.count() was a full Spark job per
-    micro-batch). r15 (optimization guide §1.2/§2.6 follow-through):
-    the footers are read DRIVER-SIDE with pyarrow instead of a Spark
-    count(*) job — the count job was metadata-pruned but still paid a
-    full job submit/schedule round per micro-batch append (profiled:
-    ~12 jobs per append, most 20-100 ms of pure scheduling). Footer
-    num_rows is the same ground truth Spark's pruned count reads.
-    ``path`` may be one table dir or a list of unit dirs. A missing
-    dir counts 0; any OTHER failure PROPAGATES (r9 review #3:
-    coercing a transient read error to 0 would commit a negative or
-    wildly inflated appended_rows and silently wedge needs_retrain)."""
-    import pyarrow.parquet as papq
-
+    micro-batch). The footers are read DRIVER-SIDE with pyarrow (r15:
+    the metadata-pruned count job still paid a full job
+    submit/schedule round per micro-batch append). ``path`` may be one
+    table dir or a list of unit dirs. A missing dir counts 0; a dir
+    that exists but holds no ``.parquet`` file raises — every write
+    stages at least one part file, even for an empty batch, so an
+    empty dir is a broken unit, and counting it 0 would inflate or
+    deflate the manifest's row counters silently. Any other failure
+    PROPAGATES (r9 review #3: coercing a transient read error to 0
+    would commit a wrong appended_rows and wedge needs_retrain)."""
     dirs = [path] if isinstance(path, str) else list(path)
     total = 0
     for d in dirs:
         if not os.path.isdir(d):
             continue
-        for f in _parquet_files(d):
-            total += papq.ParquetFile(f).metadata.num_rows
+        files = _parquet_files(d)
+        if not files:
+            raise ValueError(
+                f"_footer_rows: {d!r} holds no .parquet file (a unit or "
+                f"staged table always has at least one part file)"
+            )
+        total += sum(papq.ParquetFile(f).metadata.num_rows for f in files)
     return total
+
+
+def _write_frames(frames: dict, paths: dict) -> None:
+    """Write each frame to its path. The writes are independent jobs
+    (the quantizers the frames read were barriered or collected while
+    the frames were built, so no write re-runs a training loop) and
+    run concurrently (:func:`_run_concurrent`). Paths are resolved by
+    the caller, in ITS thread: _unit_name embeds the thread id, so a
+    path computed inside a sibling thread would name a different unit
+    than the manifest records."""
+    _run_concurrent([
+        (lambda df=df, p=paths[t]: df.write.mode("overwrite").parquet(p))
+        for t, df in frames.items()
+    ])
+
+
+def _norms_frame(delta: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """Exact (neighbor_id, _cnorm) corpus norms, the cosine denominator
+    the PQ and IVFPQ serves read beside the codes."""
+    return norms_arrow(
+        delta.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col)),
+        "neighbor_id", vec_col, "_cnorm",
+    )
+
+
+def _ivf_build(corpus, build_params, params):
+    centroids, postings, _ = ivf_build_frames(corpus, **build_params)
+    return {"centroids": centroids, "postings": postings}
+
+
+def _ivf_append(index_dir, meta, delta, id_col, vec_col):
+    # assign the delta to the FROZEN centroids, read driver-side from
+    # the persisted table (r15: no per-micro-batch panel collect)
+    return {
+        "postings": _nearest_centroids(
+            _frozen_panel(index_dir, meta, "centroids"),
+            delta, id_col, vec_col,
+            int(meta.get("params", {}).get("multi_assign", 1)),
+            "neighbor_id",
+        )
+    }
+
+
+def _pq_build(corpus, build_params, params):
+    cb, codes, norms, _ = pq_build_frames(corpus, **build_params)
+    return {"codebook": cb, "codes": codes, "norms": norms}
+
+
+def _pq_append(index_dir, meta, delta, id_col, vec_col):
+    # encode against the FROZEN codebook with the build's definition;
+    # m/dim come from the manifest, so a mismatched subspace layout
+    # cannot silently corrupt the encoding
+    p = meta.get("params", {})
+    return {
+        "codes": encode_codebook_arrow(
+            delta.select(
+                F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_v")
+            ),
+            _frozen_panel(index_dir, meta, "codebook"),
+            int(p.get("m", 8)), int(p.get("dim", 64)), ["neighbor_id"],
+        ),
+        "norms": _norms_frame(delta, id_col, vec_col),
+    }
+
+
+def _ivfpq_build(corpus, build_params, params):
+    centroids, cb, codes, norms, _ = ivfpq_build_frames(
+        corpus, **build_params
+    )
+    return {
+        "centroids": centroids, "codebook": cb, "codes": codes,
+        "norms": norms,
+    }
+
+
+def _ivfpq_append(index_dir, meta, delta, id_col, vec_col):
+    # assign to the FROZEN centroids (multi-assignment from the
+    # manifest) and encode each assignment's residual against the
+    # FROZEN codebook. The assign kernel emits the residual itself
+    # (emit_residual: the elementwise double subtract, bit-for-bit the
+    # mechanism ivfpq_build_frames uses), so no delta re-join and no
+    # centroid BroadcastExchange per batch. Fallbacks mirror
+    # _BUILD_DEFAULTS["ivfpq"] for legacy manifests.
+    p = meta.get("params", {})
+    assigned = topn_centroids_arrow(
+        spread_scaled(
+            delta.select(
+                F.col(id_col).alias("neighbor_id"),
+                F.col(vec_col).alias("_v"),
+            ),
+            "neighbor_id",
+        ),
+        _frozen_panel(index_dir, meta, "centroids"),
+        "neighbor_id", "_v", int(p.get("multi_assign", 3)), "neighbor_id",
+        emit_residual=True,
+    )
+    return {
+        "codes": encode_codebook_arrow(
+            assigned.select(
+                "neighbor_id", "centroid_id", F.col("_rv").alias("_v")
+            ),
+            _frozen_panel(index_dir, meta, "codebook"),
+            int(p.get("m", 16)), int(p.get("dim", 64)),
+            ["neighbor_id", "centroid_id"],
+        ),
+        "norms": _norms_frame(delta, id_col, vec_col),
+    }
+
+
+def _dedup_frames(docs: DataFrame, p: dict) -> dict:
+    """The dedup index tables of ``docs``: distinct exact digests,
+    distinct banded MinHash rows, and the distinct winnowed span
+    fingerprints of the docs matching ``benchmark_pred`` (r11, VERDICT
+    r10 #4: the fixed eval suite every incoming crawl batch is
+    decontaminated against). Extraction is row-local and every table
+    is distinct-reduced, so build(base) ⊎ append(delta) ≡ build(all)."""
+    text_col = p.get("text_col", "text")
+    id_col = p.get("id_col", "doc_id")
+    return {
+        "digests": docs.select(
+            F.md5(norm_text(F.col(text_col))).alias("digest")
+        ).distinct(),
+        "bands": minhash_band_digests(
+            docs, text_col, id_col,
+            int(p.get("n", 8)), int(p.get("num_hashes", 16)),
+            int(p.get("bands", 4)),
+        ).select("band", "band_digest").distinct(),
+        "winnow_fps": winnow_fingerprints(
+            docs.filter(F.expr(p.get("benchmark_pred", "source = 'src0'"))),
+            text_col, id_col,
+            k=int(p.get("win_k", 5)), w=int(p.get("win_w", 4)),
+        ).select("fp").distinct(),
+    }
+
+
+def _dedup_build(corpus, build_params, params):
+    return _dedup_frames(corpus, params)
+
+
+def _dedup_append(index_dir, meta, delta, id_col, vec_col):
+    return _dedup_frames(delta, meta.get("params", {}))
+
+
+class _Kind(NamedTuple):
+    # (corpus, build_params, effective params) -> {table: frame}
+    build: Callable
+    # (index_dir, manifest, delta, id_col, vec_col) -> {table: frame}
+    append: Callable
+    # the table base_rows / an append's n_delta are counted from
+    rows: str
+    # the count table holds min(multi_assign, |centroids|) rows per
+    # vector instead of one
+    multi_rows: bool
+    # (table, one-row-per-vector predicate) the cell_sizes log counts,
+    # or None for a kind without cell sizes
+    sizes: tuple | None
+
+
+_KINDS = {
+    "ivf": _Kind(_ivf_build, _ivf_append, "postings", True,
+                 ("postings", None)),
+    "pq": _Kind(_pq_build, _pq_append, "norms", False, None),
+    # ivfpq codes carry m subspace rows per assignment: s == 0 keeps
+    # one row per (vector, cell)
+    "ivfpq": _Kind(_ivfpq_build, _ivfpq_append, "norms", False,
+                   ("codes", ("s", 0))),
+    "dedup": _Kind(_dedup_build, _dedup_append, "digests", False, None),
+}
+
+
+def _count_rows(kind: str, params: dict, table_dirs, centroid_dirs) -> int:
+    """Vectors in a written count table (``_Kind.rows``), from parquet
+    footers — never an extra pass over the corpus or the delta (r9
+    review #7). A ``multi_rows`` table holds exactly
+    min(multi_assign, |centroids|) rows per vector (the top-n window
+    is candidate-bounded): dividing by bare multi_assign would
+    undercount an index with fewer cells than multi_assign and fire
+    needs_retrain early (r9 review #5)."""
+    n = _footer_rows(table_dirs)
+    if _KINDS[kind].multi_rows:
+        multi = int(params.get("multi_assign", 1))
+        n //= max(1, min(multi, _footer_rows(centroid_dirs)))
+    return n
+
+
+def _ensure(
+    kind: str,
+    spark: SparkSession,
+    corpus: DataFrame,
+    index_dir: str,
+    fingerprint: str,
+    src: str | None,
+    subset: str | None,
+    build_params: dict,
+) -> str:
+    """Build a ``kind`` index iff absent/stale; returns ``index_dir``.
+    The kind's build frames are written as slot-0 units of a
+    writer-unique tmp dir, the cell-size log (kinds with one) is
+    counted from the written data driver-side, the manifest is written
+    LAST, and one atomic rename installs the result."""
+    if index_is_current(index_dir, kind, fingerprint):
+        # current index: opportunistically sweep dead writers' stage
+        # litter (ADVICE r11 — see _sweep_dead_stages)
+        _sweep_dead_stages(index_dir)
+        return index_dir
+    spec = _KINDS[kind]
+    params = _effective_params(kind, build_params, subset)
+    tmp = _build_into_tmp(index_dir)
+    try:
+        frames = spec.build(corpus, build_params, params)
+        tables = list(frames) + (["cell_sizes"] if spec.sizes else [])
+        paths = {t: _build_unit(tmp, t) for t in tables}
+        _write_frames(frames, paths)
+        snap = None
+        if spec.sizes:
+            # posting rows per cell, counted ONCE from the written data
+            # and maintained by appends — the mass-budgeted probe reads
+            # this C-row table (and the manifest's folded snapshot,
+            # r12) instead of re-scanning the largest relation per
+            # search
+            cells, pred = spec.sizes
+            snap = _append_sizes(
+                spark, paths["cell_sizes"], _parquet_files(paths[cells]),
+                "centroid_id", pred=pred,
+            )
+        _commit(tmp, {
+            "kind": kind,
+            "fingerprint": fingerprint,
+            "tables": tables,
+            "src": src,
+            "params": params,
+            "base_rows": _count_rows(
+                kind, params, paths[spec.rows], paths.get("centroids")
+            ),
+            "cell_sizes": snap,
+            "units": _build_units(tables),
+        })
+    except BaseException:
+        shutil.rmtree(tmp, ignore_errors=True)  # no abandoned tmp dirs
+        raise
+    out = _install_build(tmp, index_dir, kind, fingerprint)
+    _gc_superseded(out, kind, src, subset)
+    return out
+
+
+def _append(
+    kind: str,
+    spark: SparkSession,
+    index_dir: str,
+    delta: DataFrame,
+    id_col: str | None,
+    vec_col: str | None,
+    batch_id,
+) -> str:
+    """Append ``delta`` to a ``kind`` index against its FROZEN
+    quantizers: claim, stage the kind's append frames (the tables
+    ``_APPEND_TABLES[kind]`` ∩ the manifest's tables — a legacy index
+    without a newer table skips it) plus the batch's partial
+    cell-count file, count the batch from the staged footers, and
+    publish through :func:`_finish_append`. A redelivered batch id is
+    an idempotent skip. Every failure before the publish releases the
+    claim and removes the stage."""
+    txn = _writer_txn(index_dir, batch_id, "append")
+    if txn is None:
+        return index_dir  # redelivered batch: idempotent skip
+    meta, mver = txn
+    spec = _KINDS[kind]
+    tables = [t for t in _APPEND_TABLES[kind] if t in meta.get("tables", [])]
+    stage = None
+    try:
+        frames = spec.append(index_dir, meta, delta, id_col, vec_col)
+        stage = _append_stage(index_dir, mver)
+        paths = {t: os.path.join(stage, t) for t in tables}
+        _write_frames({t: df for t, df in frames.items() if t in paths}, paths)
+        n_delta = _count_rows(
+            kind, meta.get("params", {}), paths[spec.rows],
+            _unit_paths(index_dir, meta, "centroids"),
+        )
+        sizes_delta = None
+        if "cell_sizes" in paths:
+            cells, pred = spec.sizes
+            sizes_delta = _append_sizes(
+                spark, paths["cell_sizes"], _parquet_files(paths[cells]),
+                "centroid_id", pred=pred,
+            )
+    except BaseException:
+        _end_claim(index_dir, mver, release=True)
+        # the staged delta is garbage once the claim is released — at
+        # sf10 scale leaving it until the next writer's sweep leaks
+        # GBs in the shared cache dir (r11 review #3)
+        if stage is not None:
+            shutil.rmtree(stage, ignore_errors=True)
+        raise
+    return _finish_append(
+        index_dir, stage, tables, meta, mver, batch_id, n_delta,
+        sizes_delta=sizes_delta,
+    )
 
 
 def ensure_ivf_index(
@@ -1680,167 +1948,11 @@ def ensure_ivf_index(
     subset: str | None = None,
     **build_params,
 ) -> str:
-    """Build the IVF index iff absent/stale; returns ``index_dir``."""
-    if index_is_current(index_dir, "ivf", fingerprint):
-        # current index: opportunistically sweep dead writers'
-        # stage litter (ADVICE r11 — see _sweep_dead_stages)
-        _sweep_dead_stages(index_dir)
-        return index_dir
-    tmp = _build_into_tmp(index_dir)
-    try:
-        centroids, postings = ivf_build_frames(corpus, **build_params)
-        # the two table writes are independent jobs (trained centroids
-        # are barriered in ivf_centroids, so the postings job reuses
-        # the materialized frame instead of re-running Lloyd) —
-        # overlap them (r14, _run_concurrent). Unit paths resolve in
-        # THIS thread: _unit_name embeds the thread id, so a path
-        # computed inside a sibling thread would name a different unit
-        # than the manifest records.
-        cent_u = _build_unit(tmp, "centroids")
-        post_u = _build_unit(tmp, "postings")
-        csz_u = _build_unit(tmp, "cell_sizes")
-        _run_concurrent([
-            lambda: centroids.write.mode("overwrite").parquet(cent_u),
-            lambda: postings.write.mode("overwrite").parquet(post_u),
-        ])
-        # base_rows from the just-written postings' parquet FOOTERS
-        # (row count / postings-per-vector), never an extra corpus
-        # scan (r9 review #7: a redundant full pass per retrain at
-        # 100 TB). _nearest_centroids emits min(multi, |centroids|)
-        # postings per vector — dividing by bare multi undercounts the
-        # base on an index with fewer cells than multi_assign, which
-        # inflates the appended fraction and fires needs_retrain early
-        # (ADVICE r9; same accounting as ivf_index_append)
-        multi = int(_effective_params("ivf", build_params, None)["multi_assign"])
-        # persisted cell sizes (v4, mirroring the v3 ivfpq table):
-        # posting rows per cell, computed ONCE at build from the
-        # just-written postings and maintained by appends — the
-        # mass-budgeted probe reads this C-row table instead of
-        # re-scanning the postings relation on every search. r15: the
-        # two row counts come from the written units' parquet FOOTERS
-        # (driver-side pyarrow, zero jobs — _footer_rows), so the
-        # cell-size aggregate is the only remaining Spark job here,
-        # and the C-row snapshot is read back driver-side too.
-        csz_snap = _append_sizes(
-            spark, csz_u, _parquet_files(post_u), "centroid_id"
-        )
-        n_cent = _footer_rows(spark, cent_u)
-        n_post = _footer_rows(spark, post_u)
-        per_vec = max(1, min(multi, n_cent))
-        _commit(
-            tmp, "ivf", fingerprint,
-            ["centroids", "postings", "cell_sizes"],
-            src=src,
-            params=_effective_params("ivf", build_params, subset),
-            base_rows=n_post // per_vec,
-            # folded serve-time snapshot (r12): the ≤C-row counts of
-            # the table just written (returned by _append_sizes, same
-            # content as the persisted file) — serves then read the
-            # manifest instead of folding the parquet log per search
-            cell_sizes=csz_snap,
-            units=_build_units(["centroids", "postings", "cell_sizes"]),
-        )
-    except BaseException:
-        shutil.rmtree(tmp, ignore_errors=True)  # no abandoned tmp dirs
-        raise
-    out = _install_build(tmp, index_dir, "ivf", fingerprint)
-    _gc_superseded(out, "ivf", src, subset)
-    return out
-
-
-def ivf_index_append(
-    spark: SparkSession,
-    index_dir: str,
-    delta: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    batch_id: int | None = None,
-) -> str:
-    """Incremental IVF index maintenance: assign a DELTA batch to the
-    FROZEN persisted centroids (multi-assignment read from the
-    manifest, never the caller) and append its postings — no retrain,
-    no base re-assignment. Writers serialize through the ``_applog``
-    CAS (:func:`_claim_writer`); the delta is STAGED pre-invalidate
-    and adopted by pure renames (v5.1), so a crash mid-adopt leaves a
-    non-current index that is rebuilt, never served incomplete.
-    Documented drift trade: centroids reflect the base distribution —
-    :func:`needs_retrain` watches the appended fraction."""
-    from bigdatafinalproject_spark.operators.ann import _nearest_centroids
-
-    txn = _writer_txn(index_dir, batch_id, "append")
-    if txn is None:
-        return index_dir  # redelivered batch: idempotent skip
-    meta, mver = txn
-    # a failure in the claim→invalidate window (a transient Spark
-    # error in the centroid read / footer counts) must RELEASE the
-    # claim: the manifest was never invalidated, so the slot was never
-    # consumed — without the release, every later writer in this
-    # process waits the full _WRITER_WAIT_S against our own live
-    # claim and the index is wedged for the process lifetime
-    # (ADVICE r9). Failures AFTER the invalidate keep the claim: the
-    # index is genuinely non-current then and rebuild is the remedy.
-    stage = None
-    try:
-        multi = int(meta.get("params", {}).get("multi_assign", 1))
-        # r15: the frozen centroid panel is read driver-side, so the
-        # per-micro-batch panel-collect job disappears
-        postings = _nearest_centroids(
-            _frozen_panel(index_dir, meta, "centroids"),
-            delta, id_col, vec_col, multi, "neighbor_id",
-        )
-        track_sizes = "cell_sizes" in meta.get("tables", [])
-        # stage EVERY Spark job of this append pre-invalidate (v5.1):
-        # the delta postings write into the staging dir, and the v5
-        # partial cell-count file derives from the staged files
-        # (centroid_id column only — a kB-scale column-pruned read),
-        # so the ONLY pass over the delta is the postings write. v4's
-        # design checkpointed the assignment and ran a staged
-        # full-table merge + directory swap per micro-batch, three
-        # extra jobs that made the append 1.5× its pre-v4 cost
-        # (VERDICT r10 #2). Readers groupBy-sum the partial-count
-        # log; compact_index bounds its file count like any other
-        # append target.
-        stage = _append_stage(index_dir, mver)
-        # r15: the centroid count comes from the persisted table's
-        # parquet footers (driver-side pyarrow — it was a per-append
-        # Spark job before), so the postings write is the ONLY Spark
-        # job of the append. The count feeds per_vec: every vector
-        # gets exactly min(multi, |centroids|) postings (the top-n
-        # window is candidate-bounded) — using bare multi as the
-        # divisor undercounts on a tiny index with fewer cells than
-        # multi (r9 review #5)
-        n_cent = _footer_rows(
-            spark, _unit_paths(index_dir, meta, "centroids")
-        )
-        postings.write.mode("overwrite").parquet(
-            os.path.join(stage, "postings")
-        )
-        per_vec = max(1, min(multi, n_cent))
-        # appended rows from the STAGED footers (metadata-only),
-        # divided by the exact per-vector posting count — never an
-        # extra pass over the delta frame
-        n_delta = _footer_rows(
-            spark, os.path.join(stage, "postings")
-        ) // per_vec
-        sizes_delta = None
-        if track_sizes:
-            sizes_delta = _append_sizes(
-                spark, os.path.join(stage, "cell_sizes"),
-                _parquet_files(os.path.join(stage, "postings")),
-                "centroid_id",
-            )
-    except BaseException:
-        _end_claim(index_dir, mver, release=True)
-        # the staged delta is garbage once the claim is released — at
-        # sf10 scale leaving it until the next append's sweep leaks
-        # GBs in the shared cache dir (r11 review #3)
-        if stage is not None:
-            shutil.rmtree(stage, ignore_errors=True)
-        raise
-    return _finish_append(
-        index_dir, stage,
-        ["postings"] + (["cell_sizes"] if track_sizes else []),
-        meta, mver, batch_id, n_delta, sizes_delta=sizes_delta,
+    """Build the IVF index (centroids, postings, cell_sizes) iff
+    absent/stale; returns ``index_dir``."""
+    return _ensure(
+        "ivf", spark, corpus, index_dir, fingerprint, src, subset,
+        build_params,
     )
 
 
@@ -1853,45 +1965,76 @@ def ensure_pq_index(
     subset: str | None = None,
     **build_params,
 ) -> str:
-    """Build the PQ index iff absent/stale; returns ``index_dir``.
-    Same atomic tmp-build + rename install as ensure_ivf_index."""
-    if index_is_current(index_dir, "pq", fingerprint):
-        # current index: opportunistically sweep dead writers'
-        # stage litter (ADVICE r11 — see _sweep_dead_stages)
-        _sweep_dead_stages(index_dir)
-        return index_dir
-    tmp = _build_into_tmp(index_dir)
-    try:
-        cb, codes, norms = pq_build_frames(corpus, **build_params)
-        # three independent table writes (the trained codebook is
-        # barriered in pq_build_frames, so the codes job reuses the
-        # materialized frame) — overlap them (r14, _run_concurrent).
-        # Unit paths resolve in THIS thread (_unit_name embeds the
-        # thread id).
-        cb_u = _build_unit(tmp, "codebook")
-        codes_u = _build_unit(tmp, "codes")
-        norms_u = _build_unit(tmp, "norms")
-        _run_concurrent([
-            lambda: cb.write.mode("overwrite").parquet(cb_u),
-            lambda: codes.write.mode("overwrite").parquet(codes_u),
-            lambda: norms.write.mode("overwrite").parquet(norms_u),
-        ])
-        # base_rows from the just-written norms table (one row per
-        # corpus vector) via parquet footers — no extra corpus scan,
-        # and (r15) no Spark job either: driver-side footer read
-        _commit(
-            tmp, "pq", fingerprint, ["codebook", "codes", "norms"],
-            src=src,
-            params=_effective_params("pq", build_params, subset),
-            base_rows=_footer_rows(spark, norms_u),
-            units=_build_units(["codebook", "codes", "norms"]),
-        )
-    except BaseException:
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise
-    out = _install_build(tmp, index_dir, "pq", fingerprint)
-    _gc_superseded(out, "pq", src, subset)
-    return out
+    """Build the PQ index (codebook, codes, norms) iff absent/stale;
+    returns ``index_dir``."""
+    return _ensure(
+        "pq", spark, corpus, index_dir, fingerprint, src, subset,
+        build_params,
+    )
+
+
+def ensure_ivfpq_index(
+    spark: SparkSession,
+    corpus: DataFrame,
+    index_dir: str,
+    fingerprint: str,
+    src: str | None = None,
+    subset: str | None = None,
+    **build_params,
+) -> str:
+    """Build the composed IVF+PQ index iff absent/stale — centroids,
+    codebook, codes (cell-tagged, so no separate postings table),
+    norms and cell_sizes. Returns ``index_dir``."""
+    return _ensure(
+        "ivfpq", spark, corpus, index_dir, fingerprint, src, subset,
+        build_params,
+    )
+
+
+def ensure_dedup_index(
+    spark: SparkSession,
+    corpus: DataFrame,
+    index_dir: str,
+    fingerprint: str,
+    src: str | None = None,
+    subset: str | None = None,
+    **build_params,
+) -> str:
+    """Build the persisted DEDUP index iff absent/stale — the crawl
+    pipeline's production shape: the corpus's DISTINCT exact digests
+    (``digests``), DISTINCT banded MinHash rows (``bands``) and the
+    benchmark suite's winnowed span fingerprints (``winnow_fps``),
+    persisted between runs so each incoming batch dedups by
+    semi-joining them (operators/dedup.incremental_dedup derives the
+    same frames in-query; see SURVEY §2 A8). There is NO trained
+    quantizer, so appends carry no drift: build(base) ⊎ append(delta)
+    has exactly the DISTINCT content of build(base ∪ delta), and the
+    checks are invariant to duplicate index rows (left_semi joins).
+    base_rows records the distinct digest count (capacity accounting
+    only — needs_retrain is meaningless for an exact index)."""
+    return _ensure(
+        "dedup", spark, corpus, index_dir, fingerprint, src, subset,
+        build_params,
+    )
+
+
+def ivf_index_append(
+    spark: SparkSession,
+    index_dir: str,
+    delta: DataFrame,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    batch_id: int | None = None,
+) -> str:
+    """Assign a DELTA batch to the FROZEN persisted centroids
+    (multi-assignment from the manifest, never the caller) and append
+    its postings and partial cell sizes — no retrain, no base
+    re-assignment. Drift trade: centroids reflect the base
+    distribution; :func:`needs_retrain` watches the appended
+    fraction."""
+    return _append(
+        "ivf", spark, index_dir, delta, id_col, vec_col, batch_id
+    )
 
 
 def pq_index_append(
@@ -1902,76 +2045,107 @@ def pq_index_append(
     vec_col: str = "embedding",
     batch_id: int | None = None,
 ) -> str:
-    """Incremental PQ index maintenance: encode a DELTA batch against
-    the FROZEN persisted codebook (m/dim read from the manifest, never
-    the caller — a mismatched subspace layout cannot silently corrupt
-    the encoding) and append its codes + exact norms. Writers
-    serialize through the ``_applog`` CAS (:func:`_claim_writer` — two
-    concurrent appenders cannot lose each other's ``applied_batches``
-    entry, VERDICT r8 #1). Both tables are STAGED pre-invalidate and
-    adopted by pure renames (v5.1) — a crash mid-adopt leaves a
-    non-current index (rebuilt, never served with codes-but-no-norms,
-    which the ADC inner join would otherwise silently drop). Drift
-    trade as in :func:`ivf_index_append`."""
-    from pyspark.sql import functions as F
+    """Encode a DELTA batch against the FROZEN persisted codebook (m/dim
+    from the manifest) and append its codes + exact norms; both land in
+    one commit, so codes never serve without their norms (which the ADC
+    inner join would otherwise silently drop). Drift trade as in
+    :func:`ivf_index_append`."""
+    return _append(
+        "pq", spark, index_dir, delta, id_col, vec_col, batch_id
+    )
 
-    txn = _writer_txn(index_dir, batch_id, "append")
-    if txn is None:
-        return index_dir  # redelivered batch: idempotent skip
-    meta, mver = txn
-    # claim→invalidate failures release the claim (slot never
-    # consumed; see ivf_index_append — ADVICE r9)
+
+def ivfpq_index_append(
+    spark: SparkSession,
+    index_dir: str,
+    delta: DataFrame,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    batch_id: int | None = None,
+) -> str:
+    """Assign a DELTA batch to the FROZEN persisted centroids, encode
+    each assignment's residual against the FROZEN codebook (layout
+    from the manifest), and append the cell-tagged codes, exact norms
+    and partial cell sizes. Drift trade: BOTH quantizers reflect the
+    base distribution — :func:`needs_retrain` watches the appended
+    fraction."""
+    return _append(
+        "ivfpq", spark, index_dir, delta, id_col, vec_col, batch_id
+    )
+
+
+def dedup_index_append(
+    spark: SparkSession,
+    index_dir: str,
+    delta: DataFrame,
+    batch_id: int | None = None,
+) -> str:
+    """Append an ingested batch's distinct digests, banded MinHash rows
+    and winnow fingerprints (column/shingle/band params from the
+    MANIFEST, never the caller). Appended rows may duplicate existing
+    index rows (a batch re-crawling known text); that is CORRECT by
+    construction — the checks are left_semi joins and extraction is
+    row-local. compact_index rewrites the accreted per-batch units."""
+    return _append(
+        "dedup", spark, index_dir, delta, None, None, batch_id
+    )
+
+
+def _compaction(
+    spark: SparkSession,
+    index_dir: str,
+    op: str,
+    target_bytes: int,
+    pick: Callable,
+):
+    """The rewrite step compact_index and minor_compact_index share:
+    claim, pick each table's source unit dirs (``pick(manifest,
+    tables) -> {table: [unit dirs]}``), and rewrite each table's picks
+    into ``stage/<table>`` with operators/layout.compact's
+    metadata-only sizing — per-table rewrites touch disjoint units, so
+    they run concurrently (r14). Returns (manifest, mver, stage,
+    picks, {table: (files_before, files_after)}); ``stage`` is None
+    when nothing needs rewriting, and the claim is then released
+    without a commit."""
+    # kind-check BEFORE claiming (ADVICE r9): raising unknown-kind
+    # after the claim would abandon the slot and wedge later writers;
+    # the post-claim re-check covers the (theoretical) window where
+    # the manifest changes kind between this read and the claim
+    pre = _manifest(index_dir)
+    if pre is not None and pre.get("kind") not in _APPEND_TABLES:
+        raise ValueError(
+            f"{op}_index: unknown index kind {pre.get('kind')!r}"
+        )
+    meta, mver = _writer_txn(index_dir, None, op)
     stage = None
     try:
-        params = meta.get("params", {})
-        m = int(params.get("m", 8))
-        dim = int(params.get("dim", 64))
-        # encode the delta with THE SAME definition pq_build_frames
-        # uses (shared helper — build and append cannot diverge).
-        # r15: the frozen codebook panel is read driver-side,
-        # dropping the per-micro-batch collect job
-        from bigdatafinalproject_spark.operators.arrow_kernels import (
-            encode_codebook_arrow,
-        )
-
-        dcodes = encode_codebook_arrow(
-            delta.select(
-                F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_v")
-            ),
-            _frozen_panel(index_dir, meta, "codebook"),
-            m, dim, ["neighbor_id"],
-        )
-        from bigdatafinalproject_spark.operators.arrow_kernels import (
-            norms_arrow,
-        )
-
-        dnorms = norms_arrow(
-            delta.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col)),
-            "neighbor_id", vec_col, "_cnorm",
-        )
-        # stage every Spark job pre-invalidate (v5.1, see the ivf
-        # twin): the invalidated window below is pure renames; the two
-        # staged tables are independent jobs — overlap them (r14)
+        tables = _APPEND_TABLES.get(meta.get("kind"))
+        if tables is None:
+            raise ValueError(
+                f"{op}_index: unknown index kind {meta.get('kind')!r}"
+            )
+        picks = pick(meta, tables)
+        if not picks:
+            _end_claim(index_dir, mver, release=True)
+            return meta, mver, None, picks, {}
+        before = {
+            t: sum(len(_parquet_files(p)) for p in srcs)
+            for t, srcs in picks.items()
+        }
         stage = _append_stage(index_dir, mver)
-        _run_concurrent([
-            lambda: dcodes.write.mode("overwrite").parquet(
-                os.path.join(stage, "codes")
-            ),
-            lambda: dnorms.write.mode("overwrite").parquet(
-                os.path.join(stage, "norms")
-            ),
+        afters = _run_concurrent([
+            (lambda s=srcs, d=os.path.join(stage, t): compact(
+                spark, s, d, target_bytes=target_bytes
+            ))
+            for t, srcs in picks.items()
         ])
-        # appended rows from the STAGED norms footers (one row per
-        # appended vector, metadata-only) — never an extra pass
-        n_delta = _footer_rows(spark, os.path.join(stage, "norms"))
     except BaseException:
         _end_claim(index_dir, mver, release=True)
         if stage is not None:
             shutil.rmtree(stage, ignore_errors=True)
         raise
-    return _finish_append(
-        index_dir, stage, ["codes", "norms"], meta, mver, batch_id, n_delta
-    )
+    stats = {t: (before[t], a) for t, a in zip(picks, afters)}
+    return meta, mver, stage, picks, stats
 
 
 def compact_index(
@@ -1979,174 +2153,47 @@ def compact_index(
     index_dir: str,
     target_bytes: int = 128 * 1024 * 1024,
 ) -> dict[str, tuple[int, int]]:
-    """OPTIMIZE for the maintained index: rewrite the append-target
-    tables (IVF postings / PQ codes+norms — one parquet file set per
-    applied batch, one per MICRO-batch on the streaming path) into
-    ~``target_bytes`` files, reusing operators/layout.compact's
-    metadata-only sizing. A long-maintained index otherwise degrades
-    scan-side (VERDICT r8 residual #1).
+    """OPTIMIZE for the maintained index: rewrite every live unit of the
+    append-target tables (one file set per applied batch — one per
+    MICRO-batch on the streaming path) into ~``target_bytes`` files,
+    published as ONE new unit per table. A long-maintained index
+    otherwise degrades scan-side (VERDICT r8 residual #1).
 
-    Same writer protocol as the appends: CAS-claim the next ``mver``
-    slot (a compaction and an append can never interleave), rewrite
-    the live units ASIDE, adopt the rewrite as ONE new unit per table
-    (v6 — uncommitted units are invisible), and re-commit a manifest
-    whose ``units`` map references ONLY the new unit, with
-    ``applied_batches`` — and the row counters — PRESERVED. The
-    serving manifest is never invalidated: a crash ANYWHERE leaves
-    the index current and serving the pre-compaction snapshot (the
-    orphan rewrite is GC'd later). Content-neutral by construction:
-    rewrite-only, no dedup — the registered compaction query shares
-    the append oracle to prove the served results are bit-identical.
-
-    Reader isolation (v6): a search planned against the
+    ``applied_batches`` and the row counters are PRESERVED (rewrite
+    only, no dedup — the registered compaction query shares the append
+    oracle to prove the served results are bit-identical). Batch
+    identity folds into the base: ``batches`` is cleared, so retract
+    before compacting, or rebuild. A search planned against the
     pre-compaction manifest keeps its files until the post-commit
-    _gc_dead_units sweep removes the superseded units — snapshot
-    isolation up to that sweep, the WAP pointer-layout behavior the
-    pre-v6 directory swap could not offer (it failed in-flight scans
-    the moment the swap landed).
+    _gc_dead_units sweep (snapshot isolation up to that sweep).
 
-    Returns {table: (files_before, files_after)}.
-    """
-    from bigdatafinalproject_spark.operators.layout import compact
-
-    # kind-check BEFORE claiming (ADVICE r9): raising unknown-kind
-    # after the claim would abandon the slot and wedge later writers;
-    # the post-claim re-check below covers the (theoretical) window
-    # where the manifest changes kind between this read and the claim
-    pre = _manifest(index_dir)
-    if pre is not None and pre.get("kind") not in _APPEND_TABLES:
-        raise ValueError(
-            f"compact_index: unknown index kind {pre.get('kind')!r}"
-        )
-    txn = _writer_txn(index_dir, None, "compact")
-    meta, mver = txn
-    # claim→invalidate failures release the claim (the compaction
-    # rewrites below are full Spark jobs and the serving copy is
-    # untouched until the invalidate; see ivf_index_append — ADVICE r9)
-    try:
-        tables = _APPEND_TABLES.get(meta.get("kind"), ())
-        if not tables:
-            raise ValueError(
-                f"compact_index: unknown index kind {meta.get('kind')!r}"
-            )
-        # sweep tmp leftovers from a compaction that died pre-commit
-        # (its units were never referenced, so these are pure garbage)
-        # — by RENAME-THEN-DELETE (r13 review #1): a raw rmtree here
-        # races a paused-past-lease compactor that already passed its
-        # pre-adopt checks and is about to rename this very tmp into a
-        # unit dir; rmtree's fd traversal would keep deleting inside
-        # the adopted unit, and the zombie's commit would publish a
-        # hollowed table (the same race _sweep_stage closes for
-        # stages). With rename-aside, exactly one of sweep/adopt wins
-        # its rename; the zombie's loss is a clean FileNotFoundError
-        # abort.
-        for n in os.listdir(index_dir):
-            if ".compact." in n:
-                _sweep_stage(index_dir, n)
-        stats: dict[str, tuple[int, int]] = {}
-        tmps: dict[str, str] = {}
-        plan: list[tuple[str, list[str], int, str]] = []
+    Returns {table: (files_before, files_after)}."""
+    def pick(meta, tables):
+        # exactly the units the manifest references — a zombie's
+        # unreferenced leftovers and a missing legacy table (e.g.
+        # pre-r11 dedup without winnow_fps) are skipped by construction
+        picks = {}
         for t in tables:
-            # rewrite exactly the units the manifest references — a
-            # zombie's unreferenced leftovers and a missing legacy
-            # table (e.g. pre-r11 dedup without winnow_fps) are both
-            # skipped by construction
             srcs = [
                 p for p in _unit_paths(index_dir, meta, t)
                 if os.path.isdir(p)
             ]
-            if not srcs:
-                continue
-            before = sum(len(_parquet_files(p)) for p in srcs)
-            tmp = os.path.join(index_dir, f"{t}.compact.tmp.{os.getpid()}")
-            plan.append((t, srcs, before, tmp))
-        # per-table rewrites touch disjoint unit dirs and write
-        # disjoint tmps — independent jobs, overlapped (r14 §2.6)
-        afters = _run_concurrent([
-            (lambda s=srcs, d=tmp: compact(
-                spark, s, d, target_bytes=target_bytes
-            ))
-            for (_, srcs, _, tmp) in plan
-        ])
-        for (t, _, before, tmp), after in zip(plan, afters):
-            stats[t] = (before, after)
-            tmps[t] = tmp
-    except BaseException:
-        _end_claim(index_dir, mver, release=True)
-        raise
-    try:
-        # fence check before adoption (r12): a paused-past-lease
-        # compactor aborts here instead of wasting the rename+commit
-        # round trip (its recommit would be fenced anyway — v6 made
-        # adoption non-destructive). OSError aborts too (fail closed);
-        # the manifest-snapshot re-check mirrors _finish_append's
-        _check_fence(index_dir, mver)
-        cur = _manifest(index_dir)
-        if cur is None or int(cur.get("mver", 0)) != int(meta.get("mver", 0)):
-            raise ConcurrentWriteError(
-                f"manifest at {index_dir!r} advanced from snapshot mver "
-                f"{meta.get('mver', 0)} since this compactor's claim — "
-                f"retry"
-            )
-    except (ConcurrentWriteError, OSError):
-        _end_claim(index_dir, mver, release=True)
-        for tmp in tmps.values():
-            shutil.rmtree(tmp, ignore_errors=True)
-        raise
-    # adopt the rewrites as uncommitted units (v6: the serving
-    # manifest stays intact; failures release the claim and leave the
-    # index serving its pre-compaction snapshot)
+            if srcs:
+                picks[t] = srcs
+        return picks
+
+    meta, mver, stage, picks, stats = _compaction(
+        spark, index_dir, "compact", target_bytes, pick
+    )
+    if stage is None:
+        return stats
     unit = _unit_name(mver)
-    adopted: dict[str, str] = {}
-    try:
-        for t, tmp in tmps.items():
-            # a vanished tmp (a contender's rename-aside sweep won)
-            # surfaces as FileNotFoundError — a clean pre-commit abort
-            _adopt_dir_as_unit(index_dir, tmp, t, unit)
-            adopted[t] = unit
-    except OSError:
-        _end_claim(index_dir, mver, release=True)
-        for t, u in adopted.items():
-            shutil.rmtree(os.path.join(index_dir, t, u), ignore_errors=True)
-        for tmp in tmps.values():
-            shutil.rmtree(tmp, ignore_errors=True)
-        raise
     units = {t: list(us) for t, us in (meta.get("units") or {}).items()}
-    for t, u in adopted.items():
-        units[t] = [u]  # the rewrite REPLACES the table's unit set
-    _end_claim(index_dir, mver)  # stop lease renewal before the prune
-    try:
-        _commit(
-            index_dir, meta["kind"], meta["fingerprint"], meta["tables"],
-            src=meta.get("src"), params=meta.get("params"),
-            applied_batches=meta.get("applied_batches"),
-            mver=mver, base_rows=meta.get("base_rows"),
-            appended_rows=int(meta.get("appended_rows", 0)),
-            # compaction is rewrite-only: the folded snapshot is
-            # invariant
-            cell_sizes=meta.get("cell_sizes"),
-            units=units,
-            # batch identity is folded into the base by the rewrite —
-            # per-batch retraction is no longer possible (retract
-            # before compacting, or rebuild); the retracted ledger is
-            # history and survives
-            batches={},
-            retracted=meta.get("retracted"),
-        )
-    except BaseException:
-        # nothing published (see the append twin): drop the adopted
-        # rewrite and free the slot — the index keeps serving its
-        # pre-compaction snapshot
-        _release_adopted(index_dir, adopted, mver)
-        raise
-    prune(os.path.join(index_dir, _APPLOG), keep_from=mver)  # see append twin
-    _prune_fence(index_dir, mver)
-    committed = _manifest(index_dir)
-    if committed is not None:
-        # the superseded pre-compaction units die here — the one
-        # reader-visible boundary (see docstring: snapshot isolation
-        # holds up to this sweep)
-        _gc_dead_units(index_dir, committed)
+    for t in picks:
+        units[t] = [unit]  # the rewrite REPLACES the table's unit set
+    _publish(index_dir, meta, mver, stage, list(picks), dict(
+        meta, units=units, batches={}
+    ))
     return stats
 
 
@@ -2202,51 +2249,28 @@ def minor_compact_index(
     the registered minor-compact queries share the append oracles to
     prove the served content is bit-identical.
 
-    Same writer protocol as ``compact_index`` (CAS claim, fence check,
-    adopt-then-recommit; the serving manifest is never invalidated —
-    a crash anywhere leaves the index current, serving the pre-pass
-    snapshot, and the orphan rewrite is GC'd later).
-
     Returns {"tables": {table: (files_merged, files_after)},
     "folded": [batch ids folded], "kept": [batch ids still
     retractable]} — empty "tables" when nothing needed merging (the
     claim is released, no commit happens).
     """
-    from bigdatafinalproject_spark.operators.layout import compact
-
-    pre = _manifest(index_dir)
-    if pre is not None and pre.get("kind") not in _APPEND_TABLES:
-        raise ValueError(
-            f"minor_compact_index: unknown index kind {pre.get('kind')!r}"
-        )
     if keep_recent < 0:
         raise ValueError("minor_compact_index: keep_recent must be >= 0")
-    txn = _writer_txn(index_dir, None, "minor_compact")
-    meta, mver = txn
-    try:
-        tables = _APPEND_TABLES.get(meta.get("kind"), ())
-        if not tables:
-            raise ValueError(
-                f"minor_compact_index: unknown index kind "
-                f"{meta.get('kind')!r}"
-            )
-        for n in os.listdir(index_dir):
-            if ".minorc." in n:
-                _sweep_stage(index_dir, n)
-        batches = dict(meta.get("batches") or {})
+    tiers: dict[str, list[int]] = {}
+
+    def pick(meta, tables):
         # tier split at BATCH granularity: the keep_recent highest ids
         # stay retractable; older provenance folds into the base tier
+        batches = meta.get("batches") or {}
         ids = sorted(int(k) for k in batches)
-        kept_ids = ids[len(ids) - keep_recent:] if keep_recent else []
-        fold_ids = [i for i in ids if i not in kept_ids]
-        protected: dict[str, set] = {t: set() for t in tables}
-        for i in kept_ids:
+        kept = ids[len(ids) - keep_recent:] if keep_recent else []
+        tiers["kept"] = kept
+        tiers["folded"] = [i for i in ids if i not in kept]
+        protected: dict[str, set] = {}
+        for i in kept:
             for t, u in (batches[str(i)].get("units") or {}).items():
                 protected.setdefault(t, set()).add(u)
-        stats: dict[str, tuple[int, int]] = {}
-        tmps: dict[str, str] = {}
-        merged: dict[str, list[str]] = {}
-        plan: list[tuple[str, list[str], int, str]] = []
+        picks = {}
         for t in tables:
             cands = [
                 p for u in (meta.get("units") or {}).get(t, ())
@@ -2262,92 +2286,33 @@ def minor_compact_index(
                 cands, key=lambda p: (_unit_bytes(p), os.path.basename(p))
             )
             srcs = [p for p in cands if p != base_unit]
-            if len(srcs) < 2:
-                continue
-            before = sum(len(_parquet_files(p)) for p in srcs)
-            tmp = os.path.join(index_dir, f"{t}.minorc.tmp.{os.getpid()}")
-            plan.append((t, srcs, before, tmp))
-        # per-table merges touch disjoint unit dirs and write disjoint
-        # tmps — independent jobs, overlapped (r14 §2.6)
-        afters = _run_concurrent([
-            (lambda s=srcs, d=tmp: compact(
-                spark, s, d, target_bytes=target_bytes
-            ))
-            for (_, srcs, _, tmp) in plan
-        ])
-        for (t, srcs, before, tmp), after in zip(plan, afters):
-            stats[t] = (before, after)
-            tmps[t] = tmp
-            merged[t] = [os.path.basename(p) for p in srcs]
-    except BaseException:
-        _end_claim(index_dir, mver, release=True)
-        raise
-    if not tmps:
+            if len(srcs) >= 2:
+                picks[t] = srcs
+        return picks
+
+    meta, mver, stage, picks, stats = _compaction(
+        spark, index_dir, "minor_compact", target_bytes, pick
+    )
+    if stage is None:
         # nothing to merge (fresh index, or only base + recent units):
-        # release the slot without a commit — provenance keeps its
-        # retractability for free
-        _end_claim(index_dir, mver, release=True)
-        return {"tables": {}, "folded": [], "kept": kept_ids}
-    try:
-        _check_fence(index_dir, mver)
-        cur = _manifest(index_dir)
-        if cur is None or int(cur.get("mver", 0)) != int(meta.get("mver", 0)):
-            raise ConcurrentWriteError(
-                f"manifest at {index_dir!r} advanced from snapshot mver "
-                f"{meta.get('mver', 0)} since this minor compactor's "
-                f"claim — retry"
-            )
-    except (ConcurrentWriteError, OSError):
-        _end_claim(index_dir, mver, release=True)
-        for tmp in tmps.values():
-            shutil.rmtree(tmp, ignore_errors=True)
-        raise
+        # provenance keeps its retractability for free
+        return {"tables": {}, "folded": [], "kept": tiers["kept"]}
     unit = _unit_name(mver)
-    adopted: dict[str, str] = {}
-    try:
-        for t, tmp in tmps.items():
-            _adopt_dir_as_unit(index_dir, tmp, t, unit)
-            adopted[t] = unit
-    except OSError:
-        _end_claim(index_dir, mver, release=True)
-        for t, u in adopted.items():
-            shutil.rmtree(os.path.join(index_dir, t, u), ignore_errors=True)
-        for tmp in tmps.values():
-            shutil.rmtree(tmp, ignore_errors=True)
-        raise
     units = {t: list(us) for t, us in (meta.get("units") or {}).items()}
-    for t, u in adopted.items():
+    for t, srcs in picks.items():
         # the merged unit REPLACES exactly its sources; base tier and
         # recent-batch units keep their positions
-        units[t] = [x for x in units[t] if x not in merged.get(t, ())] + [u]
+        merged = {os.path.basename(p) for p in srcs}
+        units[t] = [u for u in units[t] if u not in merged] + [unit]
     # fold the aged-out provenance (ids stay in applied_batches)
-    for i in fold_ids:
-        batches.pop(str(i), None)
-    _end_claim(index_dir, mver)  # stop lease renewal before the prune
-    try:
-        _commit(
-            index_dir, meta["kind"], meta["fingerprint"], meta["tables"],
-            src=meta.get("src"), params=meta.get("params"),
-            applied_batches=meta.get("applied_batches"),
-            mver=mver, base_rows=meta.get("base_rows"),
-            appended_rows=int(meta.get("appended_rows", 0)),
-            # rewrite-only: the folded snapshot is invariant
-            cell_sizes=meta.get("cell_sizes"),
-            units=units,
-            batches=batches,
-            retracted=meta.get("retracted"),
-        )
-    except BaseException:
-        _release_adopted(index_dir, adopted, mver)
-        raise
-    prune(os.path.join(index_dir, _APPLOG), keep_from=mver)
-    _prune_fence(index_dir, mver)
-    committed = _manifest(index_dir)
-    if committed is not None:
-        # the merged source units die here (same reader-visible
-        # boundary as compact_index; the GC grace window applies)
-        _gc_dead_units(index_dir, committed)
-    return {"tables": stats, "folded": fold_ids, "kept": kept_ids}
+    batches = {
+        k: v for k, v in (meta.get("batches") or {}).items()
+        if int(k) not in tiers["folded"]
+    }
+    _publish(index_dir, meta, mver, stage, list(picks), dict(
+        meta, units=units, batches=batches
+    ))
+    return {"tables": stats, "folded": tiers["folded"], "kept": tiers["kept"]}
 
 
 def retract_batch(index_dir: str, batch_id) -> str:
@@ -2357,9 +2322,7 @@ def retract_batch(index_dir: str, batch_id) -> str:
     batch found poisoned/contaminated after ingestion, a licensing or
     right-to-be-forgotten takedown of one provider's delivery, a bad
     upstream re-run — at 100 TB none of these can afford rewriting the
-    index, and under the pre-v6 flat layout (batch files interleaved
-    in one directory, counted into one snapshot) retraction WAS a
-    rewrite.
+    index.
 
     Semantics: exactly "as if the batch was never appended".
 
@@ -2369,32 +2332,27 @@ def retract_batch(index_dir: str, batch_id) -> str:
       the retrain trigger and the drift-aware serve policies
       (schedule clamp, rerank-pool widening) compute exactly what a
       never-appended index would;
-    - the ``cell_sizes`` snapshot subtracts the batch's recorded
-      per-cell partials (zero-count cells drop, matching the fold of
-      the log that just lost the batch's partial-count unit);
+    - the ``cell_sizes`` snapshot subtracts the batch's per-cell
+      partials (zero-count cells drop, matching the fold of the log
+      that just lost the batch's partial-count unit);
     - dedup kinds are exact by construction: appends store each
       batch's DISTINCT rows without cross-batch dedup, so a digest
-      re-crawled by another batch keeps that batch's copy — removing
-      batch A's units is precisely "A never ingested";
+      re-crawled by another batch keeps that batch's copy;
     - ``applied_batches`` KEEPS the id: retraction means "remove and
       do not re-ingest", so a checkpoint redelivery of the retracted
       batch stays an idempotent skip (re-ingesting the same content
       under a NEW batch id is the caller's explicit act); the id is
       also recorded in the ``retracted`` ledger.
 
-    Serialized through the same writer claim + fence as appends and
-    compactions. Determinism makes the result BIT-IDENTICAL to an
-    index that never saw the batch, so the registered retract queries
-    share the append oracles (the retraction theorem). Raises
-    ``ValueError`` for a batch without provenance — never appended,
-    already retracted, appended by a pre-r13 writer, or folded into
-    the base by a compaction (``batches`` is cleared there: retract
-    before compacting, or rebuild)."""
+    Determinism makes the result BIT-IDENTICAL to an index that never
+    saw the batch, so the registered retract queries share the append
+    oracles. Raises ``ValueError`` for a batch without provenance —
+    never appended, already retracted, appended by a pre-r13 writer,
+    or folded into the base by a compaction."""
     if batch_id is None:
         raise TypeError("retract_batch requires an explicit batch_id")
     batch_id = _norm_batch_id(batch_id)  # int/str "3" name ONE batch
-    txn = _writer_txn(index_dir, None, "retract")
-    meta, mver = txn
+    meta, mver = _writer_txn(index_dir, None, "retract")
     bkey = str(batch_id)
     try:
         batches = dict(meta.get("batches") or {})
@@ -2404,73 +2362,47 @@ def retract_batch(index_dir: str, batch_id) -> str:
                 f"(never appended, already retracted, or compacted into "
                 f"the base) — nothing to retract"
             )
-        # same pre-commit guards as _finish_append: a paused-past-
-        # lease retractor must not commit from a stale snapshot
-        _check_fence(index_dir, mver)
-        cur = _manifest(index_dir)
-        if cur is None or int(cur.get("mver", 0)) != int(meta.get("mver", 0)):
-            raise ConcurrentWriteError(
-                f"manifest at {index_dir!r} advanced from snapshot mver "
-                f"{meta.get('mver', 0)} since this retractor's claim — "
-                f"retry"
-            )
+        entry = batches.pop(bkey)
+        bunits = entry.get("units", {})
+        units = {
+            t: [u for u in us if u != bunits.get(t)]
+            for t, us in (meta.get("units") or {}).items()
+        }
+        snap = meta.get("cell_sizes")
+        if snap is not None:
+            # the batch's per-cell delta: from its own cell_sizes unit
+            # (r14 O(1)-manifest layout) or the r13 manifest copy — read
+            # BEFORE the commit GCs the unit (_batch_sizes docstring)
+            bsizes = _batch_sizes(index_dir, entry)
+            if bsizes is not None:
+                folded = {int(c): int(n) for c, n in snap}
+                for c, n in bsizes:
+                    folded[int(c)] = folded.get(int(c), 0) - int(n)
+                snap = {c: n for c, n in folded.items() if n > 0}
+            else:
+                # no recorded partials (shouldn't happen for kinds that
+                # track sizes, but fail soft): drop the snapshot —
+                # readers fold the log, which just lost the batch's unit
+                snap = None
+        retracted = list(meta.get("retracted") or [])
+        if bkey not in retracted:
+            retracted.append(bkey)
+        # an empty stage: retraction writes no data, but it claims its
+        # stage like every writer, so a contender's sweep marks it dead
+        stage = _append_stage(index_dir, mver)
     except BaseException:
         _end_claim(index_dir, mver, release=True)
         raise
-    entry = batches.pop(bkey)
-    bunits = entry.get("units", {})
-    units = {
-        t: [u for u in us if u != bunits.get(t)]
-        for t, us in (meta.get("units") or {}).items()
-    }
-    snap = meta.get("cell_sizes")
-    if snap is not None:
-        # the batch's per-cell delta: from its own cell_sizes unit
-        # (r14 O(1)-manifest layout) or the r13 manifest copy — read
-        # BEFORE the commit GCs the unit (_batch_sizes docstring)
-        bsizes = _batch_sizes(index_dir, entry)
-        if bsizes is not None:
-            folded = {int(c): int(n) for c, n in snap}
-            for c, n in bsizes:
-                folded[int(c)] = folded.get(int(c), 0) - int(n)
-            snap = {c: n for c, n in folded.items() if n > 0}
-        else:
-            # no recorded partials (shouldn't happen for kinds that
-            # track sizes, but fail soft): drop the snapshot — readers
-            # fold the log, which just lost the batch's unit
-            snap = None
-    retracted = list(meta.get("retracted") or [])
-    if bkey not in retracted:
-        retracted.append(bkey)
-    _end_claim(index_dir, mver)  # stop lease renewal before the prune
-    try:
-        _commit(
-            index_dir, meta["kind"], meta["fingerprint"], meta["tables"],
-            src=meta.get("src"), params=meta.get("params", {}),
-            applied_batches=meta.get("applied_batches"),
-            mver=mver, base_rows=meta.get("base_rows"),
-            appended_rows=(
-                int(meta.get("appended_rows", 0))
-                - int(entry.get("rows", 0))
-            ),
-            cell_sizes=snap,
-            units=units,
-            batches=batches,
-            retracted=retracted,
-        )
-    except BaseException:
-        # nothing published; free the slot (no units were touched —
-        # retraction's only data action is the post-commit GC).
-        # Ownership-verified (r14, ADVICE r13 #2) like _release_adopted
-        _remove_own_claim(index_dir, mver)
-        raise
-    prune(os.path.join(index_dir, _APPLOG), keep_from=mver)
-    _prune_fence(index_dir, mver)
-    committed = _manifest(index_dir)
-    if committed is not None:
-        # the retracted batch's unit dirs die here — the single
-        # physical action of a retraction
-        _gc_dead_units(index_dir, committed)
+    _publish(index_dir, meta, mver, stage, [], dict(
+        meta,
+        appended_rows=(
+            int(meta.get("appended_rows", 0)) - int(entry.get("rows", 0))
+        ),
+        cell_sizes=snap,
+        units=units,
+        batches=batches,
+        retracted=retracted,
+    ))
     return index_dir
 
 
@@ -2484,8 +2416,6 @@ def clone_index(src_dir: str, dst_dir: str) -> str:
     NOT the source's writer log — the clone starts its own maintenance
     history. Refuses an uncommitted source (a mid-maintenance index
     must never be forked)."""
-    import threading
-
     if _manifest(src_dir) is None:
         raise ValueError(
             f"clone_index: no committed index at {src_dir!r}"
@@ -2505,8 +2435,7 @@ def clone_index(src_dir: str, dst_dir: str) -> str:
                     # clone starts its own maintenance epoch sequence
                     # (_fence* also drops the short-lived r12 interim
                     # _fence.json single-file form)
-                    _APPLOG, "_fence*", "*.compact.*", "*.tmp.*",
-                    "*.clone.*"
+                    _APPLOG, "_fence*", "*.tmp.*", "*.clone.*"
                 ),
             )
         except (shutil.Error, OSError) as e:
@@ -2601,8 +2530,6 @@ def ivf_index_search(
     measured regression: RECALL_SCALE ivfpq_appended 0.909→0.869 at
     sf3). needs_retrain, not the budget step-down, owns the drift
     response; the retrain re-resolves both C and the budget."""
-    from bigdatafinalproject_spark.operators.ann import mass_schedule_for_n
-
     meta = _serving_manifest(index_dir, "ivf")
     postings = _read_table(spark, index_dir, meta, "postings")
     # the maintained cell sizes (v4+): the manifest's folded snapshot
@@ -2692,80 +2619,6 @@ def pq_index_search(
     )
 
 
-def ensure_ivfpq_index(
-    spark: SparkSession,
-    corpus: DataFrame,
-    index_dir: str,
-    fingerprint: str,
-    src: str | None = None,
-    subset: str | None = None,
-    **build_params,
-) -> str:
-    """Build the composed IVF+PQ index iff absent/stale — four frames
-    (centroids, codebook, codes, norms; codes carry the cell id, so no
-    separate postings table) under the same atomic tmp-build + rename
-    install as the other kinds. Returns ``index_dir``."""
-    from bigdatafinalproject_spark.operators.ann import ivfpq_build_frames
-
-    if index_is_current(index_dir, "ivfpq", fingerprint):
-        # current index: opportunistically sweep dead writers'
-        # stage litter (ADVICE r11 — see _sweep_dead_stages)
-        _sweep_dead_stages(index_dir)
-        return index_dir
-    tmp = _build_into_tmp(index_dir)
-    try:
-        centroids, cb, codes, norms = ivfpq_build_frames(
-            corpus, **build_params
-        )
-        # four independent table writes (centroids, codebook and the
-        # assignment pass are barriered inside ivfpq_build_frames, so
-        # no job re-runs a training loop) — overlap them (r14,
-        # _run_concurrent). Unit paths resolve in THIS thread
-        # (_unit_name embeds the thread id).
-        cent_u = _build_unit(tmp, "centroids")
-        cb_u = _build_unit(tmp, "codebook")
-        codes_u = _build_unit(tmp, "codes")
-        norms_u = _build_unit(tmp, "norms")
-        csz_u = _build_unit(tmp, "cell_sizes")
-        _run_concurrent([
-            lambda: centroids.write.mode("overwrite").parquet(cent_u),
-            lambda: cb.write.mode("overwrite").parquet(cb_u),
-            lambda: codes.write.mode("overwrite").parquet(codes_u),
-            lambda: norms.write.mode("overwrite").parquet(norms_u),
-        ])
-        # persisted cell sizes (v3, r10 review #2): posting rows per
-        # cell, computed ONCE at build from the just-written codes (a
-        # 2-column scan, s = 0 restricting to one row per assignment)
-        # and maintained by appends — the mass-budgeted probe reads
-        # this C-row table instead of re-scanning the index's largest
-        # relation on every search. r15: bounded builds count driver-
-        # side (_append_sizes pyarrow path) and the norms row count
-        # comes from footers — zero extra Spark jobs here.
-        csz_snap = _append_sizes(
-            spark, csz_u, _parquet_files(codes_u),
-            "centroid_id", pred=("s", 0),
-        )
-        n_base = _footer_rows(spark, norms_u)
-        _commit(
-            tmp, "ivfpq", fingerprint,
-            ["centroids", "codebook", "codes", "norms", "cell_sizes"],
-            src=src,
-            params=_effective_params("ivfpq", build_params, subset),
-            base_rows=n_base,
-            # folded serve-time snapshot (r12) — see the ivf twin
-            cell_sizes=csz_snap,
-            units=_build_units(
-                ["centroids", "codebook", "codes", "norms", "cell_sizes"]
-            ),
-        )
-    except BaseException:
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise
-    out = _install_build(tmp, index_dir, "ivfpq", fingerprint)
-    _gc_superseded(out, "ivfpq", src, subset)
-    return out
-
-
 def ivfpq_index_search(
     spark: SparkSession,
     index_dir: str,
@@ -2800,11 +2653,6 @@ def ivfpq_index_search(
     exact rerank recovers what the compressed ranking loses, bounded
     by pool_cap and by needs_retrain's appended-fraction budget. Both
     rules are exact integer arithmetic the oracles replay."""
-    from bigdatafinalproject_spark.operators.ann import (
-        ivfpq_search_frames,
-        mass_schedule_for_n,
-    )
-
     meta = _serving_manifest(index_dir, "ivfpq")
     params = meta.get("params", {})
     m_idx = int(params.get("m", 16))
@@ -2840,326 +2688,6 @@ def ivfpq_index_search(
     )
 
 
-def ivfpq_index_append(
-    spark: SparkSession,
-    index_dir: str,
-    delta: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    batch_id: int | None = None,
-) -> str:
-    """Incremental maintenance of the composed IVFPQ index: assign a
-    DELTA batch to the FROZEN persisted centroids (multi-assignment
-    from the manifest), encode each assignment's residual against the
-    FROZEN persisted codebook (subspace layout from the manifest), and
-    append the cell-tagged codes + exact norms. Same writer protocol
-    as the other kinds: ``_applog`` CAS claim, invalidate-then-
-    recommit, footer-delta row accounting, batch-id idempotence, log
-    prune. Drift trade: BOTH quantizers reflect the base distribution
-    — :func:`needs_retrain` watches the appended fraction."""
-    from pyspark.sql import functions as F
-
-    txn = _writer_txn(index_dir, batch_id, "append")
-    if txn is None:
-        return index_dir  # redelivered batch: idempotent skip
-    meta, mver = txn
-    # claim→invalidate failures release the claim (slot never
-    # consumed; see ivf_index_append — ADVICE r9)
-    stage = None
-    try:
-        params = meta.get("params", {})
-        # fallbacks mirror _BUILD_DEFAULTS["ivfpq"] for legacy
-        # manifests; every r9+ manifest records the effective values
-        multi = int(params.get("multi_assign", 3))
-        m = int(params.get("m", 16))
-        dim = int(params.get("dim", 64))
-        # r15: frozen quantizer panels read driver-side from their
-        # parquet (bit-identical to the collects they replace — no
-        # per-micro-batch panel-collect jobs), and the residual is
-        # emitted BY the assign kernel (emit_residual: elementwise
-        # double subtract, the zip_with residual bit-for-bit — the
-        # same mechanism ivfpq_build_frames has used since r14),
-        # deleting the delta re-join + the per-batch BroadcastExchange
-        # of the centroid table + the interpreted zip_with.
-        from bigdatafinalproject_spark.operators.arrow_kernels import (
-            encode_codebook_arrow,
-            topn_centroids_arrow,
-        )
-        from bigdatafinalproject_spark.operators.layout import (
-            spread_scaled,
-        )
-
-        assigned = topn_centroids_arrow(
-            spread_scaled(
-                delta.select(
-                    F.col(id_col).alias("neighbor_id"),
-                    F.col(vec_col).alias("_v"),
-                ),
-                "neighbor_id",
-            ),
-            _frozen_panel(index_dir, meta, "centroids"),
-            "neighbor_id", "_v", multi, "neighbor_id",
-            emit_residual=True,
-        )
-        dcodes = encode_codebook_arrow(
-            assigned.select(
-                "neighbor_id", "centroid_id", F.col("_rv").alias("_v")
-            ),
-            _frozen_panel(index_dir, meta, "codebook"),
-            m, dim, ["neighbor_id", "centroid_id"],
-        )
-        from bigdatafinalproject_spark.operators.arrow_kernels import (
-            norms_arrow,
-        )
-
-        dnorms = norms_arrow(
-            delta.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col)),
-            "neighbor_id", vec_col, "_cnorm",
-        )
-        track_sizes = "cell_sizes" in meta.get("tables", [])
-        # stage EVERY Spark job pre-invalidate (v5.1, mirroring the
-        # ivf append): codes + norms write into the staging dir; the
-        # partial cell-count file derives from the staged codes —
-        # s = 0 restricts to one row per (vector, cell) since codes
-        # carry m subspace rows per assignment. One pass over the
-        # delta, no checkpoint, no staged merge, no directory swap;
-        # readers groupBy-sum (VERDICT r10 #2).
-        stage = _append_stage(index_dir, mver)
-        # codes and norms are independent jobs — overlap them (r14,
-        # _run_concurrent); the cell-size partials derive from the
-        # staged codes files, so they stay after the join point
-        _run_concurrent([
-            lambda: dcodes.write.mode("overwrite").parquet(
-                os.path.join(stage, "codes")
-            ),
-            lambda: dnorms.write.mode("overwrite").parquet(
-                os.path.join(stage, "norms")
-            ),
-        ])
-        n_delta = _footer_rows(spark, os.path.join(stage, "norms"))
-        sizes_delta = None
-        if track_sizes:
-            sizes_delta = _append_sizes(
-                spark, os.path.join(stage, "cell_sizes"),
-                _parquet_files(os.path.join(stage, "codes")),
-                "centroid_id", pred=("s", 0),
-            )
-    except BaseException:
-        _end_claim(index_dir, mver, release=True)
-        if stage is not None:
-            shutil.rmtree(stage, ignore_errors=True)
-        raise
-    return _finish_append(
-        index_dir, stage,
-        ["codes", "norms"] + (["cell_sizes"] if track_sizes else []),
-        meta, mver, batch_id, n_delta, sizes_delta=sizes_delta,
-    )
-
-
-def ensure_dedup_index(
-    spark: SparkSession,
-    corpus: DataFrame,
-    index_dir: str,
-    fingerprint: str,
-    src: str | None = None,
-    subset: str | None = None,
-    **build_params,
-) -> str:
-    """Build the persisted DEDUP index iff absent/stale — the index
-    lifecycle machinery (manifest-committed build, fingerprint
-    invalidation, CAS-serialized maintenance writers, compaction)
-    applied to the dedup family's production shape: a crawl pipeline
-    keeps the corpus's DISTINCT exact digests and DISTINCT MinHash
-    (band, band_digest) rows persisted between runs and dedups each
-    incoming batch by semi-joining them
-    (operators/dedup.incremental_dedup derives the same two frames
-    in-query; reference behavior: the corpus-side of duplicates.py,
-    see SURVEY §2 A8). Two tables:
-
-    - ``digests``: (digest) — md5 of the normalized text, distinct;
-    - ``bands``:   (band, band_digest) — banded MinHash rows, distinct.
-
-    Unlike the ANN kinds there is NO trained quantizer, so appends
-    carry no drift: build(base) ⊎ append(delta) has exactly the same
-    DISTINCT content as build(base ∪ delta), and the check is
-    invariant to duplicate index rows (left_semi joins). base_rows
-    records the distinct digest count (capacity accounting only —
-    needs_retrain is meaningless for an exact index)."""
-    from bigdatafinalproject_spark.operators.dedup import (
-        minhash_band_digests,
-        norm_text,
-        winnow_fingerprints,
-    )
-    from pyspark.sql import functions as F
-
-    if index_is_current(index_dir, "dedup", fingerprint):
-        # current index: opportunistically sweep dead writers'
-        # stage litter (ADVICE r11 — see _sweep_dead_stages)
-        _sweep_dead_stages(index_dir)
-        return index_dir
-    p = _effective_params("dedup", build_params, subset)
-    text_col, id_col = p["text_col"], p["id_col"]
-    tmp = _build_into_tmp(index_dir)
-    try:
-        # the benchmark suite's winnowed span fingerprints (r11,
-        # VERDICT r10 #4): distinct fp values of the corpus docs
-        # matching benchmark_pred — the fixed eval suite every
-        # incoming crawl batch is decontaminated against. Extraction
-        # is per-doc and the check distinct-reduces, so the table
-        # obeys the same build(base) ⊎ append(delta) ≡ build(all)
-        # theorem as digests/bands. The three tables share nothing but
-        # the corpus scan — independent jobs, overlapped (r14,
-        # _run_concurrent). Unit paths resolve in THIS thread
-        # (_unit_name embeds the thread id).
-        dg_u = _build_unit(tmp, "digests")
-        bd_u = _build_unit(tmp, "bands")
-        wf_u = _build_unit(tmp, "winnow_fps")
-        _run_concurrent([
-            lambda: (
-                corpus.select(
-                    F.md5(norm_text(F.col(text_col))).alias("digest")
-                )
-                .distinct()
-                .write.mode("overwrite")
-                .parquet(dg_u)
-            ),
-            lambda: (
-                minhash_band_digests(
-                    corpus, text_col, id_col,
-                    int(p["n"]), int(p["num_hashes"]), int(p["bands"]),
-                )
-                .select("band", "band_digest")
-                .distinct()
-                .write.mode("overwrite")
-                .parquet(bd_u)
-            ),
-            lambda: (
-                winnow_fingerprints(
-                    corpus.filter(F.expr(p["benchmark_pred"])),
-                    text_col, id_col,
-                    k=int(p["win_k"]), w=int(p["win_w"]),
-                )
-                .select("fp")
-                .distinct()
-                .write.mode("overwrite")
-                .parquet(wf_u)
-            ),
-        ])
-        _commit(
-            tmp, "dedup", fingerprint,
-            ["digests", "bands", "winnow_fps"],
-            src=src, params=p,
-            base_rows=_footer_rows(spark, dg_u),
-            units=_build_units(["digests", "bands", "winnow_fps"]),
-        )
-    except BaseException:
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise
-    out = _install_build(tmp, index_dir, "dedup", fingerprint)
-    _gc_superseded(out, "dedup", src, subset)
-    return out
-
-
-def dedup_index_append(
-    spark: SparkSession,
-    index_dir: str,
-    delta: DataFrame,
-    batch_id: int | None = None,
-) -> str:
-    """Incremental dedup-index maintenance: append an ingested batch's
-    distinct digests and banded MinHash rows (column/shingle/band
-    params from the MANIFEST, never the caller) under the same writer
-    protocol as the ANN kinds — ``_applog`` CAS claim, staged writes
-    adopted by renames inside the invalidate-then-recommit window
-    (v5.1), footer-delta accounting, batch-id idempotence, log prune. Appended rows may duplicate
-    existing index rows (a batch re-crawling known text); that is
-    CORRECT by construction — the check joins are left_semi, and
-    DISTINCT(build(base) ⊎ append(delta)) ≡ DISTINCT(base ∪ delta)
-    because digest/band extraction is row-local. compact_index
-    rewrites the accreted per-batch file sets."""
-    from bigdatafinalproject_spark.operators.dedup import (
-        minhash_band_digests,
-        norm_text,
-    )
-    from pyspark.sql import functions as F
-
-    txn = _writer_txn(index_dir, batch_id, "append")
-    if txn is None:
-        return index_dir  # redelivered batch: idempotent skip
-    meta, mver = txn
-    # claim→invalidate failures release the claim (slot never
-    # consumed; see ivf_index_append — ADVICE r9)
-    stage = None
-    try:
-        p = meta.get("params", {})
-        text_col = p.get("text_col", "text")
-        id_col = p.get("id_col", "doc_id")
-        ddg = delta.select(
-            F.md5(norm_text(F.col(text_col))).alias("digest")
-        ).distinct()
-        dbd = (
-            minhash_band_digests(
-                delta, text_col, id_col,
-                int(p.get("n", 8)), int(p.get("num_hashes", 16)),
-                int(p.get("bands", 4)),
-            )
-            .select("band", "band_digest")
-            .distinct()
-        )
-        # the delta's benchmark-slice winnow fingerprints (a legacy
-        # index without the table skips — manifests are the single
-        # source of truth for what the index carries)
-        dwf = None
-        if "winnow_fps" in meta.get("tables", []):
-            from bigdatafinalproject_spark.operators.dedup import (
-                winnow_fingerprints,
-            )
-
-            dwf = (
-                winnow_fingerprints(
-                    delta.filter(
-                        F.expr(p.get("benchmark_pred", "source = 'src0'"))
-                    ),
-                    text_col, id_col,
-                    k=int(p.get("win_k", 5)), w=int(p.get("win_w", 4)),
-                )
-                .select("fp")
-                .distinct()
-            )
-        # stage every Spark job pre-invalidate (v5.1, see the ivf
-        # twin): the invalidated window below is pure renames. The
-        # three staged tables share no data — overlap their jobs
-        # (_run_concurrent, r14) instead of paying the scheduler
-        # latency three times in a row.
-        stage = _append_stage(index_dir, mver)
-        writes = [
-            lambda: ddg.write.mode("overwrite").parquet(
-                os.path.join(stage, "digests")
-            ),
-            lambda: dbd.write.mode("overwrite").parquet(
-                os.path.join(stage, "bands")
-            ),
-        ]
-        if dwf is not None:
-            writes.append(
-                lambda: dwf.write.mode("overwrite").parquet(
-                    os.path.join(stage, "winnow_fps")
-                )
-            )
-        _run_concurrent(writes)
-        n_delta = _footer_rows(spark, os.path.join(stage, "digests"))
-    except BaseException:
-        _end_claim(index_dir, mver, release=True)
-        if stage is not None:
-            shutil.rmtree(stage, ignore_errors=True)
-        raise
-    return _finish_append(
-        index_dir, stage,
-        ["digests", "bands"] + (["winnow_fps"] if dwf is not None else []),
-        meta, mver, batch_id, n_delta,
-    )
-
-
 def dedup_index_check(
     spark: SparkSession,
     index_dir: str,
@@ -3174,10 +2702,6 @@ def dedup_index_check(
     check shares operators/dedup.dedup_status_against_index with the
     in-query twin, so serve and twin cannot diverge. Refuses an
     uncommitted (mid-maintenance) index. Returns (id, status)."""
-    from bigdatafinalproject_spark.operators.dedup import (
-        dedup_status_against_index,
-    )
-
     meta = _serving_manifest(index_dir, "dedup")
     p = meta.get("params", {})
     digests = _read_table(spark, index_dir, meta, "digests")
@@ -3207,11 +2731,6 @@ def dedup_index_contamination(
     distinct-compatible fp sets. Refuses an uncommitted index and an
     index built before the winnow_fps table existed. Returns
     (id, n_fp, n_hit, hit_frac) for batch docs with >= k tokens."""
-    from bigdatafinalproject_spark.operators.dedup import (
-        _broadcast_overlap_stats,
-        winnow_fingerprints,
-    )
-
     meta = _serving_manifest(index_dir, "dedup")
     if "winnow_fps" not in meta.get("tables", []):
         raise ValueError(

@@ -27,6 +27,8 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 
 QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
+# query -> the query whose oracle it shares, until _resolve_links runs
+_LINKS: dict[str, str] = {}
 
 _MODULES = (
     "flagship",
@@ -72,38 +74,50 @@ def query(name: str, oracle: str | None = None, oracle_of: str | None = None):
     ``oracle_of`` shares another registered query's oracle verbatim —
     for result-identical twins (e.g. a persisted-index serve path vs
     its end-to-end build+search query), where a shared oracle IS the
-    equivalence theorem the driver then checks. The referenced query
-    must already be registered (module import order)."""
+    equivalence theorem the driver then checks. The link resolves once
+    every module is imported (:func:`_resolve_links`), so it does not
+    depend on ``_MODULES`` order."""
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in QUERIES:
             raise ValueError(f"duplicate query name {name!r}")
         if oracle is not None and oracle_of is not None:
             raise ValueError(f"{name!r}: pass oracle OR oracle_of, not both")
-        if oracle_of is not None and oracle_of not in ORACLES:
-            # validate BEFORE mutating QUERIES so a bad reference can't
-            # leave a half-registered query behind (import-order
-            # contract enforced with a descriptive error)
-            raise ValueError(
-                f"{name!r}: oracle_of={oracle_of!r} is not a registered "
-                f"oracle-bearing query (check _MODULES import order)"
-            )
         QUERIES[name] = fn
         if oracle is not None:
             ORACLES[name] = oracle
         elif oracle_of is not None:
-            ORACLES[name] = ORACLES[oracle_of]
+            _LINKS[name] = oracle_of
         return fn
 
     return deco
 
 
+def _resolve_links() -> None:
+    """Give each ``oracle_of`` twin its target's oracle (a target may
+    itself be a twin). A link whose target is not an oracle-bearing
+    query raises, naming both queries."""
+    while _LINKS:
+        ready = {n: t for n, t in _LINKS.items() if t in ORACLES}
+        if not ready:
+            name, target = next(iter(_LINKS.items()))
+            raise ValueError(
+                f"{name!r}: oracle_of={target!r} is not a registered "
+                f"oracle-bearing query"
+            )
+        for n, t in ready.items():
+            ORACLES[n] = ORACLES[t]
+            del _LINKS[n]
+
+
 def _load_all() -> None:
-    """Import every query module. A listed module that does not import
-    raises (``ModuleNotFoundError`` names it) rather than silently
-    dropping its queries from the registry."""
+    """Import every query module, then resolve the ``oracle_of`` links.
+    A listed module that does not import raises (``ModuleNotFoundError``
+    names it) rather than silently dropping its queries from the
+    registry."""
     for mod in _MODULES:
         importlib.import_module(f"bigdatafinalproject_spark.queries.{mod}")
+    _resolve_links()
 
 
 _load_all()

@@ -54,7 +54,7 @@ def main() -> None:
         print(f"{name:28s} {t[name]:7.3f}")
 
     t0 = time.perf_counter()
-    centroids, cb, codes, norms = ivfpq_build_frames(
+    centroids, cb, codes, norms, _ = ivfpq_build_frames(
         emb, centroid_mod=_IVF_MOD, max_centroids=_IVF_C,
         train_rounds=_IVF_ROUNDS, multi_assign=_IVF_MULTI,
         m=_PQ_M, dim=64, codeword_mod=_PQ_MOD, max_codewords=_PQ_MAXC,

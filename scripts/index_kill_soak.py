@@ -6,9 +6,9 @@ and SIGSTOP pause injection (tests/test_ann_index.py); the production
 threat model is PROCESS DEATH at arbitrary points of a maintenance
 transaction. This soak runs N concurrent OS-process writers — each a
 real SparkSession appending disjoint batch-id ranges to ONE shared IVF
-index, with periodic compactions — while a killer SIGKILLs a random
-worker's whole process group (python driver + its JVM) every few
-seconds and restarts it. A restarted worker simply retries from its
+index, with periodic compactions (alternately minor and full) — while
+a killer SIGKILLs a random worker's whole process group (python driver
++ its JVM) every few seconds and restarts it. A restarted worker simply retries from its
 first un-applied batch id: redelivery idempotence is the protocol's
 exactly-once story, so the soak's end-state assertion is total.
 
@@ -19,9 +19,10 @@ claim/fence path), and re-ingests fresh content under batch id
 ``n_batches + bid``, with kills landing anywhere in that three-txn
 sequence. A restarted worker resumes deterministically from the
 manifest (``applied_batches`` / ``batches`` / ``retracted``). A
-concurrent compaction can fold the target into the base between the
-append and the retract — the documented retract-before-compact trade
-— in which case the worker records a ``retract_folded_<bid>`` marker
+concurrent compaction (full, or a minor one that ages the batch out)
+can fold the target into the base between the append and the retract
+— the documented retract-before-compact trade — in which case the
+worker records a ``retract_folded_<bid>`` marker
 and moves on; the verifier accepts exactly one outcome per target.
 
 Invariants asserted at the end (and the whole point):
@@ -233,13 +234,14 @@ def worker(slot: int, nworkers: int, index_dir: str, n_batches: int,
            compact_every: int, retract_mod: int) -> None:
     """Append this slot's batch ids (slot, slot+N, ...) in order —
     running each retract target's append→retract→re-ingest sequence —
-    retrying through contention; compact periodically. Exits 0 when
-    every owned batch reached its terminal state."""
+    retrying through contention; every ``compact_every`` batches run a
+    compaction, alternating minor_compact_index and compact_index so
+    all four writer verbs meet the kills. Exits 0 when every owned
+    batch reached its terminal state."""
     from bigdatafinalproject_spark.operators.ann_index import (
         compact_index,
-    )
-    from bigdatafinalproject_spark.operators.ann_index import (
         ivf_index_append,
+        minor_compact_index,
     )
     from bigdatafinalproject_spark.operators.txlog import (
         ConcurrentWriteError,
@@ -261,8 +263,12 @@ def worker(slot: int, nworkers: int, index_dir: str, n_batches: int,
                     time.sleep(random.uniform(0.05, 0.3))
         done += 1
         if compact_every and done % compact_every == 0:
+            passes = done // compact_every
             try:
-                compact_index(spark, index_dir)
+                if passes % 2:
+                    minor_compact_index(spark, index_dir)
+                else:
+                    compact_index(spark, index_dir)
             except ConcurrentWriteError:
                 pass  # someone else is writing; compaction is optional
     print(f"WORKER_DONE slot={slot}", flush=True)

@@ -659,7 +659,7 @@ def test_claim_released_on_pre_invalidate_failure_unwedges(
 
     emb, base, delta, idx = _build_pq_base(spark, tmp_path, "pq_release")
 
-    def boom(spark_, path):
+    def boom(path):
         raise RuntimeError("transient footer read failure")
 
     monkeypatch.setattr(ai, "_footer_rows", boom)
@@ -1123,13 +1123,16 @@ def test_recommit_fence_refuses_stale_writer(tmp_path):
 
     _os.makedirs(idx)
     # the contender recommitted slot 2 while we were stalled at slot 1
-    _commit(idx, "pq", "fp", ["codes"], mver=2, applied_batches=[0, 1])
+    _commit(idx, dict(kind="pq", fingerprint="fp", tables=["codes"],
+                      mver=2, applied_batches=[0, 1]))
     with _pytest.raises(ConcurrentWriteError, match="fenced"):
-        _commit(idx, "pq", "fp", ["codes"], mver=1, applied_batches=[0])
+        _commit(idx, dict(kind="pq", fingerprint="fp", tables=["codes"],
+                          mver=1, applied_batches=[0]))
     assert _manifest(idx)["applied_batches"] == [0, 1]  # untouched
     # normal path: manifest absent during our own append window
     _os.remove(_os.path.join(idx, "_meta.json"))
-    _commit(idx, "pq", "fp", ["codes"], mver=3, applied_batches=[0, 1, 2])
+    _commit(idx, dict(kind="pq", fingerprint="fp", tables=["codes"],
+                      mver=3, applied_batches=[0, 1, 2]))
     assert _manifest(idx)["mver"] == 3
 
 
@@ -1298,15 +1301,16 @@ def test_fence_blocks_both_alive_zombie_before_invalidate(spark, tmp_path):
     # advance the fence themselves.
     from bigdatafinalproject_spark.operators.ann_index import _commit
 
-    _commit(
-        idx, meta["kind"], meta["fingerprint"], meta["tables"],
+    _commit(idx, dict(
+        kind=meta["kind"], fingerprint=meta["fingerprint"],
+        tables=meta["tables"],
         src=meta.get("src"), params=meta.get("params", {}),
         applied_batches=meta.get("applied_batches", []),
         mver=mver + 1, base_rows=meta.get("base_rows"),
         appended_rows=int(meta.get("appended_rows", 0)),
         cell_sizes=meta.get("cell_sizes"),
         units=meta.get("units"),
-    )
+    ))
     delta = emb.filter(F.col("vec_id") % 3 == 0)
     ivf_index_append(spark, idx, delta, batch_id=0)
     assert json.load(
@@ -1752,15 +1756,16 @@ def test_snapshot_recheck_aborts_on_interleaved_commit(spark, tmp_path):
     # interleaved commit: another writer (zombie that this one judged
     # dead but was alive) recommits the manifest at ITS slot with ITS
     # batch recorded, while OUR snapshot still reads mver 0
-    _commit(
-        idx, meta["kind"], meta["fingerprint"], meta["tables"],
+    _commit(idx, dict(
+        kind=meta["kind"], fingerprint=meta["fingerprint"],
+        tables=meta["tables"],
         src=meta.get("src"), params=meta.get("params", {}),
         applied_batches=[99], mver=mver,  # same slot: the zombie's
         base_rows=meta.get("base_rows"),
         appended_rows=int(meta.get("appended_rows", 0)) + 5,
         cell_sizes=meta.get("cell_sizes"),
         units=meta.get("units"),
-    )
+    ))
 
     with pytest.raises(ConcurrentWriteError, match="advanced"):
         _finish_append(idx, stage, ["postings"], meta, mver, 7, 1)
@@ -1809,14 +1814,30 @@ def test_sweep_dead_stages_spares_live_writer(spark, tmp_path):
     assert _os.path.isdir(live)
 
 
+def _verb_call(verb, spark, idx):
+    """Run one maintenance verb on the shared-guard tests' index:
+    compact_index, minor_compact_index (keep_recent=0, so the two
+    appended batches merge) or retract_batch of batch 0."""
+    import bigdatafinalproject_spark.operators.ann_index as annidx
+
+    if verb == "compact_index":
+        return annidx.compact_index(spark, idx)
+    if verb == "minor_compact_index":
+        return annidx.minor_compact_index(spark, idx, keep_recent=0)
+    return annidx.retract_batch(idx, 0)
+
+
+@pytest.mark.parametrize(
+    "verb", ["compact_index", "minor_compact_index", "retract_batch"]
+)
 def test_compact_aborts_preinvalidate_on_fence_or_stale_snapshot(
-    spark, tmp_path
+    spark, tmp_path, verb
 ):
-    """The compact twin of the append abort guards: a compactor whose
-    fence moved (a contender took over) or whose manifest snapshot is
-    stale (an interleaved writer committed) must abort BEFORE the
-    invalidate/swap — serving index untouched, claim released, aside
-    copies swept — in both interleavings."""
+    """Every non-append writer verb runs the shared pre-commit guard: a
+    writer whose fence moved (a contender took over) or whose manifest
+    snapshot is stale (an interleaved writer committed) must abort
+    BEFORE it adopts or commits anything — serving index untouched,
+    claim released, stage swept — in both interleavings."""
     import json
     import os as _os
 
@@ -1832,11 +1853,14 @@ def test_compact_aborts_preinvalidate_on_fence_or_stale_snapshot(
         table_path(SF_DIR, "embeddings"), base_pred="b", **_PARAMS
     )
     ensure_ivf_index(spark, base, idx, fp, **_PARAMS)
-    annidx.ivf_index_append(spark, idx, delta, batch_id=0)
+    annidx.ivf_index_append(spark, idx, delta.filter(F.col("vec_id") % 2 == 0),
+                            batch_id=0)
+    annidx.ivf_index_append(spark, idx, delta.filter(F.col("vec_id") % 2 != 0),
+                            batch_id=1)
     meta_before = json.load(open(_os.path.join(idx, "_meta.json")))
 
-    # (a) fence moved mid-compaction: forge the contender's epoch via
-    # a monkeypatched rewrite hook so the move lands AFTER the claim
+    # (a) fence moved mid-transaction: forge the contender's epoch via
+    # a monkeypatched check hook so the move lands AFTER the claim
     real_check = annidx._check_fence
     state = {"armed": True}
 
@@ -1849,46 +1873,29 @@ def test_compact_aborts_preinvalidate_on_fence_or_stale_snapshot(
     with pytest.MonkeyPatch.context() as mp:
         mp.setattr(annidx, "_check_fence", forge_then_check)
         with pytest.raises(annidx.ConcurrentWriteError, match="fence"):
-            annidx.compact_index(spark, idx)
+            _verb_call(verb, spark, idx)
     meta_after = json.load(open(_os.path.join(idx, "_meta.json")))
     assert meta_after == meta_before  # serving index untouched
-    assert not [n for n in _os.listdir(idx) if ".compact." in n]
+    assert not [
+        n for n in _os.listdir(idx)
+        if ".compact." in n or n.startswith("_stage.tmp.")
+    ]
 
     # simulate the forged contender completing (its marker must be
     # owned by a commit or a release — see the append twin's test)
-    annidx._commit(
-        idx, meta_after["kind"], meta_after["fingerprint"],
-        meta_after["tables"], src=meta_after.get("src"),
-        params=meta_after.get("params", {}),
-        applied_batches=meta_after.get("applied_batches", []),
-        mver=meta_after["mver"] + 2,
-        base_rows=meta_after.get("base_rows"),
-        appended_rows=meta_after.get("appended_rows", 0),
-        cell_sizes=meta_after.get("cell_sizes"),
-        units=meta_after.get("units"),
-    )
+    annidx._commit(idx, dict(meta_after, mver=meta_after["mver"] + 2))
 
     # (b) stale snapshot: the manifest advances between the claim and
-    # the invalidate — forge by bumping mver inside the hook
+    # the publish — forge by committing inside the hook
     meta_now = json.load(open(_os.path.join(idx, "_meta.json")))
     state2 = {"armed": True}
 
     def bump_then_check(index_dir, mver):
         if state2["armed"]:
             state2["armed"] = False
-            annidx._commit(
-                index_dir, meta_now["kind"], meta_now["fingerprint"],
-                meta_now["tables"], src=meta_now.get("src"),
-                params=meta_now.get("params", {}),
-                applied_batches=meta_now.get("applied_batches", []),
-                # the interleaved lapsed-lease writer committed at the
-                # slot this compactor also holds (the both-alive shape)
-                mver=mver,
-                base_rows=meta_now.get("base_rows"),
-                appended_rows=meta_now.get("appended_rows", 0),
-                cell_sizes=meta_now.get("cell_sizes"),
-                units=meta_now.get("units"),
-            )
+            # the interleaved lapsed-lease writer committed at the
+            # slot this writer also holds (the both-alive shape)
+            annidx._commit(index_dir, dict(meta_now, mver=mver))
         return real_check(index_dir, mver)
 
     with pytest.MonkeyPatch.context() as mp:
@@ -1896,10 +1903,18 @@ def test_compact_aborts_preinvalidate_on_fence_or_stale_snapshot(
         with pytest.raises(
             annidx.ConcurrentWriteError, match="advanced"
         ):
-            annidx.compact_index(spark, idx)
-    # the interleaved commit survives; a plain compaction then works
-    stats = annidx.compact_index(spark, idx)
-    assert stats and all(a <= b for _, (b, a) in stats.items())
+            _verb_call(verb, spark, idx)
+    assert not [n for n in _os.listdir(idx) if n.startswith("_stage.tmp.")]
+    # the interleaved commit survives; a plain run of the verb then works
+    out = _verb_call(verb, spark, idx)
+    if verb == "compact_index":
+        assert out and all(a <= b for _, (b, a) in out.items())
+    elif verb == "minor_compact_index":
+        assert out["tables"] and out["folded"] == [0, 1]
+        assert all(a <= b for _, (b, a) in out["tables"].items())
+    else:
+        m = annidx._manifest(idx)
+        assert m["retracted"] == ["0"] and "0" not in m["batches"]
 
 
 def test_append_commit_failure_serves_throughout_and_retries(
@@ -2415,13 +2430,14 @@ def test_commit_fence_epoch_recheck_blocks_zombie_publish(
 
     # the zombie tries to publish at slot 1: fenced, nothing replaced
     with pytest.raises(ConcurrentWriteError, match="epoch moved to 2"):
-        _commit(
-            idx, before["kind"], before["fingerprint"], before["tables"],
+        _commit(idx, dict(
+            kind=before["kind"], fingerprint=before["fingerprint"],
+            tables=before["tables"],
             src=before.get("src"), params=before.get("params", {}),
             applied_batches=[0], mver=1,
             base_rows=before.get("base_rows"), appended_rows=123,
             units=before.get("units"),
-        )
+        ))
     after = _manifest(idx)
     assert after == before  # serving manifest untouched
     # no torn tmp file left beside the manifest
@@ -2430,13 +2446,14 @@ def test_commit_fence_epoch_recheck_blocks_zombie_publish(
     # with the contender's marker gone (epoch == slot), publish lands
     _os.remove(_os.path.join(fence, "e000000000002"))
     open(_os.path.join(fence, "e000000000001"), "x").close()
-    _commit(
-        idx, before["kind"], before["fingerprint"], before["tables"],
+    _commit(idx, dict(
+        kind=before["kind"], fingerprint=before["fingerprint"],
+        tables=before["tables"],
         src=before.get("src"), params=before.get("params", {}),
         applied_batches=[0], mver=1,
         base_rows=before.get("base_rows"), appended_rows=123,
         units=before.get("units"),
-    )
+    ))
     assert _manifest(idx)["appended_rows"] == 123
 
 
@@ -2916,3 +2933,29 @@ def test_repeated_minor_compacts_bound_unit_count(spark, tmp_path):
         for r in pq_index_search(spark, twin, emb, queries, k=5).collect()
     }
     assert a == b_ and len(a) > 0
+
+
+def test_footer_rows_rejects_existing_dir_without_parquet(tmp_path):
+    """ADVICE r15 #1: every write stages at least one part file (an
+    empty delta batch too — test_append_batch_ids_make_redelivery_
+    idempotent appends one), so a unit dir that exists but holds no
+    parquet file is broken; counting it 0 would silently skew the
+    manifest's row counters. A MISSING dir still counts 0."""
+    import pyarrow as pa
+    import pyarrow.parquet as papq
+
+    from bigdatafinalproject_spark.operators.ann_index import _footer_rows
+
+    missing = str(tmp_path / "missing")
+    assert _footer_rows(missing) == 0
+    good = tmp_path / "good_unit"
+    good.mkdir()
+    papq.write_table(
+        pa.table({"x": [1, 2, 3]}), str(good / "part-00000.parquet")
+    )
+    assert _footer_rows([str(good), missing]) == 3
+    empty = tmp_path / "empty_unit"
+    empty.mkdir()
+    (empty / "_SUCCESS").touch()
+    with pytest.raises(ValueError, match="empty_unit"):
+        _footer_rows([str(good), str(empty)])

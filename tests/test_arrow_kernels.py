@@ -692,3 +692,35 @@ def test_assign_rejects_composite_group_keys(spark):
     )
     with pytest.raises(ValueError, match=r"clustering\._assign.*\('a', 'b'\)"):
         _assign(emb, cents, "vec_id", "embedding", ("a", "b"))
+
+
+@pytest.mark.parametrize(
+    "name", ["ann_ivf_topk", "ann_pq_topk", "ann_ivfpq_topk"]
+)
+def test_topk_query_collects_each_quantizer_panel_once(
+    spark, monkeypatch, name
+):
+    """The end-to-end quantizer queries hand the panels their build
+    half collected to the search half, so building the query collects
+    each centroid/codebook panel exactly once (one Spark job each)."""
+    from bigdatafinalproject_spark import registry
+    from bigdatafinalproject_spark.operators import ann
+    from tests.conftest import SF_DIR
+
+    real = ann.panel_from_frame
+    sources: list[str] = []
+
+    def counting(frame, id_col, vec_col, source, *a, **kw):
+        sources.append(source)
+        return real(frame, id_col, vec_col, source, *a, **kw)
+
+    monkeypatch.setattr(ann, "panel_from_frame", counting)
+    registry.QUERIES[name](spark, SF_DIR)
+    quantizers = [
+        s for s in sources if s.endswith((" centroids", " codebook"))
+    ]
+    kinds = [s.rsplit(" ", 1)[1] for s in quantizers]
+    assert sorted(kinds) == sorted(set(kinds)), quantizers
+    want = {"ann_ivf_topk": {"centroids"}, "ann_pq_topk": {"codebook"},
+            "ann_ivfpq_topk": {"centroids", "codebook"}}[name]
+    assert set(kinds) == want, quantizers
