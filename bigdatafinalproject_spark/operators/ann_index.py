@@ -2,12 +2,23 @@
 (ivf, pq, ivfpq, dedup) share one storage layout and one writer
 transaction path; each kind is described as data (``_KINDS``).
 
-Layout. An index dir holds a ``_meta.json`` manifest (kind,
-fingerprint, tables, source path, BUILD PARAMS, row counters) and one
-dir per table. Table data lives in manifest-referenced UNIT dirs
+Layout. An index dir holds a ``_meta.json`` manifest and one dir per
+table. Table data lives in manifest-referenced UNIT dirs
 (``<table>/b<mver>.<pid>-<tid>``): readers build their file lists from
 the manifest's ``units`` map, never from a directory listing, so a
 unit no manifest names is invisible.
+
+Manifest. ONE schema, checked once on read by :func:`_manifest`:
+``kind`` (a key of ``_KINDS``), ``fingerprint``, ``tables`` (exactly
+the kind's tables), ``src``, ``params`` (every ``_BUILD_DEFAULTS`` key
+of the kind), ``applied_batches`` (int batch ids), ``mver``,
+``base_rows``, ``appended_rows``, the folded ``cell_sizes`` snapshot
+(kinds with cell sizes), ``units`` (an entry per table) and, once
+maintained, ``batches`` (per-batch provenance) and ``retracted``. A
+manifest that breaks the schema raises ``ValueError`` naming the file
+and the key — every later reader indexes it directly, with no
+defaults — and ``ensure_*`` rebuilds over it as over a stale
+fingerprint.
 
 Build (``ensure_*`` -> :func:`_ensure`): rebuild only when the manifest
 is missing or its ``fingerprint`` (source identity + params + ALGORITHM
@@ -121,98 +132,34 @@ _APPLOG = "_applog"
 # claimant immediately after its post-claim validation; the CURRENT
 # epoch is the maximum. A lease-mode writer that was paused past its
 # lease (SIGSTOP, VM freeze) and whose slot a contender judged dead
-# re-checks the max epoch IMMEDIATELY before its invalidate/rename
-# batch and raises when a later epoch exists — so the both-alive
-# interleaving (zombie resumes while the contender is mid-append,
-# before the contender's stage sweep reaches it) can no longer
-# invalidate or adopt over the contender's work. The append-only set
-# makes the fence MONOTONIC by construction (r12 review #1: a
-# read-modify-replace fence file could be regressed by a zombie that
-# paused between its claim CAS and its fence write — creating a
-# marker can never lower the max, however stale the creator). The
-# residual window is the gap between the fence check and the first
-# rename — single-rename atomicity, the bar a plain POSIX dir can
-# express (the r11 residual was the whole stage→recommit span).
+# re-checks the max epoch IMMEDIATELY before its adopt renames and
+# raises when a later epoch exists, so it never adopts over the
+# contender's work. The append-only set makes the fence MONOTONIC by
+# construction (r12 review #1: creating a marker can never lower the
+# max, however stale the creator). A zombie that slips through the
+# check→rename gap adopts into a unit no manifest references.
 _FENCE = "_fence"
-# salt the fingerprint with the builder ALGORITHM version: a code
-# change to the build halves under unchanged corpus+params must
-# invalidate cached indexes (r8 review finding #2) — bump on any
-# change to ivf_build_frames / pq_build_frames / append encoding, or
-# to the manifest schema (v2: mver + base_rows/appended_rows, so every
-# served manifest carries the writer-serialization + retrain fields;
-# v3: ivfpq indexes persist a cell_sizes table for the mass-budgeted
-# probe — r10 review #2: deriving it at serve time re-scanned the
-# codes relation per search;
-# v4: ivf indexes persist the same C-row cell_sizes table — the IVF
-# tier moved to the mass-budgeted probe too, and deriving the sizes
-# at serve time would re-scan the postings relation per search;
-# v5: cell_sizes is an APPEND-ONLY log of per-batch partial counts —
-# appends add a ≤C-row file derived from the batch's staged data
-# files instead of checkpointing the assignment and rewriting the
-# merged table per micro-batch; readers sum, compaction bounds the
-# file count; every Spark job of an append runs into a staging dir
-# pre-invalidate so the invalidated window is pure renames. Serve
-# results are invariant (sum of partials == merged total) and v4
-# tables read correctly under v5 code, but the bump is MANDATORY
-# (r11 review #1): the shared per-host cache is cross-process, and a
-# pre-v5 process serving a v5-appended index would read the
-# partial-count log RAW — duplicate centroid_id rows mis-drive its
-# mass probe silently. The version bump forces the rebuild the
-# fingerprint rule promises on any builder change.
-#
-# r12 adds an OPTIONAL "cell_sizes" manifest key — the FOLDED C-row
-# snapshot of the partial-count log, maintained at build/append/
-# compact commit so serves read ≤C manifest rows instead of folding
-# the parquet log per search (VERDICT r11 #1: the v5 fold was ~half
-# the index family's bench tax). Deliberately NOT a version bump:
-# the key is additive and self-consistent in both directions — a
-# reader without it falls back to the log fold (identical sum), and a
-# pre-r12 writer's recommit simply DROPS the key (its manifest schema
-# has no such field), which degrades to the fold, never to a stale
-# snapshot.)
-#
-# v6 (r13, VERDICT r12 #4 — true fenced storage): table data moves to
-# MANIFEST-REFERENCED BATCH UNITS. Each append/compact adopts its
-# staged output as ONE directory rename per table into
-# ``<table>/b<mver>.<pid>`` and the manifest's ``units`` map records
-# exactly which unit dirs are live — readers construct their file
-# lists FROM THE MANIFEST, never from a directory listing. Three
-# structural consequences:
-# - a paused-past-lease zombie's renames land in a unit no manifest
-#   references (its recommit is fenced by the >= mver check), so the
-#   check→first-rename residual the r12 fence left open can no longer
-#   make a stale writer's files reader-visible — dead namespace, the
-#   rename-target epoch encoding VERDICT r12 #4 asked for;
-# - the manifest-invalidate window is GONE: adoption is non-
-#   destructive (uncommitted units are invisible), so the manifest
-#   ``os.replace`` at recommit is the single atomic visibility flip —
-#   a crash ANYWHERE mid-append leaves the index CURRENT AND SERVING
-#   (pre-v6 it left a non-current index whose remedy was a rebuild),
-#   and every maintenance failure now releases its claim;
-# - compaction gets snapshot isolation: the rewrite lands as new
-#   units, the commit flips readers to them, and the OLD units are
-#   GC'd post-commit — an in-flight scan planned against the old
-#   manifest keeps its files until that GC instead of failing on a
-#   directory swap.
-# Unit names carry the claimed slot AND the writer pid, so a released
-# slot's re-claimant (or a both-alive duplicate claimant produced by
-# the stuck-renewer release handoff) can never collide with a dead
-# writer's leftover unit; post-commit GC sweeps unreferenced units at
-# or below the committed mver. MANDATORY version bump: a pre-v6
-# process reading a v6 index would list table dirs that contain unit
-# SUBDIRS and no top-level parquet, and a v6 reader of a units-less
-# manifest must fall back to the flat listing — the fingerprint salt
-# keeps the two layouts from ever sharing a cache entry. Maintenance
-# on a units-less (legacy) manifest is REFUSED rather than risking a
-# mixed flat+unit layout that a legacy reader would silently misread.
-_ALGO_VERSION = 6
+# salt the fingerprint with the builder ALGORITHM version. Rule: bump
+# on any change to the build or append encoding, or to the manifest
+# schema — the per-host cache is shared across processes, so only the
+# salt keeps code of one version from reading another's index. The
+# reasons that still hold:
+# - base_rows/appended_rows/mver are manifest fields (v2);
+# - ivf and ivfpq persist a C-row cell_sizes table for the mass probe,
+#   so serves never re-scan postings or codes (v3, v4);
+# - cell_sizes is an append-only log of per-batch partial counts (v5);
+# - table data lives in manifest-referenced units (v6);
+# - _manifest reads one validated schema: int batch ids, a cell_sizes
+#   snapshot, per-batch provenance of units and rows only, and writer
+#   claims carrying a tid (v7).
+_ALGO_VERSION = 7
 # how long a maintenance writer waits for a concurrent writer's
 # recommit before giving up (the streaming path's micro-batch appends
 # are seconds each). Crashed-vs-live claimants are decided by each
 # claim's OWN liveness rule — renewed lease expiry (the DEFAULT since
 # r11, cluster/object-store-portable) or pid probe (opt-in via
 # BDFP_ANN_CLAIM_MODE=pid, exact for the same-host O_EXCL scope) —
-# NEVER by claim age: the claim→invalidate window contains full Spark
+# NEVER by claim age: the claim→commit window contains full Spark
 # jobs (delta counts, compaction rewrites), so any time heuristic
 # would eventually judge a live writer dead and re-open the
 # concurrent-writer race this log exists to close (r9 review #1).
@@ -279,12 +226,62 @@ def _effective_params(kind: str, build_params: dict, subset) -> dict:
     return out
 
 
+# the keys every committed manifest carries (_commit writes them all)
+_MANIFEST_KEYS = (
+    "kind", "fingerprint", "tables", "src", "params", "applied_batches",
+    "mver", "base_rows", "appended_rows", "units",
+)
+
+
+def _schema_error(meta) -> str | None:
+    """The first way ``meta`` breaks the manifest schema (module
+    docstring), or None when it holds."""
+    if not isinstance(meta, dict):
+        return "not a JSON object"
+    for key in _MANIFEST_KEYS:
+        if key not in meta:
+            return f"missing key {key!r}"
+    kind, tables, units = meta["kind"], meta["tables"], meta["units"]
+    spec = _KINDS.get(kind) if isinstance(kind, str) else None
+    if spec is None:
+        return f"bad key 'kind': unknown index kind {kind!r}"
+    want = sorted(spec.tables)
+    if not isinstance(tables, list) or sorted(map(str, tables)) != want:
+        return f"bad key 'tables': {tables!r}, not the {kind} set {want}"
+    for t in tables:
+        if not isinstance(units, dict) or not isinstance(units.get(t), list):
+            return f"bad key 'units': no unit list for table {t!r}"
+    for key in _BUILD_DEFAULTS[kind]:
+        if not isinstance(meta["params"], dict) or key not in meta["params"]:
+            return f"bad key 'params': no {key!r}"
+    if type(meta["base_rows"]) is not int:
+        return f"bad key 'base_rows': {meta['base_rows']!r} is not an int"
+    if spec.sizes and "cell_sizes" not in meta:
+        return f"missing key 'cell_sizes' (every {kind} index carries one)"
+    ids = meta["applied_batches"]
+    if not isinstance(ids, list) or any(type(b) is not int for b in ids):
+        return f"bad key 'applied_batches': {ids!r} is not a list of ints"
+    return None
+
+
 def _manifest(index_dir: str) -> dict | None:
+    """The committed manifest of ``index_dir``, or None when it has no
+    ``_meta.json``. A present manifest is checked against the one
+    schema here, once: one that breaks it raises ``ValueError`` naming
+    the file and the missing or bad key, so every reader downstream can
+    index the manifest directly."""
+    path = os.path.join(index_dir, _META)
     try:
-        with open(os.path.join(index_dir, _META)) as f:
-            return json.load(f)
-    except (OSError, ValueError):
+        with open(path) as f:
+            meta = json.load(f)
+    except FileNotFoundError:
         return None
+    except ValueError as e:
+        raise ValueError(f"{path}: not a JSON manifest ({e})") from None
+    bad = _schema_error(meta)
+    if bad is not None:
+        raise ValueError(f"{path}: {bad}")
+    return meta
 
 
 def _unit_name(mver: int) -> str:
@@ -310,13 +307,9 @@ def _unit_mver(name: str) -> int | None:
 
 
 def _unit_paths(index_dir: str, meta: dict, table: str) -> list[str]:
-    """The live data paths of a table, RESOLVED FROM THE MANIFEST
-    (v6): the unit dirs its ``units`` entry lists. A legacy manifest
-    (no ``units``) reads the flat table dir — the pre-v6 layout."""
-    units = (meta.get("units") or {}).get(table)
-    if units is None:
-        return [os.path.join(index_dir, table)]
-    return [os.path.join(index_dir, table, u) for u in units]
+    """The live data paths of a table, RESOLVED FROM THE MANIFEST: the
+    unit dirs its ``units`` entry lists."""
+    return [os.path.join(index_dir, table, u) for u in meta["units"][table]]
 
 
 def _read_table(
@@ -356,33 +349,24 @@ def _snap_pairs(cell_sizes) -> list[list[int]] | None:
     return sorted([int(c), int(n)] for c, n in items)
 
 
-def _batch_sizes(index_dir: str, entry: dict) -> list[list[int]] | None:
+def _batch_sizes(index_dir: str, entry: dict) -> list[list[int]]:
     """An applied batch's per-cell count delta, for retraction's
-    snapshot subtraction. r14 manifests keep provenance O(1) per batch
-    (units + rows only — VERDICT r13 #3: the per-batch pairs copy made
-    the manifest rewrite/parse the streaming micro-batch tax), so the
-    delta is read back from the batch's OWN cell_sizes unit parquet —
-    the staged partial-count file the append adopted, which holds
-    exactly the pairs the manifest used to copy. Driver-side pyarrow
-    read of one ≤C-row file: no Spark session needed, retraction stays
-    an O(manifest)+O(C) metadata operation. Must be called BEFORE the
-    retraction commits (the post-commit GC removes the unit). An r13
-    manifest's recorded copy, when present, is used as-is. None when
-    the delta is unrecoverable (no unit, unreadable file) — the caller
-    fails soft by dropping the snapshot so readers fold the log."""
-    bsizes = entry.get("cell_sizes")
-    if bsizes is not None:
-        return bsizes
-    unit = (entry.get("units") or {}).get("cell_sizes")
-    if unit is None:
-        return None
+    snapshot subtraction. Provenance stays O(1) per batch (units +
+    rows only — a per-batch pairs copy made the manifest rewrite/parse
+    the streaming micro-batch tax), so the delta is read back from the
+    batch's OWN cell_sizes unit parquet — the staged partial-count file
+    the append adopted. Driver-side pyarrow read of one ≤C-row file: no
+    Spark session needed, retraction stays an O(manifest)+O(C) metadata
+    operation. Must be called BEFORE the retraction commits (the
+    post-commit GC removes the unit). An unreadable unit raises naming
+    the file: without the delta the snapshot cannot be kept exact."""
+    path = os.path.join(index_dir, "cell_sizes", entry["units"]["cell_sizes"])
     try:
-        t = papq.read_table(
-            os.path.join(index_dir, "cell_sizes", unit),
-            columns=["centroid_id", "_csz"],
-        )
-    except Exception:
-        return None
+        t = papq.read_table(path, columns=["centroid_id", "_csz"])
+    except (OSError, ValueError) as e:
+        raise ValueError(
+            f"cannot read the batch's cell_sizes unit {path!r}: {e}"
+        ) from e
     return _snap_pairs(
         zip(t.column("centroid_id").to_pylist(),
             t.column("_csz").to_pylist())
@@ -393,9 +377,9 @@ def _commit(index_dir: str, meta: dict) -> None:
     """Write ``meta`` as the index's manifest — the commit record of
     every build and maintenance transaction. The payload is normalised
     so recommits of identical content are byte-identical: a fixed key
-    order, ``applied_batches`` sorted type-stably, ``units`` /
-    ``batches`` / ``retracted`` sorted, and ``cell_sizes`` folded to
-    sorted pairs (omitted when absent). Keys outside the manifest
+    order, ``applied_batches`` / ``units`` / ``batches`` /
+    ``retracted`` sorted, and ``cell_sizes`` folded to sorted pairs
+    (omitted for kinds without cell sizes). Keys outside the manifest
     schema are dropped."""
     # tmp + os.replace: the manifest IS the commit record, so its own
     # write must be atomic — a crash mid-write must read as "no
@@ -409,18 +393,13 @@ def _commit(index_dir: str, meta: dict) -> None:
     # our stale meta over the contender's recommit would silently drop
     # its applied_batches entry (the r8 lost-update shape); raising
     # leaves the newer manifest standing and surfaces the conflict.
-    # (The fence closes the resume-after-the-contender-recommitted
-    # window; a zombie resuming DURING the contender's own invalidate
-    # window still interleaves — that residual needs fenced storage,
-    # which a plain POSIX dir cannot express. pid mode is immune on a
-    # single host and stays one env flag away.)
     mver = int(meta.get("mver", 0))
     if mver:
         cur = _manifest(index_dir)
-        if cur is not None and int(cur.get("mver", 0)) >= mver:
+        if cur is not None and cur["mver"] >= mver:
             raise ConcurrentWriteError(
                 f"recommit fenced at {index_dir!r}: manifest already "
-                f"at mver {cur.get('mver')} >= claimed slot {mver} "
+                f"at mver {cur['mver']} >= claimed slot {mver} "
                 f"(this writer's claim lapsed while it was stalled)"
             )
     tmp = f"{path}.tmp.{os.getpid()}"
@@ -430,28 +409,18 @@ def _commit(index_dir: str, meta: dict) -> None:
         "tables": meta["tables"],
         "src": meta.get("src"),
         "params": meta.get("params") or {},
-        # type-stable sort key (r14, ADVICE r13 #3): new appends write
-        # int ids only (_norm_batch_id), but a legacy manifest can
-        # still carry str ids — a plain sorted() over the mix raises
-        # TypeError HERE, at commit time, after adoption
-        "applied_batches": sorted(
-            meta.get("applied_batches") or [],
-            key=lambda b: (isinstance(b, str), b),
-        ),
+        "applied_batches": sorted(meta.get("applied_batches") or []),
         "mver": mver,
         "base_rows": meta.get("base_rows"),
         "appended_rows": int(meta.get("appended_rows", 0)),
     }
     snap = _snap_pairs(meta.get("cell_sizes"))
     if snap is not None:
-        # the folded serve-time snapshot of the cell_sizes log (r12);
-        # OMITTED (not null) when absent so legacy readers see the
-        # exact pre-r12 schema
+        # the folded serve-time snapshot of the cell_sizes log
         payload["cell_sizes"] = snap
-    if meta.get("units") is not None:
-        # v6: the manifest-referenced storage map — per table, the
-        # unit dirs whose files ARE the table
-        payload["units"] = {t: sorted(us) for t, us in meta["units"].items()}
+    # the manifest-referenced storage map — per table, the unit dirs
+    # whose files ARE the table
+    payload["units"] = {t: sorted(us) for t, us in meta["units"].items()}
     batches = meta.get("batches")
     if batches is not None:
         # r13: per-batch provenance — which units and rows each applied
@@ -474,33 +443,41 @@ def _commit(index_dir: str, meta: dict) -> None:
     # staging phase: the window shrinks to the microseconds between
     # this stat and the os.replace below. (Epoch > mver: superseded —
     # abort, the caller retries and redelivery applies the batch.
-    # Epoch < mver or None: our own marker was swept/legacy — nothing
-    # newer to protect; proceed, the recommit fence above already
-    # arbitrated manifest order.)
-    if mver:
-        cur_epoch = _fence_epoch(index_dir)
-        if cur_epoch is not None and cur_epoch > mver:
-            try:
-                os.remove(tmp)
-            except OSError:
-                pass
+    # Epoch < mver: our own marker was swept — nothing newer to
+    # protect; proceed, the recommit fence above already arbitrated
+    # manifest order. A missing fence dir fails closed.)
+    try:
+        cur_epoch = _fence_epoch(index_dir) if mver else 0
+        if cur_epoch > mver:
             raise ConcurrentWriteError(
                 f"commit fenced at {index_dir!r}: writer epoch moved "
                 f"to {cur_epoch} past this writer's slot {mver} (lease "
                 f"lapsed; a contender owns the index) — retry the batch"
             )
-    os.replace(tmp, path)
+        os.replace(tmp, path)
+    except BaseException:
+        try:
+            os.remove(tmp)
+        except OSError:
+            pass
+        raise
 
 
 def index_is_current(index_dir: str, kind: str, fingerprint: str) -> bool:
-    m = _manifest(index_dir)
+    """True iff ``index_dir`` holds a valid manifest of ``kind`` and
+    ``fingerprint`` whose units all exist. An invalid manifest is not
+    current, so ``ensure_*`` rebuilds over it."""
+    try:
+        m = _manifest(index_dir)
+    except ValueError:
+        return False
     return (
         m is not None
-        and m.get("kind") == kind
-        and m.get("fingerprint") == fingerprint
+        and m["kind"] == kind
+        and m["fingerprint"] == fingerprint
         and all(
             os.path.isdir(p)
-            for t in m.get("tables", [])
+            for t in m["tables"]
             for p in _unit_paths(index_dir, m, t)
         )
     )
@@ -559,7 +536,10 @@ def _gc_superseded(
     serving index share (kind, src) but are DIFFERENT live artifacts —
     keying GC on (kind, src) alone made them evict each other on every
     alternate install, turning the cross-process cache into a
-    rebuild-every-run. Best-effort; never fails the install."""
+    rebuild-every-run. Siblings are mostly OLDER-version indexes, so
+    their manifests are read raw (only ``kind``, ``src`` and
+    ``params.base_pred``), never validated. Best-effort; never fails
+    the install."""
     if src is None:
         return
     root = os.path.dirname(index_dir)
@@ -571,13 +551,16 @@ def _gc_superseded(
         p = os.path.join(root, n)
         if p == index_dir or not n.startswith(f"{kind}_"):
             continue
-        m = _manifest(p)
-        if (
-            m is not None
-            and m.get("kind") == kind
-            and m.get("src") == src
-            and m.get("params", {}).get("base_pred") == subset
-        ):
+        try:
+            with open(os.path.join(p, _META)) as f:
+                m = json.load(f)
+            ours = (
+                m.get("kind") == kind and m.get("src") == src
+                and m.get("params", {}).get("base_pred") == subset
+            )
+        except (OSError, ValueError, AttributeError):
+            continue
+        if ours:
             shutil.rmtree(p, ignore_errors=True)
 
 
@@ -669,9 +652,7 @@ def _write_fence(index_dir: str, mver: int) -> None:
     os.makedirs(d, exist_ok=True)
     # permanent e0 FLOOR marker (r13, ADVICE r12 #2): exempt from
     # every prune/sweep, so a fenced index's marker dir can never
-    # read as empty — _fence_epoch's present-but-empty case (which
-    # now ENFORCES rather than waving a zombie through) becomes a
-    # transient-only state on pre-r13 fence dirs
+    # read as empty
     try:
         open(os.path.join(d, "e000000000000"), "x").close()
     except FileExistsError:
@@ -737,21 +718,23 @@ def _prune_fence(index_dir: str, mver: int) -> None:
             continue
 
 
-def _fence_epoch(index_dir: str) -> int | None:
-    """The index's current writer epoch (max fence marker), or None
-    for an index WITHOUT a fence (legacy / pre-r12 clone). Fails
-    CLOSED on transient listdir errors (r12 review pass 2 #5: EMFILE/
-    EIO must not read as 'legacy, nothing to enforce' and wave a
-    superseded zombie through its invalidate) — only a missing fence
-    dir is the legacy case. A PRESENT-BUT-EMPTY dir reads as epoch 0
-    — enforce, don't downgrade (ADVICE r12 #2): markers existed on
-    this index once, so a checker whose own marker is gone was
-    superseded or released and must abort; the permanent e0 floor
-    marker (r13) makes this state transient-only anyway."""
+def _fence_epoch(index_dir: str) -> int:
+    """The index's current writer epoch (max fence marker). Fails
+    CLOSED: every claimant creates the fence dir at claim time, so a
+    missing one raises ``ValueError`` naming it, and a transient
+    listdir error (EMFILE/EIO) propagates (r12 review pass 2 #5 — it
+    must never wave a superseded zombie through). A PRESENT-BUT-EMPTY
+    dir reads as epoch 0 — enforce, don't downgrade (ADVICE r12 #2):
+    a checker whose own marker is gone was superseded or released and
+    must abort."""
+    d = os.path.join(index_dir, _FENCE)
     try:
-        names = os.listdir(os.path.join(index_dir, _FENCE))
+        names = os.listdir(d)
     except FileNotFoundError:
-        return None
+        raise ValueError(
+            f"writer fence {d!r} is missing (every claimant creates it) "
+            f"— this writer cannot prove it still owns its slot"
+        ) from None
     epochs = [
         int(n[1:]) for n in names if n.startswith("e") and n[1:].isdigit()
     ]
@@ -760,16 +743,12 @@ def _fence_epoch(index_dir: str) -> int | None:
 
 def _check_fence(index_dir: str, mver: int) -> None:
     """Raise unless this writer's slot is still the index's current
-    fence epoch — called IMMEDIATELY before the invalidate/rename
-    batch (the first destructive step of a maintenance txn). A later
-    epoch means a contender judged this writer dead (lapsed lease)
-    and took over: its work must not be disturbed, so the zombie
-    aborts with the serving index untouched. A missing fence (legacy
-    index) compares as unknown — nothing to enforce, the pre-r12
-    behavior."""
+    fence epoch — called IMMEDIATELY before adoption (the first step
+    of a maintenance txn that touches the table dirs). A later epoch
+    means a contender judged this writer dead (lapsed lease) and took
+    over: its work must not be disturbed, so the zombie aborts with
+    the serving index untouched."""
     cur = _fence_epoch(index_dir)
-    if cur is None:
-        return
     if cur != mver:
         raise ConcurrentWriteError(
             f"writer fence at {index_dir!r} moved to epoch {cur} while "
@@ -789,8 +768,8 @@ def _end_claim(index_dir: str, mver: int, release: bool = False) -> None:
     """Finish this process's claim on writer slot ``mver``: stop its
     lease renewer (no-op in pid mode), and with ``release=True`` also
     remove the entry — the failure cleanup for an error in the
-    claim→invalidate window (ADVICE r9: the manifest was never
-    invalidated there, so the slot was never consumed and releasing it
+    claim→commit window (ADVICE r9: nothing was committed there, so
+    the slot was never consumed and releasing it
     un-wedges every later same-process writer that would otherwise
     wait out _WRITER_WAIT_S against our own live pid)."""
     path = entry_path(os.path.join(index_dir, _APPLOG), mver)
@@ -842,14 +821,14 @@ def _claim_writer(index_dir: str, meta: dict, payload: dict) -> int:
     race for the SAME slot, so exactly one proceeds. A contended slot
     whose claimant is dead (judged by the claim's OWN recorded mode —
     lapsed renewed lease by default, pid probe in opt-in pid mode) is
-    a claimant that crashed in the claim→invalidate window —
+    a claimant that crashed in the claim→commit window —
     the index is still fully serveable; the dead slot is skipped,
     never reused. A LIVE claimant always wins the contention, however
     long its Spark work runs (never a time heuristic — r9 review #1:
     claim age cannot distinguish a crash from a long compaction
     rewrite, and guessing wrong re-opens the lost-update race)."""
     log = os.path.join(index_dir, _APPLOG)
-    target = int(meta.get("mver", 0)) + 1
+    target = meta["mver"] + 1
     mode = _claim_mode()
     lease_s = _lease_seconds()
     while True:
@@ -861,7 +840,7 @@ def _claim_writer(index_dir: str, meta: dict, payload: dict) -> int:
             commit_exclusive(log, target, p)
         except ConcurrentWriteError:
             cur = _manifest(index_dir)
-            if cur is None or int(cur.get("mver", 0)) >= target:
+            if cur is None or cur["mver"] >= target:
                 # a live writer holds (or already filled) the slot:
                 # the caller must re-read and retry
                 raise
@@ -889,12 +868,11 @@ def _claim_writer(index_dir: str, meta: dict, payload: dict) -> int:
             continue
         # post-claim validation: between our manifest read and the CAS,
         # successive winners can fill AND prune this slot — the CAS
-        # then succeeds on a SPENT slot (or while a later writer is
-        # mid-append with the manifest invalidated). Proceeding would
-        # commit a stale mver over newer state, so release the entry
-        # and surface contention; the caller re-reads.
+        # then succeeds on a SPENT slot. Proceeding would commit a
+        # stale mver over newer state, so release the entry and
+        # surface contention; the caller re-reads.
         cur = _manifest(index_dir)
-        if cur is None or int(cur.get("mver", 0)) >= target:
+        if cur is None or cur["mver"] >= target:
             try:
                 os.remove(entry_path(log, target))
             except OSError:
@@ -906,7 +884,7 @@ def _claim_writer(index_dir: str, meta: dict, payload: dict) -> int:
         # fencing token (r12): advance the index's writer epoch to this
         # slot BEFORE any guarded work starts — a paused-past-lease
         # predecessor that resumes later fails its _check_fence instead
-        # of interleaving with this writer's invalidate window
+        # of adopting over this writer's work
         _write_fence(index_dir, target)
         if mode == "lease":
             _RENEWERS[entry_path(log, target)] = _LeaseRenewer(
@@ -945,82 +923,36 @@ def _writer_txn(
 ) -> tuple[dict, int] | None:
     """Open a maintenance-writer transaction: read the manifest, check
     batch idempotence, claim the writer slot — retrying while a LIVE
-    concurrent writer holds the index (its manifest is removed during
-    its append; we wait for the recommit and re-read, so a batch it
-    applied becomes an idempotent skip here). Returns (manifest,
-    claimed mver), or None when ``batch_id`` is already applied.
-    Raises ``ValueError`` for an index that is absent/non-current
-    beyond the wait (crashed mid-append: rebuild is the remedy)."""
+    concurrent writer holds the slot (a batch it applies becomes an
+    idempotent skip here on the re-read). Returns (manifest, claimed
+    mver), or None when ``batch_id`` is already applied. The manifest
+    is only ever REPLACED, never removed, so a missing one raises
+    ``ValueError`` at once: the index was never built (or its build
+    never finished) and ``ensure_*`` is the remedy."""
     batch_id = _norm_batch_id(batch_id)
     deadline = time.monotonic() + wait_s
     while True:
         meta = _manifest(index_dir)
-        if meta is not None:
-            if meta.get("units") is None:
-                # legacy flat-layout manifest (pre-v6): adopting unit
-                # subdirs under its tables would build a MIXED layout
-                # a legacy reader silently misreads (top-level files
-                # only) — refuse; the v6 fingerprint salt already
-                # forces rebuilds everywhere an ensure_* runs
-                raise ValueError(
-                    f"index at {index_dir!r} uses the pre-v6 flat "
-                    f"layout — rebuild it before maintenance ({op})"
-                )
-            applied = meta.get("applied_batches", [])
-            if batch_id is not None and batch_id in applied:
-                return None
-            try:
-                # tid (r14, ADVICE r13 #2): failure-path claim
-                # removals verify pid+tid ownership before the
-                # os.remove — pid alone can't tell two threads of one
-                # process apart
-                return meta, _claim_writer(
-                    index_dir, meta,
-                    {"op": op, "batch_id": batch_id,
-                     "tid": threading.get_ident()},
-                )
-            except ConcurrentWriteError:
-                if time.monotonic() > deadline:
-                    raise
-                time.sleep(0.05)
-                continue
-        # no manifest: either a live writer is mid-append (a claim
-        # from a LIVE pid exists — wait for its recommit, however long
-        # its Spark job runs) or the index crashed / was never built.
-        # Liveness is claim-mode-judged (lease/pid), never
-        # claim-AGE-based (r9 review #1/#3);
-        # a live writer outlasting the deadline raises a WAIT error
-        # naming it — never the 'rebuild it' remedy, which would point
-        # a scheduler at destroying a healthy mid-append index.
-        log = os.path.join(index_dir, _APPLOG)
-        live_pid = None
-        try:
-            for n in sorted(os.listdir(log), reverse=True):
-                if not (n.startswith("v") and n.endswith(".json")):
-                    continue
-                try:
-                    with open(os.path.join(log, n)) as f:
-                        claim = json.load(f)
-                except (OSError, ValueError):
-                    continue
-                if _claim_alive(claim):
-                    live_pid = claim.get("pid")
-                    break
-        except OSError:
-            pass
-        if live_pid is None:
+        if meta is None:
             raise ValueError(
-                f"no committed index at {index_dir!r} to {op} "
-                f"(never built, or crashed mid-append — rebuild it)"
+                f"no committed index at {index_dir!r} to {op} (no "
+                f"{_META}: never built, or its build did not finish)"
             )
-        if time.monotonic() > deadline:
-            raise ConcurrentWriteError(
-                f"timed out waiting for live writer pid {live_pid} "
-                f"to recommit {index_dir!r} (index is mid-{op} by a "
-                f"healthy writer — do NOT rebuild; retry later)"
+        if batch_id is not None and batch_id in meta["applied_batches"]:
+            return None
+        try:
+            # tid (r14, ADVICE r13 #2): failure-path claim removals
+            # verify pid+tid ownership before the os.remove — pid alone
+            # can't tell two threads of one process apart
+            return meta, _claim_writer(
+                index_dir, meta,
+                {"op": op, "batch_id": batch_id,
+                 "tid": threading.get_ident()},
             )
-        time.sleep(0.05)
-
+        except ConcurrentWriteError:
+            if time.monotonic() > deadline:
+                raise
+            time.sleep(0.05)
 
 
 def _parquet_files(table_dir: str) -> list[str]:
@@ -1183,16 +1115,13 @@ def _gc_dead_units(index_dir: str, meta: dict) -> None:
     past — exactly the unit an in-flight reader is scanning. Default
     0 (immediate removal, the r13 behavior) — a query-volume
     deployment sets the window to its scan-latency ceiling."""
-    units = meta.get("units")
-    if units is None:
-        return
     try:
         grace = float(os.environ.get("BDFP_INDEX_GC_GRACE_S", "0"))
     except ValueError:
         grace = 0.0
-    committed = int(meta.get("mver", 0))
-    for t in meta.get("tables", []):
-        live = set(units.get(t, ()))
+    committed = meta["mver"]
+    for t in meta["tables"]:
+        live = set(meta["units"][t])
         tdir = os.path.join(index_dir, t)
         try:
             names = os.listdir(tdir)
@@ -1228,18 +1157,16 @@ def _remove_own_claim(index_dir: str, mver: int) -> None:
     re-CAS'd by a live re-claimant, whose fresh entry an unconditional
     os.remove would delete (re-opening the duplicate-claimant race the
     ``stopped`` guard in _end_claim closes). Ownership is judged by
-    the claim's recorded pid+tid (r14 payloads; a legacy payload
-    without tid falls back to pid — the pre-r14 exposure, no worse).
-    Removal stays best-effort: losing the read-check race to a prune
+    the claim's recorded pid+tid (every claim records both). Removal
+    stays best-effort: losing the read-check race to a prune
     just means the entry is already gone."""
     path = entry_path(os.path.join(index_dir, _APPLOG), mver)
     claim = _read_claim(os.path.join(index_dir, _APPLOG), mver)
     if claim is None:
         return
-    if claim.get("pid") != os.getpid():
-        return
-    tid = claim.get("tid")
-    if tid is not None and tid != threading.get_ident():
+    if (claim.get("pid"), claim.get("tid")) != (
+        os.getpid(), threading.get_ident()
+    ):
         return
     try:
         os.remove(path)
@@ -1288,9 +1215,9 @@ def _publish(
        committed past — recommitting from the older snapshot would
        drop that writer's applied_batches entry (the r8 lost-update
        shape, which the ``>=`` recommit fence cannot see because this
-       slot number is higher). A transient fence-read failure
-       (EMFILE/EIO) aborts too: proceeding unfenced is the fail-open
-       hole (r12 review pass 2 #5).
+       slot number is higher). A missing fence dir or a transient
+       fence-read failure (EMFILE/EIO) aborts too: proceeding unfenced
+       is the fail-open hole (r12 review pass 2 #5).
     2. Adopt each staged table as unit ``_unit_name(mver)``
        (:func:`_adopt_staged`). A sweep racing here surfaces as
        FileNotFoundError from a vanished stage table.
@@ -1312,11 +1239,11 @@ def _publish(
     try:
         _check_fence(index_dir, mver)
         cur = _manifest(index_dir)
-        if cur is None or int(cur.get("mver", 0)) != int(meta.get("mver", 0)):
+        if cur is None or cur["mver"] != meta["mver"]:
             raise ConcurrentWriteError(
                 f"manifest at {index_dir!r} advanced from snapshot mver "
-                f"{meta.get('mver', 0)} to "
-                f"{cur.get('mver') if cur else None} since this writer's "
+                f"{meta['mver']} to "
+                f"{cur['mver'] if cur else None} since this writer's "
                 f"claim (an interleaved writer committed) — retry"
             )
         adopted = _adopt_staged(stage, index_dir, tables, mver)
@@ -1376,19 +1303,19 @@ def _finish_append(
     staged ``tables`` join the ``units`` map as unit
     ``_unit_name(mver)``, the batch id joins ``applied_batches`` with
     its provenance (units + ``n_delta`` rows), and ``sizes_delta`` —
-    the batch's per-cell partial counts — folds into the manifest's
-    ``cell_sizes`` snapshot (only when the manifest carries one; legacy
-    indexes keep the log fold), so serves read ≤C manifest rows
-    instead of folding the parquet log per search (r12)."""
+    the batch's per-cell partial counts, for kinds with cell sizes —
+    folds into the manifest's ``cell_sizes`` snapshot, so serves read
+    ≤C manifest rows instead of folding the parquet log per search
+    (r12)."""
     unit = _unit_name(mver)
-    applied = list(meta.get("applied_batches", []))
+    applied = list(meta["applied_batches"])
     snap = meta.get("cell_sizes")
-    if snap is not None and sizes_delta is not None:
+    if sizes_delta is not None:
         folded = {int(c): int(n) for c, n in snap}
         for c, n in sizes_delta.items():
             folded[int(c)] = folded.get(int(c), 0) + int(n)
         snap = folded
-    units = {t: list(us) for t, us in (meta.get("units") or {}).items()}
+    units = {t: list(us) for t, us in meta["units"].items()}
     for t in tables:
         units.setdefault(t, []).append(unit)
     batch_id = _norm_batch_id(batch_id)  # int-keyed provenance (r14)
@@ -1418,7 +1345,7 @@ def _finish_append(
     _publish(index_dir, meta, mver, stage, tables, dict(
         meta,
         applied_batches=applied + [applied_id],
-        appended_rows=int(meta.get("appended_rows", 0)) + n_delta,
+        appended_rows=meta["appended_rows"] + n_delta,
         cell_sizes=snap,
         units=units,
         batches=batches,
@@ -1534,40 +1461,16 @@ def _append_sizes(
     return out
 
 
-def _read_sizes(spark: SparkSession, cpaths: list[str]):
-    """The C-row (centroid_id, _csz) view of a v5 cell_sizes table:
-    the persisted table is an append-only log of per-batch partial
-    counts, so readers sum. On a fresh build this is a no-op aggregate
-    over exactly C rows; after n appends it folds ≤ C·(n+1) rows —
-    kB-scale either way, and never a scan of the data relation."""
-    return (
-        spark.read.parquet(*cpaths)
-        .groupBy("centroid_id")
-        .agg(F.sum("_csz").alias("_csz"))
-    )
-
-
-def _sizes_frame(spark: SparkSession, index_dir: str, meta: dict):
+def _sizes_frame(spark: SparkSession, meta: dict):
     """The C-row (centroid_id, _csz) frame the mass-budgeted probe
-    consumes: the manifest's folded ``cell_sizes`` snapshot when the
-    index carries one (r12 — a driver-local literal relation, zero
-    parquet reads and zero aggregate per search; the snapshot is
-    maintained at every build/append/compact commit so it always
-    equals the folded log), else the summed view of the v5 partial-
-    count parquet log (legacy indexes). Returns None for an index
-    without a cell_sizes table at all (pre-v3/v4 layouts — the serve
-    plan then derives sizes from the data relation)."""
-    snap = meta.get("cell_sizes")
-    if snap:
-        return spark.createDataFrame(
-            [(int(c), int(n)) for c, n in snap],
-            "centroid_id long, _csz long",
-        )
-    if "cell_sizes" in meta.get("tables", []):
-        return _read_sizes(
-            spark, _unit_paths(index_dir, meta, "cell_sizes")
-        )
-    return None
+    consumes: the manifest's folded ``cell_sizes`` snapshot (r12 — a
+    driver-local literal relation, zero parquet reads and zero
+    aggregate per search; every commit maintains it, so it always
+    equals the folded partial-count log)."""
+    return spark.createDataFrame(
+        [(int(c), int(n)) for c, n in meta["cell_sizes"]],
+        "centroid_id long, _csz long",
+    )
 
 
 def _run_concurrent(thunks):
@@ -1677,7 +1580,7 @@ def _ivf_append(index_dir, meta, delta, id_col, vec_col):
         "postings": _nearest_centroids(
             _frozen_panel(index_dir, meta, "centroids"),
             delta, id_col, vec_col,
-            int(meta.get("params", {}).get("multi_assign", 1)),
+            int(meta["params"]["multi_assign"]),
             "neighbor_id",
         )
     }
@@ -1692,14 +1595,14 @@ def _pq_append(index_dir, meta, delta, id_col, vec_col):
     # encode against the FROZEN codebook with the build's definition;
     # m/dim come from the manifest, so a mismatched subspace layout
     # cannot silently corrupt the encoding
-    p = meta.get("params", {})
+    p = meta["params"]
     return {
         "codes": encode_codebook_arrow(
             delta.select(
                 F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_v")
             ),
             _frozen_panel(index_dir, meta, "codebook"),
-            int(p.get("m", 8)), int(p.get("dim", 64)), ["neighbor_id"],
+            int(p["m"]), int(p["dim"]), ["neighbor_id"],
         ),
         "norms": _norms_frame(delta, id_col, vec_col),
     }
@@ -1721,9 +1624,8 @@ def _ivfpq_append(index_dir, meta, delta, id_col, vec_col):
     # FROZEN codebook. The assign kernel emits the residual itself
     # (emit_residual: the elementwise double subtract, bit-for-bit the
     # mechanism ivfpq_build_frames uses), so no delta re-join and no
-    # centroid BroadcastExchange per batch. Fallbacks mirror
-    # _BUILD_DEFAULTS["ivfpq"] for legacy manifests.
-    p = meta.get("params", {})
+    # centroid BroadcastExchange per batch.
+    p = meta["params"]
     assigned = topn_centroids_arrow(
         spread_scaled(
             delta.select(
@@ -1733,7 +1635,7 @@ def _ivfpq_append(index_dir, meta, delta, id_col, vec_col):
             "neighbor_id",
         ),
         _frozen_panel(index_dir, meta, "centroids"),
-        "neighbor_id", "_v", int(p.get("multi_assign", 3)), "neighbor_id",
+        "neighbor_id", "_v", int(p["multi_assign"]), "neighbor_id",
         emit_residual=True,
     )
     return {
@@ -1742,8 +1644,7 @@ def _ivfpq_append(index_dir, meta, delta, id_col, vec_col):
                 "neighbor_id", "centroid_id", F.col("_rv").alias("_v")
             ),
             _frozen_panel(index_dir, meta, "codebook"),
-            int(p.get("m", 16)), int(p.get("dim", 64)),
-            ["neighbor_id", "centroid_id"],
+            int(p["m"]), int(p["dim"]), ["neighbor_id", "centroid_id"],
         ),
         "norms": _norms_frame(delta, id_col, vec_col),
     }
@@ -1756,21 +1657,18 @@ def _dedup_frames(docs: DataFrame, p: dict) -> dict:
     r10 #4: the fixed eval suite every incoming crawl batch is
     decontaminated against). Extraction is row-local and every table
     is distinct-reduced, so build(base) ⊎ append(delta) ≡ build(all)."""
-    text_col = p.get("text_col", "text")
-    id_col = p.get("id_col", "doc_id")
+    text_col, id_col = p["text_col"], p["id_col"]
     return {
         "digests": docs.select(
             F.md5(norm_text(F.col(text_col))).alias("digest")
         ).distinct(),
         "bands": minhash_band_digests(
             docs, text_col, id_col,
-            int(p.get("n", 8)), int(p.get("num_hashes", 16)),
-            int(p.get("bands", 4)),
+            int(p["n"]), int(p["num_hashes"]), int(p["bands"]),
         ).select("band", "band_digest").distinct(),
         "winnow_fps": winnow_fingerprints(
-            docs.filter(F.expr(p.get("benchmark_pred", "source = 'src0'"))),
-            text_col, id_col,
-            k=int(p.get("win_k", 5)), w=int(p.get("win_w", 4)),
+            docs.filter(F.expr(p["benchmark_pred"])), text_col, id_col,
+            k=int(p["win_k"]), w=int(p["win_w"]),
         ).select("fp").distinct(),
     }
 
@@ -1780,7 +1678,7 @@ def _dedup_build(corpus, build_params, params):
 
 
 def _dedup_append(index_dir, meta, delta, id_col, vec_col):
-    return _dedup_frames(delta, meta.get("params", {}))
+    return _dedup_frames(delta, meta["params"])
 
 
 class _Kind(NamedTuple):
@@ -1796,17 +1694,23 @@ class _Kind(NamedTuple):
     # (table, one-row-per-vector predicate) the cell_sizes log counts,
     # or None for a kind without cell sizes
     sizes: tuple | None
+    # every table of the kind, in build-manifest order: the frozen
+    # quantizers, the append targets (_APPEND_TABLES) and cell_sizes
+    tables: tuple
 
 
 _KINDS = {
     "ivf": _Kind(_ivf_build, _ivf_append, "postings", True,
-                 ("postings", None)),
-    "pq": _Kind(_pq_build, _pq_append, "norms", False, None),
+                 ("postings", None), ("centroids", "postings", "cell_sizes")),
+    "pq": _Kind(_pq_build, _pq_append, "norms", False, None,
+                ("codebook", "codes", "norms")),
     # ivfpq codes carry m subspace rows per assignment: s == 0 keeps
     # one row per (vector, cell)
     "ivfpq": _Kind(_ivfpq_build, _ivfpq_append, "norms", False,
-                   ("codes", ("s", 0))),
-    "dedup": _Kind(_dedup_build, _dedup_append, "digests", False, None),
+                   ("codes", ("s", 0)),
+                   ("centroids", "codebook", "codes", "norms", "cell_sizes")),
+    "dedup": _Kind(_dedup_build, _dedup_append, "digests", False, None,
+                   ("digests", "bands", "winnow_fps")),
 }
 
 
@@ -1820,7 +1724,7 @@ def _count_rows(kind: str, params: dict, table_dirs, centroid_dirs) -> int:
     needs_retrain early (r9 review #5)."""
     n = _footer_rows(table_dirs)
     if _KINDS[kind].multi_rows:
-        multi = int(params.get("multi_assign", 1))
+        multi = int(params["multi_assign"])
         n //= max(1, min(multi, _footer_rows(centroid_dirs)))
     return n
 
@@ -1850,7 +1754,7 @@ def _ensure(
     tmp = _build_into_tmp(index_dir)
     try:
         frames = spec.build(corpus, build_params, params)
-        tables = list(frames) + (["cell_sizes"] if spec.sizes else [])
+        tables = list(spec.tables)
         paths = {t: _build_unit(tmp, t) for t in tables}
         _write_frames(frames, paths)
         snap = None
@@ -1896,9 +1800,7 @@ def _append(
 ) -> str:
     """Append ``delta`` to a ``kind`` index against its FROZEN
     quantizers: claim, stage the kind's append frames (the tables
-    ``_APPEND_TABLES[kind]`` ∩ the manifest's tables — a legacy index
-    without a newer table skips it) plus the batch's partial
-    cell-count file, count the batch from the staged footers, and
+    ``_APPEND_TABLES[kind]``) plus the batch's partial cell-count file, count the batch from the staged footers, and
     publish through :func:`_finish_append`. A redelivered batch id is
     an idempotent skip. Every failure before the publish releases the
     claim and removes the stage."""
@@ -1907,16 +1809,16 @@ def _append(
         return index_dir  # redelivered batch: idempotent skip
     meta, mver = txn
     spec = _KINDS[kind]
-    tables = [t for t in _APPEND_TABLES[kind] if t in meta.get("tables", [])]
+    tables = list(_APPEND_TABLES[kind])
     stage = None
     try:
         frames = spec.append(index_dir, meta, delta, id_col, vec_col)
         stage = _append_stage(index_dir, mver)
         paths = {t: os.path.join(stage, t) for t in tables}
-        _write_frames({t: df for t, df in frames.items() if t in paths}, paths)
+        _write_frames(frames, paths)
         n_delta = _count_rows(
-            kind, meta.get("params", {}), paths[spec.rows],
-            _unit_paths(index_dir, meta, "centroids"),
+            kind, meta["params"], paths[spec.rows],
+            spec.multi_rows and _unit_paths(index_dir, meta, "centroids"),
         )
         sizes_delta = None
         if "cell_sizes" in paths:
@@ -2106,25 +2008,12 @@ def _compaction(
     they run concurrently (r14). Returns (manifest, mver, stage,
     picks, {table: (files_before, files_after)}); ``stage`` is None
     when nothing needs rewriting, and the claim is then released
-    without a commit."""
-    # kind-check BEFORE claiming (ADVICE r9): raising unknown-kind
-    # after the claim would abandon the slot and wedge later writers;
-    # the post-claim re-check covers the (theoretical) window where
-    # the manifest changes kind between this read and the claim
-    pre = _manifest(index_dir)
-    if pre is not None and pre.get("kind") not in _APPEND_TABLES:
-        raise ValueError(
-            f"{op}_index: unknown index kind {pre.get('kind')!r}"
-        )
+    without a commit. (An unknown kind fails in _manifest's schema
+    check, before any claim.)"""
     meta, mver = _writer_txn(index_dir, None, op)
     stage = None
     try:
-        tables = _APPEND_TABLES.get(meta.get("kind"))
-        if tables is None:
-            raise ValueError(
-                f"{op}_index: unknown index kind {meta.get('kind')!r}"
-            )
-        picks = pick(meta, tables)
+        picks = pick(meta, _APPEND_TABLES[meta["kind"]])
         if not picks:
             _end_claim(index_dir, mver, release=True)
             return meta, mver, None, picks, {}
@@ -2167,18 +2056,18 @@ def compact_index(
     pre-compaction manifest keeps its files until the post-commit
     _gc_dead_units sweep (snapshot isolation up to that sweep).
 
+    A table whose live data is already one unit holding one parquet
+    file is not rewritten; when no table needs a rewrite the claim is
+    released without a commit and the result is ``{}``.
+
     Returns {table: (files_before, files_after)}."""
     def pick(meta, tables):
         # exactly the units the manifest references — a zombie's
-        # unreferenced leftovers and a missing legacy table (e.g.
-        # pre-r11 dedup without winnow_fps) are skipped by construction
+        # unreferenced leftovers are skipped by construction
         picks = {}
         for t in tables:
-            srcs = [
-                p for p in _unit_paths(index_dir, meta, t)
-                if os.path.isdir(p)
-            ]
-            if srcs:
+            srcs = _unit_paths(index_dir, meta, t)
+            if len(srcs) > 1 or len(_parquet_files(srcs[0])) > 1:
                 picks[t] = srcs
         return picks
 
@@ -2188,7 +2077,7 @@ def compact_index(
     if stage is None:
         return stats
     unit = _unit_name(mver)
-    units = {t: list(us) for t, us in (meta.get("units") or {}).items()}
+    units = {t: list(us) for t, us in meta["units"].items()}
     for t in picks:
         units[t] = [unit]  # the rewrite REPLACES the table's unit set
     _publish(index_dir, meta, mver, stage, list(picks), dict(
@@ -2268,14 +2157,13 @@ def minor_compact_index(
         tiers["folded"] = [i for i in ids if i not in kept]
         protected: dict[str, set] = {}
         for i in kept:
-            for t, u in (batches[str(i)].get("units") or {}).items():
+            for t, u in batches[str(i)]["units"].items():
                 protected.setdefault(t, set()).add(u)
         picks = {}
         for t in tables:
             cands = [
-                p for u in (meta.get("units") or {}).get(t, ())
+                os.path.join(index_dir, t, u) for u in meta["units"][t]
                 if u not in protected.get(t, ())
-                and os.path.isdir(p := os.path.join(index_dir, t, u))
             ]
             if len(cands) < 2:
                 continue
@@ -2298,7 +2186,7 @@ def minor_compact_index(
         # provenance keeps its retractability for free
         return {"tables": {}, "folded": [], "kept": tiers["kept"]}
     unit = _unit_name(mver)
-    units = {t: list(us) for t, us in (meta.get("units") or {}).items()}
+    units = {t: list(us) for t, us in meta["units"].items()}
     for t, srcs in picks.items():
         # the merged unit REPLACES exactly its sources; base tier and
         # recent-batch units keep their positions
@@ -2347,8 +2235,10 @@ def retract_batch(index_dir: str, batch_id) -> str:
     Determinism makes the result BIT-IDENTICAL to an index that never
     saw the batch, so the registered retract queries share the append
     oracles. Raises ``ValueError`` for a batch without provenance —
-    never appended, already retracted, appended by a pre-r13 writer,
-    or folded into the base by a compaction."""
+    never appended, already retracted, or folded into the base by a
+    compaction — and, naming the file, for a batch whose cell_sizes
+    unit cannot be read; either way the claim is released and the
+    manifest is untouched."""
     if batch_id is None:
         raise TypeError("retract_batch requires an explicit batch_id")
     batch_id = _norm_batch_id(batch_id)  # int/str "3" name ONE batch
@@ -2363,27 +2253,19 @@ def retract_batch(index_dir: str, batch_id) -> str:
                 f"the base) — nothing to retract"
             )
         entry = batches.pop(bkey)
-        bunits = entry.get("units", {})
+        bunits = entry["units"]
         units = {
             t: [u for u in us if u != bunits.get(t)]
-            for t, us in (meta.get("units") or {}).items()
+            for t, us in meta["units"].items()
         }
         snap = meta.get("cell_sizes")
         if snap is not None:
-            # the batch's per-cell delta: from its own cell_sizes unit
-            # (r14 O(1)-manifest layout) or the r13 manifest copy — read
-            # BEFORE the commit GCs the unit (_batch_sizes docstring)
-            bsizes = _batch_sizes(index_dir, entry)
-            if bsizes is not None:
-                folded = {int(c): int(n) for c, n in snap}
-                for c, n in bsizes:
-                    folded[int(c)] = folded.get(int(c), 0) - int(n)
-                snap = {c: n for c, n in folded.items() if n > 0}
-            else:
-                # no recorded partials (shouldn't happen for kinds that
-                # track sizes, but fail soft): drop the snapshot —
-                # readers fold the log, which just lost the batch's unit
-                snap = None
+            # the batch's per-cell delta, read from its own cell_sizes
+            # unit BEFORE the commit GCs it (_batch_sizes docstring)
+            folded = {int(c): int(n) for c, n in snap}
+            for c, n in _batch_sizes(index_dir, entry):
+                folded[int(c)] = folded.get(int(c), 0) - int(n)
+            snap = {c: n for c, n in folded.items() if n > 0}
         retracted = list(meta.get("retracted") or [])
         if bkey not in retracted:
             retracted.append(bkey)
@@ -2395,9 +2277,7 @@ def retract_batch(index_dir: str, batch_id) -> str:
         raise
     _publish(index_dir, meta, mver, stage, [], dict(
         meta,
-        appended_rows=(
-            int(meta.get("appended_rows", 0)) - int(entry.get("rows", 0))
-        ),
+        appended_rows=meta["appended_rows"] - entry["rows"],
         cell_sizes=snap,
         units=units,
         batches=batches,
@@ -2414,8 +2294,9 @@ def clone_index(src_dir: str, dst_dir: str) -> str:
     full train+encode pass). The clone carries the manifest verbatim
     (same fingerprint: the content IS identical by determinism) but
     NOT the source's writer log — the clone starts its own maintenance
-    history. Refuses an uncommitted source (a mid-maintenance index
-    must never be forked)."""
+    history. Refuses a source with no committed manifest (never built,
+    or removed by a concurrent rebuild) and, via the schema check, one
+    whose manifest is invalid."""
     if _manifest(src_dir) is None:
         raise ValueError(
             f"clone_index: no committed index at {src_dir!r}"
@@ -2433,9 +2314,7 @@ def clone_index(src_dir: str, dst_dir: str) -> str:
                 ignore=shutil.ignore_patterns(
                     # the fence is writer history like the log: the
                     # clone starts its own maintenance epoch sequence
-                    # (_fence* also drops the short-lived r12 interim
-                    # _fence.json single-file form)
-                    _APPLOG, "_fence*", "*.tmp.*", "*.clone.*"
+                    _APPLOG, _FENCE, "*.tmp.*", "*.clone.*"
                 ),
             )
         except (shutil.Error, OSError) as e:
@@ -2479,28 +2358,23 @@ def needs_retrain(index_dir: str, max_appended_frac: float = 0.5) -> bool:
     of base appended; IVF ~0.84 vs ~0.86). A scheduler polls this and
     re-runs ``ensure_*`` with a fresh fingerprint when it flips; the
     rebuild records new ``base_rows`` and resets ``appended_rows`` to
-    0, which resets the flag. A legacy/foreign manifest without
-    ``base_rows`` is conservatively due for retrain as soon as
-    anything was appended (unknown base ⇒ unknown drift)."""
+    0, which resets the flag. An empty base is due as soon as anything
+    was appended."""
     meta = _manifest(index_dir)
     if meta is None:
         raise ValueError(f"no committed index at {index_dir!r}")
-    appended = int(meta.get("appended_rows", 0))
-    base = meta.get("base_rows")
-    if not base:
-        return appended > 0
-    return appended > max_appended_frac * int(base)
+    return meta["appended_rows"] > max_appended_frac * meta["base_rows"]
 
 
 def _serving_manifest(index_dir: str, kind: str) -> dict:
-    """Search-side manifest read: a missing manifest means the index
-    is absent or mid-append/mid-compact (invalidated) — serving its
-    tables then could read a partially-appended batch, so refuse."""
+    """Search-side manifest read. Maintenance only ever replaces the
+    manifest, so a missing one means the index was never built (or
+    its build did not finish): refuse, naming the remedy."""
     meta = _manifest(index_dir)
-    if meta is None or meta.get("kind") != kind:
+    if meta is None or meta["kind"] != kind:
         raise ValueError(
-            f"no committed {kind} index at {index_dir!r} "
-            f"(absent, mid-maintenance, or crashed — rebuild it)"
+            f"no committed {kind} index at {index_dir!r} (no {kind} "
+            f"{_META}: never built — run ensure_{kind}_index)"
         )
     return meta
 
@@ -2518,8 +2392,8 @@ def ivf_index_search(
 ) -> DataFrame:
     """Serve from the persisted IVF index. ``k``/``nprobe``/
     ``probe_mass`` are genuine search-time knobs; everything
-    structural lives in the persisted frames. Refuses an uncommitted
-    (mid-maintenance) index. With ``probe_mass="auto"`` the scheduled
+    structural lives in the persisted frames. Refuses a dir with no
+    committed manifest. With ``probe_mass="auto"`` the scheduled
     (num, den) budget is resolved at the BUILD's scale step — from the
     manifest's ``base_rows`` and centroid ``scale_ref`` (r12, ADVICE
     r11): the schedule and the centroid-count rule were calibrated
@@ -2532,24 +2406,19 @@ def ivf_index_search(
     response; the retrain re-resolves both C and the budget."""
     meta = _serving_manifest(index_dir, "ivf")
     postings = _read_table(spark, index_dir, meta, "postings")
-    # the maintained cell sizes (v4+): the manifest's folded snapshot
-    # when present (r12 — zero extra reads per search), else the
-    # summed view of the v5 partial-count log; a pre-v4 index falls
-    # back to the derived aggregate inside ivf_search_frames
-    cell_sizes = _sizes_frame(spark, index_dir, meta)
-    p = meta.get("params", {})
-    sref = p.get("scale_ref")
-    base = meta.get("base_rows")
+    p = meta["params"]
+    sref = p["scale_ref"]
+    base = meta["base_rows"]
     if probe_mass == "auto" and sref is not None and base:
-        probe_mass = mass_schedule_for_n(int(base), int(sref))
+        probe_mass = mass_schedule_for_n(base, int(sref))
     # r15: the frozen centroid panel reads driver-side — the
     # per-search Spark collect job disappears
     return ivf_search_frames(
         _frozen_panel(index_dir, meta, "centroids"),
         postings, corpus, queries,
         id_col=id_col, vec_col=vec_col, k=k, nprobe=nprobe,
-        probe_mass=probe_mass, cell_sizes=cell_sizes,
-        mass_multi=int(p.get("multi_assign", 1)),
+        probe_mass=probe_mass, cell_sizes=_sizes_frame(spark, meta),
+        mass_multi=int(p["multi_assign"]),
         sched_ref=int(sref) if sref is not None else None,
     )
 
@@ -2586,9 +2455,7 @@ def pq_index_search(
     ranking loses, bounded by pool_cap and needs_retrain's budget.
     Exact integer arithmetic, replayed by the maintenance oracle."""
     meta = _serving_manifest(index_dir, "pq")
-    params = meta.get("params", {})
-    m_idx = int(params.get("m", 8))
-    dim_idx = int(params.get("dim", 64))
+    m_idx, dim_idx = int(meta["params"]["m"]), int(meta["params"]["dim"])
     if m is not None and m != m_idx:
         raise ValueError(
             f"pq_index_search: caller m={m} but the index at "
@@ -2601,12 +2468,11 @@ def pq_index_search(
         )
     codes = _read_table(spark, index_dir, meta, "codes")
     norms = _read_table(spark, index_dir, meta, "norms")
-    base = meta.get("base_rows")
+    base = meta["base_rows"]
     pool = None
     if base:
         pool = rerank_pool_for_index(
-            int(base), int(meta.get("appended_rows", 0)),
-            k, rerank, pool_cap, scale_ref,
+            base, meta["appended_rows"], k, rerank, pool_cap, scale_ref,
         )
     # r15: frozen codebook panel read driver-side (bit-identical) —
     # the per-search collect job disappears
@@ -2638,8 +2504,7 @@ def ivfpq_index_search(
     (m, dim) comes from the MANIFEST (the single-source-of-truth
     discipline); ``k``/``nprobe``/``probe_mass``/``rerank``/
     quantization knobs stay caller-side (search-time policy, not
-    persisted encoding). Refuses an uncommitted (mid-maintenance)
-    index.
+    persisted encoding). Refuses a dir with no committed manifest.
 
     r12 drift policy (VERDICT r11 #3 / ADVICE r11): with
     ``probe_mass="auto"`` the scheduled (num, den) budget is resolved
@@ -2654,23 +2519,18 @@ def ivfpq_index_search(
     by pool_cap and by needs_retrain's appended-fraction budget. Both
     rules are exact integer arithmetic the oracles replay."""
     meta = _serving_manifest(index_dir, "ivfpq")
-    params = meta.get("params", {})
-    m_idx = int(params.get("m", 16))
-    dim_idx = int(params.get("dim", 64))
+    params = meta["params"]
+    m_idx, dim_idx = int(params["m"]), int(params["dim"])
     codes = _read_table(spark, index_dir, meta, "codes")
     norms = _read_table(spark, index_dir, meta, "norms")
-    # the maintained cell sizes: manifest snapshot (r12) or the summed
-    # v5 log view; pre-v3 falls back to the derived aggregate
-    cell_sizes = _sizes_frame(spark, index_dir, meta)
-    csref = params.get("coarse_scale_ref")
-    base = meta.get("base_rows")
+    csref = params["coarse_scale_ref"]
+    base = meta["base_rows"]
     if probe_mass == "auto" and csref is not None and base:
-        probe_mass = mass_schedule_for_n(int(base), int(csref))
+        probe_mass = mass_schedule_for_n(base, int(csref))
     pool = None
     if base:
         pool = rerank_pool_for_index(
-            int(base), int(meta.get("appended_rows", 0)),
-            k, rerank, pool_cap, scale_ref,
+            base, meta["appended_rows"], k, rerank, pool_cap, scale_ref,
         )
     # r15: frozen quantizer panels read driver-side (bit-identical) —
     # the per-search collect jobs disappear
@@ -2681,8 +2541,8 @@ def ivfpq_index_search(
         id_col=id_col, vec_col=vec_col, k=k, nprobe=nprobe,
         m=m_idx, dim=dim_idx, rerank=rerank, scale=scale,
         pool_cap=pool_cap, scale_ref=scale_ref, probe_mass=probe_mass,
-        cell_sizes=cell_sizes,
-        mass_multi=int(params.get("multi_assign", 3)),
+        cell_sizes=_sizes_frame(spark, meta),
+        mass_multi=int(params["multi_assign"]),
         sched_ref=int(csref) if csref is not None else None,
         pool=pool,
     )
@@ -2700,17 +2560,15 @@ def dedup_index_check(
     single-source-of-truth discipline — a batch hashed under different
     shingle/band params would silently miss every collision), and the
     check shares operators/dedup.dedup_status_against_index with the
-    in-query twin, so serve and twin cannot diverge. Refuses an
-    uncommitted (mid-maintenance) index. Returns (id, status)."""
+    in-query twin, so serve and twin cannot diverge. Refuses a dir
+    with no committed manifest. Returns (id, status)."""
     meta = _serving_manifest(index_dir, "dedup")
-    p = meta.get("params", {})
+    p = meta["params"]
     digests = _read_table(spark, index_dir, meta, "digests")
     band_index = _read_table(spark, index_dir, meta, "bands")
     return dedup_status_against_index(
-        batch, digests, band_index,
-        p.get("text_col", "text"), p.get("id_col", "doc_id"),
-        int(p.get("n", 8)), int(p.get("num_hashes", 16)),
-        int(p.get("bands", 4)),
+        batch, digests, band_index, p["text_col"], p["id_col"],
+        int(p["n"]), int(p["num_hashes"]), int(p["bands"]),
     )
 
 
@@ -2728,22 +2586,16 @@ def dedup_index_contamination(
     (operators/dedup._broadcast_overlap_stats), so persisted ≡
     in-query by construction: extraction is per-doc, the check
     distinct-reduces the benchmark units, and appends union
-    distinct-compatible fp sets. Refuses an uncommitted index and an
-    index built before the winnow_fps table existed. Returns
-    (id, n_fp, n_hit, hit_frac) for batch docs with >= k tokens."""
+    distinct-compatible fp sets. Refuses a dir with no committed
+    manifest. Returns (id, n_fp, n_hit, hit_frac) for batch docs with
+    >= k tokens."""
     meta = _serving_manifest(index_dir, "dedup")
-    if "winnow_fps" not in meta.get("tables", []):
-        raise ValueError(
-            f"index at {index_dir!r} carries no winnow_fps table "
-            "(pre-r11 build) — rebuild under the current params"
-        )
-    p = meta.get("params", {})
+    p = meta["params"]
     bench_fps = _read_table(spark, index_dir, meta, "winnow_fps")
     return _broadcast_overlap_stats(
         winnow_fingerprints(
-            batch, p.get("text_col", "text"), p.get("id_col", "doc_id"),
-            k=int(p.get("win_k", 5)), w=int(p.get("win_w", 4)),
+            batch, p["text_col"], p["id_col"],
+            k=int(p["win_k"]), w=int(p["win_w"]),
         ),
-        bench_fps,
-        p.get("id_col", "doc_id"), "fp", "n_fp", "n_hit", "hit_frac",
+        bench_fps, p["id_col"], "fp", "n_fp", "n_hit", "hit_frac",
     )

@@ -5,6 +5,7 @@ and higher-order array functions.
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -221,18 +222,19 @@ def events_udaf_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     types; for data-sized groups use the built-in
     ``percentile_approx``/``median`` (distributed) instead. This query
     exists to cover the UDAF surface, not as the hot-path median."""
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
+    from pyspark.sql.functions import pandas_udf
 
-    # explicit functionType: the module's string annotations (PEP 563)
-    # defeat pandas_udf's signature inference. Spark disallows mixing
-    # grouped-agg pandas UDFs with JVM aggregates in one agg, so the
-    # row count is a (trivial) second UDAF.
-    @pandas_udf("double", PandasUDFType.GROUPED_AGG)
-    def median_udaf(v):
+    # grouped-agg form from the type hints (Series -> scalar): the
+    # module's PEP 563 string annotations resolve through
+    # get_type_hints, which is why ``pd`` is a module global. Spark
+    # disallows mixing grouped-agg pandas UDFs with JVM aggregates in
+    # one agg, so the row count is a (trivial) second UDAF.
+    @pandas_udf("double")
+    def median_udaf(v: pd.Series) -> float:
         return float(v.median())
 
-    @pandas_udf("long", PandasUDFType.GROUPED_AGG)
-    def count_udaf(v):
+    @pandas_udf("long")
+    def count_udaf(v: pd.Series) -> int:
         return int(v.count())
 
     e = load_table(spark, sf_dir, "events")

@@ -263,17 +263,15 @@ def ivf_cand_frac(spark, sf_dir: str) -> float:
     # v6 (r13): index tables resolve through the manifest's units map
     from bigdatafinalproject_spark.operators.ann_index import (
         _manifest,
-        _read_sizes,
         _read_table,
-        _unit_paths,
+        _sizes_frame,
     )
 
     meta = _manifest(idx)
     centroids = _read_table(spark, idx, meta, "centroids")
     postings = _read_table(spark, idx, meta, "postings")
-    # v5: cell_sizes is an append-only partial-count log — read
-    # through the summing view (a fresh build is exactly C rows)
-    sizes = _read_sizes(spark, _unit_paths(idx, meta, "cell_sizes"))
+    # the manifest's folded cell_sizes snapshot, as the serve reads it
+    sizes = _sizes_frame(spark, meta)
     probes = _mass_probes(
         centroid_panel(centroids, "ann_recall_scale"),
         queries, sizes, _MASS, "vec_id", "embedding",
@@ -311,9 +309,8 @@ def ivfpq_serve_frac(spark, sf_dir: str) -> dict[str, float]:
     )
     from bigdatafinalproject_spark.operators.ann_index import (
         _manifest,
-        _read_sizes,
         _read_table,
-        _unit_paths,
+        _sizes_frame,
         corpus_fingerprint,
         ensure_ivfpq_index,
         shared_index_dir,
@@ -336,7 +333,7 @@ def ivfpq_serve_frac(spark, sf_dir: str) -> dict[str, float]:
     meta = _manifest(idx)
     centroids = _read_table(spark, idx, meta, "centroids")
     codes = _read_table(spark, idx, meta, "codes")
-    sizes = _read_sizes(spark, _unit_paths(idx, meta, "cell_sizes"))
+    sizes = _sizes_frame(spark, meta)
     probes = _mass_probes(
         centroid_panel(centroids, "ann_recall_scale"),
         queries, sizes, _MASS, "vec_id", "embedding",

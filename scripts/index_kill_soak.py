@@ -30,7 +30,7 @@ Invariants asserted at the end (and the whole point):
 1. the manifest parses, is CURRENT, and records every expected batch
    id exactly once (``applied_batches`` is a duplicate-free set):
    0..n-1 plus the re-ingest id of every successfully retracted
-   target;
+   target (and the verifier's own empty batch, id 2n);
 2. batch-exactly-once IN THE DATA: reading postings through the
    manifest (the only read path), every landed batch's disjoint
    vec_id range appears exactly once — AND every retracted batch's
@@ -40,15 +40,16 @@ Invariants asserted at the end (and the whole point):
    == the counts derived from the postings relation;
 4. ``appended_rows`` equals the sum of the landed batch sizes with
    every retraction's reversal applied;
-5. after a final compaction, the on-disk unit dirs equal the
-   manifest's ``units`` map exactly (every orphan a killed writer
-   adopted-but-never-committed has been GC'd, including retracted
-   units and any grace-period tombstones), and no stage/sweep/
-   compact litter remains;
+5. after a final empty append and compaction (two commits, so the
+   post-commit GC and fence prune surely run), the on-disk unit dirs
+   equal the manifest's ``units`` map exactly (every orphan a killed
+   writer adopted-but-never-committed has been GC'd, including
+   retracted units and any grace-period tombstones), and no stage/
+   sweep/compact litter remains;
 6. the fence dir carries the permanent e0 floor plus the committed
    epoch's marker only;
 7. (with --readers N) reader processes serving queries CONTINUOUSLY
-   through the kill storm never see the mid-maintenance refusal —
+   through the kill storm never see the no-index refusal —
    the v6 availability claim — with only bounded snapshot retries
    from the documented compaction/retraction-GC window: the worst
    consecutive-retry streak before a successful serve must stay at
@@ -277,13 +278,13 @@ def worker(slot: int, nworkers: int, index_dir: str, n_batches: int,
 
 def reader(slot: int, index_dir: str) -> None:
     """Serve queries CONTINUOUSLY while the writers churn and die —
-    the v6 availability claim under test: with no manifest-invalidate
-    window, a reader must NEVER see the 'absent, mid-maintenance, or
-    crashed' refusal, no matter where the kills land. The one
-    documented residual is the post-commit GC after a compaction (or
-    a retraction) unreferences previously-served units: a scan
-    planned against the superseded manifest can lose its files there
-    — counted as a snapshot retry
+    the v6 availability claim under test: maintenance only ever
+    replaces the manifest, never removes it, so a reader must NEVER
+    see the 'no committed ivf index' refusal, no matter where the
+    kills land. The one documented residual is the post-commit GC
+    after a compaction (or a retraction) unreferences previously-
+    served units: a scan planned against the superseded manifest can
+    lose its files there — counted as a snapshot retry
     (bounded, reported), never an acceptable refusal. Exits when the
     supervisor drops the sentinel; writes {reads, retries} JSON."""
     from pyspark.sql import functions as F
@@ -311,9 +312,9 @@ def reader(slot: int, index_dir: str) -> None:
                 spark, index_dir, corpus, queries, k=3
             ).collect()
         except ValueError as e:
-            # the REFUSAL path ('no committed ivf index ... absent,
-            # mid-maintenance, or crashed') — pre-v6's failure mode,
-            # which v6 must never show a reader
+            # the REFUSAL path ('no committed ivf index', or a manifest
+            # that fails the schema check) — which a reader must never
+            # see while writers only ever replace the manifest
             raise AssertionError(
                 f"reader {slot}: index refused during maintenance "
                 f"churn: {e}"
@@ -394,17 +395,25 @@ def verify(index_dir: str, n_batches: int, retract_mod: int = 0) -> dict:
 
     from bigdatafinalproject_spark.operators.ann_index import (
         _manifest,
-        _read_sizes,
         _read_table,
         _unit_mver,
         _unit_paths,
         compact_index,
+        ivf_index_append,
     )
 
     spark = _session(threads=4)
     # a final compaction bounds the unit count AND exercises GC so the
     # disk-vs-manifest compare below is exact (the supervisor runs
-    # WITHOUT the grace env, so grace-mode tombstones reap here too)
+    # WITHOUT the grace env, so grace-mode tombstones reap here too).
+    # compact_index commits nothing on an index that is already one
+    # file per table, so an empty batch under a reserved id first
+    # gives it a unit to merge — and is itself a commit
+    final_bid = 2 * n_batches
+    ivf_index_append(
+        spark, index_dir, _delta(spark, final_bid).limit(0),
+        batch_id=final_bid,
+    )
     compact_index(spark, index_dir)
     meta = _manifest(index_dir)
     assert meta is not None, "no committed manifest after soak"
@@ -430,7 +439,9 @@ def verify(index_dir: str, n_batches: int, retract_mod: int = 0) -> dict:
     # (retracted ids STAY applied — retraction is 'remove and do not
     # re-ingest', so redelivery skips)
     applied = meta.get("applied_batches", [])
-    expect_applied = sorted(set(range(n_batches)) | reingested)
+    expect_applied = sorted(
+        set(range(n_batches)) | reingested | {final_bid}
+    )
     assert sorted(applied) == expect_applied, (
         f"applied_batches {sorted(applied)} != {expect_applied}"
     )
@@ -476,9 +487,12 @@ def verify(index_dir: str, n_batches: int, retract_mod: int = 0) -> dict:
     snap = {int(c): int(n) for c, n in meta["cell_sizes"]}
     folded = {
         int(r["centroid_id"]): int(r["_csz"])
-        for r in _read_sizes(
-            spark, _unit_paths(index_dir, meta, "cell_sizes")
-        ).collect()
+        for r in spark.read.parquet(
+            *_unit_paths(index_dir, meta, "cell_sizes")
+        )
+        .groupBy("centroid_id")
+        .agg(F.sum("_csz").alias("_csz"))
+        .collect()
     }
     derived = {
         int(r["centroid_id"]): int(r["cnt"])

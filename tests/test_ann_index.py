@@ -50,6 +50,49 @@ def _tbl_files(index_dir, table):
     return n
 
 
+def _read_sizes(spark, cpaths):
+    """Reference fold of a cell_sizes partial-count log: each batch
+    adds a <=C-row file of (centroid_id, _csz) partials, so the table
+    is their per-cell sum — what the manifest's folded snapshot (the
+    only form serves read) must always equal."""
+    return (
+        spark.read.parquet(*cpaths)
+        .groupBy("centroid_id")
+        .agg(F.sum("_csz").alias("_csz"))
+    )
+
+
+def _assert_manifest_refused(spark, idx, serve, append, match):
+    """A manifest that breaks the schema is refused LOUDLY by the serve
+    (``serve()``) and by every writer verb — append (``append()``),
+    compact_index, minor_compact_index and retract_batch — each error
+    naming ``_meta.json`` and the key (``match``); no verb leaves a
+    claim, a fence marker or a stage behind, and the manifest bytes
+    stay as forged."""
+    import bigdatafinalproject_spark.operators.ann_index as annidx
+
+    def listing(*parts):
+        d = os.path.join(idx, *parts)
+        return sorted(os.listdir(d)) if os.path.isdir(d) else []
+
+    mpath = os.path.join(idx, "_meta.json")
+    raw = open(mpath).read()
+    log, fence = listing("_applog"), listing("_fence")
+    verbs = (
+        serve,
+        append,
+        lambda: annidx.compact_index(spark, idx),
+        lambda: annidx.minor_compact_index(spark, idx, keep_recent=0),
+        lambda: annidx.retract_batch(idx, 0),
+    )
+    for verb in verbs:
+        with pytest.raises(ValueError, match=rf"_meta\.json: {match}"):
+            verb()
+    assert open(mpath).read() == raw
+    assert listing("_applog") == log and listing("_fence") == fence
+    assert not [n for n in os.listdir(idx) if ".tmp." in n]
+
+
 def test_index_build_once_serve_identical_and_invalidate(spark, tmp_path):
     emb = load_table(spark, SF_DIR, "embeddings")
     queries = emb.filter(
@@ -521,9 +564,13 @@ def test_live_foreign_claim_times_out_without_rebuild_advice(
 ):
     """A claim held by a LIVE pid (here: our own, simulating a writer
     whose Spark job outlasts the wait) makes a contending appender
-    time out with a retry-later error that explicitly does NOT advise
-    rebuilding — never the crashed-index ValueError."""
+    time out with a retry-later error naming the live claim — never
+    the no-index ValueError. With the manifest gone (maintenance only
+    ever REPLACES it, so this is an index that was never built) the
+    writer refuses at once, naming ``_meta.json``, instead of waiting
+    on the live claim."""
     import os as _os
+    import time as _time
 
     import pytest
 
@@ -542,11 +589,11 @@ def test_live_foreign_claim_times_out_without_rebuild_advice(
     )
     with pytest.raises(ConcurrentWriteError, match="live claim"):
         _writer_txn(idx, 0, "append", wait_s=0.3)
-    # and with the manifest REMOVED (mid-append state), the timeout
-    # error names the live writer and forbids the rebuild remedy
     _os.remove(_os.path.join(idx, "_meta.json"))
-    with pytest.raises(ConcurrentWriteError, match="do NOT rebuild"):
-        _writer_txn(idx, 0, "append", wait_s=0.3)
+    t0 = _time.monotonic()
+    with pytest.raises(ValueError, match=r"no committed index.*_meta\.json"):
+        _writer_txn(idx, 0, "append", wait_s=60.0)
+    assert _time.monotonic() - t0 < 10, "waited on the live claim"
 
 
 def test_base_rows_recorded_without_extra_corpus_scan(spark, tmp_path):
@@ -1063,20 +1110,23 @@ def test_dedup_index_lifecycle_idempotence_and_refusal(spark, tmp_path):
         dedup_index_check(spark, idx, batch)
 
 
-def test_compact_legacy_index_missing_newer_table_survives(spark, tmp_path):
-    """r11 review #1: compacting an index whose manifest predates a
-    newer kind table (a pre-r11 dedup index without winnow_fps) must
-    skip the missing table and COMMIT — the swap loop crashing after
-    the invalidate left the index permanently non-current."""
+def test_legacy_index_missing_newer_table_refused_then_rebuilt(
+    spark, tmp_path
+):
+    """A manifest that predates a newer kind table (a pre-r11 dedup
+    index without winnow_fps) fails the schema check: the serves and
+    every writer verb refuse it loudly, naming ``_meta.json`` and
+    ``tables``, instead of compacting or serving around the missing
+    table; ensure_* rebuilds over it."""
     import json
     import os as _os
     import shutil as _shutil
 
     from bigdatafinalproject_spark.operators.ann_index import (
         DEDUP_INDEX_PARAMS,
-        compact_index,
         dedup_index_append,
         dedup_index_check,
+        dedup_index_contamination,
         ensure_dedup_index,
         index_is_current,
     )
@@ -1085,18 +1135,28 @@ def test_compact_legacy_index_missing_newer_table_survives(spark, tmp_path):
     base = docs.filter(F.col("doc_id") % 3 != 0)
     delta = docs.filter(F.col("doc_id") % 3 == 0)
     batch = docs.filter(F.col("doc_id") % 5 == 0)
+    params = dict(DEDUP_INDEX_PARAMS)
     idx = str(tmp_path / "dedup_legacy")
-    ensure_dedup_index(spark, base, idx, "fp_leg", **dict(DEDUP_INDEX_PARAMS))
+    ensure_dedup_index(spark, base, idx, "fp_leg", **params)
     dedup_index_append(spark, idx, delta, batch_id=0)
     # forge the pre-r11 shape: drop the table AND its manifest entry
     _shutil.rmtree(_os.path.join(idx, "winnow_fps"))
     mpath = _os.path.join(idx, "_meta.json")
     meta = json.load(open(mpath))
     meta["tables"] = ["digests", "bands"]
+    del meta["units"]["winnow_fps"]
     json.dump(meta, open(mpath, "w"))
 
-    stats = compact_index(spark, idx)
-    assert "winnow_fps" not in stats  # skipped, not crashed
+    _assert_manifest_refused(
+        spark, idx,
+        serve=lambda: dedup_index_check(spark, idx, batch),
+        append=lambda: dedup_index_append(spark, idx, delta, batch_id=1),
+        match="bad key 'tables'",
+    )
+    with pytest.raises(ValueError, match=r"_meta\.json: bad key 'tables'"):
+        dedup_index_contamination(spark, idx, batch)
+    assert not index_is_current(idx, "dedup", "fp_leg")
+    ensure_dedup_index(spark, base, idx, "fp_leg", **params)
     assert index_is_current(idx, "dedup", "fp_leg")
     assert dedup_index_check(spark, idx, batch).count() > 0
 
@@ -1121,18 +1181,25 @@ def test_recommit_fence_refuses_stale_writer(tmp_path):
     idx = str(tmp_path / "fenced")
     import os as _os
 
-    _os.makedirs(idx)
+    from bigdatafinalproject_spark.operators.ann_index import (
+        _BUILD_DEFAULTS,
+    )
+
+    # every claimant creates the fence dir; _commit fails closed
+    # without one
+    _os.makedirs(_os.path.join(idx, "_fence"))
+    tables = ["codebook", "codes", "norms"]
+    pq = dict(kind="pq", fingerprint="fp", tables=tables,
+              params=dict(_BUILD_DEFAULTS["pq"]), base_rows=0,
+              units={t: [] for t in tables})
     # the contender recommitted slot 2 while we were stalled at slot 1
-    _commit(idx, dict(kind="pq", fingerprint="fp", tables=["codes"],
-                      mver=2, applied_batches=[0, 1]))
+    _commit(idx, dict(pq, mver=2, applied_batches=[0, 1]))
     with _pytest.raises(ConcurrentWriteError, match="fenced"):
-        _commit(idx, dict(kind="pq", fingerprint="fp", tables=["codes"],
-                          mver=1, applied_batches=[0]))
+        _commit(idx, dict(pq, mver=1, applied_batches=[0]))
     assert _manifest(idx)["applied_batches"] == [0, 1]  # untouched
-    # normal path: manifest absent during our own append window
+    # a dir with no manifest yet (a build's tmp dir) takes any commit
     _os.remove(_os.path.join(idx, "_meta.json"))
-    _commit(idx, dict(kind="pq", fingerprint="fp", tables=["codes"],
-                      mver=3, applied_batches=[0, 1, 2]))
+    _commit(idx, dict(pq, mver=3, applied_batches=[0, 1, 2]))
     assert _manifest(idx)["mver"] == 3
 
 
@@ -1141,9 +1208,10 @@ def test_dedup_index_winnow_fps_lifecycle(spark, tmp_path):
     maintained base+appends table serves contamination stats exactly
     like an index built on the full corpus AND like the in-query
     operator (per-doc extraction + distinct-reduced check =>
-    persisted ≡ maintained ≡ in-query); (b) an index whose manifest
-    predates the table refuses the contamination serve with a
-    rebuild message instead of a missing-path error."""
+    persisted ≡ maintained ≡ in-query); (b) a manifest that predates
+    the table fails the schema check: the contamination serve refuses
+    it, naming ``_meta.json`` and ``tables``, instead of serving
+    around the missing table."""
     import json
     import os as _os
 
@@ -1192,7 +1260,7 @@ def test_dedup_index_winnow_fps_lifecycle(spark, tmp_path):
     meta = json.load(open(mpath))
     meta["tables"] = ["digests", "bands"]
     json.dump(meta, open(mpath, "w"))
-    with _pytest.raises(ValueError, match="no winnow_fps table"):
+    with _pytest.raises(ValueError, match=r"_meta\.json: bad key 'tables'"):
         dedup_index_contamination(spark, full, train)
 
 
@@ -1393,7 +1461,6 @@ def test_manifest_cell_sizes_snapshot_tracks_log(spark, tmp_path):
     )
     from bigdatafinalproject_spark.operators.ann_index import (
         _manifest,
-        _read_sizes,
         _unit_paths,
         compact_index,
         ivf_index_append,
@@ -1430,7 +1497,7 @@ def test_manifest_cell_sizes_snapshot_tracks_log(spark, tmp_path):
     compact_index(spark, idx)
     assert snap() == folded()
 
-    # serve equivalence: snapshot-fed serve == log-fed legacy serve
+    # serve equivalence: snapshot-fed serve == serve fed the log fold
     # (same clamped budget — the index was built without scale_ref, so
     # the manifest carries none and "auto" holds the base row)
     queries = emb.filter(F.col("vec_id") % 250 == 0)
@@ -2169,20 +2236,17 @@ def test_kill_soak_bounded(tmp_path):
     ) == 1
 
 
-def test_legacy_flat_manifest_serves_but_refuses_maintenance(
+def test_legacy_flat_manifest_refused_on_serve_and_every_writer(
     spark, tmp_path
 ):
-    """v6 upgrade honesty: a pre-v6 index (manifest without ``units``)
-    keeps SERVING through the flat-layout fallback, but maintenance is
-    REFUSED with a rebuild message — adopting unit subdirs under a
-    flat table would build a mixed layout a legacy reader silently
-    misreads. (In production the fingerprint's _ALGO_VERSION salt
-    rebuilds every ensure_* path; only hand-built dirs hit this.)"""
+    """A pre-v6 index (flat table dirs, manifest without ``units``) is
+    never misread: the serve and every writer verb refuse it, naming
+    ``_meta.json`` and the missing key, and leave no claim or stage
+    behind; ensure_* rebuilds over it as over a stale fingerprint. (The
+    fingerprint's _ALGO_VERSION salt keeps such an index out of every
+    ensure_* cache path; only hand-built dirs reach this.)"""
     import json
     import os as _os
-    import shutil as _shutil
-
-    import pytest
 
     from bigdatafinalproject_spark.operators.ann_index import (
         _manifest,
@@ -2215,10 +2279,16 @@ def test_legacy_flat_manifest_serves_but_refuses_maintenance(
         json.dump(meta, f)
 
     queries = emb.filter(F.col("vec_id") % 250 == 0)
+    _assert_manifest_refused(
+        spark, idx,
+        serve=lambda: ivf_index_search(spark, idx, emb, queries, k=10),
+        append=lambda: ivf_index_append(spark, idx, delta, batch_id=0),
+        match="missing key 'units'",
+    )
+    assert not index_is_current(idx, "ivf", fp)
+    ensure_ivf_index(spark, base, idx, fp, **_PARAMS)
+    assert index_is_current(idx, "ivf", fp)
     assert ivf_index_search(spark, idx, emb, queries, k=10).count() > 0
-    with pytest.raises(ValueError, match="pre-v6 flat layout"):
-        ivf_index_append(spark, idx, delta, batch_id=0)
-    _shutil.rmtree(idx)
 
 
 def test_retract_batch_restores_never_appended_state(spark, tmp_path):
@@ -2436,7 +2506,7 @@ def test_commit_fence_epoch_recheck_blocks_zombie_publish(
             src=before.get("src"), params=before.get("params", {}),
             applied_batches=[0], mver=1,
             base_rows=before.get("base_rows"), appended_rows=123,
-            units=before.get("units"),
+            cell_sizes=before["cell_sizes"], units=before.get("units"),
         ))
     after = _manifest(idx)
     assert after == before  # serving manifest untouched
@@ -2452,7 +2522,7 @@ def test_commit_fence_epoch_recheck_blocks_zombie_publish(
         src=before.get("src"), params=before.get("params", {}),
         applied_batches=[0], mver=1,
         base_rows=before.get("base_rows"), appended_rows=123,
-        units=before.get("units"),
+        cell_sizes=before["cell_sizes"], units=before.get("units"),
     ))
     assert _manifest(idx)["appended_rows"] == 123
 
@@ -2461,8 +2531,8 @@ def test_remove_own_claim_leaves_foreign_entries(tmp_path):
     """r14 (ADVICE r13 #2): failure-path claim removal verifies
     pid+tid ownership, so it can never delete a live re-claimant's
     fresh entry for the same slot (the duplicate-claimant race the
-    ``stopped`` guard in _end_claim closes). A legacy payload without
-    a tid falls back to the pid check."""
+    ``stopped`` guard in _end_claim closes). Every claim records its
+    tid, so a payload without one is never this writer's."""
     import threading
 
     from bigdatafinalproject_spark.operators.ann_index import (
@@ -2498,10 +2568,11 @@ def test_remove_own_claim_leaves_foreign_entries(tmp_path):
     _remove_own_claim(idx, 1)
     assert not os.path.exists(p)
 
-    # legacy payload (no tid), own pid: removed (pre-r14 exposure)
+    # legacy payload (no tid), own pid: kept — not provably ours
     commit_exclusive(log, 1, {"pid": os.getpid()})
     _remove_own_claim(idx, 1)
-    assert not os.path.exists(p)
+    assert os.path.exists(p)
+    os.remove(p)
 
     # missing entry: a no-op
     _remove_own_claim(idx, 1)
@@ -2959,3 +3030,148 @@ def test_footer_rows_rejects_existing_dir_without_parquet(tmp_path):
     (empty / "_SUCCESS").touch()
     with pytest.raises(ValueError, match="empty_unit"):
         _footer_rows([str(good), str(empty)])
+
+
+def test_missing_fence_dir_aborts_writer_before_adoption(spark, tmp_path):
+    """Every claimant creates ``_fence`` at claim time, so a writer that
+    finds it gone cannot prove it still owns its slot: the fence check
+    fails CLOSED — both the pre-adopt check and ``_commit``'s epoch
+    recheck raise naming the dir, the serving manifest is untouched,
+    nothing adopted survives, and the claim and stage are released. A
+    plain retry re-creates the fence and lands the batch."""
+    import json
+    import os as _os
+    import shutil as _shutil
+
+    import bigdatafinalproject_spark.operators.ann_index as annidx
+
+    emb = load_table(spark, SF_DIR, "embeddings")
+    base = emb.filter(F.col("vec_id") % 3 != 0)
+    delta = emb.filter(F.col("vec_id") % 3 == 0)
+    idx = str(tmp_path / "ivf_nofence")
+    fp = corpus_fingerprint(
+        table_path(SF_DIR, "embeddings"), base_pred="b", **_PARAMS
+    )
+    ensure_ivf_index(spark, base, idx, fp, **_PARAMS)
+    mpath = _os.path.join(idx, "_meta.json")
+    meta_before = json.load(open(mpath))
+
+    def drop_fence():
+        _shutil.rmtree(_os.path.join(idx, annidx._FENCE))
+
+    real_check, real_adopt = annidx._check_fence, annidx._adopt_staged
+
+    def drop_then_check(index_dir, mver):
+        drop_fence()
+        return real_check(index_dir, mver)
+
+    def adopt_then_drop(*a):
+        adopted = real_adopt(*a)
+        drop_fence()
+        return adopted
+
+    for name, hook in (
+        ("_check_fence", drop_then_check),   # pre-adopt check
+        ("_adopt_staged", adopt_then_drop),  # _commit's epoch recheck
+    ):
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(annidx, name, hook)
+            with pytest.raises(ValueError, match=r"_fence.*is missing"):
+                annidx.ivf_index_append(spark, idx, delta, batch_id=0)
+        assert json.load(open(mpath)) == meta_before
+        for t in ("postings", "cell_sizes"):
+            assert sorted(
+                n for n in _os.listdir(_os.path.join(idx, t))
+                if not n.startswith("_")
+            ) == sorted(meta_before["units"][t]), (name, t)
+        assert _os.listdir(_os.path.join(idx, "_applog")) == []
+        assert not [n for n in _os.listdir(idx) if ".tmp." in n]
+
+    annidx.ivf_index_append(spark, idx, delta, batch_id=0)
+    assert json.load(open(mpath))["applied_batches"] == [0]
+
+
+def test_retract_with_missing_cell_sizes_unit_raises_manifest_unchanged(
+    spark, tmp_path
+):
+    """Retraction subtracts the batch's partial counts, read back from
+    the batch's own cell_sizes unit. With that unit gone the snapshot
+    cannot stay exact, so retract_batch raises naming the file,
+    releases its claim, and leaves the manifest unchanged — it never
+    commits a snapshot it cannot vouch for."""
+    import json
+    import os as _os
+    import shutil as _shutil
+
+    from bigdatafinalproject_spark.operators.ann_index import (
+        ivf_index_append,
+        retract_batch,
+    )
+
+    emb = load_table(spark, SF_DIR, "embeddings")
+    base = emb.filter(F.col("vec_id") % 3 != 0)
+    delta = emb.filter(F.col("vec_id") % 3 == 0)
+    idx = str(tmp_path / "ivf_retract_nosizes")
+    fp = corpus_fingerprint(
+        table_path(SF_DIR, "embeddings"), base_pred="b", **_PARAMS
+    )
+    ensure_ivf_index(spark, base, idx, fp, **_PARAMS)
+    ivf_index_append(spark, idx, delta, batch_id=0)
+    mpath = _os.path.join(idx, "_meta.json")
+    raw_before = open(mpath).read()
+    unit = json.loads(raw_before)["batches"]["0"]["units"]["cell_sizes"]
+    _shutil.rmtree(_os.path.join(idx, "cell_sizes", unit))
+    log = _os.path.join(idx, "_applog")
+    log_before = sorted(_os.listdir(log))
+
+    with pytest.raises(ValueError, match=f"cell_sizes unit .*{unit}"):
+        retract_batch(idx, 0)
+    assert open(mpath).read() == raw_before
+    assert sorted(_os.listdir(log)) == log_before  # claim released
+    assert not [n for n in _os.listdir(idx) if ".tmp." in n]
+
+
+def test_compact_index_noop_on_compacted_index(spark, tmp_path):
+    """compact_index skips a table whose live data is already one unit
+    holding one parquet file. On a compacted index nothing is left to
+    rewrite: it returns {} and releases its claim without a commit —
+    the manifest bytes, mver, unit dirs, writer log and fence stay as
+    they were — and the next writer proceeds."""
+    import json
+    import os as _os
+
+    from bigdatafinalproject_spark.operators.ann_index import (
+        compact_index,
+        ivf_index_append,
+    )
+
+    emb = load_table(spark, SF_DIR, "embeddings")
+    base = emb.filter(F.col("vec_id") % 3 != 0)
+    delta = emb.filter(F.col("vec_id") % 3 == 0)
+    idx = str(tmp_path / "ivf_compact_noop")
+    fp = corpus_fingerprint(
+        table_path(SF_DIR, "embeddings"), base_pred="b", **_PARAMS
+    )
+    ensure_ivf_index(spark, base, idx, fp, **_PARAMS)
+    ivf_index_append(spark, idx, delta.filter(F.col("vec_id") % 2 == 0),
+                     batch_id=0)
+    assert compact_index(spark, idx)  # the first pass rewrites
+
+    def state():
+        return (
+            open(_os.path.join(idx, "_meta.json")).read(),
+            {
+                d: sorted(_os.listdir(_os.path.join(idx, d)))
+                for d in ("centroids", "postings", "cell_sizes",
+                          "_applog", "_fence")
+            },
+        )
+
+    before = state()
+    assert compact_index(spark, idx) == {}
+    assert state() == before
+    ivf_index_append(spark, idx, delta.filter(F.col("vec_id") % 2 != 0),
+                     batch_id=1)
+    m = json.load(open(_os.path.join(idx, "_meta.json")))
+    assert m["applied_batches"] == [0, 1]
+    assert m["mver"] == json.loads(before[0])["mver"] + 1

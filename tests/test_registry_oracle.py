@@ -74,3 +74,16 @@ def test_unknown_oracle_of_names_both_queries(monkeypatch):
     monkeypatch.setattr(registry, "_LINKS", {"twin_q": "no_such_q"})
     with pytest.raises(ValueError, match="'twin_q'.*'no_such_q'"):
         registry._resolve_links()
+
+
+def test_udaf_median_builds_without_pandas_udf_type_warning(spark):
+    """``events_udaf_median`` declares its grouped-agg pandas UDFs by
+    type hints: building it emits none of the warnings Spark raises for
+    the ``PandasUDFType`` form."""
+    import warnings
+
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        registry.QUERIES["events_udaf_median"](spark, SF_DIR)
+    hinted = [w for w in caught if "type hints" in str(w.message)]
+    assert not hinted, [str(w.message) for w in hinted]
