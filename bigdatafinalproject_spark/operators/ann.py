@@ -29,13 +29,14 @@ from bigdatafinalproject_spark.operators.arrow_kernels import (
     cosine_topk_arrow,
     encode_codebook_arrow,
     lsh_arrow,
+    mmr_walk_arrow,
     norms_arrow,
     pair_cosine_arrow,
     panel_from_frame,
     quantized_scan_arrow,
     topn_centroids_arrow,
 )
-from bigdatafinalproject_spark.operators.layout import spread, spread_scaled
+from bigdatafinalproject_spark.operators.layout import pin, spread
 
 
 # IVFPQ adaptive probe policy (r10 introduced the mass budget; r11
@@ -131,7 +132,7 @@ def cosine_topk(
     collected.
     """
     return cosine_topk_arrow(
-        spread_scaled(corpus, id_col),
+        pin(corpus, id_col),
         panel_from_frame(queries, id_col, vec_col, "ann.cosine_topk queries"),
         id_col, vec_col, k,
     )
@@ -308,7 +309,7 @@ def _nearest_centroids(
     vectorized in numpy."""
     src = df.select(F.col(id_col).alias(out), F.col(vec_col).alias("_v"))
     return topn_centroids_arrow(
-        spread_scaled(src, out) if spread_input else src,
+        pin(src, out) if spread_input else src,
         panel, out, "_v", n, out,
         keep_rank=keep_rank,
     )
@@ -557,10 +558,6 @@ def ivf_centroids(
             kmeans_centroids,
         )
 
-        from bigdatafinalproject_spark.operators.layout import (
-            scaled_parallelism,
-        )
-
         trained = kmeans_centroids(
             corpus.select(id_col, vec_col),
             centroids.select(
@@ -572,7 +569,6 @@ def ivf_centroids(
             train_rounds,
             id_col=id_col,
             vec_col=vec_col,
-            parallelism=scaled_parallelism(corpus),
         )
         # kmeans_centroids returns a LITERAL frame (r14 driver-stepped
         # trainer), so no barrier is needed: every downstream branch
@@ -669,13 +665,11 @@ def ivf_search_frames(
             centroids, queries, sizes, probe_mass, id_col, vec_col,
             mass_multi=mass_multi, sched_ref=sched_ref,
         )
-    # the candidate tail is pinned to the plan-stats-derived partition
-    # count (spread_scaled: probe-free, unlike spread's partition
-    # probe, which materializes this shuffle-rooted subtree as a
-    # throwaway job under AQE). r15's interleaved A/B chose it over
-    # AQE coalescing and a defaultParallelism repartition
-    # (OPTIMIZATION_r15.md).
-    cand = spread_scaled(
+    # the candidate tail is pinned (probe-free, unlike spread's
+    # partition probe, which materializes this shuffle-rooted subtree
+    # as a throwaway job under AQE); r15's interleaved A/B chose the
+    # pin over AQE coalescing (OPTIMIZATION_r15.md)
+    cand = pin(
         probes.join(postings, on="centroid_id")
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .select("query_id", "neighbor_id")
@@ -714,10 +708,9 @@ def embedding_neardup_pairs(
     # kernel (cheap), but attaching two 64-dim vectors to every
     # candidate pair is byte-heavy relative to the pair set AQE sizes
     # by — coalesced to one task, the join + Arrow conversion
-    # serializes. spread_scaled pins the fan-out to the plan-stats
-    # count without spread's partition probe (the winner of r15's
-    # interleaved A/B, OPTIMIZATION_r15.md).
-    cand = spread_scaled(cand, "id_a")
+    # serializes. The pin fixes the fan-out without spread's partition
+    # probe (the winner of r15's interleaved A/B, OPTIMIZATION_r15.md).
+    cand = pin(cand, "id_a")
     va = corpus.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("_va"))
     vb = corpus.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("_vb"))
     return pair_cosine_arrow(
@@ -897,23 +890,20 @@ def mmr_diversify(
     neighborhood. Greedy MMR is inherently sequential in k and
     quadratic in the candidate set, so THE CANDIDATE SET is where the
     scale design lives: candidates come from the (banded/bucketed at
-    scale) ANN tier and are bounded per query, making every frame here
-    kilobytes regardless of corpus size. The k-step loop is a driver
-    loop over bounded DataFrames — each step one anti-join + one
-    bounded max-sim aggregate + one struct-max argmax (no windows), with
-    a barrier per step so lineage never re-executes.
+    scale) ANN tier and are bounded per query, so the whole walk of
+    one query runs inside one grouped Arrow kernel
+    (:func:`mmr_from_candidates`).
 
     Portability: cosines are sequential double folds (bit-identical in
     DuckDB); scores then quantize to int64 (floor(cos * scale)), so
     every MMR comparison is EXACT integer arithmetic — the greedy
     trajectory cannot diverge between engines on a float ulp. Ties
-    break on lowest id via struct-max over (score, -id).
+    break on the lowest id.
 
     Returns (query_id, pick 1..k, vec_id, rel_q, mmr_q).
     """
-    # no barrier here: mmr_from_candidates barriers its input (one
-    # materialization total, the pre-r12 plan — r12 review #4 caught
-    # the refactor double-materializing the same bounded frame)
+    # no barrier here: the candidate frame feeds one grouped kernel,
+    # so nothing downstream reads it twice
     cand = cosine_topk(corpus, queries, id_col, vec_col, k=n_candidates).select(
         "query_id",
         F.col("neighbor_id").alias("cid"),
@@ -936,92 +926,25 @@ def mmr_from_candidates(
     scale: int = 1 << 30,
 ) -> DataFrame:
     """The MMR greedy walk over an EXPLICIT candidate frame
-    (query_id, cid, rel_q) — the production composition point (r12,
-    VERDICT r11 #6): candidates come from whatever retrieval tier the
-    deployment serves (the persisted IVFPQ index's bounded top-M in
-    the registered ``ann_mmr_from_index``; exact cosine in the
-    reference-shaped ``ann_mmr_diversified``), so the quadratic
-    pairwise-similarity stage and the sequential k-loop only ever
-    touch per-query BOUNDED frames regardless of corpus size. Same
-    integer-quantized scoring and tie rules as :func:`mmr_diversify`
-    (which now wraps this). Returns (query_id, pick, vec_id, rel_q,
-    mmr_q)."""
-    from bigdatafinalproject_spark.operators.barrier import materialize_barrier
-
-    cand = materialize_barrier(cand)
-    en = corpus.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
-    pa = cand.select("query_id", F.col("cid").alias("a"))
-    pb = cand.select("query_id", F.col("cid").alias("b"))
-    # per-pair cosine via the Arrow pair kernel (r14), then the same
-    # floor(cos * scale) integer quantization as before
-    sims = materialize_barrier(
-        pair_cosine_arrow(
-            pa.join(pb, "query_id")
-            .filter(F.col("a") != F.col("b"))
-            .join(en.select(F.col("_id").alias("a"), F.col("_v").alias("_va")), "a")
-            .join(en.select(F.col("_id").alias("b"), F.col("_v").alias("_vb")), "b"),
-            ["query_id", "a", "b"], "_va", "_vb", "_cos",
-        ).select(
-            "query_id",
-            "a",
-            "b",
-            F.floor(F.col("_cos") * scale).cast("long").alias("sim_q"),
-        )
+    (query_id, cid, rel_q) — the production composition point:
+    candidates come from whatever retrieval tier the deployment serves
+    (the persisted IVFPQ index's bounded top-M in the registered
+    ``ann_mmr_from_index``; exact cosine in the reference-shaped
+    ``ann_mmr_diversified``). Each candidate is joined to its corpus
+    vector once, and one grouped Arrow kernel per query
+    (arrow_kernels.mmr_walk_arrow) computes the quantized pair
+    cosines and runs the whole integer walk, so the quadratic and
+    sequential work only ever touches one query's BOUNDED candidate
+    set. Same scoring and tie rules as :func:`mmr_diversify` (which
+    wraps this). A candidate without a corpus vector, a duplicate cid
+    or an oversized candidate set raises ``ValueError`` naming the
+    query. Returns (query_id, pick, vec_id, rel_q, mmr_q)."""
+    vecs = corpus.select(
+        F.col(id_col).alias("cid"), F.col(vec_col).alias("vector")
     )
-    first = cand.groupBy("query_id").agg(
-        F.max(
-            F.struct(F.col("rel_q"), (-F.col("cid")).alias("negid"))
-        ).alias("best")
-    )
-    sel_all = materialize_barrier(
-        first.select(
-            "query_id",
-            F.lit(1).cast("int").alias("pick"),
-            (-F.col("best.negid")).alias("cid"),
-            F.col("best.rel_q").alias("rel_q"),
-            (F.lit(lam_num) * F.col("best.rel_q")).alias("mmr_q"),
-        )
-    )
-    for step in range(2, k + 1):
-        rem = cand.join(
-            sel_all.select("query_id", "cid"), ["query_id", "cid"], "left_anti"
-        )
-        pen = (
-            sims.join(
-                sel_all.select("query_id", F.col("cid").alias("b")),
-                ["query_id", "b"],
-            )
-            .groupBy("query_id", F.col("a").alias("cid"))
-            .agg(F.max("sim_q").alias("p"))
-        )
-        best = (
-            rem.join(pen, ["query_id", "cid"])
-            .groupBy("query_id")
-            .agg(
-                F.max(
-                    F.struct(
-                        (
-                            F.lit(lam_num) * F.col("rel_q")
-                            - F.lit(pen_num) * F.col("p")
-                        ).alias("mmr_q"),
-                        (-F.col("cid")).alias("negid"),
-                        F.col("rel_q"),
-                    )
-                ).alias("best")
-            )
-        )
-        nxt = materialize_barrier(
-            best.select(
-                "query_id",
-                F.lit(step).cast("int").alias("pick"),
-                (-F.col("best.negid")).alias("cid"),
-                F.col("best.rel_q").alias("rel_q"),
-                F.col("best.mmr_q").alias("mmr_q"),
-            )
-        )
-        sel_all = sel_all.unionByName(nxt)
-    return sel_all.select(
-        "query_id", "pick", F.col("cid").alias("vec_id"), "rel_q", "mmr_q"
+    return mmr_walk_arrow(
+        cand.select("query_id", "cid", "rel_q").join(vecs, "cid", "left"),
+        k, lam_num, pen_num, scale,
     )
 
 
@@ -1380,19 +1303,15 @@ def ivfpq_build_frames(
     # downstream disappear. The frame is barriered so its consumers
     # (codebook init, codebook trainer, encode) don't re-execute the
     # pass per branch.
-    from bigdatafinalproject_spark.operators.layout import scaled_parallelism
-
-    _pt = scaled_parallelism(corpus)
     cpanel = centroid_panel(centroids, "ivfpq_build_frames")
     assigned = materialize_barrier(
         topn_centroids_arrow(
-            spread_scaled(
+            pin(
                 corpus.select(
                     F.col(id_col).alias("neighbor_id"),
                     F.col(vec_col).alias("_v"),
                 ),
                 "neighbor_id",
-                parallelism=_pt,
             ),
             cpanel, "neighbor_id", "_v", multi_assign, "neighbor_id",
             keep_rank=True, emit_residual=True,
@@ -1432,7 +1351,6 @@ def ivfpq_build_frames(
         id_col="_sid",
         vec_col="_sv",
         group_cols=("s",),
-        parallelism=_pt,
     )
     cb = materialize_barrier(
         trained.select(F.col("cid").alias("code"), "s", F.col("centroid").alias("_cw"))

@@ -75,6 +75,7 @@ base table and are touched only for the bounded rerank pool.
 from __future__ import annotations
 
 import json
+import math
 import os
 import shutil
 import threading
@@ -111,7 +112,7 @@ from bigdatafinalproject_spark.operators.dedup import (
     norm_text,
     winnow_fingerprints,
 )
-from bigdatafinalproject_spark.operators.layout import compact, spread_scaled
+from bigdatafinalproject_spark.operators.layout import compact, pin
 from bigdatafinalproject_spark.operators.txlog import (
     ConcurrentWriteError,
     LeaseRenewer as _LeaseRenewer,
@@ -918,18 +919,49 @@ def _norm_batch_id(batch_id):
         ) from None
 
 
+class _Knobs(NamedTuple):
+    """A writer transaction's env knobs, parsed once as it opens."""
+
+    gc_grace_s: float  # BDFP_INDEX_GC_GRACE_S (see _gc_dead_units)
+    compact_warn_batches: int  # BDFP_INDEX_COMPACT_WARN_BATCHES; 0 = off
+
+
+def _env_knob(name: str, default: str, cast) -> float:
+    """The env knob ``name`` as a non-negative ``cast`` value: unset
+    takes ``default``, empty reads as 0, and a malformed, non-finite
+    or negative value raises ``ValueError`` naming the variable and
+    the value."""
+    raw = os.environ.get(name, default)
+    try:
+        v = cast(raw or 0)
+    except ValueError:
+        v = math.nan
+    if not (math.isfinite(v) and v >= 0):
+        raise ValueError(
+            f"{name}={raw!r}: expected a non-negative {cast.__name__}"
+        )
+    return v
+
+
 def _writer_txn(
     index_dir: str, batch_id, op: str, wait_s: float = _WRITER_WAIT_S
-) -> tuple[dict, int] | None:
-    """Open a maintenance-writer transaction: read the manifest, check
-    batch idempotence, claim the writer slot — retrying while a LIVE
-    concurrent writer holds the slot (a batch it applies becomes an
-    idempotent skip here on the re-read). Returns (manifest, claimed
-    mver), or None when ``batch_id`` is already applied. The manifest
-    is only ever REPLACED, never removed, so a missing one raises
-    ``ValueError`` at once: the index was never built (or its build
-    never finished) and ``ensure_*`` is the remedy."""
+) -> tuple[dict, int, _Knobs] | None:
+    """Open a maintenance-writer transaction: parse the env knobs,
+    read the manifest, check batch idempotence, claim the writer slot
+    — retrying while a LIVE concurrent writer holds the slot (a batch
+    it applies becomes an idempotent skip here on the re-read).
+    Returns (manifest, claimed mver, knobs), or None when ``batch_id``
+    is already applied. The knobs are parsed before the claim, so a bad
+    value leaves nothing behind and nothing after the commit can fail
+    on one. The manifest is only ever REPLACED, never removed, so a
+    missing one raises ``ValueError`` at once: the index was never
+    built (or its build never finished) and ``ensure_*`` is the
+    remedy."""
     batch_id = _norm_batch_id(batch_id)
+    knobs = _Knobs(
+        _env_knob("BDFP_INDEX_GC_GRACE_S", "0", float),
+        _env_knob("BDFP_INDEX_COMPACT_WARN_BATCHES", "512", int),
+    )
     deadline = time.monotonic() + wait_s
     while True:
         meta = _manifest(index_dir)
@@ -948,7 +980,7 @@ def _writer_txn(
                 index_dir, meta,
                 {"op": op, "batch_id": batch_id,
                  "tid": threading.get_ident()},
-            )
+            ), knobs
         except ConcurrentWriteError:
             if time.monotonic() > deadline:
                 raise
@@ -1085,7 +1117,7 @@ def _adopt_staged(
     return adopted
 
 
-def _gc_dead_units(index_dir: str, meta: dict) -> None:
+def _gc_dead_units(index_dir: str, meta: dict, grace: float) -> None:
     """Post-commit sweep of DEAD batch units: subdirectories of the
     manifest's tables that the just-committed manifest does not
     reference and whose slot number is at or below the committed mver
@@ -1097,28 +1129,25 @@ def _gc_dead_units(index_dir: str, meta: dict) -> None:
     Best-effort — a failed removal is retried by the next committer.
 
     Reader note: an in-flight scan planned against a SUPERSEDED
-    manifest loses its files here — the residual reader/writer
-    window, now post-commit-only and entered only by operations that
+    manifest loses its files here — the residual reader/writer window,
+    now post-commit-only and entered only by operations that
     UNREFERENCE previously-served units: compaction and batch
     retraction (r13 review #5 — appends never unreference, so pure
     append churn can't break a reader). GRACE PERIOD (r14, ADVICE r13
-    #4): with ``BDFP_INDEX_GC_GRACE_S`` > 0 a dead unit is first
-    TOMBSTONED — a ``_DEAD`` marker file written inside it (readers
-    resolve paths from the manifest and Spark ignores ``_``-prefixed
-    files, so the marker is invisible; the unit's data files stay
-    byte-intact) — and removed only by a later sweep once the marker
-    is older than the grace window, so a scan planned against the
+    #4): with ``grace`` (``BDFP_INDEX_GC_GRACE_S``, parsed by
+    _writer_txn) > 0 a dead unit is first TOMBSTONED — a ``_DEAD``
+    marker file written inside it (readers resolve paths from the
+    manifest and Spark ignores ``_``-prefixed files, so the marker is
+    invisible; the unit's data files stay byte-intact) — and removed
+    only by a later sweep once the marker is older than the grace
+    window, so a scan planned against the
     pre-compaction/pre-retraction manifest keeps its files for at
     least the window. The marker, not the unit's own mtime, keys the
     clock: a unit's content mtime records when it was WRITTEN, which
     for a superseded compaction input can be arbitrarily far in the
-    past — exactly the unit an in-flight reader is scanning. Default
-    0 (immediate removal, the r13 behavior) — a query-volume
-    deployment sets the window to its scan-latency ceiling."""
-    try:
-        grace = float(os.environ.get("BDFP_INDEX_GC_GRACE_S", "0"))
-    except ValueError:
-        grace = 0.0
+    past — exactly the unit an in-flight reader is scanning. Default 0
+    (immediate removal, the r13 behavior) — a query-volume deployment
+    sets the window to its scan-latency ceiling."""
     committed = meta["mver"]
     for t in meta["tables"]:
         live = set(meta["units"][t])
@@ -1198,6 +1227,7 @@ def _publish(
     stage: str,
     tables: list[str],
     new: dict,
+    grace: float,
 ) -> None:
     """THE commit step of every maintenance writer (append,
     compact_index, minor_compact_index, retract_batch): ``meta`` is the
@@ -1286,7 +1316,7 @@ def _publish(
     if committed is not None:
         # the units a compaction or retraction unreferenced die here —
         # the one reader-visible boundary (see _gc_dead_units)
-        _gc_dead_units(index_dir, committed)
+        _gc_dead_units(index_dir, committed, grace)
 
 
 def _finish_append(
@@ -1297,6 +1327,7 @@ def _finish_append(
     mver: int,
     batch_id: int | None,
     n_delta: int,
+    knobs: _Knobs,
     sizes_delta: dict | None = None,
 ) -> str:
     """An append's manifest edit, published by :func:`_publish`: the
@@ -1349,7 +1380,7 @@ def _finish_append(
         cell_sizes=snap,
         units=units,
         batches=batches,
-    ))
+    ), knobs.gc_grace_s)
     # compaction-cadence bound (r14, VERDICT r13 #3): with the O(1)
     # manifest the remaining lazy-compaction tax is FILE-COUNT growth
     # — every serve plans one unit dir per uncompacted batch
@@ -1357,9 +1388,7 @@ def _finish_append(
     # env-tunable threshold so a streaming deployment that forgot a
     # compaction schedule hears about it before the scan-planning cost
     # dominates.
-    warn_n = int(
-        os.environ.get("BDFP_INDEX_COMPACT_WARN_BATCHES", "512") or 0
-    )
+    warn_n = knobs.compact_warn_batches
     if warn_n and len(batches) >= warn_n:
         warnings.warn(
             f"index at {index_dir!r} has {len(batches)} uncompacted "
@@ -1627,7 +1656,7 @@ def _ivfpq_append(index_dir, meta, delta, id_col, vec_col):
     # centroid BroadcastExchange per batch.
     p = meta["params"]
     assigned = topn_centroids_arrow(
-        spread_scaled(
+        pin(
             delta.select(
                 F.col(id_col).alias("neighbor_id"),
                 F.col(vec_col).alias("_v"),
@@ -1807,7 +1836,7 @@ def _append(
     txn = _writer_txn(index_dir, batch_id, "append")
     if txn is None:
         return index_dir  # redelivered batch: idempotent skip
-    meta, mver = txn
+    meta, mver, knobs = txn
     spec = _KINDS[kind]
     tables = list(_APPEND_TABLES[kind])
     stage = None
@@ -1836,7 +1865,7 @@ def _append(
             shutil.rmtree(stage, ignore_errors=True)
         raise
     return _finish_append(
-        index_dir, stage, tables, meta, mver, batch_id, n_delta,
+        index_dir, stage, tables, meta, mver, batch_id, n_delta, knobs,
         sizes_delta=sizes_delta,
     )
 
@@ -2005,18 +2034,18 @@ def _compaction(
     tables) -> {table: [unit dirs]}``), and rewrite each table's picks
     into ``stage/<table>`` with operators/layout.compact's
     metadata-only sizing — per-table rewrites touch disjoint units, so
-    they run concurrently (r14). Returns (manifest, mver, stage,
+    they run concurrently (r14). Returns (manifest, mver, knobs, stage,
     picks, {table: (files_before, files_after)}); ``stage`` is None
     when nothing needs rewriting, and the claim is then released
     without a commit. (An unknown kind fails in _manifest's schema
     check, before any claim.)"""
-    meta, mver = _writer_txn(index_dir, None, op)
+    meta, mver, knobs = _writer_txn(index_dir, None, op)
     stage = None
     try:
         picks = pick(meta, _APPEND_TABLES[meta["kind"]])
         if not picks:
             _end_claim(index_dir, mver, release=True)
-            return meta, mver, None, picks, {}
+            return meta, mver, knobs, None, picks, {}
         before = {
             t: sum(len(_parquet_files(p)) for p in srcs)
             for t, srcs in picks.items()
@@ -2034,7 +2063,7 @@ def _compaction(
             shutil.rmtree(stage, ignore_errors=True)
         raise
     stats = {t: (before[t], a) for t, a in zip(picks, afters)}
-    return meta, mver, stage, picks, stats
+    return meta, mver, knobs, stage, picks, stats
 
 
 def compact_index(
@@ -2071,7 +2100,7 @@ def compact_index(
                 picks[t] = srcs
         return picks
 
-    meta, mver, stage, picks, stats = _compaction(
+    meta, mver, knobs, stage, picks, stats = _compaction(
         spark, index_dir, "compact", target_bytes, pick
     )
     if stage is None:
@@ -2082,7 +2111,7 @@ def compact_index(
         units[t] = [unit]  # the rewrite REPLACES the table's unit set
     _publish(index_dir, meta, mver, stage, list(picks), dict(
         meta, units=units, batches={}
-    ))
+    ), knobs.gc_grace_s)
     return stats
 
 
@@ -2178,7 +2207,7 @@ def minor_compact_index(
                 picks[t] = srcs
         return picks
 
-    meta, mver, stage, picks, stats = _compaction(
+    meta, mver, knobs, stage, picks, stats = _compaction(
         spark, index_dir, "minor_compact", target_bytes, pick
     )
     if stage is None:
@@ -2199,7 +2228,7 @@ def minor_compact_index(
     }
     _publish(index_dir, meta, mver, stage, list(picks), dict(
         meta, units=units, batches=batches
-    ))
+    ), knobs.gc_grace_s)
     return {"tables": stats, "folded": tiers["folded"], "kept": tiers["kept"]}
 
 
@@ -2242,7 +2271,7 @@ def retract_batch(index_dir: str, batch_id) -> str:
     if batch_id is None:
         raise TypeError("retract_batch requires an explicit batch_id")
     batch_id = _norm_batch_id(batch_id)  # int/str "3" name ONE batch
-    meta, mver = _writer_txn(index_dir, None, "retract")
+    meta, mver, knobs = _writer_txn(index_dir, None, "retract")
     bkey = str(batch_id)
     try:
         batches = dict(meta.get("batches") or {})
@@ -2282,7 +2311,7 @@ def retract_batch(index_dir: str, batch_id) -> str:
         units=units,
         batches=batches,
         retracted=retracted,
-    ))
+    ), knobs.gc_grace_s)
     return index_dir
 
 

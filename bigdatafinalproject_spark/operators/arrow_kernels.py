@@ -57,6 +57,7 @@ from pathlib import Path
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -880,6 +881,84 @@ def pair_cosine_arrow(
             )
 
     return src.mapInArrow(kernel, schema)
+
+
+# The most candidates one MMR query may hold: the walk keeps the
+# query's (n, n) int64 similarity matrix in one Python worker, 8·n²
+# bytes — 8 MB at 1,024, far above the registered n_candidates=12. A
+# bigger group is a candidate tier that lost its per-query bound.
+_MMR_GROUP_CAP = 1_024
+
+
+def mmr_walk_arrow(
+    df: DataFrame, k: int, lam_num: int, pen_num: int, scale: int
+) -> DataFrame:
+    """The MMR greedy walk (``operators.ann.mmr_from_candidates``) as
+    one grouped kernel over (query_id, cid, rel_q, vector): each
+    query's candidates arrive together and are sorted by cid. The pair
+    cosines are ``seq_dot(V, V) / (n_a * n_b)`` over :func:`seq_norm`
+    norms — the same IEEE ops in the same order as
+    :func:`pair_cosine_arrow` — quantized to
+    ``sim_q = floor(cos * scale)``. The walk is exact int64
+    arithmetic: pick 1 is the max ``rel_q`` (``mmr_q = lam_num *
+    rel_q``); each later pick maximizes ``lam_num * rel_q - pen_num *
+    pen``, where ``pen`` is the candidate's max ``sim_q`` against the
+    picks so far. Every tie goes to the lowest cid, and the walk stops
+    at ``k`` picks or when the candidates run out.
+
+    A ``ValueError`` naming the query id is raised for a group above
+    ``_MMR_GROUP_CAP``, a duplicate cid, a candidate without a vector
+    (naming the cid) and a zero vector (:func:`seq_norm`). Returns
+    (query_id, pick, vec_id, rel_q, mmr_q)."""
+    _ensure_worker_imports(df)
+    cap = _MMR_GROUP_CAP
+
+    def kernel(t: pa.Table) -> pa.Table:
+        qid = t.column("query_id")[0].as_py()
+        op = f"mmr_walk_arrow: query {qid}"
+        if t.num_rows > cap:
+            raise ValueError(f"{op} has {t.num_rows} candidates (cap {cap})")
+        t = t.take(pc.sort_indices(t, [("cid", "ascending")]))
+        cids = t.column("cid").to_numpy()
+        dup = np.unique(cids[1:][cids[1:] == cids[:-1]]).tolist()
+        if dup:
+            raise ValueError(f"{op}: duplicate cid(s) {dup}")
+        if t.column("vector").null_count:
+            lost = cids[t.column("vector").is_null().to_numpy()].tolist()
+            raise ValueError(f"{op}: cid(s) {lost} have no corpus vector")
+        V = _list_to_mat(t.column("vector"))
+        nrm = seq_norm(V, op, cids)
+        cos = seq_dot(V, V) / (nrm[:, None] * nrm[None, :])
+        sim = np.floor(cos * scale).astype(np.int64)
+        rel = t.column("rel_q").to_numpy()
+        gain = lam_num * rel
+        j = int(np.argmax(rel))  # first max: the lowest cid
+        picks, mmr, pen = [j], [gain[j]], sim[:, j].copy()
+        free = np.ones(len(cids), dtype=bool)
+        for _ in range(1, min(k, len(cids))):
+            free[j] = False
+            cand = np.flatnonzero(free)
+            score = gain[cand] - pen_num * pen[cand]
+            best = int(np.argmax(score))
+            j = int(cand[best])
+            picks.append(j)
+            mmr.append(score[best])
+            np.maximum(pen, sim[:, j], out=pen)
+        n = len(picks)
+        return pa.table([
+            pa.array(np.full(n, qid)), pa.array(np.arange(1, n + 1, dtype=np.int32)),
+            pa.array(cids[picks]), pa.array(rel[picks]), pa.array(np.array(mmr)),
+        ], ["query_id", "pick", "vec_id", "rel_q", "mmr_q"])
+
+    return (
+        df.select("query_id", "cid", "rel_q", "vector")
+        .groupBy("query_id")
+        .applyInArrow(
+            kernel,
+            "query_id bigint, pick int, vec_id bigint, rel_q bigint, "
+            "mmr_q bigint",
+        )
+    )
 
 
 def _local_topn(

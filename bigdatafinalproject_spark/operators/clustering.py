@@ -83,7 +83,6 @@ def kmeans_centroids(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     group_cols: tuple[str, ...] = (),
-    parallelism: int | None = None,
 ) -> DataFrame:
     """Train centroids with ``rounds`` deterministic Lloyd updates from
     an explicit ``init`` frame of (group_cols..., cid, centroid) — the
@@ -98,20 +97,19 @@ def kmeans_centroids(
     the next round (both engines GROUP BY only non-empty cells).
     Returns (group_cols..., cid, centroid<array<double>>).
 
-    The training corpus is REPARTITIONED across defaultParallelism
-    first (r11): the N×C assign pass is map-side work that inherits
-    the input partitioning, and a skewed source layout (one fat
-    parquet row group) serializes the trainer onto one task per round
-    — at sf10 with the scheduled C=512 that straggler was an hour of
-    single-core Lloyd. Unconditional repartition rather than the
+    The training corpus is REPARTITIONED by id across defaultParallelism
+    first (``layout.pin``, r11): the N×C assign pass is map-side work
+    that inherits the input partitioning, and a skewed source layout
+    (one fat parquet row group) serializes the trainer onto one task per
+    round — at sf10 with the scheduled C=512 that straggler was an hour
+    of single-core Lloyd. Unconditional repartition rather than the
     probing ``spread`` (r11 review #2): ``df.rdd.getNumPartitions()``
-    under AQE eagerly materializes any upstream exchanges as a
-    throwaway job (the PQ codebook trainer's subvec frame carries a
-    window + join), while an adjacent redundant repartition is
-    collapsed by Catalyst's CollapseRepartition for free. Content-
-    neutral by design: the decimal-mean updates are order-independent
-    sums (module doc), so trained centroids are bit-identical under
-    any partitioning.
+    under AQE eagerly materializes any upstream exchanges as a throwaway
+    job (the PQ codebook trainer's subvec frame carries a window +
+    join), while an adjacent redundant repartition is collapsed by
+    Catalyst's CollapseRepartition for free. Content-neutral by design:
+    the decimal-mean updates are order-independent sums (module doc), so
+    trained centroids are bit-identical under any partitioning.
 
     Optimization r14: the Lloyd loop is driver-stepped — each round is
     ONE Spark job (Arrow argmin kernel carrying the vector through ->
@@ -137,20 +135,10 @@ def kmeans_centroids(
             "train on the batch corpus and freeze the centroids"
         )
 
-    from bigdatafinalproject_spark.operators.layout import (
-        scaled_parallelism,
-    )
+    from bigdatafinalproject_spark.operators.layout import pin
 
     spark = emb.sparkSession
-    # r14: the round job's partition count follows the DATA (plan-stats
-    # bytes / 4 MB, clamped to the core count) instead of a core-count
-    # constant — at sf0.1 the whole round fits one task cheaper than 32
-    # near-empty ones, at sf30 it sizes back up. ``parallelism`` lets
-    # callers with a checkpoint-rooted training frame (no usable stats)
-    # pass the corpus-derived figure down.
-    emb = emb.repartition(
-        parallelism or scaled_parallelism(emb), F.col(id_col)
-    )
+    emb = pin(emb, id_col)
     groups = _centroid_groups(init, group_cols, "clustering.kmeans_centroids")
     for _ in range(rounds):
         assigned = argmin_centroids_arrow(

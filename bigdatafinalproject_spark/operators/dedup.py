@@ -36,7 +36,7 @@ from bigdatafinalproject_spark.operators.arrow_kernels import (
     simhash_arrow,
 )
 from bigdatafinalproject_spark.operators.barrier import materialize_barrier
-from bigdatafinalproject_spark.operators.layout import spread, spread_scaled
+from bigdatafinalproject_spark.operators.layout import pin, spread
 from bigdatafinalproject_spark.operators.text import norm_text, tokens
 
 _H15 = 15  # hex digits -> 60-bit hash
@@ -53,9 +53,9 @@ def _hash64(col: Column, seed: int | Column = 0) -> Column:
 
 def _normalized(df: DataFrame, text_col: str, id_col: str, n: int) -> DataFrame:
     """(id, _t) normalized text of the docs with at least ``n`` chars,
-    spread over the plan-stats partition count — the shingle and
-    MinHash kernels' input."""
-    return spread_scaled(
+    pinned by id across defaultParallelism — the shingle and MinHash
+    kernels' input."""
+    return pin(
         df.select(F.col(id_col), norm_text(F.col(text_col)).alias("_t")).filter(
             F.length("_t") >= n
         ),
@@ -340,7 +340,7 @@ def simhash_signatures(
     # which computes the integer math of the exploded (token, bit)
     # aggregation pipeline per doc without generating the
     # (#token-pairs x bits) exploded rows at all.
-    d = spread_scaled(
+    d = pin(
         df.select(F.col(id_col), norm_text(F.col(text_col)).alias("_t")),
         id_col,
     )

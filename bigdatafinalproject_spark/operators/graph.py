@@ -37,6 +37,13 @@ TELEPORT = 150_000_000_000  # 0.15 * SCALE
 DAMP_NUM, DAMP_DEN = 17, 20  # 0.85 as an exact rational
 
 
+# The most distinct parts one order may hold in copurchase_edges. Its
+# in-row explode emits n² pairs per order, so one hot order becomes one
+# task's n² rows; TPC-H orders hold at most 7 items, and 1,000 keeps a
+# single order at a million pairs.
+_ORDER_SET_CAP = 1_000
+
+
 def copurchase_edges(lineitem: DataFrame) -> DataFrame:
     """Undirected (both directions materialized) distinct co-purchase
     edges: parts appearing in the same order. Per-order item counts are
@@ -49,9 +56,20 @@ def copurchase_edges(lineitem: DataFrame) -> DataFrame:
     pairs are generated within the row (bounded: TPC-H orders hold
     <= 7 lineitems), and the final distinct is unchanged. Plan: 2
     exchanges (groupBy orderkey, distinct) instead of 4 (distinct
-    items, two join re-shuffles, distinct) and no SortMergeJoin."""
+    items, two join re-shuffles, distinct) and no SortMergeJoin.
+
+    An order whose part set exceeds ``_ORDER_SET_CAP`` fails the query
+    with an error naming its ``l_orderkey``."""
     sets = lineitem.groupBy("l_orderkey").agg(
         F.collect_set("l_partkey").alias("_ps")
+    )
+    hot = F.raise_error(F.format_string(
+        "copurchase_edges: order l_orderkey=%s has more than "
+        f"{_ORDER_SET_CAP} distinct parts", "l_orderkey",
+    ))
+    sets = sets.select(
+        F.when(F.size("_ps") > _ORDER_SET_CAP, hot).otherwise(F.col("_ps"))
+        .alias("_ps")
     )
     return (
         sets.select(F.explode("_ps").alias("src"), "_ps")

@@ -1,12 +1,19 @@
 """Partition-layout helpers.
 
+``pin``: hash-partition a frame by key across ``defaultParallelism``
+with an explicit count, so AQE cannot byte-coalesce a row- or
+compute-heavy input (an Arrow kernel's input, pair keys) down to a
+handful of tasks. It never probes the input, so it is safe on
+shuffle-fed frames.
+
 ``spread``: compressed text/embedding parquet under-splits — a
 byte-sized scan partition can hold a compute-heavy operator's worth of
 rows (locally a whole table is often ONE split, so one task does every
 shingle/dot-product). When the input has fewer partitions than the
 cluster has cores, hash-spread it by key first; when the input is
-already wide (the 100 TB case) this is a no-op, so operators can call
-it unconditionally.
+already wide (the 100 TB case) this is a no-op. Its partition-count
+probe runs shuffle-rooted inputs as a throwaway job under AQE, so new
+callers use ``pin``.
 """
 
 from __future__ import annotations
@@ -29,65 +36,14 @@ def pin(df: DataFrame, *key_cols: str | Column) -> DataFrame:
     AQE's byte-based coalescing — which otherwise shrinks byte-light
     but row- or compute-heavy inputs (compressed facts, pair keys) to
     a handful of tasks. Unlike ``spread`` this works on shuffle-fed
-    frames, where the pre-AQE partition count is useless as a signal.
+    frames, where the pre-AQE partition count is useless as a signal,
+    and it runs no job. The count is the core count, not a data-sized
+    one: the consumers are partition-invariant, so only speed depends
+    on it.
     """
     sc = df.sparkSession.sparkContext
     cols = [F.col(c) if isinstance(c, str) else c for c in key_cols]
     return df.repartition(sc.defaultParallelism, *cols)
-
-
-def plan_size_bytes(df: DataFrame) -> int | None:
-    """Catalyst's size estimate for ``df``'s optimized plan — file
-    bytes for scan-rooted frames, propagated estimates above. No job
-    is run (this is the same statistic the broadcast planner reads).
-    Returns None when the estimate is absent or the huge
-    unknown-source default (checkpoint/RDD-rooted plans)."""
-    try:
-        n = int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes().toString()
-        )
-    except Exception:
-        return None
-    # LogicalRDD / unknown sources report spark.sql.defaultSizeInBytes
-    # (Long.MaxValue-ish) — treat anything absurd as unknown
-    if n <= 0 or n > (1 << 50):
-        return None
-    return n
-
-
-_BYTES_PER_TASK = 4 << 20
-
-
-def scaled_parallelism(df: DataFrame, bytes_per_task: int = _BYTES_PER_TASK) -> int:
-    """Data-derived partition count for a compute stage over ``df``:
-    ceil(estimated bytes / ``bytes_per_task``) clamped to
-    [1, defaultParallelism] — the optimization-guide rule that
-    partitioning should follow input size, not a core-count constant.
-    Falls back to defaultParallelism (today's behavior) when the plan
-    carries no usable size estimate."""
-    sc = df.sparkSession.sparkContext
-    n = plan_size_bytes(df)
-    if n is None:
-        return sc.defaultParallelism
-    return max(1, min(sc.defaultParallelism, -(-n // bytes_per_task)))
-
-
-def spread_scaled(
-    df: DataFrame, *key_cols: str | Column, parallelism: int | None = None
-) -> DataFrame:
-    """``spread`` for Arrow-kernel inputs (r14): repartition by key to
-    a DATA-SIZED partition count instead of defaultParallelism, and
-    without ``spread``'s ``rdd.getNumPartitions`` probe (which under
-    AQE materializes shuffle-rooted subtrees as a throwaway job). At
-    sf0.1 a 32-way respread of a 2,000-row frame costs more than the
-    kernel pass it feeds; at sf30 the same call sizes up to the core
-    count. Content-neutral: every consumer is partition-invariant by
-    design. ``parallelism`` overrides the estimate (callers that know
-    the corpus pass its scan-rooted figure down to checkpoint-rooted
-    descendants whose own estimate is unusable)."""
-    target = parallelism or scaled_parallelism(df)
-    cols = [F.col(c) if isinstance(c, str) else c for c in key_cols]
-    return df.repartition(target, *cols)
 
 
 def spread(df: DataFrame, *key_cols: str | Column) -> DataFrame:

@@ -339,9 +339,9 @@ def ann_mmr_diversified(spark: SparkSession, sf_dir: str) -> DataFrame:
     the greedy trajectory is EXACT and engine-portable — no float-ulp
     divergence across the sequential argmax). The oracle replays the
     whole greedy walk with a recursive CTE over the same quantized
-    scores. Scale: the k-loop only ever touches per-query bounded
-    candidate frames; the corpus-sized work stays in the candidate
-    tier. NOTE the registered query's growth shape (BENCH_SF1 sf10):
+    scores. Scale: the walk runs in one grouped Arrow kernel per query
+    over that query's bounded candidate set; the corpus-sized work
+    stays in the candidate tier. NOTE the registered query's growth shape (BENCH_SF1 sf10):
     the %50 panel grows with N AND the candidate tier here is exact
     cosine (per-query cost ~N), so the QUERY is ~N^2/50 by
     construction — the same shape documented for ann_lsh_topk. The

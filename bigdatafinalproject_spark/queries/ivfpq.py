@@ -674,10 +674,10 @@ def ann_mmr_from_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     (same fingerprint as ann_ivfpq_index_search — the build is paid
     once per corpus version per host; the serve scans ~16-byte codes
     of the scheduled posting mass), then the integer-quantized MMR
-    greedy walk (operators/ann.mmr_from_candidates) picks 4 per query
-    over that BOUNDED frame. Every stage after the index serve touches
-    per-query kB frames, so the query's scale shape is the index
-    serve's — sub-linear scan growth under the mass schedule — where
+    greedy walk (operators/ann.mmr_from_candidates: one grouped Arrow
+    kernel per query) picks 4 per query over that BOUNDED candidate
+    set. Every stage after the index serve touches per-query kB
+    frames, so the query's scale shape is the index serve's — sub-linear scan growth under the mass schedule — where
     the exact-cosine-fed twin is ~N²/50 by construction (the scale
     artifact's documented max exponent). rel_q is the exact rerank
     cosine floor-quantized at 2^30, so serve and walk are both

@@ -62,6 +62,22 @@ def _read_sizes(spark, cpaths):
     )
 
 
+def _writer_state(idx):
+    """The manifest bytes and the writer-log, fence and stage listings
+    of ``idx`` — what a refused writer verb must leave unchanged."""
+
+    def listing(*parts):
+        d = os.path.join(idx, *parts)
+        return sorted(os.listdir(d)) if os.path.isdir(d) else []
+
+    return (
+        open(os.path.join(idx, "_meta.json")).read(),
+        listing("_applog"),
+        listing("_fence"),
+        [n for n in os.listdir(idx) if ".tmp." in n],
+    )
+
+
 def _assert_manifest_refused(spark, idx, serve, append, match):
     """A manifest that breaks the schema is refused LOUDLY by the serve
     (``serve()``) and by every writer verb — append (``append()``),
@@ -71,13 +87,7 @@ def _assert_manifest_refused(spark, idx, serve, append, match):
     stay as forged."""
     import bigdatafinalproject_spark.operators.ann_index as annidx
 
-    def listing(*parts):
-        d = os.path.join(idx, *parts)
-        return sorted(os.listdir(d)) if os.path.isdir(d) else []
-
-    mpath = os.path.join(idx, "_meta.json")
-    raw = open(mpath).read()
-    log, fence = listing("_applog"), listing("_fence")
+    before = _writer_state(idx)
     verbs = (
         serve,
         append,
@@ -88,9 +98,7 @@ def _assert_manifest_refused(spark, idx, serve, append, match):
     for verb in verbs:
         with pytest.raises(ValueError, match=rf"_meta\.json: {match}"):
             verb()
-    assert open(mpath).read() == raw
-    assert listing("_applog") == log and listing("_fence") == fence
-    assert not [n for n in os.listdir(idx) if ".tmp." in n]
+    assert _writer_state(idx) == before and not before[3]
 
 
 def test_index_build_once_serve_identical_and_invalidate(spark, tmp_path):
@@ -1296,11 +1304,11 @@ def test_swept_stage_raises_instead_of_empty_commit(spark, tmp_path):
 
     # simulate the zombie: claim a slot, point at a stage dir the
     # contender's sweep already removed
-    meta, mver = _writer_txn(idx, 0, "append")
+    meta, mver, knobs = _writer_txn(idx, 0, "append")
     with pytest.raises(ConcurrentWriteError, match="swept"):
         _finish_append(
             idx, _os.path.join(idx, f"_stage.tmp.{_os.getpid()}.{mver}"),
-            ["postings", "cell_sizes"], meta, mver, 0, 1,
+            ["postings", "cell_sizes"], meta, mver, 0, 1, knobs,
         )
     # the live manifest was never touched: the index still serves
     meta_after = json.load(open(_os.path.join(idx, "_meta.json")))
@@ -1345,7 +1353,7 @@ def test_fence_blocks_both_alive_zombie_before_invalidate(spark, tmp_path):
     meta_before = json.load(open(_os.path.join(idx, "_meta.json")))
 
     # the zombie: claims slot mver, stages real data, then stalls
-    meta, mver = _writer_txn(idx, 0, "append")
+    meta, mver, knobs = _writer_txn(idx, 0, "append")
     stage = _append_stage(idx, mver)
     _os.makedirs(_os.path.join(stage, "postings"))
     open(_os.path.join(stage, "postings", "part-0.parquet"), "w").close()
@@ -1356,7 +1364,7 @@ def test_fence_blocks_both_alive_zombie_before_invalidate(spark, tmp_path):
 
     with pytest.raises(ConcurrentWriteError, match="fence"):
         _finish_append(
-            idx, stage, ["postings"], meta, mver, 0, 1,
+            idx, stage, ["postings"], meta, mver, 0, 1, knobs,
         )
     # the live manifest was never touched and the stage is gone
     meta_after = json.load(open(_os.path.join(idx, "_meta.json")))
@@ -1593,7 +1601,7 @@ def test_lease_paused_writer_race_lands_batches_exactly_once(
     state = {"armed": True}
 
     def pausing_finish(index_dir, stage, tables, meta, mver, batch_id,
-                       n_delta, sizes_delta=None):
+                       n_delta, knobs, sizes_delta=None):
         if state["armed"]:
             state["armed"] = False
             # SIGSTOP analogue: the WHOLE process stalls, so renewal
@@ -1610,7 +1618,7 @@ def test_lease_paused_writer_race_lands_batches_exactly_once(
             paused.set()
             assert resume.wait(timeout=120)
         return real_finish(index_dir, stage, tables, meta, mver,
-                           batch_id, n_delta, sizes_delta=sizes_delta)
+                           batch_id, n_delta, knobs, sizes_delta=sizes_delta)
 
     monkeypatch.setattr(annidx, "_finish_append", pausing_finish)
 
@@ -1676,7 +1684,7 @@ def test_released_claim_removes_fence_marker_slot_reusable(
 
     # a writer claims the slot (fence epoch advances), then fails
     # pre-invalidate and releases
-    meta, mver = _writer_txn(idx, None, "append")
+    meta, mver, _ = _writer_txn(idx, None, "append")
     assert _fence_epoch(idx) == mver
     _end_claim(idx, mver, release=True)
     # marker gone with the claim; the permanent e0 FLOOR remains, so
@@ -1778,7 +1786,7 @@ def test_live_higher_fence_marker_is_not_swept(spark, tmp_path):
 
     # the lower-slot claimant keeps the live marker and is fenced out
     # at its own check (simulated via _writer_txn + _check_fence path)
-    meta, mver = _writer_txn(idx, None, "append")
+    meta, mver, _ = _writer_txn(idx, None, "append")
     assert mver == 1
     assert _fence_epoch(idx) == 2  # live marker survived _write_fence
     from bigdatafinalproject_spark.operators.ann_index import _check_fence
@@ -1815,7 +1823,7 @@ def test_snapshot_recheck_aborts_on_interleaved_commit(spark, tmp_path):
     )
     ensure_ivf_index(spark, base, idx, fp, **_PARAMS)
 
-    meta, mver = _writer_txn(idx, 7, "append")
+    meta, mver, knobs = _writer_txn(idx, 7, "append")
     stage = _append_stage(idx, mver)
     _os.makedirs(_os.path.join(stage, "postings"))
     open(_os.path.join(stage, "postings", "part-0.parquet"), "w").close()
@@ -1835,7 +1843,7 @@ def test_snapshot_recheck_aborts_on_interleaved_commit(spark, tmp_path):
     ))
 
     with pytest.raises(ConcurrentWriteError, match="advanced"):
-        _finish_append(idx, stage, ["postings"], meta, mver, 7, 1)
+        _finish_append(idx, stage, ["postings"], meta, mver, 7, 1, knobs)
     # the interleaved commit SURVIVES untouched (batch 99 + counters)
     m = json.load(open(_os.path.join(idx, "_meta.json")))
     assert m["applied_batches"] == [99]
@@ -2142,7 +2150,7 @@ def test_zombie_adopted_unit_is_dead_namespace(spark, tmp_path):
     # the zombie: claims, stages GARBAGE (a non-parquet payload that
     # would crash any scan that touched it), and renames it into the
     # live tree without ever committing
-    meta, mver = _writer_txn(idx, None, "append")
+    meta, mver, _ = _writer_txn(idx, None, "append")
     stage = _append_stage(idx, mver)
     _os.makedirs(_os.path.join(stage, "postings"))
     with open(
@@ -2672,7 +2680,7 @@ def test_gc_grace_tombstones_then_reaps_dead_units(
         assert spark.read.parquet(d).count() > 0  # _DEAD is invisible
 
     # a second sweep inside the window still keeps them
-    _gc_dead_units(idx, _manifest(idx))
+    _gc_dead_units(idx, _manifest(idx), 3600.0)
     for t, u in dead_units.items():
         assert _os.path.isdir(_os.path.join(idx, t, u))
 
@@ -2680,7 +2688,7 @@ def test_gc_grace_tombstones_then_reaps_dead_units(
     past = (1, 1)
     for t, u in dead_units.items():
         _os.utime(_os.path.join(idx, t, u, "_DEAD"), past)
-    _gc_dead_units(idx, _manifest(idx))
+    _gc_dead_units(idx, _manifest(idx), 3600.0)
     for t, u in dead_units.items():
         assert not _os.path.isdir(_os.path.join(idx, t, u)), (t, u)
 
@@ -3175,3 +3183,54 @@ def test_compact_index_noop_on_compacted_index(spark, tmp_path):
     m = json.load(open(_os.path.join(idx, "_meta.json")))
     assert m["applied_batches"] == [0, 1]
     assert m["mver"] == json.loads(before[0])["mver"] + 1
+
+
+def test_malformed_compact_warn_batches_refuses_append_before_claim(
+    spark, tmp_path, monkeypatch
+):
+    """A malformed BDFP_INDEX_COMPACT_WARN_BATCHES is refused when the
+    append's transaction opens, naming the variable and the value:
+    the batch does not land, and no claim, fence marker or stage is
+    left behind (parsed after the commit, a landed append raised)."""
+    import json
+
+    from bigdatafinalproject_spark.operators.ann_index import pq_index_append
+
+    emb, base, delta, idx = _build_pq_base(spark, tmp_path, "pq_warnknob")
+    before = _writer_state(idx)
+    monkeypatch.setenv("BDFP_INDEX_COMPACT_WARN_BATCHES", "many")
+    with pytest.raises(
+        ValueError, match=r"BDFP_INDEX_COMPACT_WARN_BATCHES='many'"
+    ):
+        pq_index_append(spark, idx, delta, batch_id=0)
+    assert _writer_state(idx) == before
+    assert json.loads(before[0])["applied_batches"] == []
+
+
+def test_malformed_gc_grace_refuses_compaction_before_claim(
+    spark, tmp_path, monkeypatch
+):
+    """A malformed BDFP_INDEX_GC_GRACE_S is refused when compact_index
+    opens its transaction, naming the variable and the value, and no
+    unit is removed (it used to read as grace 0: immediate removal). A
+    negative grace is refused the same way."""
+    from bigdatafinalproject_spark.operators.ann_index import (
+        compact_index,
+        pq_index_append,
+    )
+
+    emb, base, delta, idx = _build_pq_base(spark, tmp_path, "pq_graceknob")
+    pq_index_append(spark, idx, delta, batch_id=0)
+    units = {
+        t: sorted(os.listdir(os.path.join(idx, t))) for t in ("codes", "norms")
+    }
+    before = _writer_state(idx)
+    for bad in ("1h", "-5"):
+        monkeypatch.setenv("BDFP_INDEX_GC_GRACE_S", bad)
+        with pytest.raises(
+            ValueError, match=rf"BDFP_INDEX_GC_GRACE_S='{bad}'"
+        ):
+            compact_index(spark, idx)
+        assert _writer_state(idx) == before
+        for t, us in units.items():
+            assert sorted(os.listdir(os.path.join(idx, t))) == us

@@ -724,3 +724,153 @@ def test_topk_query_collects_each_quantizer_panel_once(
     want = {"ann_ivf_topk": {"centroids"}, "ann_pq_topk": {"codebook"},
             "ann_ivfpq_topk": {"centroids", "codebook"}}[name]
     assert set(kinds) == want, quantizers
+
+
+# -- MMR walk ----------------------------------------------------------
+
+
+def _mmr_loop_fold(corpus, cand, k, lam_num=7, pen_num=3, scale=1 << 30):
+    """The reference fold: the MMR walk as k DataFrame steps — a
+    candidate-pair self-join scored by ``pair_cosine_arrow``, then per
+    pick an anti-join, a max-sim aggregate and a struct-max argmax over
+    (score, -cid), each step behind a barrier."""
+    from bigdatafinalproject_spark.operators.barrier import materialize_barrier
+
+    cand = materialize_barrier(cand)
+    en = corpus.select(F.col("vec_id").alias("_id"), F.col("embedding").alias("_v"))
+    pa_ = cand.select("query_id", F.col("cid").alias("a"))
+    pb_ = cand.select("query_id", F.col("cid").alias("b"))
+    sims = materialize_barrier(
+        AK.pair_cosine_arrow(
+            pa_.join(pb_, "query_id")
+            .filter(F.col("a") != F.col("b"))
+            .join(en.select(F.col("_id").alias("a"), F.col("_v").alias("_va")), "a")
+            .join(en.select(F.col("_id").alias("b"), F.col("_v").alias("_vb")), "b"),
+            ["query_id", "a", "b"], "_va", "_vb", "_cos",
+        ).select(
+            "query_id", "a", "b",
+            F.floor(F.col("_cos") * scale).cast("long").alias("sim_q"),
+        )
+    )
+    first = cand.groupBy("query_id").agg(
+        F.max(F.struct(F.col("rel_q"), (-F.col("cid")).alias("negid"))).alias("best")
+    )
+    sel_all = materialize_barrier(
+        first.select(
+            "query_id",
+            F.lit(1).cast("int").alias("pick"),
+            (-F.col("best.negid")).alias("cid"),
+            F.col("best.rel_q").alias("rel_q"),
+            (F.lit(lam_num) * F.col("best.rel_q")).alias("mmr_q"),
+        )
+    )
+    for step in range(2, k + 1):
+        rem = cand.join(
+            sel_all.select("query_id", "cid"), ["query_id", "cid"], "left_anti"
+        )
+        pen = (
+            sims.join(
+                sel_all.select("query_id", F.col("cid").alias("b")),
+                ["query_id", "b"],
+            )
+            .groupBy("query_id", F.col("a").alias("cid"))
+            .agg(F.max("sim_q").alias("p"))
+        )
+        best = (
+            rem.join(pen, ["query_id", "cid"])
+            .groupBy("query_id")
+            .agg(
+                F.max(
+                    F.struct(
+                        (
+                            F.lit(lam_num) * F.col("rel_q")
+                            - F.lit(pen_num) * F.col("p")
+                        ).alias("mmr_q"),
+                        (-F.col("cid")).alias("negid"),
+                        F.col("rel_q"),
+                    )
+                ).alias("best")
+            )
+        )
+        nxt = materialize_barrier(
+            best.select(
+                "query_id",
+                F.lit(step).cast("int").alias("pick"),
+                (-F.col("best.negid")).alias("cid"),
+                F.col("best.rel_q").alias("rel_q"),
+                F.col("best.mmr_q").alias("mmr_q"),
+            )
+        )
+        sel_all = sel_all.unionByName(nxt)
+    return sel_all.select(
+        "query_id", "pick", F.col("cid").alias("vec_id"), "rel_q", "mmr_q"
+    )
+
+
+def _mmr_cands(spark, rows):
+    return spark.createDataFrame(rows, "query_id bigint, cid bigint, rel_q bigint")
+
+
+def test_mmr_walk_matches_loop_fold(spark, rng):
+    """The grouped kernel reproduces the k-step walk pick for pick on
+    the cases that decide a greedy walk: equal rel_q at the top (pick
+    1's tie), distinct ids sharing a vector with equal rel_q (equal
+    mmr_q at every later step), a one-candidate query, and k at and
+    above the candidate count."""
+    from bigdatafinalproject_spark.operators.ann import mmr_from_candidates
+
+    emb = _corpus(spark, rng, n=120)  # ids 7j and 7j+1 share a vector
+    top = 1 << 30
+    rows = []
+    for q in range(6):
+        cids = rng.choice(120, size=12, replace=False)
+        rel = rng.integers(0, 4, size=12) * (top // 4)
+        rows += [(q, int(c), int(r)) for c, r in zip(cids, rel)]
+    # shared vectors with equal relevance: mmr ties after every pick
+    rows += [(6, c, top // 2) for c in (0, 1, 7, 8, 14, 15)]
+    rows += [(6, 30, top - 5), (6, 31, top - 5)]
+    rows += [(7, 42, 123)]  # one candidate
+    rows += [(8, 50, 10), (8, 51, 10), (8, 63, 9)]
+    cand = _mmr_cands(spark, rows)
+    assert cand.groupBy("query_id", "rel_q").count().filter("count > 1").count()
+    for k in (1, 4, 13):
+        got = mmr_from_candidates(emb, cand, k=k)
+        want = _mmr_loop_fold(emb, cand, k)
+        assert _sorted_rows(got) == _sorted_rows(want), k
+    picks = {r.query_id: r.pick for r in got.groupBy("query_id").agg(
+        F.max("pick").alias("pick")).collect()}
+    assert picks[6] == 8 and picks[7] == 1 and picks[8] == 3
+
+
+def test_mmr_walk_contract_errors_name_the_query(spark, rng):
+    """A candidate without a corpus vector (the loop silently dropped
+    it after pick 1), a duplicate cid, and a candidate set above
+    _MMR_GROUP_CAP each fail the query with a ValueError naming it."""
+    from bigdatafinalproject_spark.operators.ann import mmr_from_candidates
+
+    n = AK._MMR_GROUP_CAP + 1
+    emb = _corpus(spark, rng, n=n)
+    cases = [
+        ([(3, 1, 9), (3, 4, 8), (3, 999_999, 7)], r"query 3: cid\(s\) \[999999\] have no corpus vector"),
+        ([(4, 1, 9), (4, 2, 8), (4, 2, 7)], r"query 4: duplicate cid\(s\) \[2\]"),
+        ([(5, c, c) for c in range(n)], rf"query 5 has {n} candidates \(cap {n - 1}\)"),
+    ]
+    for rows, msg in cases:
+        with pytest.raises(Exception, match=msg):
+            mmr_from_candidates(emb, _mmr_cands(spark, rows)).collect()
+
+
+def test_mmr_queries_build_without_walk_jobs(spark):
+    """Building the two MMR queries runs only the candidate tier's
+    construction jobs (the query panel, the index serve's panels): the
+    walk itself is one lazy grouped kernel and runs no job while the
+    query is built. Counted on a warm second build."""
+    from bigdatafinalproject_spark import registry
+    from tests.conftest import SF_DIR
+
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    for name, cap in (("ann_mmr_diversified", 4), ("ann_mmr_from_index", 8)):
+        registry.QUERIES[name](spark, SF_DIR)
+        j0 = dag.nextJobId()
+        registry.QUERIES[name](spark, SF_DIR)
+        assert dag.nextJobId() - j0 <= cap, name

@@ -104,3 +104,26 @@ def test_pagerank_partition_invariant_under_skew(spark):
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "partial_sum" in plan, "hub-key sum must combine map-side"
+
+
+def test_copurchase_edges_refuses_a_hot_order(spark):
+    """One order with more distinct parts than the cap fails the edge
+    build with an error naming that order's l_orderkey — the in-row
+    explode would emit n² pairs from a single row. Orders at the cap
+    build normally."""
+    import pytest
+
+    from bigdatafinalproject_spark.operators.graph import (
+        _ORDER_SET_CAP,
+        copurchase_edges,
+    )
+
+    def lineitem(n_hot):
+        rows = [(1, 10), (1, 11), (2, 11), (2, 12)]
+        rows += [(77, 1000 + p) for p in range(n_hot)]
+        return spark.createDataFrame(rows, "l_orderkey bigint, l_partkey bigint")
+
+    n = _ORDER_SET_CAP
+    assert copurchase_edges(lineitem(n)).count() == 4 + n * (n - 1)
+    with pytest.raises(Exception, match="l_orderkey=77 has more than"):
+        copurchase_edges(lineitem(n + 1)).collect()
