@@ -6,6 +6,11 @@ scripts) — one place that knows where tables live and hands out
 DataFrames — but parquet-first, with temp views registered so the
 ``spark.sql`` entry point (reference: sample_users.py:21-29 raw
 sqlite3 SQL) shares the same Catalyst path.
+
+Every table read goes through ``sources.readers.read_parquet``, so only
+the first load of a table (per file state and schema confs) runs
+Spark's schema-inference job; building a query that loads tables
+already seen starts no Spark job for the loads.
 """
 
 from __future__ import annotations
@@ -13,6 +18,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+
+from bigdatafinalproject_spark.sources.readers import read_parquet
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -59,7 +66,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
     ensure_session_defaults(spark)
-    df = spark.read.parquet(table_path(sf_dir, name))
+    df = read_parquet(spark, table_path(sf_dir, name))
     if name == "events":
         # The testdata's physical type for ts has changed across
         # regenerations (TIMESTAMP(NANOS), then timestamp[us]); normalize

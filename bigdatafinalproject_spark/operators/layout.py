@@ -154,10 +154,11 @@ def compact(
 
     Why this is an operator and not "just a repartition": the output
     file COUNT must be computed from the INPUT's physical size, and at
-    100 TB nothing may pass through the driver — the size comes from
-    the file index Spark already built for the scan (kilobytes of
-    metadata), never from the data. ``n = clamp(input_bytes /
-    target_bytes)`` then:
+    100 TB nothing may pass through the driver — the size is the plan
+    statistic of the scan, which Spark sums from the file index it
+    already built to plan the read (file lengths it listed, kilobytes of
+    metadata), so sizing runs no job and reads no data. ``n =
+    clamp(input_bytes / target_bytes)`` then:
 
     - unsorted: ``repartition(n)`` — round-robin, every output file
       lands within ~1 row group of target size regardless of input
@@ -167,6 +168,10 @@ def compact(
       one shuffle, so each output file covers a disjoint key range
       (footer min/max prune like the z-order path, but 1-D).
 
+    The returned count is the output's file index, listed by a
+    schema-given read of ``dst_path`` (no inference job). Spark jobs per
+    call: the input's schema inference plus the write.
+
     Compaction is content-neutral by contract — the registry query
     aggregates the compacted copy against the ORIGINAL table's oracle
     to prove it.
@@ -174,32 +179,20 @@ def compact(
     from pyspark.sql import functions as F
     from pyspark.sql.utils import AnalysisException
 
-    # physical size via the binaryFile source: a DISTRIBUTED file
-    # listing that exposes (path, length) without reading content —
-    # works on any Hadoop filesystem (local/HDFS/S3), moves only
-    # metadata, and the content column is pruned by the projection
-    def _listing_bytes_files(path: str) -> tuple[int, int]:
-        row = (
-            spark.read.format("binaryFile")
-            .option("pathGlobFilter", "*.parquet")
-            .load(path)
-            .agg(F.sum("length").alias("b"), F.count(F.lit(1)).alias("f"))
-            .first()
-        )
-        return (int(row.b) if row.b is not None else 0, int(row.f))
-
     srcs = [src_path] if isinstance(src_path, str) else list(src_path)
-    # missing path and exists-but-empty both surface as the SAME
-    # ValueError — callers see one error type for "nothing to compact"
+    # missing path and exists-but-empty (schema inference finds no
+    # file) both surface as the SAME ValueError — callers see one error
+    # type for "nothing to compact"
     try:
         df = spark.read.parquet(*srcs)
-        input_bytes, input_files = _listing_bytes_files(srcs)
     except AnalysisException as e:
         raise ValueError(
             f"compact: no *.parquet files under {src_path!r}"
         ) from e
-    if input_files == 0:
-        raise ValueError(f"compact: no *.parquet files under {src_path!r}")
+    # py4j hands the Scala BigInt back as a Python int
+    input_bytes = (
+        df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    )
     n = max(1, -(-input_bytes // target_bytes))
     if sort_col is None:
         out = df.repartition(n)
@@ -208,6 +201,5 @@ def compact(
             sort_col
         )
     out.write.mode("overwrite").parquet(dst_path)
-    # count output files with the SAME distributed metadata listing as
-    # the input sizing — filesystem-agnostic, unlike a local glob
-    return _listing_bytes_files(dst_path)[1]
+    written = spark.read.schema(df.schema).parquet(dst_path).inputFiles()
+    return sum(f.endswith(".parquet") for f in written)

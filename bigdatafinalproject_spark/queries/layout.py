@@ -216,8 +216,9 @@ def lineitem_compaction_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame
     """OPTIMIZE-style compaction, content-neutrality proven by oracle:
     lineitem is deliberately fragmented into 64 small files, compacted
     back to ~8 MB target files SORTED on l_orderkey
-    (operators/layout.compact: input size via a distributed binaryFile
-    metadata listing, repartitionByRange + sortWithinPartitions — one
+    (operators/layout.compact: input size from the scan's plan
+    statistics, which Spark sums from its file index with no job,
+    repartitionByRange + sortWithinPartitions — one
     shuffle buys both compaction and disjoint per-file key ranges for
     footer pruning), and the aggregate over the COMPACTED copy must
     hash-match the original table. File-count and range-disjointness

@@ -21,6 +21,7 @@ from pyspark.sql import types as T
 
 from bigdatafinalproject_spark.catalog import table_path
 from bigdatafinalproject_spark.operators.ann import lsh_signatures
+from bigdatafinalproject_spark.sources.readers import read_parquet
 from bigdatafinalproject_spark.streaming.schema import (
     cast_to_canonical,
     footer_read_schema,
@@ -222,7 +223,7 @@ def _stream_index_maintenance(
 
     q = raw.writeStream.foreachBatch(apply).trigger(availableNow=True).start()
     q.awaitTermination()
-    replay = spark.read.parquet(_os.path.join(d, "chunk0.parquet"))
+    replay = read_parquet(spark, _os.path.join(d, "chunk0.parquet"))
     append_fn(spark, idx, replay, batch_id=0)
 
     if check_retrain:

@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bigdatafinalproject_spark.catalog import table_path
-from bigdatafinalproject_spark.sources.readers import read_jdbc
+from bigdatafinalproject_spark.sources.readers import read_jdbc, read_parquet
 from bigdatafinalproject_spark.sources.writers import write_jdbc
 from bigdatafinalproject_spark.streaming.schema import footer_read_schema
 from bigdatafinalproject_spark.streaming.sketches import _chunked_events_dir
@@ -195,7 +195,7 @@ def stream_events_jdbc_exactly_once(
     )
     q.awaitTermination()
     # at-least-once redelivery simulation: batch 0's exact content again
-    replay = spark.read.parquet(os.path.join(d, "chunk0.parquet"))
+    replay = read_parquet(spark, os.path.join(d, "chunk0.parquet"))
     apply_batch(replay, 0)
     back = read_jdbc(spark, url, _SINK_TABLE, driver=DERBY_DRIVER)
     return back, applied, skipped

@@ -16,6 +16,7 @@ import os
 import tempfile
 
 import pyarrow.parquet as pq
+import pytest
 
 from bigdatafinalproject_spark.catalog import load_table
 from bigdatafinalproject_spark.operators.layout import zorder_write
@@ -128,3 +129,35 @@ def test_compact_file_count_and_disjoint_ranges(spark, tmp_path):
     assert (
         spark.read.parquet(dst).count() == li.count()
     )
+
+
+def test_compact_sizes_from_the_file_index(spark, tmp_path):
+    """compact() sizes its input from the scan's plan statistics and
+    counts its output from the file index: the input's schema inference
+    plus the write, and no listing job. The byte figure is exact — a
+    target of the ``*.parquet`` byte sum gives one file, one byte less
+    gives two."""
+    from bigdatafinalproject_spark.operators.layout import compact
+    from tests.conftest import SF_DIR
+
+    nation = load_table(spark, SF_DIR, "nation")
+    srcs = []
+    for i in range(3):
+        srcs.append(str(tmp_path / f"unit{i}"))
+        part = nation.filter(nation.n_nationkey % 3 == i).coalesce(1)
+        part.write.parquet(srcs[-1])
+    input_bytes = sum(
+        os.path.getsize(f) for s in srcs for f in glob.glob(f"{s}/*.parquet")
+    )
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    for target, files in ((input_bytes, 1), (input_bytes - 1, 2)):
+        dst = str(tmp_path / f"out{files}")
+        j0 = dag.nextJobId()
+        assert compact(spark, srcs, dst, target_bytes=target) == files
+        assert dag.nextJobId() - j0 <= 3
+        assert len(glob.glob(f"{dst}/*.parquet")) == files
+        assert spark.read.parquet(dst).count() == 25
+    (tmp_path / "empty").mkdir()
+    for missing_or_empty in (str(tmp_path / "absent"), str(tmp_path / "empty")):
+        with pytest.raises(ValueError, match="no \\*.parquet files"):
+            compact(spark, missing_or_empty, str(tmp_path / "x"))
