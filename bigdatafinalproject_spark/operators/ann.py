@@ -36,7 +36,7 @@ from bigdatafinalproject_spark.operators.arrow_kernels import (
     quantized_scan_arrow,
     topn_centroids_arrow,
 )
-from bigdatafinalproject_spark.operators.layout import pin, spread
+from bigdatafinalproject_spark.operators.layout import pin
 
 
 # IVFPQ adaptive probe policy (r10 introduced the mass budget; r11
@@ -169,7 +169,7 @@ def lsh_signatures(
         [[comp(p, i) for i in range(1, dim + 1)] for p in range(num_planes)],
         dtype=np.float64,
     )
-    # no respread (r14): the kernel is ~100x cheaper per element than
+    # no pin (r14): the kernel is ~100x cheaper per element than
     # the interpreted fold it replaced, so the scan's own partitioning
     # (which grows with file bytes) is parallel enough at every SF
     return lsh_arrow(df, id_col, vec_col, planes, bands)
@@ -291,15 +291,15 @@ def _nearest_centroids(
     n: int,
     out: str,
     keep_rank: bool = False,
-    spread_input: bool = True,
+    pin_input: bool = True,
 ) -> DataFrame:
     """Top-``n`` centroids per vector by cosine — the assign (n=multi)
     and probe (n=nprobe) legs of the IVF plans — against the (ids asc,
     matrix) centroid ``panel``, built once by the caller
     (arrow_kernels.panel_from_frame, or panel_from_parquet for a
-    persisted index). ``spread_input=False`` (r14) skips the respread
-    for bounded probe panels, where repartitioning ~40 rows costs more
-    than the kernel pass itself. ``keep_rank`` also emits the
+    persisted index). ``pin_input=False`` (r14) skips the ``pin`` of
+    the input for bounded probe sets, where repartitioning ~40 rows
+    costs more than the kernel pass itself. ``keep_rank`` also emits the
     assignment rank (``_rn``) so a caller needing BOTH the
     multi-assignment and the primary (rank-1) assignment runs the N×C
     pass once, not twice.
@@ -309,7 +309,7 @@ def _nearest_centroids(
     vectorized in numpy."""
     src = df.select(F.col(id_col).alias(out), F.col(vec_col).alias("_v"))
     return topn_centroids_arrow(
-        pin(src, out) if spread_input else src,
+        pin(src, out) if pin_input else src,
         panel, out, "_v", n, out,
         keep_rank=keep_rank,
     )
@@ -478,7 +478,7 @@ def _mass_probes(
         den = F.lit(int(probe_mass[1]))
     ranked = _nearest_centroids(
         centroids, queries, id_col, vec_col, 1 << 30, "query_id",
-        keep_rank=True, spread_input=False,
+        keep_rank=True, pin_input=False,
     )
     wq = W.partitionBy("query_id").orderBy("_rn")
     # budget = ceil(num*T/den) exactly: (num*T + den - 1) / den in
@@ -651,7 +651,7 @@ def ivf_search_frames(
     if probe_mass is None:
         probes = _nearest_centroids(
             centroids, queries, id_col, vec_col, nprobe, "query_id",
-            spread_input=False,
+            pin_input=False,
         )
     else:
         sizes = (
@@ -665,10 +665,9 @@ def ivf_search_frames(
             centroids, queries, sizes, probe_mass, id_col, vec_col,
             mass_multi=mass_multi, sched_ref=sched_ref,
         )
-    # the candidate tail is pinned (probe-free, unlike spread's
-    # partition probe, which materializes this shuffle-rooted subtree
-    # as a throwaway job under AQE); r15's interleaved A/B chose the
-    # pin over AQE coalescing (OPTIMIZATION_r15.md)
+    # the candidate tail is pinned so AQE cannot coalesce it to a few
+    # tasks; r15's interleaved A/B chose the pin over AQE coalescing
+    # (OPTIMIZATION_r15.md)
     cand = pin(
         probes.join(postings, on="centroid_id")
         .filter(F.col("query_id") != F.col("neighbor_id"))
@@ -708,8 +707,8 @@ def embedding_neardup_pairs(
     # kernel (cheap), but attaching two 64-dim vectors to every
     # candidate pair is byte-heavy relative to the pair set AQE sizes
     # by — coalesced to one task, the join + Arrow conversion
-    # serializes. The pin fixes the fan-out without spread's partition
-    # probe (the winner of r15's interleaved A/B, OPTIMIZATION_r15.md).
+    # serializes. The pin fixes the fan-out (the winner of r15's
+    # interleaved A/B, OPTIMIZATION_r15.md).
     cand = pin(cand, "id_a")
     va = corpus.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("_va"))
     vb = corpus.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("_vb"))
@@ -776,7 +775,7 @@ def quantized_topk(
     # quantize BELOW the exchange: the repartition materializes the int8
     # arrays once per corpus row; above it they would fuse into the
     # cross-join stage and re-evaluate per (query, row) pair
-    c = spread(
+    c = pin(
         _with_int8(
             corpus.select(F.col(id_col).alias("neighbor_id"), vec_col),
             "neighbor_id", vec_col, "_c",
@@ -1145,7 +1144,7 @@ def pq_build_frames(
             F.col("cid").alias("code"), "s", F.col("centroid").alias("_cw")
         )
 
-    cvec = spread(
+    cvec = pin(
         corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_v")),
         "neighbor_id",
     )
@@ -1432,7 +1431,7 @@ def ivfpq_search_frames(
     if probe_mass is None:
         probes = _nearest_centroids(
             centroids, queries, id_col, vec_col, nprobe, "query_id",
-            spread_input=False,
+            pin_input=False,
         )
     else:
         # posting rows per cell: the persisted C-row table when given,

@@ -33,6 +33,7 @@ from bigdatafinalproject_spark.operators.arrow_kernels import (
     argmin_centroids_arrow,
     panel_from_frame,
 )
+from bigdatafinalproject_spark.operators.layout import pin
 
 
 def _centroid_groups(
@@ -102,14 +103,14 @@ def kmeans_centroids(
     that inherits the input partitioning, and a skewed source layout
     (one fat parquet row group) serializes the trainer onto one task per
     round — at sf10 with the scheduled C=512 that straggler was an hour
-    of single-core Lloyd. Unconditional repartition rather than the
-    probing ``spread`` (r11 review #2): ``df.rdd.getNumPartitions()``
-    under AQE eagerly materializes any upstream exchanges as a throwaway
-    job (the PQ codebook trainer's subvec frame carries a window +
-    join), while an adjacent redundant repartition is collapsed by
-    Catalyst's CollapseRepartition for free. Content-neutral by design:
-    the decimal-mean updates are order-independent sums (module doc), so
-    trained centroids are bit-identical under any partitioning.
+    of single-core Lloyd. The repartition is unconditional: it reads no
+    partition count, so it runs no job even on a shuffle-rooted input
+    (the PQ codebook trainer's subvec frame carries a window + join),
+    and an adjacent redundant repartition (``kmeans_assign`` pins the
+    same frame first) is collapsed by Catalyst's CollapseRepartition
+    for free. Content-neutral by design: the decimal-mean updates are
+    order-independent sums (module doc), so trained centroids are
+    bit-identical under any partitioning.
 
     Optimization r14: the Lloyd loop is driver-stepped — each round is
     ONE Spark job (Arrow argmin kernel carrying the vector through ->
@@ -134,8 +135,6 @@ def kmeans_centroids(
             "at call time) and cannot train on a streaming frame — "
             "train on the batch corpus and freeze the centroids"
         )
-
-    from bigdatafinalproject_spark.operators.layout import pin
 
     spark = emb.sparkSession
     emb = pin(emb, id_col)
@@ -187,9 +186,7 @@ def kmeans_assign(
     """Fixed-iteration Lloyd k-means: deterministic seed centroids, then
     ``update_rounds`` x (assign -> decimal-mean update), then a final
     assignment. Returns (id, cid, dist) against the final centroids."""
-    from bigdatafinalproject_spark.operators.layout import spread
-
-    emb = spread(emb, id_col)
+    emb = pin(emb, id_col)
     init = emb.filter(F.col(id_col) < k).select(
         F.col(id_col).alias("cid"),
         F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("centroid"),

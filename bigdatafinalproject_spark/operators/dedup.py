@@ -36,7 +36,7 @@ from bigdatafinalproject_spark.operators.arrow_kernels import (
     simhash_arrow,
 )
 from bigdatafinalproject_spark.operators.barrier import materialize_barrier
-from bigdatafinalproject_spark.operators.layout import pin, spread
+from bigdatafinalproject_spark.operators.layout import pin
 from bigdatafinalproject_spark.operators.text import norm_text, tokens
 
 _H15 = 15  # hex digits -> 60-bit hash
@@ -230,14 +230,10 @@ def ngram_jaccard_pairs(
         sh = sh.join(keep.select("shingle"), "shingle", "left_semi")
     # The surviving shingle set feeds THREE consumers (sizes + both pair
     # sides); without a barrier Spark re-runs the scan->normalize->
-    # explode(->semi-join) pipeline for each. Materialize once, hash-
-    # partitioned on the join key with an EXPLICIT partition count:
-    # AQE's byte-based coalescing would shrink this small-bytes but
-    # quadratic-compute exchange to one task.
-    sc = sh.sparkSession.sparkContext
-    sh = materialize_barrier(
-        sh.repartition(sc.defaultParallelism, "shingle")
-    )
+    # explode(->semi-join) pipeline for each. Materialize once, pinned
+    # on the join key: AQE's byte-based coalescing would shrink this
+    # small-bytes but quadratic-compute exchange to one task.
+    sh = materialize_barrier(pin(sh, "shingle"))
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("size"))
 
     a = sh.select(F.col(id_col).alias("id_a"), "shingle")
@@ -496,7 +492,7 @@ def segment_dedup(
     id. No step materializes doc x doc pairs.
     """
     s = int(seg_tokens)
-    d = spread(
+    d = pin(
         df.select(F.col(id_col), tokens(F.col(text_col)).alias("_toks")), id_col
     )
     segs = d.select(
@@ -575,7 +571,7 @@ def winnow_fingerprints(
     """
     from pyspark.sql import Window as W
 
-    d = spread(
+    d = pin(
         df.select(F.col(id_col), tokens(F.col(text_col)).alias("_toks")),
         id_col,
     ).filter(F.size("_toks") >= k)

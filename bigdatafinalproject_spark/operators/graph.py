@@ -43,6 +43,11 @@ DAMP_NUM, DAMP_DEN = 17, 20  # 0.85 as an exact rational
 # single order at a million pairs.
 _ORDER_SET_CAP = 1_000
 
+# The most rows a node-sized relation (ranks, BFS frontier or visited
+# set) may hold and still be broadcast, about a 64 MB relation; past it
+# the iterative joins keep the sort-merge form.
+_BROADCAST_ROWS = 2_000_000
+
 
 def copurchase_edges(lineitem: DataFrame) -> DataFrame:
     """Undirected (both directions materialized) distinct co-purchase
@@ -114,16 +119,14 @@ def pagerank_fixed_point(
       the optimizer does not (its post-aggregation estimate is
       edge-sized) — so when the node count (counted once, from the
       node-sized barriered seed) fits a broadcast budget
-      (``BDFP_GRAPH_BROADCAST_ROWS``, default 2M rows ≈ 64 MB
-      relation), every iteration joins by BROADCAST and the edge list
-      is never re-shuffled; past the budget the SMJ form is kept
+      (``_BROADCAST_ROWS``, 2M rows ≈ 64 MB relation), every
+      iteration joins by BROADCAST and the edge list is never
+      re-shuffled; past the budget the SMJ form is kept
       (node tables at 100 TB scale are data-sized — an unconditional
       hint would be a driver/executor OOM). Join strategy cannot
       change the result: the update is exact int64 arithmetic,
       associative and partitioning-invariant.
     """
-    import os
-
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
     ed = materialize_barrier(pin(edges.join(deg, "src"), "src"), checkpoint_dir)
     pr = materialize_barrier(
@@ -135,8 +138,7 @@ def pagerank_fixed_point(
         ),
         checkpoint_dir,
     )
-    bcap = int(os.environ.get("BDFP_GRAPH_BROADCAST_ROWS", "2000000"))
-    bcast = pr.count() <= bcap  # node-sized count of barriered blocks
+    bcast = pr.count() <= _BROADCAST_ROWS  # node-sized count of barriered blocks
     for _ in range(iters):
         prj = pr.withColumnRenamed("node", "src")
         contrib = ed.join(F.broadcast(prj) if bcast else prj, "src").select(
@@ -259,14 +261,11 @@ def bfs_distances(
     list every round. The frontier and visited sets are NODE-sized
     and their exact row counts are free (each is an eagerly
     materialized barrier) — when they fit the broadcast budget
-    (``BDFP_GRAPH_BROADCAST_ROWS``) the expansion join and the
+    (``_BROADCAST_ROWS``) the expansion join and the
     visited anti-join run as broadcasts and the edge list is never
     shuffled; larger frontiers keep the SMJ form. Join strategy
     cannot change the result (set semantics throughout).
     """
-    import os
-
-    bcap = int(os.environ.get("BDFP_GRAPH_BROADCAST_ROWS", "2000000"))
     edges = materialize_barrier(
         pin(edges.select("src", "dst"), "src"), checkpoint_dir
     )
@@ -280,9 +279,9 @@ def bfs_distances(
     n_front = n_known = frontier.count()
     for hop in range(1, max_hops + 1):
         f = frontier.select("node")
-        fb = F.broadcast(f) if n_front <= bcap else f
+        fb = F.broadcast(f) if n_front <= _BROADCAST_ROWS else f
         seen = known.select("node")
-        seenb = F.broadcast(seen) if n_known <= bcap else seen
+        seenb = F.broadcast(seen) if n_known <= _BROADCAST_ROWS else seen
         nxt = (
             fb.join(edges, fb["node"] == edges["src"])
             .select(F.col("dst").alias("node"))

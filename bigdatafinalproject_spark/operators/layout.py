@@ -2,18 +2,11 @@
 
 ``pin``: hash-partition a frame by key across ``defaultParallelism``
 with an explicit count, so AQE cannot byte-coalesce a row- or
-compute-heavy input (an Arrow kernel's input, pair keys) down to a
-handful of tasks. It never probes the input, so it is safe on
-shuffle-fed frames.
-
-``spread``: compressed text/embedding parquet under-splits — a
-byte-sized scan partition can hold a compute-heavy operator's worth of
-rows (locally a whole table is often ONE split, so one task does every
-shingle/dot-product). When the input has fewer partitions than the
-cluster has cores, hash-spread it by key first; when the input is
-already wide (the 100 TB case) this is a no-op. Its partition-count
-probe runs shuffle-rooted inputs as a throwaway job under AQE, so new
-callers use ``pin``.
+compute-heavy input (an Arrow kernel's input, pair keys, compressed
+text/embedding parquet that locally scans as ONE split) down to a
+handful of tasks. It never probes the input, so it starts no job and
+is safe on shuffle-fed frames. It is the only by-key layout choice in
+``operators/``.
 """
 
 from __future__ import annotations
@@ -35,27 +28,15 @@ def pin(df: DataFrame, *key_cols: str | Column) -> DataFrame:
     difference is that a user-specified partition count is exempt from
     AQE's byte-based coalescing — which otherwise shrinks byte-light
     but row- or compute-heavy inputs (compressed facts, pair keys) to
-    a handful of tasks. Unlike ``spread`` this works on shuffle-fed
-    frames, where the pre-AQE partition count is useless as a signal,
-    and it runs no job. The count is the core count, not a data-sized
-    one: the consumers are partition-invariant, so only speed depends
-    on it.
+    a handful of tasks. It reads no partition count, so it runs no job
+    even on a shuffle-rooted frame. The count is the core count, not a
+    data-sized one: the consumers are partition-invariant, so only
+    speed depends on it. On a scan that already has at least
+    ``defaultParallelism`` splits the exchange is one extra shuffle.
     """
     sc = df.sparkSession.sparkContext
     cols = [F.col(c) if isinstance(c, str) else c for c in key_cols]
     return df.repartition(sc.defaultParallelism, *cols)
-
-
-def spread(df: DataFrame, *key_cols: str | Column) -> DataFrame:
-    """Repartition ``df`` across ``defaultParallelism`` by ``key_cols``
-    iff it currently has fewer partitions than that (see module doc).
-    The explicit partition count keeps AQE from byte-coalescing the
-    exchange back to one task."""
-    sc = df.sparkSession.sparkContext
-    if df.rdd.getNumPartitions() < sc.defaultParallelism:
-        cols = [F.col(c) if isinstance(c, str) else c for c in key_cols]
-        return df.repartition(sc.defaultParallelism, *cols)
-    return df
 
 
 def zvalue(x: Column, y: Column, bits: int = 16) -> Column:

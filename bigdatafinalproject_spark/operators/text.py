@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from bigdatafinalproject_spark.operators.layout import pin
+
 # Tiny per-language stopword lists (public common function words).
 STOPWORDS: dict[str, tuple[str, ...]] = {
     "en": ("the", "a", "of", "and", "to", "in", "is", "it", "that", "for"),
@@ -192,11 +194,9 @@ def scrub_frequent_ngrams(
     Returns (id, n_tokens, n_removed, scrubbed_md5): md5 of the
     reassembled text keeps the driver comparison O(1) per row.
     """
-    from bigdatafinalproject_spark.operators.layout import spread
-
     t = F.split(F.col(text_col), " ")
     ndoc = F.size(t)
-    base = spread(df.select(F.col(id_col), t.alias("_t")), id_col)
+    base = pin(df.select(F.col(id_col), t.alias("_t")), id_col)
     nb = F.size("_t")
     grams = F.when(
         nb >= n,

@@ -14,6 +14,7 @@ from bigdatafinalproject_spark.functions import dsum
 from bigdatafinalproject_spark.operators.asof import asof_join
 from bigdatafinalproject_spark.operators.rangejoin import interval_join
 from bigdatafinalproject_spark.registry import query
+from bigdatafinalproject_spark.streaming.events import _stream_partitions
 
 
 @query(
@@ -432,9 +433,9 @@ def events_orders_cogroup_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cogroup's fixed cost is per-Python-pipeline (one worker fork +
     # Arrow stream per shuffle partition), not per-row: pre-hash both
     # sides onto a handful of partitions so EnsureRequirements reuses
-    # the partitioning and the pipeline count drops 32 -> 8 (streaming
-    # modules use the same max(8, parallelism/4) floor)
-    n_parts = max(8, spark.sparkContext.defaultParallelism // 4)
+    # the partitioning and the pipeline count drops 32 -> 8 (the
+    # streaming modules' state-store count)
+    n_parts = _stream_partitions(spark)
     return (
         e.repartition(n_parts, "user_id")
         .groupBy("user_id")

@@ -161,3 +161,52 @@ def test_compact_sizes_from_the_file_index(spark, tmp_path):
     for missing_or_empty in (str(tmp_path / "absent"), str(tmp_path / "empty")):
         with pytest.raises(ValueError, match="no \\*.parquet files"):
             compact(spark, missing_or_empty, str(tmp_path / "x"))
+
+
+def test_pin_runs_no_job_and_survives_aqe_coalescing(spark):
+    """``pin`` on a shuffle-rooted frame starts no Spark job, and the
+    executed frame keeps exactly ``defaultParallelism`` partitions: the
+    explicit count exempts the exchange from AQE's byte-based
+    coalescing, which shrinks the same exchange without a count."""
+    from pyspark.sql import functions as F
+
+    from bigdatafinalproject_spark.operators.layout import pin
+    from tests.conftest import SF_DIR
+
+    dp = spark.sparkContext.defaultParallelism
+    agg = (
+        load_table(spark, SF_DIR, "lineitem")
+        .groupBy("l_orderkey")
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    j0 = dag.nextJobId()
+    pinned = pin(agg, "l_orderkey")
+    assert dag.nextJobId() == j0
+
+    rows = pinned.collect()
+    assert len(rows) == agg.count()
+    assert pinned.rdd.getNumPartitions() == dp
+    if dp > 1:
+        unpinned = agg.repartition("l_orderkey")
+        unpinned.collect()
+        assert unpinned.rdd.getNumPartitions() < dp
+
+
+def test_package_never_reads_a_partition_count():
+    """No module of the engine calls ``getNumPartitions``: under AQE the
+    call runs any shuffle-rooted subtree as a throwaway job at plan-build
+    time. By-key layout goes through ``layout.pin``, which needs no
+    count."""
+    import ast
+    from pathlib import Path
+
+    import bigdatafinalproject_spark
+
+    root = Path(bigdatafinalproject_spark.__file__).parent
+    calls = []
+    for path in sorted(root.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if isinstance(node, ast.Attribute) and node.attr == "getNumPartitions":
+                calls.append(f"{path.relative_to(root)}:{node.lineno}")
+    assert calls == []
