@@ -25,6 +25,7 @@ the same role is played by put-if-absent, which this API maps to 1:1.
 from __future__ import annotations
 
 import json
+import math
 import os
 import time
 
@@ -62,30 +63,56 @@ class ConcurrentWriteError(RuntimeError):
 
 CLAIM_MODE_ENV = "BDFP_ANN_CLAIM_MODE"
 LEASE_S_ENV = "BDFP_ANN_LEASE_S"
+CLAIM_MODES = ("lease", "pid")
 LEASE_S_DEFAULT = 30.0
 
 
 def claim_mode() -> str:
-    return os.environ.get(CLAIM_MODE_ENV, "lease")
+    """``BDFP_ANN_CLAIM_MODE``: "lease" when unset, else one of
+    :data:`CLAIM_MODES`; any other value raises ``ValueError`` naming
+    the variable and the value (a misspelt mode would otherwise be
+    judged by the pid probe)."""
+    m = os.environ.get(CLAIM_MODE_ENV, "lease")
+    if m not in CLAIM_MODES:
+        raise ValueError(
+            f"{CLAIM_MODE_ENV}={m!r}: expected one of {', '.join(CLAIM_MODES)}"
+        )
+    return m
 
 
 def lease_seconds() -> float:
-    return float(os.environ.get(LEASE_S_ENV, LEASE_S_DEFAULT))
+    """``BDFP_ANN_LEASE_S``: the lease length in seconds, 30 when unset;
+    a malformed, non-finite or non-positive value raises ``ValueError``
+    naming the variable and the value (a lease of 0 or less reads as
+    lapsed as soon as it is written, and its renewer never sleeps)."""
+    raw = os.environ.get(LEASE_S_ENV)
+    if raw is None:
+        return LEASE_S_DEFAULT
+    try:
+        v = float(raw)
+    except ValueError:
+        v = math.nan
+    if not (math.isfinite(v) and v > 0):
+        raise ValueError(
+            f"{LEASE_S_ENV}={raw!r}: expected a positive number of seconds"
+        )
+    return v
 
 
-def claim_payload(extra: dict | None = None, mode: str | None = None) -> dict:
+def claim_payload(
+    extra: dict | None, mode: str, lease_s: float | None = None
+) -> dict:
     """A self-describing claim payload: writer pid + liveness mode (+
-    initial lease expiry in lease mode), merged over ``extra``. Every
-    commit_exclusive caller that may need liveness arbitration later
-    should commit THIS shape. ``mode`` overrides the env-selected
-    default — a caller that never RENEWS (version commits, which are
-    permanent records rather than claims-in-flight) must pass
-    mode="pid": a lease it does not renew would falsely read as a
-    crashed writer 30 s after the CAS (r11 review #3)."""
-    m = mode or claim_mode()
-    p = dict(extra or {}, pid=os.getpid(), mode=m)
-    if m == "lease":
-        p["lease_expiry"] = time.time() + lease_seconds()
+    initial lease expiry, ``lease_s`` from now, in lease mode), merged
+    over ``extra``. Every commit_exclusive caller that may need
+    liveness arbitration later should commit THIS shape. A caller that
+    never RENEWS (version commits, which are permanent records rather
+    than claims-in-flight) must pass mode="pid": a lease it does not
+    renew would falsely read as a crashed writer once it lapsed (r11
+    review #3)."""
+    p = dict(extra or {}, pid=os.getpid(), mode=mode)
+    if mode == "lease":
+        p["lease_expiry"] = time.time() + lease_s
     return p
 
 

@@ -23,6 +23,7 @@ from bigdatafinalproject_spark.session import get_spark  # noqa: E402
 def spark():
     spark = get_spark(app_name="bdfp-tests", shuffle_partitions=8)
     yield spark
+    spark.stop()
 
 
 @pytest.fixture(scope="session")

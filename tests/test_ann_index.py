@@ -767,6 +767,7 @@ def test_spent_slot_claim_is_rejected_after_cas(spark, tmp_path):
 
     from bigdatafinalproject_spark.operators.ann_index import (
         _claim_writer,
+        _read_knobs,
         pq_index_append,
     )
     from bigdatafinalproject_spark.operators.txlog import (
@@ -781,7 +782,9 @@ def test_spent_slot_claim_is_rejected_after_cas(spark, tmp_path):
     for n in _os.listdir(log):
         _os.remove(_os.path.join(log, n))
     with pytest.raises(ConcurrentWriteError, match="already spent"):
-        _claim_writer(idx, stale, {"op": "append", "batch_id": 9})
+        _claim_writer(
+            idx, stale, {"op": "append", "batch_id": 9}, _read_knobs()
+        )
     assert _os.listdir(log) == []  # the doomed claim was released
 
 
@@ -3234,3 +3237,67 @@ def test_malformed_gc_grace_refuses_compaction_before_claim(
         assert _writer_state(idx) == before
         for t, us in units.items():
             assert sorted(os.listdir(os.path.join(idx, t))) == us
+
+
+@pytest.mark.parametrize(
+    "var, bad",
+    [
+        ("BDFP_ANN_LEASE_S", "0"),
+        ("BDFP_ANN_LEASE_S", "-2"),
+        ("BDFP_ANN_LEASE_S", "nan"),
+        ("BDFP_ANN_LEASE_S", "inf"),
+        ("BDFP_ANN_LEASE_S", "30s"),
+        ("BDFP_ANN_CLAIM_MODE", "lese"),
+        ("BDFP_ANN_CLAIM_MODE", ""),
+    ],
+)
+def test_bad_claim_knob_is_refused_naming_it(monkeypatch, var, bad):
+    """A lease of 0 or less used to read as lapsed the moment it was
+    written (and its renewer spun on ``wait(0)``); a misspelt claim
+    mode was silently judged by the pid probe. Both now raise, naming
+    the variable and the value."""
+    from bigdatafinalproject_spark.operators import txlog
+    from bigdatafinalproject_spark.operators.ann_index import _read_knobs
+
+    monkeypatch.setenv(var, bad)
+    with pytest.raises(ValueError, match=rf"^{var}={bad!r}:"):
+        _read_knobs()
+    read = (
+        txlog.lease_seconds if var == txlog.LEASE_S_ENV else txlog.claim_mode
+    )
+    with pytest.raises(ValueError, match=rf"^{var}={bad!r}:"):
+        read()
+
+
+def test_claim_knob_defaults_and_valid_values(monkeypatch):
+    from bigdatafinalproject_spark.operators import txlog
+
+    monkeypatch.delenv(txlog.LEASE_S_ENV, raising=False)
+    monkeypatch.delenv(txlog.CLAIM_MODE_ENV, raising=False)
+    assert (txlog.claim_mode(), txlog.lease_seconds()) == ("lease", 30.0)
+    monkeypatch.setenv(txlog.LEASE_S_ENV, "0.6")
+    monkeypatch.setenv(txlog.CLAIM_MODE_ENV, "pid")
+    assert (txlog.claim_mode(), txlog.lease_seconds()) == ("pid", 0.6)
+
+
+@pytest.mark.parametrize(
+    "var, bad", [("BDFP_ANN_LEASE_S", "0"), ("BDFP_ANN_CLAIM_MODE", "lese")]
+)
+def test_bad_claim_knob_refuses_append_before_claim(
+    spark, tmp_path, monkeypatch, var, bad
+):
+    """A bad claim knob is refused when the append's transaction opens:
+    the batch does not land, and no claim, fence marker or stage is
+    left behind (the append used to land, under a lease that read as
+    lapsed or a mode judged by the pid probe)."""
+    import json
+
+    from bigdatafinalproject_spark.operators.ann_index import pq_index_append
+
+    emb, base, delta, idx = _build_pq_base(spark, tmp_path, "pq_claimknob")
+    before = _writer_state(idx)
+    monkeypatch.setenv(var, bad)
+    with pytest.raises(ValueError, match=rf"{var}={bad!r}"):
+        pq_index_append(spark, idx, delta, batch_id=0)
+    assert _writer_state(idx) == before
+    assert json.loads(before[0])["applied_batches"] == []
