@@ -1,8 +1,6 @@
-"""Driver contract for the spark-graft builder (PySpark target).
-
-Thin wrapper over ``bigdatafinalproject_spark.registry`` — all queries
-and oracle SQL live there, one entry per implemented operator from
-SURVEY.md §2 plus the net-new LLM-pipeline operators.
+"""Driver contract: ``entry()``, ``queries()`` and ``oracle_sql()`` over
+``bigdatafinalproject_spark.registry``, where every query and its oracle
+SQL live (one per operator from SURVEY.md §2 plus the LLM-pipeline ones).
 """
 
 from __future__ import annotations
@@ -19,812 +17,42 @@ from bigdatafinalproject_spark import registry  # noqa: E402
 
 SMOKE_SF_DIR = "/root/testdata/sf0.001"
 
+# The driver checks only the first 50 queries of queries(). _FRONT puts
+# the queries whose code the latest change touched in that window; each
+# change resets it (it may be empty). scripts/oracle_sweep.py checks all.
+_FRONT = (
+    "orders_write_audit_publish", "jdbc_roundtrip_agg",
+    "stream_embedding_index", "stream_orders_cdc_apply",
+    "stream_dlq_routing", "stream_cms_user_frequency",
+    "stream_hll_user_distinct", "stream_jdbc_exactly_once",
+    "orc_roundtrip_agg", "xml_roundtrip_agg", "jsonl_roundtrip_agg",
+    "ann_mmr_diversified", "ann_pq_recall", "ann_pq_topk",
+    "ann_quantized_topk", "doc_segment_dedup", "doc_semantic_dedup",
+    "doc_substring_scrub", "doc_winnow_contamination", "doc_winnow_dedup",
+    "doc_winnow_spans", "embedding_kmeans", "events_orders_cogroup_merge",
+    "events_udaf_median", "part_pagerank", "part_bfs_reach",
+    "part_triangle_count", "ann_index_append", "bucketed_join_agg",
+    "hive_partitioned_prune_agg", "lineitem_compaction_roundtrip",
+    "events_incremental_rollup_refresh", "orders_incremental_join_view",
+    "ann_ivf_index_append", "ann_ivf_index_minor_compact",
+    "ann_ivf_index_retract", "ann_ivfpq_index_append",
+    "ann_ivfpq_index_compact", "ann_ivfpq_index_retract",
+    "ann_pq_index_append", "ann_pq_index_compact", "ann_pq_index_retract",
+    "doc_dedup_index_append", "doc_dedup_index_compact",
+    "doc_dedup_index_minor_compact", "doc_dedup_index_retract",
+    "stream_dedup_index_maintenance", "stream_ivf_index_maintenance",
+    "stream_ivfpq_index_maintenance", "stream_pq_index_maintenance",
+)
+
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query (popularity top-k) on /root/testdata/sf0.001."""
     return registry.QUERIES["popular_parts"](spark, SMOKE_SF_DIR)
 
 
-# Driver-coverage rotation: CORRECTNESS_r01.json shows the r1 driver
-# verified exactly the FIRST 50 queries in dict order and stopped — 64
-# registered queries got no correctness row at all. The registry order
-# is stable (module import order), so we rotate: queries changed or
-# added this round come first (their results/plans are new and need
-# re-verification), then everything the driver has never checked, then
-# the 50 that are already r1-green. Every query is still present; only
-# the dict ordering changes.
-_R1_DRIVER_CHECKED = (
-    "popular_parts", "clean_project", "case_when_priority", "distinct_pairs",
-    "null_handling", "scalar_functions", "set_operations",
-    "customers_with_orders_semi", "customers_without_orders_anti",
-    "left_join_order_counts", "star_join_revenue_by_nation",
-    "full_outer_join", "broadcast_dim_join", "null_safe_join",
-    "pricing_summary", "top_orders_by_revenue", "summary_stats",
-    "pivot_status", "rollup_revenue", "distinct_counts",
-    "corr_covar_portable", "topk_per_group", "window_analytics",
-    "window_distribution", "sessionize", "dense_customer_ids",
-    "surrogate_join_back", "kfold_assignment", "leave_one_out_split",
-    "cold_start_filtered_count", "recs_wide_assembly", "eval_rmse",
-    "eval_auc", "eval_roc_points", "als_recommendations", "als_eval_rmse",
-    "item_cosine_similarity", "doc_exact_dups", "doc_token_stats",
-    "doc_quality", "doc_language_id", "doc_fingerprint",
-    "doc_ngram_jaccard", "doc_minhash_sigs", "doc_minhash_candidates",
-    "doc_simhash", "doc_simhash_pairs", "doc_tfidf_top_terms",
-    "doc_neardup_components", "doc_sequence_packing",
-)
-
-# driver-checked in r2 (CORRECTNESS_r02.json keys) — union with r1 below
-_R2_DRIVER_CHECKED = (
-    "recs_wide_assembly", "item_cosine_similarity", "customer_rfm",
-    "part_abc_analysis", "als_persist_recommend_all", "stream_sessions",
-    "stream_static_join", "sql_param_lookup", "doc_sentences_udtf",
-    "part_pagerank", "skew_salted_agg", "skew_salted_join",
-    "doc_substring_scrub", "embedding_kmeans", "doc_incremental_dedup",
-    "doc_lm_familiarity", "events_udaf_median", "stream_novel_docs",
-    "stream_sliding", "customer_hll_distinct", "ann_quantized_topk",
-    "events_interval_join", "lineitem_zorder_buckets",
-    "orders_above_customer_avg", "part_triangle_count", "ann_cosine_topk",
-    "ann_lsh_topk", "events_tumbling", "events_sliding", "events_asof_order",
-    "events_rollup_hierarchy", "stream_tumbling", "stream_dedup_count",
-    "stream_user_totals", "stream_foreachbatch_sink", "stream_doc_quality",
-    "doc_image_features", "doc_frame_sample", "events_json_props",
-    "sql_surface_revenue", "date_functions", "cube_revenue", "approx_stats",
-    "doc_top_tokens", "unpivot_status", "events_props_map",
-    "embedding_array_ops", "doc_positional_tokens", "doc_embedding_neardup",
-    "stream_click_purchase_join",
-)
-
-# driver-checked in r3 (CORRECTNESS_r03.json keys) — the 13 changed +
-# 37 first-time queries; union with r1/r2 below.
-_R3_DRIVER_CHECKED = (
-    "stream_tumbling", "stream_sliding", "stream_sessions",
-    "stream_foreachbatch_sink", "stream_click_purchase_join",
-    "events_interval_join", "approx_stats", "stream_user_totals",
-    "jdbc_roundtrip_agg", "doc_chunk_overlap", "doc_temperature_mix",
-    "stream_click_purchase_left_join", "doc_quality_classifier",
-    "ann_ivf_topk", "eval_ranking_metrics", "exact_percentiles",
-    "grouping_sets_revenue", "portable_sample", "price_band_join",
-    "doc_audio_features", "orders_upsert_latest", "events_outlier_removal",
-    "orders_quality_checks", "events_resample_ffill", "doc_repetition",
-    "doc_mixture_sample", "part_fuzzy_names", "events_trailing_window",
-    "lineitem_standardize", "doc_hashed_bow", "doc_grouped_split",
-    "doc_bpe_tokens", "events_histogram", "customer_profile",
-    "customer_name_parse", "part_bayesian_rating", "nation_revenue_share",
-    "basket_pair_lift", "orders_scd2", "customer_stratified_k",
-    "corpus_curation", "doc_bigram_lm", "doc_contamination",
-    "events_funnel", "events_gap_stats", "events_moving_median",
-    "events_count_anomaly", "events_transition_matrix",
-    "part_degree_distribution", "events_retention",
-)
-
-# driver-checked in r4 (CORRECTNESS_r04.json keys) — union below.
-_R4_DRIVER_CHECKED = (
-    "doc_pii_scrub", "doc_segment_dedup", "cms_user_frequency",
-    "cms_join_size_estimate", "orc_roundtrip_agg", "jsonl_roundtrip_agg",
-    "hive_partitioned_prune_agg", "bucketed_join_agg",
-    "events_value_quantiles", "ann_lsh_recall", "doc_shard_shuffle",
-    "stream_cms_user_frequency", "events_multigrain_rollup",
-    "stream_embedding_index", "embedding_pca_project", "eval_auc",
-    "eval_roc_points", "ann_lsh_topk", "doc_neardup_components",
-    "als_recommendations", "part_triangle_count", "events_session_window",
-    "events_orders_cogroup_merge", "stream_click_purchase_full_join",
-    "part_bfs_reach", "doc_semantic_dedup", "doc_weighted_sample",
-    "rag_chunk_retrieval", "xml_roundtrip_agg",
-    "customer_hierarchy_closure", "sql_udf_price_bands",
-    "events_variant_props", "nation_rich_listagg", "lateral_top_orders",
-    "python_datasource_agg", "tpch_q4_order_priority",
-    "tpch_q5_local_supplier_volume", "tpch_q6_forecast_revenue",
-    "tpch_q7_volume_shipping", "tpch_q8_market_share",
-    "tpch_q9_product_type_profit", "tpch_q10_returned_items",
-    "tpch_q13_customer_distribution", "tpch_q14_promo_effect",
-    "tpch_q17_small_quantity_revenue", "tpch_q18_large_volume_customer",
-    "tpch_q19_discounted_revenue", "tpch_q22_global_sales_opportunity",
-    "tpch_q15_top_supplier", "tpch_q12_late_lines_by_priority",
-)
-
-# Round-4 front of the driver window, in priority order:
-# (a) the 15 round-3 additions that have never had a driver
-#     CORRECTNESS row (VERDICT r3 "What's missing" #1 — all locally
-#     oracle-green in tests/test_registry_oracle.py);
-# (b) queries whose results or plans CHANGE in round 4 — appended in
-#     the same commit as the change (rotation discipline, NOTES.md).
-_R4_FRONT = (
-    # (a) never driver-checked
-    "doc_pii_scrub", "doc_segment_dedup", "cms_user_frequency",
-    "cms_join_size_estimate", "orc_roundtrip_agg", "jsonl_roundtrip_agg",
-    "hive_partitioned_prune_agg", "bucketed_join_agg",
-    "events_value_quantiles", "ann_lsh_recall", "doc_shard_shuffle",
-    "stream_cms_user_frequency", "events_multigrain_rollup",
-    "stream_embedding_index", "embedding_pca_project",
-    # (b) changed in round 4
-    # quantized 256-bin threshold grid (structural window boundedness)
-    "eval_auc", "eval_roc_points",
-    # multiprobe LSH retune (24 planes / 4 bands / multiprobe@1)
-    "ann_lsh_topk",
-    # large-star/small-star connected components (same labels, new plan)
-    "doc_neardup_components",
-    # leaner ALS twin (rows-only; rank/maxIter trimmed for the bench).
-    # als_eval_rmse (same trim, 1-row rows-only output, r1+r2 driver
-    # rows) is deliberately NOT fronted: front+fresh must fit the
-    # driver's ~50-query window and it is the lowest-information
-    # re-check (the 1-row shape cannot change).
-    "als_recommendations",
-    # triangle count became dual-mode in r4 (adjacency-arrays default,
-    # wedge-join alternate for tight heaps) — fronted because the
-    # registered query now runs the arrays plan
-    "part_triangle_count",
-)
-
-# driver-checked in r5 (CORRECTNESS_r05.json keys) — union below.
-_R5_DRIVER_CHECKED = (
-    "tpch_q2_min_cost_supplier", "tpch_q11_important_stock",
-    "tpch_q16_parts_supplier_counts", "tpch_q20_excess_stock_suppliers",
-    "tpch_q21_suppliers_kept_waiting", "embedding_pca_project",
-    "events_orders_cogroup_merge", "tpch_q1_pricing_summary",
-    "tpch_q3_shipping_priority", "bloom_prune_join",
-    "customer_hll_portable", "doc_neardup_canonical",
-    "stream_hll_user_distinct", "customer_hll_set_algebra",
-    "ann_mmr_diversified", "lineitem_compaction_roundtrip",
-    "events_incremental_rollup_refresh", "ratings_negative_samples",
-    "stream_orders_cdc_apply", "popular_parts", "clean_project",
-    "case_when_priority", "distinct_pairs", "null_handling",
-    "scalar_functions", "set_operations", "customers_with_orders_semi",
-    "customers_without_orders_anti", "left_join_order_counts",
-    "star_join_revenue_by_nation", "full_outer_join",
-    "broadcast_dim_join", "null_safe_join", "pricing_summary",
-    "top_orders_by_revenue", "summary_stats", "pivot_status",
-    "rollup_revenue", "distinct_counts", "corr_covar_portable",
-    "topk_per_group", "window_analytics", "window_distribution",
-    "sessionize", "events_session_window", "dense_customer_ids",
-    "surrogate_join_back", "kfold_assignment", "leave_one_out_split",
-    "cold_start_filtered_count",
-)
-
-# Round-5 front of the driver window, in priority order:
-# (a) the 5 TPC-H queries that landed at positions 51-55 in r4 and
-#     never got a driver CORRECTNESS row (VERDICT r4 missing #1);
-# (b) queries whose results or plans CHANGE in round 5 — appended in
-#     the same commit as the change (rotation discipline, NOTES.md);
-# (c) net-new round-5 queries (auto-fresh, but pinned here so their
-#     position is explicit).
-_R5_FRONT = (
-    # (a) never driver-checked (q2 also changed: eur barrier per ADVICE)
-    "tpch_q2_min_cost_supplier", "tpch_q11_important_stock",
-    "tpch_q16_parts_supplier_counts", "tpch_q20_excess_stock_suppliers",
-    "tpch_q21_suppliers_kept_waiting",
-    # (b) changed in round 5
-    # PCA output unpacked to scalar pc0..pc7 columns (driver
-    # canonicalizer cannot hash array<double> cells — VERDICT r4 #2)
-    "embedding_pca_project",
-    # exact int64 audit sum + lower cogroup parallelism
-    "events_orders_cogroup_merge",
-    # (c) new in round 5
-    "tpch_q1_pricing_summary", "tpch_q3_shipping_priority",
-    # explicit Bloom-filter join pruning (oracle = plain-join
-    # equivalence, i.e. the soundness theorem)
-    "bloom_prune_join",
-    # portable md5-register HLL — the oracle-checked twin of the
-    # rows-only DataSketches customer_hll_distinct; global row is a
-    # register-table merge
-    "customer_hll_portable",
-    # near-dup representative selection (components + quality argmax
-    # in one aggregation pass)
-    "doc_neardup_canonical",
-    # streaming HLL: per-batch register partials merged by max; shares
-    # the one-shot oracle (merge theorem)
-    "stream_hll_user_distinct",
-    # sketch set algebra: union by register merge, intersection by
-    # inclusion-exclusion
-    "customer_hll_set_algebra",
-    # MMR diversified retrieval — integer-quantized greedy walk,
-    # recursive-CTE oracle
-    "ann_mmr_diversified",
-    # OPTIMIZE-style compaction; oracle = original-table aggregate
-    # (content neutrality)
-    "lineitem_compaction_roundtrip",
-    # materialized-rollup maintenance: base ⊕ delta partials under
-    # dynamic partition overwrite; oracle = one-shot aggregate
-    "events_incremental_rollup_refresh",
-    # deterministic negative sampling (generated candidates, seen
-    # anti-join, rank by generation order)
-    "ratings_negative_samples",
-    # streaming CDC apply: latest-wins keyed store via versioned
-    # snapshots; oracle = one-shot batch argmax
-    "stream_orders_cdc_apply",
-)
-
-
-# Round-6 front of the driver window, in priority order: queries whose
-# results or plans CHANGE in round 6 — appended in the same commit as
-# the change (rotation discipline, NOTES.md) — then net-new r6 queries.
-# The registry enters r6 at 100% driver-verified (VERDICT r5), so the
-# front is purely change-driven this round.
-_R6_FRONT = (
-    # (a) changed in round 6
-    # candidate ids now derived from min(p_partkey)+n (key-space
-    # convention robustness; ADVICE r5)
-    "ratings_negative_samples",
-    # late batch overlaps stored partitions so the base⊕delta merge
-    # sees non-empty old partials (ADVICE r5)
-    "events_incremental_rollup_refresh",
-    # compact() counts output files via the distributed listing and
-    # rejects empty sources (ADVICE r5)
-    "lineitem_compaction_roundtrip",
-    # xxhash64 sign-bit MASK (abs(Long.MIN_VALUE) overflow; ADVICE r5)
-    # + build/probe split for cross-job word-table persistence
-    "bloom_prune_join",
-    # per-batch source-file manifests written alongside snapshots
-    # (time-travel replay trail)
-    "stream_orders_cdc_apply",
-    # scale-stress fixes (sf0.1->sf1 exponents 1.66/1.64 -> ~linear):
-    # ABSOLUTE stop-shingle DF cap (64 docs) instead of 2%-of-corpus
-    "doc_ngram_jaccard",
-    # centroid count + query panel capped (were scaling with N; the
-    # id-range caps are no-ops at driver SFs)
-    "ann_ivf_topk",
-    # (b) net-new round 6: TPC-DS-shaped warehouse reports
-    # Q27/Q36 GROUPING SETS with grouping_id level labels
-    "sales_grouping_sets",
-    # Q89 monthly deviation from category mean (window over aggregate)
-    "brand_monthly_deviation",
-    # Q67 top-5 per ROLLUP aggregation level (rank over grouping sets)
-    "segment_rollup_top5",
-    # Q38 customers present in all five priority channels
-    "channel_overlap_customers",
-    # persisted LSH index maintenance: build + append ≡ one-shot
-    # (batch twin of stream_embedding_index)
-    "ann_index_append",
-    # product quantization: trainless capped codebooks, floor-quantized
-    # integer ADC, exact rerank — the compression tier of the ANN family
-    "ann_pq_topk",
-    # right-to-be-forgotten cascade: deletion set propagates through
-    # the FK chain; audit row per table + surviving-key checksum
-    "customer_erasure_propagation",
-)
-
-# driver-checked in r6 (CORRECTNESS_r06.json keys: the 14 fronted r6
-# queries + 36 re-confirmations) — union with r1–r5 below
-_R6_DRIVER_CHECKED = (
-    "ratings_negative_samples", "events_incremental_rollup_refresh",
-    "lineitem_compaction_roundtrip", "bloom_prune_join",
-    "stream_orders_cdc_apply", "doc_ngram_jaccard", "ann_ivf_topk",
-    "sales_grouping_sets", "brand_monthly_deviation", "segment_rollup_top5",
-    "channel_overlap_customers", "ann_index_append", "ann_pq_topk",
-    "customer_erasure_propagation", "events_session_window",
-)
-
-# driver-checked in r7 (CORRECTNESS_r07.json keys) — union below
-_R7_DRIVER_CHECKED = (
-    "ann_ivf_topk", "ann_pq_topk", "stream_orders_cdc_apply",
-    "lineitem_compaction_roundtrip", "ann_pq_recall",
-    "events_linear_attribution", "stream_jdbc_exactly_once",
-    "stream_dlq_routing", "ann_ivf_recall", "orders_price_drift",
-    "events_type_drift", "lineitem_weighted_median",
-    "orders_write_audit_publish", "orders_incremental_join_view",
-    "customer_k_anonymity", "channel_cumulative_crossover",
-    "nation_yoy_growth", "brand_moving_avg_outliers",
-)
-
-_R8_FRONT = (
-    # (a) changed in round 8
-    # TRAINED quantizers (the r7 verdict's top item): IVF centroids
-    # k-means-refined + 3x redundant assignment (recall 0.45 -> ~0.80
-    # flat); PQ moves to 16x4 subspaces with 64 trained codewords
-    # (recall 0.56 -> ~0.96 flat). Oracles replay the full Lloyd loop.
-    "ann_ivf_topk",
-    "ann_pq_topk",
-    "ann_ivf_recall",
-    "ann_pq_recall",
-    # kmeans_assign refactored onto the shared kmeans_centroids
-    # trainer (results bit-identical; plan re-verified)
-    "embedding_kmeans",
-    "doc_semantic_dedup",
-    # oracle gains the share_a > 0 chi2 guard (ADVICE r7)
-    "orders_price_drift",
-    # single-disposition routing: NULL event_type rows land in exactly
-    # one sink (ADVICE r7)
-    "stream_dlq_routing",
-    # ledger+data now ONE Derby transaction (crash window closed);
-    # protocol evidence raises instead of assert
-    "stream_jdbc_exactly_once",
-    # empty-snapshot-above fix in store_as_of_timestamp + batch-commit
-    # CAS in the apply loop
-    "stream_orders_cdc_apply",
-    # read-side heal (read_published) + OCC commit-log CAS +
-    # writer-unique staging
-    "orders_write_audit_publish",
-    # plan extraction for source-agnosticism (same plan, new fronting
-    # proves no drift)
-    "stream_tumbling",
-    "stream_click_purchase_join",
-    # (b) new in round 8
-    "brand_week_lag_chain",
-    "repeat_supplier_no_return_orders",
-    # persisted-index serve paths (train/encode once, serve many);
-    # they share the end-to-end queries' oracles, so a green row IS
-    # the build->persist->load->search equivalence theorem
-    "ann_ivf_index_search",
-    "ann_pq_index_search",
-    # incremental maintenance of the trained PQ index: train-on-base,
-    # frozen-codebook delta encode, append — the oracle replays
-    # train(base)+encode(all), so green = the maintenance theorem
-    "ann_pq_index_append",
-    "ann_ivf_index_append",
-    # STREAMING index maintenance: delta batches appended exactly once
-    # (manifest-recorded batch ids); shares the batch append oracle —
-    # green = streaming ≡ one-shot maintenance
-    "stream_pq_index_maintenance",
-)
-
-# driver-checked in r8 (CORRECTNESS_r08.json keys) — union below
-_R8_DRIVER_CHECKED = (
-    "ann_ivf_topk", "ann_pq_topk", "ann_ivf_recall", "ann_pq_recall",
-    "embedding_kmeans", "doc_semantic_dedup", "orders_price_drift",
-    "stream_dlq_routing", "stream_jdbc_exactly_once",
-    "stream_orders_cdc_apply", "orders_write_audit_publish",
-    "stream_tumbling", "stream_click_purchase_join",
-    "brand_week_lag_chain", "repeat_supplier_no_return_orders",
-    "ann_ivf_index_search", "ann_pq_index_search", "ann_pq_index_append",
-    "ann_ivf_index_append", "stream_pq_index_maintenance",
-)
-
-_R9_FRONT = (
-    # (a) changed in round 9
-    # index maintenance writers (append + the new compaction) now
-    # SERIALIZE through an exclusive-create CAS on the index's
-    # _applog (VERDICT r8 #1: the unserialized manifest RMW could
-    # lose an applied_batches entry and set up a redelivery
-    # double-append); manifests carry mver + base/appended row
-    # counters (retrain trigger), and the build fingerprints of the
-    # append/maintenance queries are salted with the base-subset
-    # predicate (ADVICE r8). Results are bit-identical; the protocol
-    # and plans changed, so all five index queries re-front.
-    "ann_pq_index_append",
-    "ann_ivf_index_append",
-    # serve params (PQ subspace layout) now read from the MANIFEST —
-    # a caller-supplied mismatched m/dim raises (VERDICT r8 #2); a
-    # mid-maintenance (invalidated) index refuses to serve
-    "ann_pq_index_search",
-    "ann_ivf_index_search",
-    # streaming maintenance now also asserts the retrain trigger
-    # (appended 1/2 of base: flips a 0.4 budget, quiet at 0.6)
-    "stream_pq_index_maintenance",
-    # CDC time travel consults the _log commit records: an
-    # uncommitted crash-artifact snapshot is invisible to
-    # store_versions/store_as_of/the hwm walk (ADVICE r8 medium)
-    "stream_orders_cdc_apply",
-    # WAP retention keeps the N highest EXISTING version dirs (gap-
-    # robust sweep, ADVICE r8)
-    "orders_write_audit_publish",
-    # LSH retune (multiprobe breadth / tiering — see round notes)
-    "ann_lsh_topk",
-    "ann_lsh_recall",
-    # (b) new in round 9
-    # index OPTIMIZE: compaction of the appended file sets under the
-    # same CAS + invalidate-then-recommit protocol; shares the append
-    # oracle (content-neutrality theorem)
-    "ann_pq_index_compact",
-    # composed IVF+PQ (FAISS IVFADC layout): coarse trained cells +
-    # per-subspace residual codebooks; oracle replays BOTH training
-    # loops + the exact integer score decomposition end-to-end
-    "ann_ivfpq_topk",
-    "ann_ivfpq_recall",
-    # persisted-IVFPQ serve path (cross-process fingerprint cache);
-    # shares the end-to-end oracle = the persistence theorem
-    "ann_ivfpq_index_search",
-    # composed-index maintenance: frozen coarse cells + frozen residual
-    # codebook delta encode; oracle = train-on-base (both loops) +
-    # assign/encode-all = the composed maintenance theorem
-    "ann_ivfpq_index_append",
-)
-
-# driver-checked in r9 (CORRECTNESS_r09.json keys) — union below
-_R9_DRIVER_CHECKED = (
-    'ann_pq_index_append', 'ann_ivf_index_append', 'ann_pq_index_search',
-    'ann_ivf_index_search', 'stream_pq_index_maintenance', 'stream_orders_cdc_apply',
-    'orders_write_audit_publish', 'ann_lsh_topk', 'ann_lsh_recall',
-    'ann_pq_index_compact', 'ann_ivfpq_topk', 'ann_ivfpq_recall',
-    'ann_ivfpq_index_search', 'ann_ivfpq_index_append', 'popular_parts',
-    'clean_project', 'case_when_priority', 'distinct_pairs',
-    'null_handling', 'scalar_functions', 'set_operations',
-    'customers_with_orders_semi', 'customers_without_orders_anti', 'left_join_order_counts',
-    'star_join_revenue_by_nation', 'full_outer_join', 'broadcast_dim_join',
-    'null_safe_join', 'pricing_summary', 'top_orders_by_revenue',
-    'summary_stats', 'pivot_status', 'rollup_revenue',
-    'distinct_counts', 'corr_covar_portable', 'topk_per_group',
-    'window_analytics', 'window_distribution', 'sessionize',
-    'events_session_window', 'dense_customer_ids', 'surrogate_join_back',
-    'kfold_assignment', 'leave_one_out_split', 'cold_start_filtered_count',
-    'recs_wide_assembly', 'eval_rmse', 'eval_auc',
-    'eval_roc_points', 'als_recommendations',
-)
-
-_R10_FRONT = (
-    # (a) changed in round 10
-    # the maintenance writer protocol hardened (payload-atomic claims,
-    # claim release on pre-invalidate failure, post-claim spent-slot
-    # validation, optional lease liveness mode) — results identical,
-    # protocol changed, so the whole maintained-index family re-fronts
-    "ann_pq_index_append",
-    "ann_ivf_index_append",
-    "ann_pq_index_compact",
-    "ann_ivfpq_index_append",
-    # the serve queries' ensure_* build path runs under the same
-    # changed writer protocol (claims are taken for the initial build
-    # too), so they re-front with the writers
-    "ann_pq_index_search",
-    "ann_ivf_index_search",
-    # streaming PQ maintenance refactored onto the shared
-    # _stream_index_maintenance core (same plan and results)
-    "stream_pq_index_maintenance",
-    # CDC vacuum now prunes the commit log from the lowest RETAINED
-    # committed version (a swept artifact above the retained range
-    # could delete live commit records — ADVICE r9)
-    "stream_orders_cdc_apply",
-    # (b) new in round 10
-    # streaming maintenance for the remaining kinds (VERDICT r9 #1/#5):
-    # retrain-trigger protocol evidence now end-to-end for the family
-    "stream_ivf_index_maintenance",
-    "stream_ivfpq_index_maintenance",
-    # compaction content-neutrality for the COMPOSED layout
-    "ann_ivfpq_index_compact",
-    # IVFPQ probe policy change (VERDICT r9 #3): mass-budgeted
-    # adaptive probing replaces fixed nprobe=8 — results change, the
-    # oracle replays the same integer rule
-    "ann_ivfpq_topk",
-    "ann_ivfpq_recall",
-    "ann_ivfpq_index_search",
-    # exact distributed Mann-Whitney AUC (VERDICT r9 #6)
-    "eval_auc_exact",
-    # IVF probe policy change (the IVF half of the r10 mass-budget
-    # retune, done after the IVFPQ half shipped): mass-budgeted
-    # adaptive probing replaces fixed nprobe=8 across the whole IVF
-    # family — results change, the oracle replays the same integer
-    # rule; v4 ivf indexes persist + maintain the C-row cell_sizes
-    # table the probe reads
-    "ann_ivf_topk",
-    "ann_ivf_recall",
-    # persisted DEDUP index lifecycle (net-new): the ANN family's
-    # index machinery (manifest build, CAS writers, batch idempotence,
-    # compaction, streaming maintenance) applied to the dedup family's
-    # digest/band tables; all four share the doc_incremental_dedup
-    # oracle — persistence / maintenance / compaction / streaming
-    # theorems respectively
-    "doc_dedup_index_check",
-    "doc_dedup_index_append",
-    "doc_dedup_index_compact",
-    "stream_dedup_index_maintenance",
-    # winnowed MOSS span fingerprints (net-new): alignment-robust
-    # cross-doc span duplication with the w+k-1 guarantee; full oracle
-    "doc_winnow_spans",
-    # span-level benchmark decontamination over the same fingerprints
-    # (the GPT-3/PaLM n-gram-overlap rule with the winnow guarantee)
-    "doc_winnow_contamination",
-)
-
-# driver-checked in r10 (CORRECTNESS_r10.json keys, 50/50 green) —
-# union below
-_R10_DRIVER_CHECKED = (
-    'ann_pq_index_append', 'ann_ivf_index_append', 'ann_pq_index_compact',
-    'ann_ivfpq_index_append', 'ann_pq_index_search', 'ann_ivf_index_search',
-    'stream_pq_index_maintenance', 'stream_orders_cdc_apply',
-    'stream_ivf_index_maintenance', 'stream_ivfpq_index_maintenance',
-    'ann_ivfpq_index_compact', 'ann_ivfpq_topk', 'ann_ivfpq_recall',
-    'ann_ivfpq_index_search', 'eval_auc_exact', 'ann_ivf_topk',
-    'ann_ivf_recall', 'doc_dedup_index_check', 'doc_dedup_index_append',
-    'doc_dedup_index_compact', 'stream_dedup_index_maintenance',
-    'doc_winnow_spans', 'doc_winnow_contamination', 'popular_parts',
-    'clean_project', 'case_when_priority', 'distinct_pairs',
-    'null_handling', 'scalar_functions', 'set_operations',
-    'customers_with_orders_semi', 'customers_without_orders_anti',
-    'left_join_order_counts', 'star_join_revenue_by_nation',
-    'full_outer_join', 'broadcast_dim_join', 'null_safe_join',
-    'pricing_summary', 'top_orders_by_revenue', 'summary_stats',
-    'pivot_status', 'rollup_revenue', 'distinct_counts',
-    'corr_covar_portable', 'topk_per_group', 'window_analytics',
-    'window_distribution', 'sessionize', 'events_session_window',
-    'dense_customer_ids',
-)
-
-_R11_FRONT = (
-    # (a) changed in round 11
-    # the IVF policy became fully adaptive (the r10 verdict's top
-    # item): centroid count C = min(512, 64·ceil(sqrt(N/2000)))
-    # derived in-plan, probe budget steps down with the same scale
-    # step (IVF_MASS_SCHEDULE, probe_mass="auto") — results change at
-    # scaled SFs, the oracles replay both integer rules; the whole
-    # IVF family re-fronts
-    "ann_ivf_topk",
-    "ann_ivf_recall",
-    "ann_ivf_index_search",
-    "ann_ivf_index_append",
-    "stream_ivf_index_maintenance",
-    # the dedup index gained the winnow_fps table (params + manifest
-    # tables changed => fresh fingerprints and builds; results
-    # identical for the digest/band tiers) — the whole family
-    # re-fronts
-    "doc_dedup_index_check",
-    "doc_dedup_index_append",
-    "doc_dedup_index_compact",
-    "stream_dedup_index_maintenance",
-    # lease-mode claims became the DEFAULT (pid behind the env flag)
-    # and the claim machinery moved to operators/txlog as one shared
-    # self-describing shape (VERDICT r10 #5) — results identical,
-    # writer protocol changed, so every maintained-index/txlog writer
-    # re-fronts (the r10 bar for protocol changes)
-    "ann_pq_index_append",
-    "ann_pq_index_search",
-    "ann_pq_index_compact",
-    "ann_ivfpq_index_append",
-    "ann_ivfpq_index_search",
-    "ann_ivfpq_index_compact",
-    "stream_pq_index_maintenance",
-    "stream_ivfpq_index_maintenance",
-    "stream_orders_cdc_apply",
-    "orders_write_audit_publish",
-    # the IVFPQ tier adopted the scheduled policy too (r11: scaled
-    # coarse count + s-scheduled probe-mass budget, "auto") — the
-    # whole composed family re-fronts; results change at scaled SFs
-    # and the oracles replay both integer rules (the index queries
-    # above are already fronted for the v5 cell_sizes change)
-    "ann_ivfpq_topk",
-    "ann_ivfpq_recall",
-    # (b) new in round 11
-    # the ACTING tier over winnowed spans: span-level dedup by the
-    # min-id rule (drop a doc when > half its fingerprints are
-    # pre-owned by a lower-id doc); full oracle
-    "doc_winnow_dedup",
-    # persisted span-level decontamination: the benchmark suite's
-    # winnowed fingerprints ride the dedup index (build + append +
-    # check); shares the in-query oracle (persistence+maintenance
-    # theorem for the decontamination tier)
-    "doc_winnow_index_contamination",
-)
-
-# driver-checked in r11 (CORRECTNESS_r11.json keys, 50/50 green) —
-# union below
-_R11_DRIVER_CHECKED = (
-    'ann_ivf_topk', 'ann_ivf_recall', 'ann_ivf_index_search',
-    'ann_ivf_index_append', 'stream_ivf_index_maintenance',
-    'doc_dedup_index_check', 'doc_dedup_index_append',
-    'doc_dedup_index_compact', 'stream_dedup_index_maintenance',
-    'ann_pq_index_append', 'ann_pq_index_search', 'ann_pq_index_compact',
-    'ann_ivfpq_index_append', 'ann_ivfpq_index_search',
-    'ann_ivfpq_index_compact', 'stream_pq_index_maintenance',
-    'stream_ivfpq_index_maintenance', 'stream_orders_cdc_apply',
-    'orders_write_audit_publish', 'ann_ivfpq_topk', 'ann_ivfpq_recall',
-    'doc_winnow_dedup', 'doc_winnow_index_contamination', 'popular_parts',
-    'clean_project', 'case_when_priority', 'distinct_pairs',
-    'null_handling', 'scalar_functions', 'set_operations',
-    'customers_with_orders_semi', 'customers_without_orders_anti',
-    'left_join_order_counts', 'star_join_revenue_by_nation',
-    'full_outer_join', 'broadcast_dim_join', 'null_safe_join',
-    'pricing_summary', 'top_orders_by_revenue', 'summary_stats',
-    'pivot_status', 'rollup_revenue', 'distinct_counts',
-    'corr_covar_portable', 'topk_per_group', 'window_analytics',
-    'window_distribution', 'sessionize', 'events_session_window',
-    'dense_customer_ids',
-)
-
-# driver-checked in r12 (CORRECTNESS_r12.json keys, 50/50 green) —
-# union below
-_R12_DRIVER_CHECKED = (
-    'ann_ivf_index_append', 'ann_ivf_index_search', 'ann_ivf_recall',
-    'ann_ivf_topk', 'ann_ivfpq_index_append', 'ann_ivfpq_index_compact',
-    'ann_ivfpq_index_search', 'ann_ivfpq_recall', 'ann_ivfpq_topk',
-    'ann_mmr_from_index', 'ann_pq_index_append', 'ann_pq_index_compact',
-    'ann_pq_index_search', 'ann_pq_recall', 'ann_pq_topk',
-    'broadcast_dim_join', 'case_when_priority', 'clean_project',
-    'corr_covar_portable', 'customers_with_orders_semi',
-    'customers_without_orders_anti', 'dense_customer_ids',
-    'distinct_counts', 'distinct_pairs', 'doc_dedup_index_append',
-    'doc_dedup_index_check', 'doc_dedup_index_compact',
-    'doc_winnow_index_contamination', 'events_session_window',
-    'full_outer_join', 'left_join_order_counts', 'null_handling',
-    'null_safe_join', 'pivot_status', 'popular_parts', 'pricing_summary',
-    'rollup_revenue', 'scalar_functions', 'sessionize', 'set_operations',
-    'star_join_revenue_by_nation', 'stream_dedup_index_maintenance',
-    'stream_ivf_index_maintenance', 'stream_ivfpq_index_maintenance',
-    'stream_pq_index_maintenance', 'summary_stats', 'top_orders_by_revenue',
-    'topk_per_group', 'window_analytics', 'window_distribution',
-)
-
-# driver-checked in r13 (CORRECTNESS_r13.json keys, 50/50 green) —
-# union below
-_R13_DRIVER_CHECKED = (
-    'ann_ivf_index_append', 'ann_ivf_index_retract', 'ann_ivf_index_search',
-    'ann_ivfpq_index_append', 'ann_ivfpq_index_compact',
-    'ann_ivfpq_index_search', 'ann_mmr_from_index', 'ann_pq_index_append',
-    'ann_pq_index_compact', 'ann_pq_index_search', 'broadcast_dim_join',
-    'case_when_priority', 'clean_project', 'corr_covar_portable',
-    'customers_with_orders_semi', 'customers_without_orders_anti',
-    'dense_customer_ids', 'distinct_counts', 'distinct_pairs',
-    'doc_dedup_index_append', 'doc_dedup_index_check',
-    'doc_dedup_index_compact', 'doc_dedup_index_retract',
-    'doc_winnow_index_contamination', 'events_session_window',
-    'full_outer_join', 'kfold_assignment', 'leave_one_out_split',
-    'left_join_order_counts', 'lineitem_compaction_roundtrip',
-    'null_handling', 'null_safe_join', 'pivot_status', 'popular_parts',
-    'pricing_summary', 'rollup_revenue', 'scalar_functions', 'sessionize',
-    'set_operations', 'star_join_revenue_by_nation',
-    'stream_dedup_index_maintenance', 'stream_ivf_index_maintenance',
-    'stream_ivfpq_index_maintenance', 'stream_pq_index_maintenance',
-    'summary_stats', 'surrogate_join_back', 'top_orders_by_revenue',
-    'topk_per_group', 'window_analytics', 'window_distribution',
-)
-
-_R14_FRONT = (
-    # (a) new in round 14
-    # batch retraction for the COMPOSED kind (VERDICT r13 #1 — the
-    # hard case: cell-size snapshot subtraction, appended_rows
-    # reversal, schedule clamp and rerank-pool widening must all
-    # reverse exactly); shares ann_ivfpq_index_append's oracle (the
-    # retraction theorem), + scaled-branch spot-checks at sf0.3/sf1
-    "ann_ivfpq_index_retract",
-    # size-tiered MINOR compaction (r14 — the LSM answer to the
-    # lazy-compaction file-count tax MANIFEST_GROWTH.json measures):
-    # aged-out batch units merge into one L1 unit, the base tier is
-    # never rewritten, the newest batches stay retractable; shares the
-    # append oracles (content-neutrality + post-minor retraction)
-    "ann_ivf_index_minor_compact",
-    "doc_dedup_index_minor_compact",
-    # PQ-kind retraction (completes the family: all four persisted
-    # kinds carry a driver-checked retract query; PQ's reversal
-    # surface is units + appended_rows -> rerank-pool widening)
-    "ann_pq_index_retract",
-    # (b) changed in round 14: the maintenance-writer protocol
-    # hardened again (ADVICE r13) — fence-epoch recheck inside
-    # _commit immediately before the os.replace (closes the
-    # commit-ordering TOCTOU to a microsecond window), claim payloads
-    # carry the owning thread id and failure-path claim removals
-    # verify ownership first, batch ids normalized to int at every
-    # append entry, and _gc_dead_units grew the mtime-keyed grace
-    # window. Results identical, protocol changed: the whole
-    # maintained-index family re-fronts (the r10–r13 bar)
-    "ann_ivf_index_append",
-    "ann_ivf_index_search",
-    "ann_ivf_index_retract",
-    "stream_ivf_index_maintenance",
-    "ann_pq_index_append",
-    "ann_pq_index_search",
-    "ann_pq_index_compact",
-    "stream_pq_index_maintenance",
-    "ann_ivfpq_index_append",
-    "ann_ivfpq_index_search",
-    "ann_ivfpq_index_compact",
-    "stream_ivfpq_index_maintenance",
-    "doc_dedup_index_check",
-    "doc_dedup_index_append",
-    "doc_dedup_index_compact",
-    "doc_dedup_index_retract",
-    "stream_dedup_index_maintenance",
-    "doc_winnow_index_contamination",
-    "ann_mmr_from_index",
-)
-
-_R13_FRONT = (
-    # changed in round 13: the v6 manifest-referenced batch-unit
-    # storage (VERDICT r12 #4 — fenced storage). Every persisted-index
-    # query re-fronts: builds commit a ``units`` map, appends/compacts
-    # adopt one renamed unit dir per table with NO manifest-invalidate
-    # window, and every serve resolves its file list from the manifest
-    # instead of a directory listing. Served CONTENT is invariant by
-    # construction (same rows, same folds) — the oracles are unchanged
-    # and must hash-match, which is exactly what fronting re-proves.
-    "ann_ivf_index_append",
-    "ann_ivf_index_search",
-    "stream_ivf_index_maintenance",
-    "ann_pq_index_append",
-    "ann_pq_index_search",
-    "ann_pq_index_compact",
-    "stream_pq_index_maintenance",
-    "ann_ivfpq_index_append",
-    "ann_ivfpq_index_search",
-    "ann_ivfpq_index_compact",
-    "stream_ivfpq_index_maintenance",
-    "doc_dedup_index_check",
-    "doc_dedup_index_append",
-    "doc_dedup_index_compact",
-    "stream_dedup_index_maintenance",
-    "doc_winnow_index_contamination",
-    # fed from the persisted IVFPQ index's serve panel (same build +
-    # search path as the *_index_search family)
-    "ann_mmr_from_index",
-    # lineitem compaction rides operators/layout.compact, which grew
-    # multi-path source support this round (single-path behavior
-    # unchanged; re-front to prove it)
-    "lineitem_compaction_roundtrip",
-)
-
-_R12_FRONT = (
-    # (a) changed in round 12
-    # the persisted ANN serve paths adopted the r12 drift policy
-    # (VERDICT r11 #3 / ADVICE r11): probe_mass="auto" resolves its
-    # (num, den) at the BUILD's scale step from the manifest's
-    # base_rows (appends no longer step the budget down against a
-    # frozen C), and the PQ/IVFPQ exact-rerank pool WIDENS with the
-    # manifest's appended fraction — results change on appended
-    # indexes, and the oracles replay both integer rules, so the
-    # whole trained-index family re-fronts
-    "ann_ivf_index_append",
-    "stream_ivf_index_maintenance",
-    "ann_pq_index_append",
-    "ann_pq_index_compact",
-    "stream_pq_index_maintenance",
-    "ann_ivfpq_index_append",
-    "ann_ivfpq_index_compact",
-    "stream_ivfpq_index_maintenance",
-    # serve-path twins: manifest cell_sizes SNAPSHOT replaces the
-    # per-search fold of the v5 partial-count log (VERDICT r11 #1 —
-    # results identical, plan changed), plus the writer-fence epoch
-    # and staged-vs-adopted count guard in every maintenance txn
-    # (VERDICT r11 #4 / ADVICE r11 — protocol changes re-front the
-    # family, the r10/r11 bar)
-    "ann_ivf_index_search",
-    "ann_pq_index_search",
-    "ann_ivfpq_index_search",
-    "doc_dedup_index_check",
-    "doc_dedup_index_append",
-    "doc_dedup_index_compact",
-    "stream_dedup_index_maintenance",
-    "doc_winnow_index_contamination",
-    # oracle-text rewrites (s-expression / pool expression now
-    # parameterized by base_pred; value-identical for TRUE but the
-    # replay changed, so the end-to-end twins re-front)
-    "ann_ivf_topk",
-    "ann_ivf_recall",
-    "ann_pq_topk",
-    "ann_pq_recall",
-    "ann_ivfpq_topk",
-    "ann_ivfpq_recall",
-    # (b) new in round 12
-    # MMR fed from the persisted IVFPQ index's bounded top-M panel —
-    # the production-shape diversified retrieval (VERDICT r11 #6)
-    "ann_mmr_from_index",
-)
-
-_R7_FRONT = (
-    # (a) changed in round 7
-    # IVF centroid + PQ codebook sampling now RELATIVE to min(id)
-    # (offset-robust, ADVICE r6 medium) AND recall-calibrated from
-    # RECALL_SCALE.json: IVF nprobe 2→8 (recall 0.22→0.45, measured
-    # scale-invariant), PQ codebook/rerank-pool scale by
-    # ceil(sqrt(N/1000)) under absolute caps 64/640 (recall was
-    # COLLAPSING 0.29→0.13 over 10× corpus growth; now ~0.56 flat);
-    # oracles updated in lockstep
-    "ann_ivf_topk",
-    "ann_pq_topk",
-    # store_changes update detection now null-safe (eqNullSafe) so a
-    # nullable payload field can't silently drop CDF rows (ADVICE r6)
-    "stream_orders_cdc_apply",
-    # compact() raises the same ValueError for missing-path and
-    # exists-but-empty sources (ADVICE r6)
-    "lineitem_compaction_roundtrip",
-)
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    names = list(registry.QUERIES)
-    checked = (
-        set(_R1_DRIVER_CHECKED)
-        | set(_R2_DRIVER_CHECKED)
-        | set(_R3_DRIVER_CHECKED)
-        | set(_R4_DRIVER_CHECKED)
-        | set(_R5_DRIVER_CHECKED)
-        | set(_R6_DRIVER_CHECKED)
-        | set(_R7_DRIVER_CHECKED)
-        | set(_R8_DRIVER_CHECKED)
-        | set(_R9_DRIVER_CHECKED)
-        | set(_R10_DRIVER_CHECKED)
-        | set(_R11_DRIVER_CHECKED)
-        | set(_R12_DRIVER_CHECKED)
-        | set(_R13_DRIVER_CHECKED)
-    )
-    front = [n for n in _R14_FRONT if n in registry.QUERIES]
-    fresh = [n for n in names if n not in checked and n not in front]
-    green = [n for n in names if n in checked and n not in front]
-    ordered = front + fresh + green
-    return {n: registry.QUERIES[n] for n in ordered}
+    rest = [n for n in registry.QUERIES if n not in _FRONT]
+    return {n: registry.QUERIES[n] for n in (*_FRONT, *rest)}
 
 
 def oracle_sql() -> dict[str, str]:

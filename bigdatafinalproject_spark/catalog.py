@@ -15,7 +15,13 @@ already seen starts no Spark job for the loads.
 
 from __future__ import annotations
 
+import atexit
+import contextlib
+import glob
+import hashlib
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -44,6 +50,38 @@ ALWAYS_BROADCAST = {"region", "nation"}
 
 def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
+
+
+_SCRATCH: set[str] = set()
+
+
+def scratch_dir(sf_dir: str, kind: str) -> str:
+    """This process's scratch path for ``kind`` over ``sf_dir``:
+    ``bdfp_<kind>_<sf_dir hash>_<pid>`` in the temporary directory.
+
+    The pid keeps concurrent pytest/bench/driver processes apart, and
+    embedded Derby boots a database directory from one JVM only. The
+    path is not created here. It is removed at interpreter exit, with
+    every ``<path>_*`` sibling: a WAP-published path is a symlink to
+    ``<path>_v<N>`` versions beside a ``<path>_log``. A caller that may
+    run twice in one process removes the path first itself."""
+    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
+    path = os.path.join(
+        tempfile.gettempdir(), f"bdfp_{kind}_{tag}_{os.getpid()}"
+    )
+    _SCRATCH.add(path)
+    return path
+
+
+@atexit.register
+def _remove_scratch() -> None:
+    for path in _SCRATCH:
+        for p in (path, *glob.glob(glob.escape(path) + "_*")):
+            if os.path.isdir(p) and not os.path.islink(p):
+                shutil.rmtree(p, ignore_errors=True)
+            else:
+                with contextlib.suppress(OSError):
+                    os.unlink(p)
 
 
 def ensure_session_defaults(spark: SparkSession) -> None:

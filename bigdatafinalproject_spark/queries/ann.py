@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bigdatafinalproject_spark.catalog import load_table
+from bigdatafinalproject_spark.catalog import load_table, scratch_dir
 from bigdatafinalproject_spark.operators.ann import cosine_topk, lsh_topk, quantized_topk
 from bigdatafinalproject_spark.registry import query
 
@@ -402,12 +402,11 @@ def ann_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     count-exact."""
     from bigdatafinalproject_spark.functions import portable_hash64
     from bigdatafinalproject_spark.operators.ann import lsh_signatures
-    from bigdatafinalproject_spark.queries.layout import _scratch
 
     emb = load_table(spark, sf_dir, "embeddings")
     base = emb.filter(F.col("vec_id") % 3 != 0)
     delta = emb.filter(F.col("vec_id") % 3 == 0)
-    idx = _scratch(sf_dir, "lshindex")
+    idx = scratch_dir(sf_dir, "lshindex")
     lsh_signatures(
         base, "vec_id", "embedding", _IDX_PLANES, _IDX_BANDS, _DIM
     ).write.mode("overwrite").parquet(idx)
@@ -687,7 +686,6 @@ def ann_pq_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         pq_index_search,
         shared_index_dir,
     )
-    from bigdatafinalproject_spark.queries.layout import _scratch
 
     emb = load_table(spark, sf_dir, "embeddings")
     base = emb.filter(F.expr(_PQ_BASE_PRED))
@@ -712,7 +710,7 @@ def ann_pq_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         src=table_path(sf_dir, "embeddings"), subset=_PQ_BASE_PRED,
         **params,
     )
-    idx = clone_index(cached, _scratch(sf_dir, "pqappendidx"))
+    idx = clone_index(cached, scratch_dir(sf_dir, "pqappendidx"))
     pq_index_append(spark, idx, delta)
     queries = emb.filter(
         (F.col("vec_id") % 50 == 0) & (F.col("vec_id") < 3200)
@@ -750,7 +748,6 @@ def ann_pq_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
         pq_index_search,
         shared_index_dir,
     )
-    from bigdatafinalproject_spark.queries.layout import _scratch
 
     emb = load_table(spark, sf_dir, "embeddings")
     base = emb.filter(F.expr(_PQ_BASE_PRED))
@@ -769,7 +766,7 @@ def ann_pq_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
         src=table_path(sf_dir, "embeddings"), subset=_PQ_BASE_PRED,
         **params,
     )
-    idx = clone_index(cached, _scratch(sf_dir, "pqcompactidx"))
+    idx = clone_index(cached, scratch_dir(sf_dir, "pqcompactidx"))
     # two delta batches -> two extra file sets per appended table
     pq_index_append(spark, idx, delta.filter(F.col("vec_id") % 2 == 0),
                     batch_id=0)
@@ -815,7 +812,6 @@ def ann_pq_index_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
         retract_batch,
         shared_index_dir,
     )
-    from bigdatafinalproject_spark.queries.layout import _scratch
 
     emb = load_table(spark, sf_dir, "embeddings")
     base = emb.filter(F.expr(_PQ_BASE_PRED))
@@ -832,7 +828,7 @@ def ann_pq_index_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
         src=table_path(sf_dir, "embeddings"), subset=_PQ_BASE_PRED,
         **params,
     )
-    idx = clone_index(cached, _scratch(sf_dir, "pqretractidx"))
+    idx = clone_index(cached, scratch_dir(sf_dir, "pqretractidx"))
     pq_index_append(spark, idx, delta.filter(F.col("vec_id") % 2 == 0),
                     batch_id=0)
     pq_index_append(spark, idx, delta.filter(F.col("vec_id") % 2 != 0),

@@ -9,7 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bigdatafinalproject_spark.catalog import load_table
+from bigdatafinalproject_spark.catalog import load_table, scratch_dir
 from bigdatafinalproject_spark.functions import dsum
 from bigdatafinalproject_spark.operators.quality import remove_outliers_iqr
 from bigdatafinalproject_spark.registry import query
@@ -118,13 +118,12 @@ def orders_write_audit_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_published,
         write_audit_publish,
     )
-    from bigdatafinalproject_spark.queries.layout import _scratch
 
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
     )
     cust_keys = load_table(spark, sf_dir, "customer").select("c_custkey")
-    dest = _scratch(sf_dir, "wap_orders")
+    dest = scratch_dir(sf_dir, "wap_orders")
     audits = {
         "null_keys": lambda df: df.filter(
             F.col("o_orderkey").isNull() | F.col("o_custkey").isNull()

@@ -12,33 +12,13 @@ value-lossless for the hashes to match.
 
 from __future__ import annotations
 
-import atexit
-import hashlib
-import os
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from bigdatafinalproject_spark.catalog import load_table
+from bigdatafinalproject_spark.catalog import load_table, scratch_dir
 from bigdatafinalproject_spark.functions import dsum
 from bigdatafinalproject_spark.registry import query
-
-
-def _tmp_dir(sf_dir: str, fmt: str) -> str:
-    """Per-(sf_dir, process) scratch dir — concurrent pytest/bench/driver
-    processes must not clobber each other's files (same rule as the
-    Derby path in queries/jdbc.py)."""
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
-    path = os.path.join(
-        tempfile.gettempdir(), f"bdfp_{fmt}_{tag}_{os.getpid()}"
-    )
-    # pid-tagged dirs pile up across runs otherwise (advisor flag) —
-    # idempotent: rmtree ignores an already-removed dir
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
-    return path
 
 
 @query(
@@ -63,7 +43,7 @@ def orc_roundtrip_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_nationkey", "c_acctbal"
     )
-    path = _tmp_dir(sf_dir, "orc")
+    path = scratch_dir(sf_dir, "orc")
     c.write.mode("overwrite").orc(path)
     back = spark.read.orc(path)
     return back.groupBy("c_nationkey").agg(
@@ -105,7 +85,7 @@ def xml_roundtrip_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment", "c_acctbal"
     )
-    path = _tmp_dir(sf_dir, "xml")
+    path = scratch_dir(sf_dir, "xml")
     (
         c.write.mode("overwrite")
         .format("xml")
@@ -155,7 +135,7 @@ def jsonl_roundtrip_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
     )
-    path = _tmp_dir(sf_dir, "jsonl")
+    path = scratch_dir(sf_dir, "jsonl")
     o.write.mode("overwrite").json(path)
     back = spark.read.schema(_JSON_SCHEMA).json(path)
     return back.groupBy("o_orderstatus").agg(

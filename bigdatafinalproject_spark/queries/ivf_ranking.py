@@ -5,7 +5,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from bigdatafinalproject_spark.catalog import load_table
+from bigdatafinalproject_spark.catalog import load_table, scratch_dir
 from bigdatafinalproject_spark.functions import oracle_hash64
 from bigdatafinalproject_spark.operators.ann import ivf_topk
 from bigdatafinalproject_spark.operators.ranking import ranking_metrics
@@ -357,7 +357,6 @@ def ann_ivf_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         ivf_index_search,
         shared_index_dir,
     )
-    from bigdatafinalproject_spark.queries.layout import _scratch
 
     emb = load_table(spark, sf_dir, "embeddings")
     base = emb.filter(F.expr(_IVF_BASE_PRED))
@@ -379,7 +378,7 @@ def ann_ivf_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         src=table_path(sf_dir, "embeddings"), subset=_IVF_BASE_PRED,
         **params,
     )
-    idx = clone_index(cached, _scratch(sf_dir, "ivfappendidx"))
+    idx = clone_index(cached, scratch_dir(sf_dir, "ivfappendidx"))
     ivf_index_append(spark, idx, delta)
     queries = emb.filter(
         (F.col("vec_id") % 50 == 0) & (F.col("vec_id") < 3200)
@@ -413,7 +412,6 @@ def ann_ivf_index_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
         retract_batch,
         shared_index_dir,
     )
-    from bigdatafinalproject_spark.queries.layout import _scratch
 
     emb = load_table(spark, sf_dir, "embeddings")
     base = emb.filter(F.expr(_IVF_BASE_PRED))
@@ -431,7 +429,7 @@ def ann_ivf_index_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
         src=table_path(sf_dir, "embeddings"), subset=_IVF_BASE_PRED,
         **params,
     )
-    idx = clone_index(cached, _scratch(sf_dir, "ivfretractidx"))
+    idx = clone_index(cached, scratch_dir(sf_dir, "ivfretractidx"))
     ivf_index_append(spark, idx, delta.filter(F.col("vec_id") % 2 == 0),
                      batch_id=0)
     ivf_index_append(spark, idx, delta.filter(F.col("vec_id") % 2 != 0),
@@ -489,7 +487,6 @@ def ann_ivf_index_minor_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
         retract_batch,
         shared_index_dir,
     )
-    from bigdatafinalproject_spark.queries.layout import _scratch
 
     emb = load_table(spark, sf_dir, "embeddings")
     base = emb.filter(F.expr(_IVF_BASE_PRED))
@@ -507,7 +504,7 @@ def ann_ivf_index_minor_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
         src=table_path(sf_dir, "embeddings"), subset=_IVF_BASE_PRED,
         **params,
     )
-    idx = clone_index(cached, _scratch(sf_dir, "ivfminorcidx"))
+    idx = clone_index(cached, scratch_dir(sf_dir, "ivfminorcidx"))
     # delta is the vec_id%3==0 stripe — split it by vec_id%9 so all
     # three batches are non-empty
     for b in range(3):

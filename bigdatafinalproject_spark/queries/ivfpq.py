@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bigdatafinalproject_spark.catalog import load_table
+from bigdatafinalproject_spark.catalog import load_table, scratch_dir
 from bigdatafinalproject_spark.queries.ann import (
     _DOT_AB,
     _NORMS_CTE,
@@ -396,7 +396,6 @@ def ann_ivfpq_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         ivfpq_index_search,
         shared_index_dir,
     )
-    from bigdatafinalproject_spark.queries.layout import _scratch
 
     emb = load_table(spark, sf_dir, "embeddings")
     base = emb.filter(F.expr(_PQ_BASE_PRED))
@@ -415,7 +414,7 @@ def ann_ivfpq_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         src=table_path(sf_dir, "embeddings"), subset=_PQ_BASE_PRED,
         **params,
     )
-    idx = clone_index(cached, _scratch(sf_dir, "ivfpqappendidx"))
+    idx = clone_index(cached, scratch_dir(sf_dir, "ivfpqappendidx"))
     ivfpq_index_append(spark, idx, delta)
     queries = emb.filter(
         (F.col("vec_id") % 50 == 0) & (F.col("vec_id") < 3200)
@@ -452,7 +451,6 @@ def ann_ivfpq_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
         ivfpq_index_search,
         shared_index_dir,
     )
-    from bigdatafinalproject_spark.queries.layout import _scratch
 
     emb = load_table(spark, sf_dir, "embeddings")
     base = emb.filter(F.expr(_PQ_BASE_PRED))
@@ -471,7 +469,7 @@ def ann_ivfpq_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
         src=table_path(sf_dir, "embeddings"), subset=_PQ_BASE_PRED,
         **params,
     )
-    idx = clone_index(cached, _scratch(sf_dir, "ivfpqcompactidx"))
+    idx = clone_index(cached, scratch_dir(sf_dir, "ivfpqcompactidx"))
     ivfpq_index_append(spark, idx, delta.filter(F.col("vec_id") % 2 == 0),
                        batch_id=0)
     ivfpq_index_append(spark, idx, delta.filter(F.col("vec_id") % 2 != 0),
@@ -521,7 +519,6 @@ def ann_ivfpq_index_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
         retract_batch,
         shared_index_dir,
     )
-    from bigdatafinalproject_spark.queries.layout import _scratch
 
     emb = load_table(spark, sf_dir, "embeddings")
     base = emb.filter(F.expr(_PQ_BASE_PRED))
@@ -540,7 +537,7 @@ def ann_ivfpq_index_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
         src=table_path(sf_dir, "embeddings"), subset=_PQ_BASE_PRED,
         **params,
     )
-    idx = clone_index(cached, _scratch(sf_dir, "ivfpqretractidx"))
+    idx = clone_index(cached, scratch_dir(sf_dir, "ivfpqretractidx"))
     ivfpq_index_append(spark, idx, delta.filter(F.col("vec_id") % 2 == 0),
                        batch_id=0)
     ivfpq_index_append(spark, idx, delta.filter(F.col("vec_id") % 2 != 0),

@@ -16,14 +16,10 @@ matters when the JDBC side is a real warehouse.
 
 from __future__ import annotations
 
-import hashlib
-import os
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bigdatafinalproject_spark.catalog import load_table, table_path
+from bigdatafinalproject_spark.catalog import load_table, scratch_dir, table_path
 from bigdatafinalproject_spark.functions import dsum
 from bigdatafinalproject_spark.registry import query
 from bigdatafinalproject_spark.sources.readers import read_jdbc
@@ -33,14 +29,9 @@ DERBY_DRIVER = "org.apache.derby.jdbc.EmbeddedDriver"
 
 
 def _derby_url(sf_dir: str) -> str:
-    """Per-(sf_dir, process) embedded Derby database under /tmp.
-
-    The pid tag matters: embedded Derby allows one booting JVM per
-    database directory — concurrent pytest + bench processes must not
-    share a path."""
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
-    db = os.path.join(tempfile.gettempdir(), f"bdfp_derby_{tag}_{os.getpid()}")
-    return f"jdbc:derby:{db};create=true"
+    """Per-(sf_dir, process) embedded Derby database in a scratch dir
+    (embedded Derby allows one booting JVM per database directory)."""
+    return f"jdbc:derby:{scratch_dir(sf_dir, 'derby')};create=true"
 
 
 def _custkey_bounds(sf_dir: str) -> tuple[int, int]:

@@ -9,10 +9,12 @@ per-z-bucket bounding rectangles.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bigdatafinalproject_spark.catalog import load_table
+from bigdatafinalproject_spark.catalog import load_table, scratch_dir
 from bigdatafinalproject_spark.operators.layout import (
     scale_to_bits,
     zvalue,
@@ -87,29 +89,6 @@ def lineitem_zorder_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 # tests/test_sources.py and tests/test_bucketing_grid.py; these queries
 # give the same patterns end-to-end driver correctness rows.
 
-import atexit as _atexit
-import hashlib as _hashlib
-import os as _os
-import shutil as _shutil
-import tempfile as _tempfile
-
-_SCRATCH_CLEANUP: set[str] = set()
-
-
-def _scratch(sf_dir: str, kind: str) -> str:
-    """Pid-tagged scratch dir, removed at interpreter exit — repeated
-    runs and testdata regenerations otherwise accrete one dir per pid
-    under /tmp (ADVICE r3)."""
-    tag = _hashlib.md5(_os.path.abspath(sf_dir).encode()).hexdigest()[:10]
-    path = _os.path.join(
-        _tempfile.gettempdir(), f"bdfp_{kind}_{tag}_{_os.getpid()}"
-    )
-    if path not in _SCRATCH_CLEANUP:
-        _SCRATCH_CLEANUP.add(path)
-        _atexit.register(_shutil.rmtree, path, ignore_errors=True)
-    return path
-
-
 @query(
     "hive_partitioned_prune_agg",
     oracle="""
@@ -135,7 +114,7 @@ def hive_partitioned_prune_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice", "o_orderstatus"
     )
-    path = _scratch(sf_dir, "hivepart")
+    path = scratch_dir(sf_dir, "hivepart")
     o.write.mode("overwrite").partitionBy("o_orderstatus").parquet(path)
     back = spark.read.parquet(path).filter(F.col("o_orderstatus") == "F")
     from bigdatafinalproject_spark.functions import dsum as _dsum
@@ -167,7 +146,7 @@ def bucketed_join_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 100 TB strategy for fact-fact joins that repeat every run:
     shuffle once at write time, never again at read time.
     """
-    pid = _os.getpid()
+    pid = os.getpid()
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority"
     )
@@ -183,13 +162,13 @@ def bucketed_join_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     (
         o.repartition(8, F.col("o_orderkey"))
         .write.format("parquet").bucketBy(8, "o_orderkey").sortBy("o_orderkey")
-        .option("path", _scratch(sf_dir, "bucket_o"))
+        .option("path", scratch_dir(sf_dir, "bucket_o"))
         .mode("overwrite").saveAsTable(ot)
     )
     (
         li.repartition(8, F.col("o_orderkey"))
         .write.format("parquet").bucketBy(8, "o_orderkey").sortBy("o_orderkey")
-        .option("path", _scratch(sf_dir, "bucket_l"))
+        .option("path", scratch_dir(sf_dir, "bucket_l"))
         .mode("overwrite").saveAsTable(lt)
     )
     from bigdatafinalproject_spark.functions import dsum as _dsum
@@ -226,8 +205,8 @@ def lineitem_compaction_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame
     from bigdatafinalproject_spark.functions import dsum as _dsum
     from bigdatafinalproject_spark.operators.layout import compact
 
-    frag = _scratch(sf_dir, "frag")
-    dst = _scratch(sf_dir, "compacted")
+    frag = scratch_dir(sf_dir, "frag")
+    dst = scratch_dir(sf_dir, "compacted")
     li = load_table(spark, sf_dir, "lineitem")
     li.repartition(64).write.mode("overwrite").parquet(frag)
     compact(spark, frag, dst, target_bytes=8 << 20, sort_col="l_orderkey")
@@ -269,7 +248,7 @@ def events_incremental_rollup_refresh(
     query is the nightly/streaming upsert."""
     from bigdatafinalproject_spark.operators.barrier import materialize_barrier
 
-    store = _scratch(sf_dir, "rollup_store")
+    store = scratch_dir(sf_dir, "rollup_store")
     ev = load_table(spark, sf_dir, "events").select(
         F.date_format("ts", "yyyy-MM-dd").alias("day"),
         F.hour("ts").alias("hr"),
@@ -369,7 +348,7 @@ def orders_incremental_join_view(
     the stored view and O₁ bucketed on the join key the base-side
     scans are co-located and shuffle-free. Refresh cost tracks the
     delta, never the history."""
-    store = _scratch(sf_dir, "joinview")
+    store = scratch_dir(sf_dir, "joinview")
     c = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_mktsegment"
     )

@@ -11,7 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from bigdatafinalproject_spark.catalog import load_table
+from bigdatafinalproject_spark.catalog import load_table, scratch_dir
 from bigdatafinalproject_spark.functions import oracle_bucket, oracle_hash64
 from bigdatafinalproject_spark.operators import dedup as D
 from bigdatafinalproject_spark.operators import text as T
@@ -605,7 +605,6 @@ def _maintained_dedup_clone(spark: SparkSession, sf_dir: str, scratch: str) -> s
         ensure_dedup_index,
         shared_index_dir,
     )
-    from bigdatafinalproject_spark.queries.layout import _scratch
     from bigdatafinalproject_spark.streaming.dedup import (
         DEDUP_BASE_PRED,
         DEDUP_DELTA_PRED,
@@ -624,7 +623,7 @@ def _maintained_dedup_clone(spark: SparkSession, sf_dir: str, scratch: str) -> s
         src=table_path(sf_dir, "documents"), subset=DEDUP_BASE_PRED,
         **params,
     )
-    idx = clone_index(cached, _scratch(sf_dir, scratch))
+    idx = clone_index(cached, scratch_dir(sf_dir, scratch))
     dedup_index_append(
         spark, idx, delta.filter(F.col("doc_id") % 2 == 0), batch_id=0
     )
@@ -755,7 +754,6 @@ def doc_dedup_index_minor_compact(
         retract_batch,
         shared_index_dir,
     )
-    from bigdatafinalproject_spark.queries.layout import _scratch
     from bigdatafinalproject_spark.streaming.dedup import (
         DEDUP_BASE_PRED,
         DEDUP_BATCH_PRED,
@@ -775,7 +773,7 @@ def doc_dedup_index_minor_compact(
         src=table_path(sf_dir, "documents"), subset=DEDUP_BASE_PRED,
         **params,
     )
-    idx = clone_index(cached, _scratch(sf_dir, "dedupminorcidx"))
+    idx = clone_index(cached, scratch_dir(sf_dir, "dedupminorcidx"))
     # delta is the doc_id%3==0 (mod-5-excluded) stripe — split it by
     # doc_id%9 so all three crawl batches are non-empty
     for b in range(3):
@@ -1075,7 +1073,6 @@ def doc_winnow_index_contamination(
         ensure_dedup_index,
         shared_index_dir,
     )
-    from bigdatafinalproject_spark.queries.layout import _scratch
 
     params = _dedup_idx_params()
     docs = load_table(spark, sf_dir, "documents")
@@ -1090,7 +1087,7 @@ def doc_winnow_index_contamination(
         src=table_path(sf_dir, "documents"),
         subset=_WINNOW_IDX_BASE_PRED, **params,
     )
-    idx = clone_index(cached, _scratch(sf_dir, "winnowcontamidx"))
+    idx = clone_index(cached, scratch_dir(sf_dir, "winnowcontamidx"))
     dedup_index_append(
         spark, idx, delta.filter(F.col("doc_id") % 2 == 0), batch_id=0
     )

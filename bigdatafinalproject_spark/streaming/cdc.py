@@ -34,7 +34,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bigdatafinalproject_spark.catalog import table_path
+from bigdatafinalproject_spark.catalog import scratch_dir, table_path
 from bigdatafinalproject_spark.streaming.schema import footer_read_schema
 
 _N_CHUNKS = 4
@@ -404,8 +404,6 @@ def stream_cdc_latest_store(
     source-file manifest is written to ``m=<b>`` (no driver collect —
     a distinct over ``input_file_name``), giving the replay trail a
     commit-log-style record of what each batch contained."""
-    import atexit
-
     if raw is None:
         d = _chunked_orders_dir(sf_dir)
         raw = (
@@ -417,15 +415,7 @@ def stream_cdc_latest_store(
         )
     elif out_dir is None:
         raise ValueError("an injected source requires an explicit out_dir")
-    if out_dir is None:
-        src = os.path.abspath(table_path(sf_dir, "orders"))
-        tag = hashlib.md5(src.encode()).hexdigest()[:10]
-        out = os.path.join(
-            tempfile.gettempdir(), f"bdfp_cdc_store_{tag}_{os.getpid()}"
-        )
-        atexit.register(shutil.rmtree, out, ignore_errors=True)
-    else:
-        out = out_dir
+    out = scratch_dir(sf_dir, "cdc_store") if out_dir is None else out_dir
     shutil.rmtree(out, ignore_errors=True)
 
     def apply_batch(bdf: DataFrame, bid: int) -> None:

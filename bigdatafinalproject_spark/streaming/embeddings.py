@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from bigdatafinalproject_spark.catalog import table_path
+from bigdatafinalproject_spark.catalog import scratch_dir, table_path
 from bigdatafinalproject_spark.operators.ann import lsh_signatures
 from bigdatafinalproject_spark.sources.readers import read_parquet
 from bigdatafinalproject_spark.streaming.schema import (
@@ -67,10 +67,7 @@ def stream_lsh_index(
 ) -> DataFrame:
     """Stream embeddings → per-batch LSH signatures → parquet index;
     returns the index read back (vec_id, band, band_sig)."""
-    import hashlib
-    import os
     import shutil
-    import tempfile
 
     raw = (
         spark.readStream.schema(
@@ -89,11 +86,9 @@ def stream_lsh_index(
         dim=dim,
     )
 
-    src = os.path.abspath(table_path(sf_dir, "embeddings"))
-    tag = hashlib.md5(src.encode()).hexdigest()[:10]
     # pid-scoped: a concurrent pytest/bench process must not interleave
     # batches into the same index; a rerun in THIS process starts fresh
-    out = os.path.join(tempfile.gettempdir(), f"bdfp_lsh_index_{tag}_{os.getpid()}")
+    out = scratch_dir(sf_dir, "lsh_index")
     shutil.rmtree(out, ignore_errors=True)
 
     def write_batch(bdf: DataFrame, bid: int) -> None:
@@ -191,7 +186,6 @@ def _stream_index_maintenance(
         needs_retrain,
         shared_index_dir,
     )
-    from bigdatafinalproject_spark.queries.layout import _scratch
 
     emb = load_table(spark, sf_dir, table)
     # ONE constant defines the base subset — as the split predicate
@@ -207,7 +201,7 @@ def _stream_index_maintenance(
         src=table_path(sf_dir, table), subset=base_pred,
         **params,
     )
-    idx = clone_index(cached, _scratch(sf_dir, scratch_name))
+    idx = clone_index(cached, scratch_dir(sf_dir, scratch_name))
 
     d = (delta_dir_fn or _chunked_delta_dir)(sf_dir)
     raw = (

@@ -18,7 +18,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from bigdatafinalproject_spark.catalog import table_path
+from bigdatafinalproject_spark.catalog import scratch_dir, table_path
 from bigdatafinalproject_spark.functions import dsum
 
 def _events_ts_arrow_type(sf_dir: str):
@@ -503,21 +503,11 @@ def dlq_routed_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     together they account for EVERY input row, which is what the
     oracle checks: routing loses nothing and double-counts nothing.
     """
-    import hashlib
-    import os
     import shutil
-    import tempfile
 
-    src = os.path.abspath(table_path(sf_dir, "events"))
-    tag = hashlib.md5(src.encode()).hexdigest()[:10]
-    base = os.path.join(
-        tempfile.gettempdir(), f"bdfp_dlq_{tag}_{os.getpid()}"
-    )
+    base = scratch_dir(sf_dir, "dlq")
     main, dlq = f"{base}/main", f"{base}/dlq"
     shutil.rmtree(base, ignore_errors=True)
-    import atexit
-
-    atexit.register(shutil.rmtree, base, ignore_errors=True)
     disp = dlq_disposition()
 
     def route(bdf: DataFrame, bid: int) -> None:

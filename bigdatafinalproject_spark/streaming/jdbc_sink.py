@@ -29,14 +29,12 @@ and proves atomicity (nothing visible, clean retry applies once).
 
 from __future__ import annotations
 
-import hashlib
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bigdatafinalproject_spark.catalog import table_path
+from bigdatafinalproject_spark.catalog import scratch_dir
 from bigdatafinalproject_spark.sources.readers import read_jdbc, read_parquet
 from bigdatafinalproject_spark.sources.writers import write_jdbc
 from bigdatafinalproject_spark.streaming.schema import footer_read_schema
@@ -50,19 +48,10 @@ _LEDGER_TABLE = "events_sink_ledger"
 def _sink_url(sf_dir: str) -> str:
     """Per-(sf_dir, process) Derby db, distinct from queries/jdbc.py's
     database (embedded Derby allows one booting JVM per directory, and
-    a separate path also avoids cross-feature table collisions). The
-    per-pid directory is removed at interpreter exit — same /tmp
-    hygiene as the scratch dirs (removal must wait for exit: the
-    returned readback frame reads the db lazily)."""
-    import atexit
-    import shutil
-
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
-    db = os.path.join(
-        tempfile.gettempdir(), f"bdfp_derbysink_{tag}_{os.getpid()}"
-    )
-    atexit.register(shutil.rmtree, db, ignore_errors=True)
-    return f"jdbc:derby:{db};create=true"
+    a separate path also avoids cross-feature table collisions). It is
+    a scratch dir, removed at interpreter exit: the returned readback
+    frame reads the db lazily."""
+    return f"jdbc:derby:{scratch_dir(sf_dir, 'derbysink')};create=true"
 
 
 def _partial(bdf: DataFrame, bid: int) -> DataFrame:

@@ -17,7 +17,6 @@ LSH index).
 
 from __future__ import annotations
 
-import atexit
 import glob
 import hashlib
 import os
@@ -27,7 +26,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bigdatafinalproject_spark.catalog import table_path
+from bigdatafinalproject_spark.catalog import scratch_dir, table_path
 from bigdatafinalproject_spark.operators.sketches import (
     _cells_from_h,
     _h31,
@@ -123,16 +122,10 @@ def stream_cms_sketch(
         .select(F.col("rc.r").alias("r"), F.col("rc.cell").alias("cell"))
     )
 
-    src = os.path.abspath(table_path(sf_dir, "events"))
-    tag = hashlib.md5(src.encode()).hexdigest()[:10]
-    out = os.path.join(
-        tempfile.gettempdir(), f"bdfp_cms_index_{tag}_{os.getpid()}"
-    )
+    # the merged frame reads `out` lazily, so its removal waits for
+    # interpreter exit (scratch_dir); a rerun in this process starts fresh
+    out = scratch_dir(sf_dir, "cms_index")
     shutil.rmtree(out, ignore_errors=True)
-    # the merged frame reads `out` lazily, so removal must wait for
-    # interpreter exit — without this every run/pid leaks a partial-
-    # sketch tree under /tmp (ADVICE r3)
-    atexit.register(shutil.rmtree, out, ignore_errors=True)
 
     def write_partial(bdf: DataFrame, bid: int) -> None:
         # aggregate INSIDE the batch: stateless stream, zero state store
@@ -185,13 +178,8 @@ def stream_hll_registers(
         .parquet(d)
     )
 
-    src = os.path.abspath(table_path(sf_dir, "events"))
-    tag = hashlib.md5(src.encode()).hexdigest()[:10]
-    out = os.path.join(
-        tempfile.gettempdir(), f"bdfp_hll_index_{tag}_{os.getpid()}"
-    )
+    out = scratch_dir(sf_dir, "hll_index")
     shutil.rmtree(out, ignore_errors=True)
-    atexit.register(shutil.rmtree, out, ignore_errors=True)
 
     def write_partial(bdf: DataFrame, bid: int) -> None:
         (

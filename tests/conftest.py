@@ -26,29 +26,42 @@ def spark():
     spark.stop()
 
 
+def duck_views(sf_dir: str):
+    """DuckDB connection with ``sf_dir``'s tables registered as views."""
+    con = duckdb.connect()
+    for name in TABLES:
+        p = table_path(sf_dir, name)
+        if os.path.exists(p):
+            con.execute(f"CREATE VIEW {name} AS SELECT * FROM '{p}'")
+    return con
+
+
 @pytest.fixture(scope="session")
 def duck():
     """DuckDB connection with the same tables registered as views."""
-    con = duckdb.connect()
-    for name in TABLES:
-        p = table_path(SF_DIR, name)
-        if os.path.exists(p):
-            con.execute(f"CREATE VIEW {name} AS SELECT * FROM '{p}'")
+    con = duck_views(SF_DIR)
     yield con
     con.close()
 
 
 def assert_df_matches_oracle(spark_df, duck_con, sql, float_tol=0.0):
-    """Order-insensitive comparison of a Spark DataFrame vs DuckDB SQL.
+    """Order-insensitive comparison of a Spark DataFrame vs DuckDB SQL."""
+    assert_frames_match(
+        spark_df.toPandas(), duck_con.execute(sql).fetchdf(), float_tol
+    )
+
+
+def assert_frames_match(sdf, ddf, float_tol=0.0):
+    """Order-insensitive comparison of a Spark result vs its DuckDB
+    oracle, both as pandas frames.
 
     Mirrors the driver's check: sort columns by name, sort rows, compare
     values (exact by default — our queries are engineered to be
-    bit-identical across engines).
+    bit-identical across engines). ``scripts/oracle_sweep.py`` judges
+    the full registry with this same function.
     """
     import math
 
-    sdf = spark_df.toPandas()
-    ddf = duck_con.execute(sql).fetchdf()
     assert sorted(sdf.columns) == sorted(ddf.columns), (
         f"columns differ: spark={sorted(sdf.columns)} duck={sorted(ddf.columns)}"
     )

@@ -6,10 +6,12 @@ caught locally first. Queries without an oracle get a rows-run check.
 
 from __future__ import annotations
 
+import importlib.util
+
 import pytest
 
 from bigdatafinalproject_spark import registry
-from tests.conftest import SF_DIR, assert_df_matches_oracle
+from tests.conftest import REPO, SF_DIR, assert_df_matches_oracle
 
 
 def _params():
@@ -24,6 +26,26 @@ def test_query_matches_oracle(spark, duck, name):
     else:
         # weaker rows-only check, mirroring the driver
         assert df.count() >= 0
+
+
+def test_driver_contract_orders_front_then_registry():
+    """``__spark_entry__``, loaded by path as the driver loads it: the
+    driver checks the first 50 of ``queries()``, so ``_FRONT`` (at most
+    50 registered names, no repeats) comes first, then every other
+    query in registry order, and the oracles are the registry's."""
+    spec = importlib.util.spec_from_file_location(
+        "__spark_entry__", REPO / "__spark_entry__.py"
+    )
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    front = list(mod._FRONT)
+    assert len(front) == len(set(front)) <= 50, front
+    assert set(front) <= set(registry.QUERIES), set(front) - set(registry.QUERIES)
+    qs = mod.queries()
+    assert list(qs)[: len(front)] == front
+    assert list(qs)[len(front):] == [n for n in registry.QUERIES if n not in front]
+    assert all(fn is registry.QUERIES[n] for n, fn in qs.items())
+    assert mod.oracle_sql() == registry.ORACLES
 
 
 def test_registry_holds_every_query():
