@@ -291,26 +291,28 @@ def _nearest_centroids(
     n: int,
     out: str,
     keep_rank: bool = False,
-    pin_input: bool = True,
 ) -> DataFrame:
     """Top-``n`` centroids per vector by cosine — the assign (n=multi)
     and probe (n=nprobe) legs of the IVF plans — against the (ids asc,
     matrix) centroid ``panel``, built once by the caller
     (arrow_kernels.panel_from_frame, or panel_from_parquet for a
-    persisted index). ``pin_input=False`` (r14) skips the ``pin`` of
-    the input for bounded probe sets, where repartitioning ~40 rows
-    costs more than the kernel pass itself. ``keep_rank`` also emits the
-    assignment rank (``_rn``) so a caller needing BOTH the
-    multi-assignment and the primary (rank-1) assignment runs the N×C
-    pass once, not twice.
+    persisted index). The kernel runs on ``df``'s own partitioning:
+    the corpus-sized assign legs (the build, an index append) pass
+    ``df`` through ``layout.pin`` first, and the probe legs pass the
+    bounded query set as it is. A filter keeps its input's size
+    estimate, so ``pin`` would see a query set filtered from the
+    embeddings as the whole table and fan its ~40 rows out from sf0.1
+    on, where the exchange costs more than the kernel pass itself
+    (r14). ``keep_rank`` also emits the assignment rank (``_rn``) so a
+    caller needing BOTH the multi-assignment and the primary (rank-1)
+    assignment runs the N×C pass once, not twice.
 
     Runs the Arrow kernel (operators/arrow_kernels.topn_centroids_arrow):
     dim-sequential cosine and (cos DESC, cid ASC) tie order,
     vectorized in numpy."""
     src = df.select(F.col(id_col).alias(out), F.col(vec_col).alias("_v"))
     return topn_centroids_arrow(
-        pin(src, out) if pin_input else src,
-        panel, out, "_v", n, out,
+        src, panel, out, "_v", n, out,
         keep_rank=keep_rank,
     )
 
@@ -478,7 +480,7 @@ def _mass_probes(
         den = F.lit(int(probe_mass[1]))
     ranked = _nearest_centroids(
         centroids, queries, id_col, vec_col, 1 << 30, "query_id",
-        keep_rank=True, pin_input=False,
+        keep_rank=True,
     )
     wq = W.partitionBy("query_id").orderBy("_rn")
     # budget = ceil(num*T/den) exactly: (num*T + den - 1) / den in
@@ -607,7 +609,8 @@ def ivf_build_frames(
     )
     panel = centroid_panel(centroids, "ivf_build_frames")
     postings = _nearest_centroids(
-        panel, corpus, id_col, vec_col, multi_assign, "neighbor_id",
+        panel, pin(corpus.select(id_col, vec_col), id_col), id_col, vec_col,
+        multi_assign, "neighbor_id",
     )
     return centroids, postings, {"centroids": panel}
 
@@ -651,7 +654,6 @@ def ivf_search_frames(
     if probe_mass is None:
         probes = _nearest_centroids(
             centroids, queries, id_col, vec_col, nprobe, "query_id",
-            pin_input=False,
         )
     else:
         sizes = (
@@ -1431,7 +1433,6 @@ def ivfpq_search_frames(
     if probe_mass is None:
         probes = _nearest_centroids(
             centroids, queries, id_col, vec_col, nprobe, "query_id",
-            pin_input=False,
         )
     else:
         # posting rows per cell: the persisted C-row table when given,

@@ -1621,7 +1621,7 @@ def _ivf_append(index_dir, meta, delta, id_col, vec_col):
     return {
         "postings": _nearest_centroids(
             _frozen_panel(index_dir, meta, "centroids"),
-            delta, id_col, vec_col,
+            pin(delta.select(id_col, vec_col), id_col), id_col, vec_col,
             int(meta["params"]["multi_assign"]),
             "neighbor_id",
         )

@@ -98,19 +98,21 @@ def kmeans_centroids(
     the next round (both engines GROUP BY only non-empty cells).
     Returns (group_cols..., cid, centroid<array<double>>).
 
-    The training corpus is REPARTITIONED by id across defaultParallelism
-    first (``layout.pin``, r11): the N×C assign pass is map-side work
-    that inherits the input partitioning, and a skewed source layout
-    (one fat parquet row group) serializes the trainer onto one task per
-    round — at sf10 with the scheduled C=512 that straggler was an hour
-    of single-core Lloyd. The repartition is unconditional: it reads no
-    partition count, so it runs no job even on a shuffle-rooted input
-    (the PQ codebook trainer's subvec frame carries a window + join),
-    and an adjacent redundant repartition (``kmeans_assign`` pins the
-    same frame first) is collapsed by Catalyst's CollapseRepartition
-    for free. Content-neutral by design: the decimal-mean updates are
-    order-independent sums (module doc), so trained centroids are
-    bit-identical under any partitioning.
+    The training corpus is REPARTITIONED by id first (``layout.pin``,
+    r11): the N×C assign pass is map-side work that inherits the input
+    partitioning, and a skewed source layout (one fat parquet row
+    group) serializes the trainer onto one task per round — at sf10
+    with the scheduled C=512 that straggler was an hour of single-core
+    Lloyd. ``pin`` sizes the count from the plan's estimate (up to
+    defaultParallelism) and leaves an input below one target partition
+    on its scan; it reads no partition count, so it runs no job even
+    on a shuffle-rooted input (the PQ codebook trainer's subvec frame
+    carries a window + join), and an adjacent redundant repartition
+    (``kmeans_assign`` pins the same frame first) is collapsed by
+    Catalyst's CollapseRepartition for free. Content-neutral by
+    design: the decimal-mean updates are order-independent sums
+    (module doc), so trained centroids are bit-identical under any
+    partitioning.
 
     Optimization r14: the Lloyd loop is driver-stepped — each round is
     ONE Spark job (Arrow argmin kernel carrying the vector through ->

@@ -36,7 +36,7 @@ from bigdatafinalproject_spark.operators.arrow_kernels import (
     simhash_arrow,
 )
 from bigdatafinalproject_spark.operators.barrier import materialize_barrier
-from bigdatafinalproject_spark.operators.layout import pin
+from bigdatafinalproject_spark.operators.layout import TEXT_PIN_BYTES, pin
 from bigdatafinalproject_spark.operators.text import norm_text, tokens
 
 _H15 = 15  # hex digits -> 60-bit hash
@@ -53,13 +53,14 @@ def _hash64(col: Column, seed: int | Column = 0) -> Column:
 
 def _normalized(df: DataFrame, text_col: str, id_col: str, n: int) -> DataFrame:
     """(id, _t) normalized text of the docs with at least ``n`` chars,
-    pinned by id across defaultParallelism — the shingle and MinHash
-    kernels' input."""
+    pinned by id (``layout.pin``) — the shingle and MinHash kernels'
+    input."""
     return pin(
         df.select(F.col(id_col), norm_text(F.col(text_col)).alias("_t")).filter(
             F.length("_t") >= n
         ),
         id_col,
+        target_bytes=TEXT_PIN_BYTES,
     )
 
 
@@ -233,7 +234,7 @@ def ngram_jaccard_pairs(
     # explode(->semi-join) pipeline for each. Materialize once, pinned
     # on the join key: AQE's byte-based coalescing would shrink this
     # small-bytes but quadratic-compute exchange to one task.
-    sh = materialize_barrier(pin(sh, "shingle"))
+    sh = materialize_barrier(pin(sh, "shingle", target_bytes=TEXT_PIN_BYTES))
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("size"))
 
     a = sh.select(F.col(id_col).alias("id_a"), "shingle")
@@ -339,6 +340,7 @@ def simhash_signatures(
     d = pin(
         df.select(F.col(id_col), norm_text(F.col(text_col)).alias("_t")),
         id_col,
+        target_bytes=TEXT_PIN_BYTES,
     )
     return simhash_arrow(d, id_col, bits)
 
@@ -493,7 +495,9 @@ def segment_dedup(
     """
     s = int(seg_tokens)
     d = pin(
-        df.select(F.col(id_col), tokens(F.col(text_col)).alias("_toks")), id_col
+        df.select(F.col(id_col), tokens(F.col(text_col)).alias("_toks")),
+        id_col,
+        target_bytes=TEXT_PIN_BYTES,
     )
     segs = d.select(
         id_col,
@@ -574,6 +578,7 @@ def winnow_fingerprints(
     d = pin(
         df.select(F.col(id_col), tokens(F.col(text_col)).alias("_toks")),
         id_col,
+        target_bytes=TEXT_PIN_BYTES,
     ).filter(F.size("_toks") >= k)
     grams = d.select(
         F.col(id_col),

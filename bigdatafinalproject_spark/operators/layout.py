@@ -1,12 +1,17 @@
 """Partition-layout helpers.
 
-``pin``: hash-partition a frame by key across ``defaultParallelism``
-with an explicit count, so AQE cannot byte-coalesce a row- or
-compute-heavy input (an Arrow kernel's input, pair keys, compressed
-text/embedding parquet that locally scans as ONE split) down to a
-handful of tasks. It never probes the input, so it starts no job and
-is safe on shuffle-fed frames. It is the only by-key layout choice in
-``operators/``.
+``pin``: hash-partition a frame by key with an explicit, data-sized
+count, so AQE cannot byte-coalesce a row- or compute-heavy input (an
+Arrow kernel's input, pair keys, compressed text/embedding parquet
+that locally scans as ONE split) down to a handful of tasks. The count
+is ``ceil(estimate / target)`` capped at ``defaultParallelism``, from
+the optimized plan's size estimate (``plan_bytes``); the target is
+``_PIN_TARGET_BYTES``, or ``TEXT_PIN_BYTES`` for text kernels. An
+input below one target partition is returned unchanged, with no
+exchange, and one whose size Spark does not know gets
+``defaultParallelism``. It never runs the input, so it starts no
+job and is safe on shuffle-fed frames. It is the only by-key layout
+choice in ``operators/``.
 """
 
 from __future__ import annotations
@@ -17,9 +22,51 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def pin(df: DataFrame, *key_cols: str | Column) -> DataFrame:
-    """Explicitly hash-partition ``df`` by ``key_cols`` across
-    ``defaultParallelism``.
+# One pin partition's share of the input, in bytes of the optimized
+# plan's estimate. Chosen by measurement (CHANGES.md, sf0.01 and sf0.1,
+# each query timed with every pin on and with every pin off): inputs
+# estimated at 143-230 KB (the IVF append delta, the embeddings scan,
+# the graph edge lists, the int8 corpus) ran faster on their scan's one
+# split than behind an exchange, and the Lloyd trainer's sf0.1 input
+# (666 KB) must still fan out.
+_PIN_TARGET_BYTES = 256 * 1024
+
+# The same share for text kernels' inputs (minhash, shingles, simhash,
+# winnow, segments, n-gram scrub). Their estimate counts compressed
+# text (the sf0.01 documents file is 65 KB on disk, 167 KB in Arrow),
+# and the kernels hash every character: the sf0.01 documents, whose
+# (id, text) projection is estimated at 28 KB, ran MinHash in 0.24 s
+# over 4 tasks and 0.38 s over one, and at sf0.1 (255 KB) in 0.98 s
+# and 2.92 s. The streaming dedup index's micro-batches (5 KB) ran
+# faster without the exchange.
+TEXT_PIN_BYTES = 6 * 1024
+
+
+def plan_bytes(df: DataFrame) -> int | None:
+    """The optimized plan's ``sizeInBytes`` estimate of ``df``, or None
+    when Spark does not know it: an estimate at or above
+    ``spark.sql.defaultSizeInBytes`` (``Long.MaxValue`` unless set) is
+    the fallback of a leaf without statistics (a ``LogicalRDD`` with no
+    origin stats) or the product of a join's inputs. For a file scan
+    the estimate is the listed file lengths that Spark already holds to
+    plan the read, so reading it runs no job and reads no data."""
+    # py4j hands the Scala BigInt back as a Python int
+    size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    conf = df.sparkSession._jsparkSession.sessionState().conf()
+    return None if size >= conf.defaultSizeInBytes() else size
+
+
+def pin(
+    df: DataFrame,
+    *key_cols: str | Column,
+    target_bytes: int = _PIN_TARGET_BYTES,
+) -> DataFrame:
+    """Hash-partition ``df`` by ``key_cols`` into
+    ``min(defaultParallelism, ceil(plan_bytes / target_bytes))``
+    partitions; return ``df`` unchanged when its estimate is below one
+    ``target_bytes``, and use ``defaultParallelism`` when the estimate
+    is unknown (``plan_bytes`` is None). Text kernels pass
+    ``TEXT_PIN_BYTES``.
 
     For a frame about to feed a window/groupBy keyed on the same
     columns this is SHUFFLE-NEUTRAL: the explicit exchange satisfies
@@ -28,15 +75,21 @@ def pin(df: DataFrame, *key_cols: str | Column) -> DataFrame:
     difference is that a user-specified partition count is exempt from
     AQE's byte-based coalescing — which otherwise shrinks byte-light
     but row- or compute-heavy inputs (compressed facts, pair keys) to
-    a handful of tasks. It reads no partition count, so it runs no job
-    even on a shuffle-rooted frame. The count is the core count, not a
-    data-sized one: the consumers are partition-invariant, so only
-    speed depends on it. On a scan that already has at least
-    ``defaultParallelism`` splits the exchange is one extra shuffle.
+    a handful of tasks. It reads no partition count and runs no part of
+    the plan, so it starts no job even on a shuffle-rooted frame. The
+    consumers are partition-invariant, so only speed depends on the
+    count: below one target partition the exchange costs more than
+    the fan-out saves, and on a scan that already has at least that
+    many splits it is one extra shuffle.
     """
-    sc = df.sparkSession.sparkContext
+    size = plan_bytes(df)
+    if size is not None and size < target_bytes:
+        return df
+    n = df.sparkSession.sparkContext.defaultParallelism
+    if size is not None:
+        n = min(n, -(-size // target_bytes))
     cols = [F.col(c) if isinstance(c, str) else c for c in key_cols]
-    return df.repartition(sc.defaultParallelism, *cols)
+    return df.repartition(n, *cols)
 
 
 def zvalue(x: Column, y: Column, bits: int = 16) -> Column:
@@ -170,10 +223,9 @@ def compact(
         raise ValueError(
             f"compact: no *.parquet files under {src_path!r}"
         ) from e
-    # py4j hands the Scala BigInt back as a Python int
-    input_bytes = (
-        df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-    )
+    input_bytes = plan_bytes(df)
+    if input_bytes is None:
+        raise ValueError(f"compact: no size estimate for {src_path!r}")
     n = max(1, -(-input_bytes // target_bytes))
     if sort_col is None:
         out = df.repartition(n)

@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
-from bigdatafinalproject_spark.operators.layout import pin
+from bigdatafinalproject_spark.operators.layout import TEXT_PIN_BYTES, pin
 
 # Tiny per-language stopword lists (public common function words).
 STOPWORDS: dict[str, tuple[str, ...]] = {
@@ -196,7 +196,9 @@ def scrub_frequent_ngrams(
     """
     t = F.split(F.col(text_col), " ")
     ndoc = F.size(t)
-    base = pin(df.select(F.col(id_col), t.alias("_t")), id_col)
+    base = pin(
+        df.select(F.col(id_col), t.alias("_t")), id_col, target_bytes=TEXT_PIN_BYTES
+    )
     nb = F.size("_t")
     grams = F.when(
         nb >= n,

@@ -82,9 +82,11 @@ import argparse
 import json
 import os
 import random
+import shutil
 import signal
 import subprocess
 import sys
+import tempfile
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -355,13 +357,26 @@ def reader(slot: int, index_dir: str) -> None:
     spark.stop()
 
 
-def _spawn(slot: int, args) -> subprocess.Popen:
-    env = dict(
+def _child_env(args) -> dict[str, str]:
+    """A worker's or reader's environment: the claim knobs, and every
+    temporary file of the child and its JVM under ``args.tmp_dir``.
+    A SIGKILLed JVM never runs Spark's shutdown hook, so the
+    ``spark-<uuid>`` directories it made would otherwise stay in the
+    system temporary directory; ``main`` removes this one when the run
+    ends."""
+    return dict(
         os.environ,
         BDFP_ANN_CLAIM_MODE=args.claim_mode,
         BDFP_ANN_LEASE_S=str(args.lease_s),
         PYTHONPATH=REPO,
+        TMPDIR=args.tmp_dir,
+        SPARK_LOCAL_DIRS=args.tmp_dir,
+        JAVA_TOOL_OPTIONS=f"-Djava.io.tmpdir={args.tmp_dir} -XX:-UsePerfData",
     )
+
+
+def _spawn(slot: int, args) -> subprocess.Popen:
+    env = _child_env(args)
     if args.gc_grace_s > 0:
         # r14 grace mode: writers tombstone dead units and reap only
         # after the window — readers must then see zero retries
@@ -538,12 +553,7 @@ def verify(index_dir: str, n_batches: int, retract_mod: int = 0) -> dict:
 
 
 def _spawn_reader(slot: int, args) -> subprocess.Popen:
-    env = dict(
-        os.environ,
-        BDFP_ANN_CLAIM_MODE=args.claim_mode,
-        BDFP_ANN_LEASE_S=str(args.lease_s),
-        PYTHONPATH=REPO,
-    )
+    env = _child_env(args)
     log = open(
         os.path.join(
             os.path.dirname(args.index_dir), f"reader{slot}.log"
@@ -677,14 +687,16 @@ def main() -> None:
         reader(args.reader, args.index_dir)
         return
     if args.index_dir is None:
-        import tempfile
-
         args.index_dir = os.path.join(
             tempfile.mkdtemp(prefix="bdfp_killsoak_"), "ivf_index"
         )
     os.environ.setdefault("BDFP_ANN_CLAIM_MODE", args.claim_mode)
     os.environ.setdefault("BDFP_ANN_LEASE_S", str(args.lease_s))
-    summary = supervise(args)
+    args.tmp_dir = tempfile.mkdtemp(prefix="bdfp_killsoak_tmp_")
+    try:
+        summary = supervise(args)
+    finally:
+        shutil.rmtree(args.tmp_dir, ignore_errors=True)
     print("KILL_SOAK_OK " + json.dumps(summary), flush=True)
 
 

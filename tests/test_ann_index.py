@@ -2222,7 +2222,13 @@ def test_kill_soak_bounded(tmp_path):
     import json as _json
     import subprocess
     import sys
+    import tempfile
 
+    def spark_dirs() -> set[str]:
+        tmp = tempfile.gettempdir()
+        return {e for e in os.listdir(tmp) if e.startswith("spark-")}
+
+    before = spark_dirs()
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     r = subprocess.run(
         [
@@ -2245,6 +2251,9 @@ def test_kill_soak_bounded(tmp_path):
     assert len(summary["retracted"]) + len(
         summary["folded_by_compaction"]
     ) == 1
+    # the SIGKILLed JVMs kept their temporary files in the soak's own
+    # directory, which it removed
+    assert spark_dirs() <= before
 
 
 def test_legacy_flat_manifest_refused_on_serve_and_every_writer(

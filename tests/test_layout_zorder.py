@@ -163,34 +163,122 @@ def test_compact_sizes_from_the_file_index(spark, tmp_path):
             compact(spark, missing_or_empty, str(tmp_path / "x"))
 
 
-def test_pin_runs_no_job_and_survives_aqe_coalescing(spark):
-    """``pin`` on a shuffle-rooted frame starts no Spark job, and the
-    executed frame keeps exactly ``defaultParallelism`` partitions: the
-    explicit count exempts the exchange from AQE's byte-based
-    coalescing, which shrinks the same exchange without a count."""
+def _pin_without_a_job(spark, df, *keys):
+    """``layout.pin(df, *keys)``, asserting that the call started no
+    Spark job: the size comes from the plan's statistics."""
+    from bigdatafinalproject_spark.operators.layout import pin
+
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    j0 = dag.nextJobId()
+    pinned = pin(df, *keys)
+    assert dag.nextJobId() == j0
+    return pinned
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def test_pin_leaves_a_frame_below_one_target_partition_unchanged(spark):
+    """A shuffle-rooted frame whose estimate is below one target
+    partition comes back as it is, with no ``Repartition`` node: the
+    exchange would cost more than the fan-out saves."""
     from pyspark.sql import functions as F
 
-    from bigdatafinalproject_spark.operators.layout import pin
+    from bigdatafinalproject_spark.operators.layout import (
+        _PIN_TARGET_BYTES,
+        plan_bytes,
+    )
     from tests.conftest import SF_DIR
 
-    dp = spark.sparkContext.defaultParallelism
     agg = (
         load_table(spark, SF_DIR, "lineitem")
         .groupBy("l_orderkey")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    dag = spark.sparkContext._jsc.sc().dagScheduler()
-    j0 = dag.nextJobId()
-    pinned = pin(agg, "l_orderkey")
-    assert dag.nextJobId() == j0
+    assert plan_bytes(agg) < _PIN_TARGET_BYTES
+    pinned = _pin_without_a_job(spark, agg, "l_orderkey")
+    assert pinned is agg
+    assert "Repartition" not in _plan(pinned)
 
-    rows = pinned.collect()
-    assert len(rows) == agg.count()
+
+def test_pin_sizes_the_count_from_the_estimate(spark):
+    """Between one target partition and ``defaultParallelism`` of them,
+    the count is ``ceil(estimate / target)``; ``spark.range(n)`` is
+    estimated at 8 bytes a row."""
+    from bigdatafinalproject_spark.operators.layout import (
+        _PIN_TARGET_BYTES,
+        plan_bytes,
+    )
+
+    dp = spark.sparkContext.defaultParallelism
+    df = spark.range(_PIN_TARGET_BYTES // 8 + 1)
+    assert plan_bytes(df) == 8 * (_PIN_TARGET_BYTES // 8 + 1)
+    pinned = _pin_without_a_job(spark, df, "id")
+    assert "Repartition" in _plan(pinned)
+    assert pinned.count() == _PIN_TARGET_BYTES // 8 + 1
+    assert pinned.rdd.getNumPartitions() == min(dp, 2)
+
+
+def test_pin_runs_no_job_and_survives_aqe_coalescing(spark):
+    """A frame estimated far above ``defaultParallelism`` target
+    partitions gets ``defaultParallelism`` of them, and keeps them when
+    executed: the explicit count exempts the exchange from AQE's
+    byte-based coalescing, which shrinks the same exchange without a
+    count. ``spark.range(10**9)`` is estimated at 8 GB; the filter
+    keeps the estimate and leaves a thousand rows to move."""
+    from pyspark.sql import functions as F
+
+    from bigdatafinalproject_spark.operators.layout import (
+        _PIN_TARGET_BYTES,
+        plan_bytes,
+    )
+
+    dp = spark.sparkContext.defaultParallelism
+    big = spark.range(10**9).filter(F.col("id") % 10**6 == 0)
+    assert plan_bytes(big) == 8 * 10**9
+    assert min(dp, -(-8 * 10**9 // _PIN_TARGET_BYTES)) == dp
+    pinned = _pin_without_a_job(spark, big, "id")
+
+    assert pinned.count() == 1000
     assert pinned.rdd.getNumPartitions() == dp
     if dp > 1:
-        unpinned = agg.repartition("l_orderkey")
+        unpinned = big.repartition("id")
         unpinned.collect()
         assert unpinned.rdd.getNumPartitions() < dp
+
+
+def test_pin_keeps_default_parallelism_when_the_size_is_unknown(spark):
+    """A frame over an RDD has no statistics: its estimate is the
+    ``spark.sql.defaultSizeInBytes`` fallback, which ``plan_bytes``
+    reports as unknown, and ``pin`` keeps ``defaultParallelism``."""
+    from bigdatafinalproject_spark.operators.layout import plan_bytes
+
+    dp = spark.sparkContext.defaultParallelism
+    df = spark.createDataFrame(
+        spark.sparkContext.parallelize([(i,) for i in range(100)], 1), "k long"
+    )
+    assert plan_bytes(df) is None
+    pinned = _pin_without_a_job(spark, df, "k")
+    assert sorted(r.k for r in pinned.collect()) == list(range(100))
+    assert pinned.rdd.getNumPartitions() == dp
+
+
+def test_only_layout_reads_the_size_estimate():
+    """``sizeInBytes`` is read in one place, ``layout.plan_bytes``, so
+    every size decision shares its rule for an unknown estimate."""
+    import ast
+    from pathlib import Path
+
+    import bigdatafinalproject_spark
+
+    root = Path(bigdatafinalproject_spark.__file__).parent
+    reads = []
+    for path in sorted(root.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if isinstance(node, ast.Attribute) and node.attr == "sizeInBytes":
+                reads.append(str(path.relative_to(root)))
+    assert set(reads) == {"operators/layout.py"}
 
 
 def test_package_never_reads_a_partition_count():
